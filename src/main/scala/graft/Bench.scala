@@ -37,9 +37,10 @@ object Bench {
         sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "zstd"))
       // AQE coalescing stays ON (the iterative graph queries need it —
       // q47/q66 measured 2× slower without); the pyramid family instead
-      // pins its aggregation exchanges explicitly (MapBuild.pinByKeys),
-      // which is where byte-sized coalescing mis-sized agg state 10–20×
-      // and spilled 50 GB at 10× sf0.1. ScaleLab reproduces both A/Bs.
+      // builds each query on a forked session with coalescing OFF
+      // (MapBuild.noCoalesceSession), which is where byte-sized coalescing
+      // mis-sized agg state 10–20× and spilled 50 GB at 10× sf0.1.
+      // ScaleLab reproduces both A/Bs.
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

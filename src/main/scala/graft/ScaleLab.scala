@@ -87,7 +87,7 @@ object ScaleLab {
             .repartition(col("map_key"), col("px"), col("py"))
             .groupBy("map_key", "px", "py")
             .agg(count(lit(1)).as("total"))
-          MapBuild.levelStats(top, 0, 6)
+          MapBuild.levelStats(top, 6, 0, 6, None)
         }
       // q:<name>:<on|off> — run a SparkEntry query against SPARK_GRAFT_LAB_DIR
       // with AQE partition coalescing toggled, tight-succession comparable
@@ -183,13 +183,13 @@ object ScaleLab {
             m.reset()
             t0 = System.nanoTime()
             // single-level stage off the chunk top: pre-shift the top to
-            // zoom z so levelStats (which addresses its input at highZ)
-            // sees a zoom-z pixel table — the same shift+collapse+tile
+            // zoom z so levelStats (grain zoom z) sees a zoom-z pixel
+            // table — the same shift+collapse+tile
             // algebra the chunked levelStats runs for this z
             val topAtZ = top.select(col("map_key"),
               shiftright(col("px"), highZ - z).as("px"),
               shiftright(col("py"), highZ - z).as("py"), col("total"))
-            MapBuild.levelStats(topAtZ, z, z)
+            MapBuild.levelStats(topAtZ, z, z, z, None)
               .write.format("noop").mode("overwrite").save()
             m.settle()
             println(f"[lab] perZoom:$e z$z ${(System.nanoTime() - t0) / 1e9}%.1fs ${m.line}")

@@ -245,17 +245,6 @@ object MapBuild {
   // distinct partial-agg must carry at (tile, px, py) grain, outweighing
   // the saved pixel-collapse exchange. Collapse-then-explode stands.
 
-  /** Full pyramid for one projection: iterative halving from max zoom.
-    * Returns one DataFrame unioned over the requested zooms with column z —
-    * at scale each level is a separate job writing its own partition, but the
-    * lineage shape (each zoom consumes the previous) is what matters.
-    */
-  /** Tile stats for every zoom in [lowZ, highZ] from a zoom-`highZ`
-    * per-pixel table (map_key, px, py, total), in one explode + two keyed
-    * aggregations — the one-pass core shared by [[pyramidOnePass]] and each
-    * chunk of [[pyramidIterative]], so the two strategies agree by
-    * construction.
-    */
   /** Plain keyed long-sum aggregation (partial + final, map-side combine
     * intact), for callers that route through [[noCoalesceSession]].
     *
@@ -347,24 +336,77 @@ object MapBuild {
 
   /** Encode an EXISTING string map_key (a stored state's) to the long
     * form — one row-local parse, paid once per state row so the
-    * incremental recompute's three keyed exchanges run long-keyed.
-    * Only valid on the house key strings ("t:v", t a single digit,
-    * v an integer or the bor letter) — everything [[pyramidState]] /
-    * [[writePrunedState]] ever write, by construction.
+    * incremental recompute's keyed exchanges run long-keyed. Defined only
+    * on the house key strings ("t:v", t a single digit, v a non-negative
+    * integer below 2⁴⁰ or, for t = 3, the bor letter A/N/R) — everything
+    * [[pyramidState]] / [[writePrunedState]] ever write. Any other key
+    * (or a NULL one) fails the job naming the key: a malformed stored row
+    * must not silently drop out of the merge and the dirty-tile joins.
     */
   private[graft] def encodeMapKey(k: Column): Column = {
-    val t = substring(k, 1, 1).cast("long")
+    val t = substring(k, 1, 1).try_cast("long")
     val vs = substring(k, 3, 24)
     val v = when(t === 3, when(vs === "A", lit(0L)).when(vs === "N", lit(1L))
-      .otherwise(lit(2L)))
-      .otherwise(vs.cast("long"))
-    shiftleft(t, 40) + v
+      .when(vs === "R", lit(2L)))
+      .otherwise(vs.try_cast("long"))
+    coalesce(
+      when(substring(k, 2, 1) === ":" && v >= 0 && v < KeyShift, shiftleft(t, 40) + v),
+      raise_error(concat(lit("malformed map_key: "), coalesce(k, lit("NULL"))))
+        .cast("long"))
   }
 
-  private[graft] def levelStats(top: DataFrame, lowZ: Int, highZ: Int): DataFrame = {
-    require(lowZ >= 0 && highZ <= MaxZoom,
-      s"levelStats zooms must sit in [0, $MaxZoom], got [$lowZ, $highZ]")
-    val zs = array((lowZ to highZ).map(lit): _*)
+  private def encodeKeys(df: DataFrame): DataFrame =
+    df.withColumn("map_key", encodeMapKey(col("map_key")))
+
+  private def zoomArray(lo: Int, hi: Int): Column = array((lo to hi).map(lit): _*)
+
+  // Round 12 (§2.3): (z, px, py) PACK into ONE long through the pyramid's
+  // keyed exchanges — z ≤ MaxZoom = 16 < 2⁶ and px, py < TileSize·2^z ≤
+  // 2²⁵ are PIXEL-ADDRESSING bounds (data-independent, so the packing is
+  // exact at any corpus scale; [[levelStats]] and [[dirtyTiles]] require
+  // the zoom bound). Key slots per row drop 4 → 2 in both exchanges;
+  // unpack is row-local after the last aggregation. Same-session A/B at
+  // the q182 shape (OptLab pieces pyr_enc vs pyr_enc_nopack): numbers in
+  // OPTIMIZATION_r12.md. The three helpers below are the only places the
+  // packing is spelled out.
+
+  /** zxy = z·2⁵⁰ + x·2²⁵ + y of a `grainZoom` pixel (columns px, py) at
+    * the exploded zoom column z. */
+  private def packZxy(grainZoom: Int): Column =
+    col("z").cast("long") * lit(1L << 50) +
+      expr(s"shiftright(px, $grainZoom - z)") * lit(1L << 25) +
+      expr(s"shiftright(py, $grainZoom - z)")
+
+  /** zxy → its tile key ztxy = z·2³² + tx·2¹⁶ + ty (tx, ty < 2¹⁶): the
+    * same pack with the TileShift low bits of x and y dropped. */
+  private def ztxyOf(zxy: Column): Column =
+    shiftright(zxy, 50) * lit(1L << 32) +
+      shiftright(zxy, 25 + TileShift)
+        .bitwiseAND(lit((1L << (25 - TileShift)) - 1)) * lit(1L << 16) +
+      shiftright(zxy.bitwiseAND(lit((1L << 25) - 1)), TileShift)
+
+  /** ztxy → its (z, tx, ty) columns. */
+  private def tileCols(ztxy: Column): (Column, Column, Column) = (
+    shiftright(ztxy, 32).cast("int").as("z"),
+    shiftright(ztxy, 16).bitwiseAND(lit(0xffffL)).as("tx"),
+    ztxy.bitwiseAND(lit(0xffffL)).as("ty"))
+
+  /** Tile stats for every zoom in [lowZ, highZ] from a zoom-`grainZoom`
+    * per-pixel table (map_key, px, py, total), in one explode + two keyed
+    * aggregations (per pixel, then per tile) — the one core shared by
+    * [[pyramidOnePass]], each chunk of [[pyramidIterative]],
+    * [[pyramidFromState]] and the incremental recompute, so they agree by
+    * construction. With `dirty` (a [[dirtyTiles]] set) only the pixels
+    * under dirty tiles survive — the incremental recompute: the broadcast
+    * semi-join sits BEFORE the first
+    * exchange, so the shuffled volume is the pixels inside dirty tiles
+    * (the delta's spatial footprint), not the corpus. A dirty z0 tile
+    * bounds the recompute at TileSize² pixels per (view, tile).
+    */
+  private[graft] def levelStats(pixels: DataFrame, grainZoom: Int, lowZ: Int,
+      highZ: Int, dirty: Option[DataFrame]): DataFrame = {
+    require(lowZ >= 0 && grainZoom <= MaxZoom,
+      s"levelStats zooms must sit in [0, $MaxZoom], got [$lowZ, $grainZoom]")
     // NOTE (measured): fusing the pair below into one distinct aggregate
     // (countDistinct(px, py) + sum at the tile key) ran 1.6× SLOWER at
     // sf0.1 — mixing distinct and plain aggregates plans an Expand that
@@ -372,66 +414,31 @@ object MapBuild {
     // aggregations beat one Expand-doubled one; the q08 tileAssembly case
     // wins with countDistinct only because it starts from raw records and
     // drops TWO exchanges, not one.
-    //
-    // Round 12 (§2.3): (z, px, py) PACK into ONE long through both keyed
-    // exchanges — z ≤ MaxZoom = 16 < 2⁶ and px, py < TileSize·2^z ≤ 2²⁵
-    // are PIXEL-ADDRESSING bounds (data-independent, so the packing is
-    // exact at any corpus scale; the require above pins it). Key slots
-    // per row drop 4 → 2 in both exchanges; unpack is row-local after
-    // the last aggregation. Same-session A/B at the q182 shape (OptLab
-    // pieces pyr_enc vs pyr_enc_nopack): numbers in OPTIMIZATION_r12.md.
-    val perPixel = sumAgg(
-      top
-        .withColumn("z", explode(zs))
-        .select(col("map_key"),
-          (col("z").cast("long") * lit(1L << 50)
-            + expr(s"shiftright(px, $highZ - z)") * lit(1L << 25)
-            + expr(s"shiftright(py, $highZ - z)")).as("zxy"),
-          col("total")),
-      Seq("map_key", "zxy"), Seq("total"))
-    // tile key: the same pack with the TileShift low bits of px and py
-    // dropped — ztxy = z·2³² + tx·2¹⁶ + ty (tx, ty < 2¹⁶)
-    val tx = shiftright(col("zxy"), 25 + TileShift)
-      .bitwiseAND(lit((1L << (25 - TileShift)) - 1))
-    val ty = shiftright(col("zxy").bitwiseAND(lit((1L << 25) - 1)), TileShift)
+    val exploded = pixels
+      .withColumn("z", explode(zoomArray(lowZ, highZ)))
+      .select(col("map_key"), packZxy(grainZoom).as("zxy"), col("total"))
+    val live = dirty.fold(exploded)(d => exploded
+      .withColumn("ztxy", ztxyOf(col("zxy")))
+      .join(broadcast(d), Seq("map_key", "ztxy"), "left_semi"))
+    val perPixel = sumAgg(live, Seq("map_key", "zxy"), Seq("total"))
+    val (z, tx, ty) = tileCols(col("ztxy"))
     sumAgg(
-      perPixel.select(col("map_key"),
-        (shiftright(col("zxy"), 50) * lit(1L << 32)
-          + tx * lit(1L << 16) + ty).as("ztxy"),
-        lit(1L).as("n_pixels"),
-        col("total")),
+      perPixel.select(col("map_key"), ztxyOf(col("zxy")).as("ztxy"),
+        lit(1L).as("n_pixels"), col("total")),
       Seq("map_key", "ztxy"), Seq("n_pixels", "total"))
-      .select(col("map_key"),
-        shiftright(col("ztxy"), 16).bitwiseAND(lit(0xffffL)).as("tx"),
-        col("ztxy").bitwiseAND(lit(0xffffL)).as("ty"),
-        col("n_pixels"), col("total"),
-        shiftright(col("ztxy"), 32).cast("int").as("z"))
+      .select(col("map_key"), tx, ty, col("n_pixels"), col("total"), z)
   }
 
-  /** Aggregate raw records ONCE, directly at (maxZoom, no-bor) granularity:
+  /** Aggregate raw records ONCE, directly at (maxZoom, no-bor) granularity,
+    * with the map_key LONG-ENCODED at the source (round 12, guide §2.3):
     * the pyramid's tile stats never use bor_year and the top level sits
     * below MaxZoom, so the shift runs before the only shuffle and map-side
-    * combine collapses the explode output straight to ~4^maxZoom groups
-    * (the old pixelAgg→collapse→rollup chain shuffled three times, the
-    * first at z16 where almost nothing combines).
-    */
-  private def topLevel(occ: DataFrame, epsg: String, maxZoom: Int): DataFrame =
-    sumAgg(
-      explodeMapKeys(withPixels(occ, epsg))
-        .select(
-          col("map_key"),
-          shiftright(col("px"), MaxZoom - maxZoom).as("px"),
-          shiftright(col("py"), MaxZoom - maxZoom).as("py"),
-          lit(1L).as("total")),
-      Seq("map_key", "px", "py"), Seq("total"))
-
-  /** [[topLevel]] with the map_key LONG-ENCODED at the source (round 12,
-    * guide §2.3): the explode emits [[mapKeyIdsArray]] longs straight from
-    * the record's integer columns — no per-record string building, and
-    * every downstream keyed exchange carries an 8-byte long. Used by the
-    * pyramid BUILDERS (q45/q109/q182), which decode at the edge;
-    * [[pyramidState]] keeps the string form — it is the stored-state
-    * schema the incremental/store paths contract on.
+    * combine collapses the explode output straight to ~4^maxZoom groups;
+    * the explode emits [[mapKeyIdsArray]] longs straight from the record's
+    * integer columns — no per-record string building, and every
+    * downstream keyed exchange carries an 8-byte long. The pyramid
+    * builders decode at the edge, [[pyramidState]] right after this
+    * aggregation.
     */
   private def topLevelEnc(occ: DataFrame, epsg: String, maxZoom: Int): DataFrame =
     sumAgg(
@@ -468,7 +475,7 @@ object MapBuild {
     * only dispatch input.
     */
   def pyramidOnePass(occ: DataFrame, epsg: String, minZoom: Int, maxZoom: Int): DataFrame =
-    decodeStats(levelStats(topLevelEnc(occ, epsg, maxZoom), minZoom, maxZoom))
+    decodeStats(levelStats(topLevelEnc(occ, epsg, maxZoom), maxZoom, minZoom, maxZoom, None))
 
   /** Pyramid strategy dispatch: one-pass for shallow pyramids, chunked
     * iterative halving (with per-chunk materialization barriers) for deep
@@ -481,40 +488,35 @@ object MapBuild {
   /** Deep-pyramid builder (the reference's z16 production shape,
     * TileMapBuilder.java:52-70): processes the zoom range in CHUNKS of up
     * to [[PyramidChunk]] levels. Each chunk is one [[levelStats]] pass over
-    * a persisted per-pixel top table; between chunks the top rolls up
+    * a materialized per-pixel top table; between chunks the top rolls up
     * `chunk` levels in a single keyed aggregation. Compared to the previous
     * one-barrier-per-level chain (z0–z10 = 11 sequential persist+count
     * jobs; measured 13.2 s at sf0.1), this runs ⌈depth/7⌉ barriers (z0–z10
     * = 2, z0–z16 = 3) while keeping the property that makes iterative win
     * at depth: no explode span ever exceeds 7 levels, so per-chunk shuffle
     * volume stays ~1.33× the chunk's top regardless of total depth. The
-    * persist is the materialization barrier each chunk AND the next rollup
+    * checkpoint is the materialization barrier each chunk AND the next rollup
     * both consume (the reference writes each level to a table for the same
     * reason — O4, MapBuilder.java:179-199); at production scale it becomes
     * a parquet write per chunk, and the top shrinks ~4^7 per chunk.
     */
   def pyramidIterative(occ: DataFrame, epsg: String, minZoom: Int, maxZoom: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    var top = topLevelEnc(occ, epsg, maxZoom)
-    top.persist(StorageLevel.MEMORY_AND_DISK).count() // materialize barrier
+    // each chunk top is a materialization barrier through
+    // Lifecycle.loopCheckpoint — block storage the ContextCleaner frees
+    // with the returned plan, never an SQL-cache entry a library caller
+    // would have to clear. Every chunk top stays live until the result is
+    // consumed (the union output references all of them); sizes shrink
+    // ~4^7/chunk
+    var top = graft.core.Lifecycle.loopCheckpoint(topLevelEnc(occ, epsg, maxZoom))
     var highZ = maxZoom
     var out: DataFrame = null
     while (highZ >= minZoom) {
       val lowZ = math.max(minZoom, highZ - PyramidChunk + 1)
-      val chunk = levelStats(top, lowZ, highZ)
+      val chunk = levelStats(top, highZ, lowZ, highZ, None)
       out = if (out == null) chunk else out.unionByName(chunk)
-      if (lowZ > minZoom) {
-        // every chunk top stays persisted until the result is consumed —
-        // the union output references all of them; sizes shrink ~4^7/chunk
-        top = sumAgg(
-          top.select(
-            col("map_key"),
-            shiftright(col("px"), highZ - lowZ + 1).as("px"),
-            shiftright(col("py"), highZ - lowZ + 1).as("py"),
-            col("total")),
-          Seq("map_key", "px", "py"), Seq("total"))
-        top.persist(StorageLevel.MEMORY_AND_DISK).count()
-      }
+      if (lowZ > minZoom)
+        top = graft.core.Lifecycle.loopCheckpoint(
+          rollupPixels(top, highZ, lowZ - 1, Nil, Seq("total")))
       highZ = lowZ - 1
     }
     decodeStats(out)
@@ -522,8 +524,7 @@ object MapBuild {
 
   private val PyramidChunk = 7
 
-  /** log2(TileSize): global pixel → tile index is a right shift, so the
-    * zoom shift and the tile shift compose into ONE shiftright below. */
+  /** log2(TileSize): global pixel → tile index is a right shift. */
   private val TileShift = Integer.numberOfTrailingZeros(TileSize)
 
   /** Per-pixel top-level table for `epsg` at `maxZoom` — the SUM-MERGEABLE
@@ -533,49 +534,22 @@ object MapBuild {
     * grow). This is the handle a long-lived tile store keeps between
     * ingests for [[incrementalPyramid]]; the reference instead rebuilds the
     * full pyramid per snapshot (TileMapBuilder.java:52-70) — incremental
-    * maintenance is the beyond-reference scale path.
+    * maintenance is the beyond-reference scale path. Aggregated long-keyed
+    * ([[topLevelEnc]]) and decoded once after the aggregation: the rows
+    * equal a string-keyed aggregation's, because decode ∘ encode is the
+    * string key array (OperatorSpec-pinned).
     */
   def pyramidState(occ: DataFrame, epsg: String, maxZoom: Int): DataFrame =
-    topLevel(occ, epsg, maxZoom)
+    topLevelEnc(occ, epsg, maxZoom)
+      .withColumn("map_key", decodeMapKey(col("map_key")))
 
   /** All-level tile stats from a [[pyramidState]] table (the second half of
     * [[pyramidOnePass]], exposed so a stored state can be re-served without
     * re-aggregating raw records).
     */
   def pyramidFromState(state: DataFrame, minZoom: Int, maxZoom: Int): DataFrame =
-    levelStats(state, minZoom, maxZoom)
+    levelStats(state, maxZoom, minZoom, maxZoom, None)
 
-  /** Incremental pyramid maintenance: given the stored `state`
-    * ([[pyramidState]] over everything ingested so far), the `pyramid`
-    * built from it, and a new `deltaOcc` batch, produce the updated
-    * pyramid WITHOUT rebuilding clean tiles.
-    *
-    * Mechanics — all delta-proportional:
-    *  1. the delta's own top-level pixel table (one aggregation of the
-    *     batch);
-    *  2. dirty tile keys = the z-ancestor tiles of delta pixels, per zoom —
-    *     ≤ |delta pixels| × nLevels rows, collapsed by distinct and
-    *     broadcast;
-    *  3. state merge = keyed addition (union + sum at pixel grain);
-    *  4. recompute tile stats ONLY under dirty tiles: the broadcast
-    *     semi-join sits BEFORE the first exchange of the recompute, so the
-    *     shuffled volume is the pixels inside dirty tiles (the delta's
-    *     spatial footprint), not the corpus. A dirty z0 tile bounds the
-    *     recompute at TileSize² pixels per (view, tile) — tile grain, never
-    *     corpus grain.
-    *  5. clean tiles stream through from the stored pyramid via a
-    *     broadcast anti-join (no shuffle).
-    *
-    * n_pixels (count of live zoom-z pixels per tile) is NOT mergeable from
-    * tile stats alone — a delta can light up a pixel that already existed —
-    * which is exactly why the recompute works from the merged pixel-grain
-    * state rather than patching tile rows.
-    *
-    * The dirty set must stay broadcastable: an ingest batch whose distinct
-    * pixel footprint × nLevels exceeds the broadcast budget should fall
-    * back to [[pyramid]] (a rebuild is then cheaper anyway — the delta
-    * touches most tiles).
-    */
   /** Distinct-cardinality pyramid (ALL view): for every (z, tx, ty) tile,
     * the HLL estimate of DISTINCT part keys in it, with the exact count as
     * ground truth. The analytics the count pyramid can't answer ("how many
@@ -619,124 +593,119 @@ object MapBuild {
       .select("z", "tx", "ty", "true_distinct", "est")
   }
 
-  def incrementalPyramid(state: DataFrame, pyramid: DataFrame, deltaOcc: DataFrame,
-      epsg: String, minZoom: Int, maxZoom: Int): DataFrame =
-    // deltaTop materialized once (round 11): the dirty-key chain and the
-    // state merge both consume it — uncheckpointed, the delta aggregation
-    // re-ran per consumer. Delta-footprint-bounded, the same justification
-    // as [[incrementalPyramidAuto]]'s existing checkpoint.
-    incrementalPyramidFromTop(state, pyramid,
-      topLevel(deltaOcc, epsg, maxZoom).localCheckpoint(), minZoom, maxZoom)
+  // ---- incremental maintenance: one kernel (delta top → dirty-tile set →
+  // dirty recompute → clean passthrough) behind three entries. Only the
+  // delta-footprint-sized intermediates are materialized; the result
+  // stays lazy because it is pyramid-sized (checkpointing it would
+  // double-materialize the store write).
 
-  /** [[incrementalPyramid]] over a caller-prepared delta TOP-LEVEL pixel
-    * table — so [[incrementalPyramidAuto]] can size the dirty set from the
-    * same (persisted) deltaTop it then passes through, running the delta
-    * aggregation once per ingest instead of twice.
+  /** An ingest batch's top table in the [[pyramidState]] schema,
+    * materialized once: the dirty set, the state merge and (pruned) the
+    * coarse-cell footprint all read it. Delta-footprint-sized; an eager
+    * local checkpoint, so no SQL-cache entry outlives the call.
     */
-  def incrementalPyramidFromTop(state: DataFrame, pyramid: DataFrame,
-      deltaTop: DataFrame, minZoom: Int, maxZoom: Int): DataFrame = {
+  private def deltaTopOf(deltaOcc: DataFrame, epsg: String, maxZoom: Int): DataFrame =
+    graft.core.Lifecycle.loopCheckpoint(pyramidState(deltaOcc, epsg, maxZoom))
+
+  /** The dirty-tile set of an ingest: every zoom-[minZoom, maxZoom] tile
+    * holding a pixel of `deltaTop` (a [[pyramidState]]-schema table at
+    * maxZoom grain), as (long map_key, packed ztxy), distinct. Bounded by
+    * |delta pixels| × nLevels, and materialized once: each broadcast build
+    * that reads it (the recompute's semi-join prune, the clean anti-join,
+    * a sizing count, the store's per-zoom filters) is its own job.
+    */
+  private[graft] def dirtyTiles(deltaTop: DataFrame, minZoom: Int, maxZoom: Int): DataFrame = {
     require(minZoom >= 0 && maxZoom <= MaxZoom, // the key pack's bound
       s"zooms must sit in [0, $MaxZoom], got [$minZoom, $maxZoom]")
-    val zs = array((minZoom to maxZoom).map(lit): _*)
-    // the recompute runs LONG-KEYED (round 12, guide §2.3): state and
-    // deltaTop keep their stored string schema (the contract), but one
-    // row-local [[encodeMapKey]] at entry puts an 8-byte long through the
-    // merge aggregation, the dirty semi-join and both recompute
-    // aggregations; [[decodeStats]] restores the string after the last
-    // exchange. The clean passthrough stays string-keyed — its anti-join
-    // probes the stored pyramid, so dirty is decoded on the (tiny)
-    // broadcast side instead of encoding the pyramid side.
-    val stateE = state.withColumn("map_key", encodeMapKey(col("map_key")))
-    val deltaE = deltaTop.withColumn("map_key", encodeMapKey(col("map_key")))
-    // dirty feeds TWO broadcast builds (the semi-join prune and the
-    // clean-tile anti-join), and each broadcast build is its own job —
-    // materialized once (round 11) so the delta aggregation + explode +
-    // distinct chain doesn't re-run per build. Bounded by the documented
-    // broadcast budget (≤ |delta pixels| × nLevels), so the checkpoint is
-    // delta-footprint-sized. (z, tx, ty) ride as ONE packed long
-    // (ztxy = z·2³² + tx·2¹⁶ + ty — the levelStats pack; stage-drilled:
-    // the recompute's per-pixel exchange wrote 17.7 M rows / 183 MB at
-    // sf0.1 with 6-column keys).
-    val dirty = deltaE
-      .withColumn("z", explode(zs))
-      .select(col("map_key"),
-        (col("z").cast("long") * lit(1L << 32)
-          + expr(s"shiftright(px, $maxZoom - z + $TileShift)") * lit(1L << 16)
-          + expr(s"shiftright(py, $maxZoom - z + $TileShift)")).as("ztxy"))
-      .distinct()
-      .localCheckpoint()
-    val merged = sumAgg(stateE.unionByName(deltaE),
-      Seq("map_key", "px", "py"), Seq("total"))
-    // recompute keys packed as in levelStats: the semi-join probes
-    // (map_key, ztxy) BEFORE the first exchange (the pruning point is
-    // unchanged); the per-pixel aggregation keys (map_key, zxy); tile key
-    // and output columns derive row-locally after.
-    val zxyCol = (col("z").cast("long") * lit(1L << 50)
-      + expr(s"shiftright(px, $maxZoom - z)") * lit(1L << 25)
-      + expr(s"shiftright(py, $maxZoom - z)"))
-    val ztxyOfZxy = shiftright(col("zxy"), 50) * lit(1L << 32) +
-      shiftright(col("zxy"), 25 + TileShift)
-        .bitwiseAND(lit((1L << (25 - TileShift)) - 1)) * lit(1L << 16) +
-      shiftright(col("zxy").bitwiseAND(lit((1L << 25) - 1)), TileShift)
-    val recomputed = merged
-      .withColumn("z", explode(zs))
-      .select(col("map_key"), zxyCol.as("zxy"), col("total"))
-      .withColumn("ztxy", ztxyOfZxy)
-      .join(broadcast(dirty), Seq("map_key", "ztxy"), "left_semi")
-      .groupBy("map_key", "zxy")
-      .agg(sum("total").as("total"))
-      .select(col("map_key"), ztxyOfZxy.as("ztxy"), col("total"))
-      .groupBy("map_key", "ztxy")
-      .agg(count(lit(1)).as("n_pixels"), sum("total").as("total"))
-      .select(decodeMapKey(col("map_key")).as("map_key"),
-        shiftright(col("ztxy"), 16).bitwiseAND(lit(0xffffL)).as("tx"),
-        col("ztxy").bitwiseAND(lit(0xffffL)).as("ty"),
-        col("n_pixels"), col("total"),
-        shiftright(col("ztxy"), 32).cast("int").as("z"))
-    val dirtyStr = dirty.select(decodeMapKey(col("map_key")).as("map_key"),
-      shiftright(col("ztxy"), 32).cast("int").as("z"),
-      shiftright(col("ztxy"), 16).bitwiseAND(lit(0xffffL)).as("tx"),
-      col("ztxy").bitwiseAND(lit(0xffffL)).as("ty"))
-    pyramid.join(broadcast(dirtyStr), Seq("map_key", "z", "tx", "ty"), "left_anti")
-      .select("map_key", "tx", "ty", "n_pixels", "total", "z")
-      .unionByName(recomputed)
+    graft.core.Lifecycle.loopCheckpoint(
+      encodeKeys(deltaTop.select("map_key", "px", "py"))
+        .withColumn("z", explode(zoomArray(minZoom, maxZoom)))
+        .select(col("map_key"), ztxyOf(packZxy(maxZoom)).as("ztxy"))
+        .distinct())
   }
 
-  /** [[incrementalPyramid]] with its documented broadcast-budget caveat
+  /** A [[dirtyTiles]] set at the stored tile key (string map_key, z, tx, ty). */
+  private[graft] def dirtyTileKeys(dirty: DataFrame): DataFrame = {
+    val (z, tx, ty) = tileCols(col("ztxy"))
+    dirty.select(decodeMapKey(col("map_key")).as("map_key"), z, tx, ty)
+  }
+
+  /** The updated pyramid: the long-keyed `recomputed` dirty tiles, decoded,
+    * plus every clean tile of the stored `pyramid`, streamed through by a
+    * broadcast anti-join against the dirty set (no shuffle). The anti-join
+    * probes the stored string-keyed pyramid, so the dirty set is decoded
+    * on the tiny broadcast side instead of encoding the pyramid side.
+    */
+  private def withCleanTiles(pyramid: DataFrame, dirty: DataFrame,
+      recomputed: DataFrame): DataFrame =
+    pyramid.join(broadcast(dirtyTileKeys(dirty)), Seq("map_key", "z", "tx", "ty"), "left_anti")
+      .select("map_key", "tx", "ty", "n_pixels", "total", "z")
+      .unionByName(decodeStats(recomputed))
+
+  /** The kernel over a whole in-memory state: merge by keyed addition
+    * (long-keyed: the one encode at entry), recompute the dirty tiles from
+    * the merged pixels, pass the clean ones through.
+    */
+  private def incrementalMerged(state: DataFrame, pyramid: DataFrame,
+      deltaTop: DataFrame, dirty: DataFrame, minZoom: Int, maxZoom: Int): DataFrame = {
+    val merged = sumAgg(encodeKeys(state.unionByName(deltaTop)),
+      Seq("map_key", "px", "py"), Seq("total"))
+    withCleanTiles(pyramid, dirty,
+      levelStats(merged, maxZoom, minZoom, maxZoom, Some(dirty)))
+  }
+
+  /** Incremental pyramid maintenance: given the stored `state`
+    * ([[pyramidState]] over everything ingested so far), the `pyramid`
+    * built from it, and a new `deltaOcc` batch, produce the updated
+    * pyramid WITHOUT rebuilding clean tiles.
+    *
+    * Mechanics — all delta-proportional:
+    *  1. the delta's own top-level pixel table (one aggregation of the
+    *     batch);
+    *  2. dirty tile keys = the z-ancestor tiles of delta pixels, per zoom —
+    *     ≤ |delta pixels| × nLevels rows, collapsed by distinct and
+    *     broadcast ([[dirtyTiles]]);
+    *  3. state merge = keyed addition (union + sum at pixel grain);
+    *  4. recompute tile stats ONLY under dirty tiles ([[levelStats]]'s
+    *     semi-join prune);
+    *  5. clean tiles stream through from the stored pyramid via a
+    *     broadcast anti-join (no shuffle).
+    *
+    * n_pixels (count of live zoom-z pixels per tile) is NOT mergeable from
+    * tile stats alone — a delta can light up a pixel that already existed —
+    * which is exactly why the recompute works from the merged pixel-grain
+    * state rather than patching tile rows.
+    *
+    * The dirty set must stay broadcastable: [[incrementalPyramidAuto]]
+    * falls back to a rebuild from the merged state past a budget.
+    */
+  def incrementalPyramid(state: DataFrame, pyramid: DataFrame, deltaOcc: DataFrame,
+      epsg: String, minZoom: Int, maxZoom: Int): DataFrame = {
+    val deltaTop = deltaTopOf(deltaOcc, epsg, maxZoom)
+    incrementalMerged(state, pyramid, deltaTop,
+      dirtyTiles(deltaTop, minZoom, maxZoom), minZoom, maxZoom)
+  }
+
+  /** [[incrementalPyramid]] with its broadcast-budget caveat
     * OPERATIONALIZED: the dirty-tile set must stay broadcastable, and an
     * ingest whose per-zoom ancestor footprint exceeds `maxDirtyKeys`
     * dirties most of the pyramid anyway — so past the bound this falls
     * back to a rebuild from the merged state ([[pyramidFromState]]): same
     * result (the incremental path's oracle IS the rebuild), no oversized
     * broadcast, and the rebuild is the cheaper plan exactly when the
-    * fallback fires. Costs one count() of the (collapsed, ≤ footprint ×
-    * nLevels) dirty set before choosing.
+    * fallback fires. The sizing is a count() of the materialized dirty set
+    * the incremental arm then broadcasts.
     */
   def incrementalPyramidAuto(state: DataFrame, pyramid: DataFrame,
       deltaOcc: DataFrame, epsg: String, minZoom: Int, maxZoom: Int,
       maxDirtyKeys: Long = 8000000L): DataFrame = {
-    // eagerly checkpointed so the sizing count AND the chosen plan read
-    // ONE delta aggregation (previously the count discarded its deltaTop
-    // and the incremental path recomputed it — the whole delta pipeline
-    // twice per ingest). localCheckpoint, not persist (structural round-9
-    // lifecycle): deltaTop is the SMALL side (the delta footprint), its
-    // blocks are freed by the ContextCleaner with the returned plan, and
-    // no SQL-cache entry exists to leak — the result itself stays lazy
-    // because it is pyramid-sized (checkpointing the OUTPUT would
-    // double-materialize the store write).
-    val deltaTop = topLevel(deltaOcc, epsg, maxZoom).localCheckpoint()
-    val zs = array((minZoom to maxZoom).map(lit): _*)
-    val nDirty = deltaTop
-      .withColumn("z", explode(zs))
-      .select(col("map_key"), col("z"),
-        expr(s"shiftright(px, $maxZoom - z + $TileShift)").as("tx"),
-        expr(s"shiftright(py, $maxZoom - z + $TileShift)").as("ty"))
-      .distinct().count()
-    if (nDirty > maxDirtyKeys)
+    val deltaTop = deltaTopOf(deltaOcc, epsg, maxZoom)
+    val dirty = dirtyTiles(deltaTop, minZoom, maxZoom)
+    if (dirty.count() > maxDirtyKeys)
       pyramidFromState(
         sumAgg(state.unionByName(deltaTop), Seq("map_key", "px", "py"), Seq("total")),
         minZoom, maxZoom)
-    else incrementalPyramidFromTop(state, pyramid, deltaTop, minZoom, maxZoom)
+    else incrementalMerged(state, pyramid, deltaTop, dirty, minZoom, maxZoom)
   }
 
   /** Coarse-cell partition value of a maxZoom-grain pixel: the zoom-`zc`
@@ -803,14 +772,23 @@ object MapBuild {
       maxZoom: Int, zc: Int, extraKeys: Seq[String],
       valueCols: Seq[String]): Unit = {
     writeFineCells(state, s"$path/fine", maxZoom, zc)
-    sumAgg(
-      state.select((Seq(col("map_key"),
-          shiftright(col("px"), maxZoom - zc).as("px"),
-          shiftright(col("py"), maxZoom - zc).as("py")) ++
-        (extraKeys ++ valueCols).map(col)): _*),
-      Seq("map_key", "px", "py") ++ extraKeys, valueCols)
+    rollupPixels(state, maxZoom, zc, extraKeys, valueCols)
       .write.mode("overwrite").parquet(s"$path/coarse")
   }
+
+  /** A pixel table (map_key, px, py, extraKeys.., valueCols..) re-addressed
+    * from zoom `fromZoom` to zoom `z` and collapsed by keyed addition — the
+    * coarse side table's derivation and the chunked pyramid's inter-chunk
+    * rollup.
+    */
+  private def rollupPixels(pixels: DataFrame, fromZoom: Int, z: Int,
+      extraKeys: Seq[String], valueCols: Seq[String]): DataFrame =
+    sumAgg(
+      pixels.select((Seq(col("map_key"),
+          shiftright(col("px"), fromZoom - z).as("px"),
+          shiftright(col("py"), fromZoom - z).as("py")) ++
+        (extraKeys ++ valueCols).map(col)): _*),
+      Seq("map_key", "px", "py") ++ extraKeys, valueCols)
 
   /** The delta's coarse-cell footprint — the value list for the partition
     * filter. Bounded driver collect (≤ 4^zc values, the documented
@@ -841,14 +819,9 @@ object MapBuild {
   private[graft] def mergedCoarseState(spark: org.apache.spark.sql.SparkSession,
       statePath: String, deltaTop: DataFrame, maxZoom: Int, zc: Int,
       extraKeys: Seq[String], valueCols: Seq[String]): DataFrame = {
-    val deltaCoarse = sumAgg(
-      deltaTop.select((Seq(col("map_key"),
-          shiftright(col("px"), maxZoom - zc).as("px"),
-          shiftright(col("py"), maxZoom - zc).as("py")) ++
-        (extraKeys ++ valueCols).map(col)): _*),
-      Seq("map_key", "px", "py") ++ extraKeys, valueCols)
     sumAgg(
-      spark.read.parquet(s"$statePath/coarse").unionByName(deltaCoarse),
+      spark.read.parquet(s"$statePath/coarse")
+        .unionByName(rollupPixels(deltaTop, maxZoom, zc, extraKeys, valueCols)),
       Seq("map_key", "px", "py") ++ extraKeys, valueCols)
   }
 
@@ -886,81 +859,24 @@ object MapBuild {
       epsg: String, minZoom: Int, maxZoom: Int, zc: Int): DataFrame = {
     require(zc <= maxZoom && minZoom <= maxZoom,
       s"need zc <= maxZoom and minZoom <= maxZoom, got $minZoom/$zc/$maxZoom")
-    require(minZoom >= 0 && maxZoom <= MaxZoom, // the key pack's bound
-      s"zooms must sit in [0, $MaxZoom], got [$minZoom, $maxZoom]")
-    val deltaTop = topLevel(deltaOcc, epsg, maxZoom)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val zs = array((minZoom to maxZoom).map(lit): _*)
-    // the recompute runs LONG-KEYED past the (schema-contracted) state
-    // read, exactly as in [[incrementalPyramidFromTop]] (round 12):
-    // encode row-locally at entry, decode after the last exchange; the
-    // merge aggregations inside mergedFine/CoarseState keep the string
-    // schema Workflow's state writer contracts on.
-    // three broadcast builds read this (fine semi, coarse semi, clean
-    // anti) — materialized once, same rationale and bound as
-    // [[incrementalPyramidFromTop]]'s dirty checkpoint (round 11)
-    val dirty = deltaTop
-      .withColumn("map_key", encodeMapKey(col("map_key")))
-      .withColumn("z", explode(zs))
-      .select(col("map_key"),
-        (col("z").cast("long") * lit(1L << 32)
-          + expr(s"shiftright(px, $maxZoom - z + $TileShift)") * lit(1L << 16)
-          + expr(s"shiftright(py, $maxZoom - z + $TileShift)")).as("ztxy"))
-      .distinct()
-      .localCheckpoint()
+    val deltaTop = deltaTopOf(deltaOcc, epsg, maxZoom)
+    val dirty = dirtyTiles(deltaTop, minZoom, maxZoom)
     val dirtyPts = dirtyCells(deltaTop, maxZoom, zc) // bounded: ≤ 4^zc values
-
-    // packed keys exactly as incrementalPyramidFromTop's recompute
-    def tileStats(pixels: DataFrame, grainZoom: Int, zLo: Int, zHi: Int): DataFrame = {
-      val ztxyOfZxy = shiftright(col("zxy"), 50) * lit(1L << 32) +
-        shiftright(col("zxy"), 25 + TileShift)
-          .bitwiseAND(lit((1L << (25 - TileShift)) - 1)) * lit(1L << 16) +
-        shiftright(col("zxy").bitwiseAND(lit((1L << 25) - 1)), TileShift)
-      pixels
-        .withColumn("map_key", encodeMapKey(col("map_key")))
-        .withColumn("z", explode(array((zLo to zHi).map(lit): _*)))
-        .select(col("map_key"),
-          (col("z").cast("long") * lit(1L << 50)
-            + expr(s"shiftright(px, $grainZoom - z)") * lit(1L << 25)
-            + expr(s"shiftright(py, $grainZoom - z)")).as("zxy"),
-          col("total"))
-        .withColumn("ztxy", ztxyOfZxy)
-        .join(broadcast(dirty), Seq("map_key", "ztxy"), "left_semi")
-        .groupBy("map_key", "zxy")
-        .agg(sum("total").as("total"))
-        .select(col("map_key"), ztxyOfZxy.as("ztxy"), col("total"))
-        .groupBy("map_key", "ztxy")
-        .agg(count(lit(1)).as("n_pixels"), sum("total").as("total"))
-        .select(decodeMapKey(col("map_key")).as("map_key"),
-          shiftright(col("ztxy"), 16).bitwiseAND(lit(0xffffL)).as("tx"),
-          col("ztxy").bitwiseAND(lit(0xffffL)).as("ty"),
-          col("n_pixels"), col("total"),
-          shiftright(col("ztxy"), 32).cast("int").as("z"))
-    }
-
     // fine levels (z >= zc): pruned state read — the partition filter is
     // the whole point ([[mergedFineState]] keeps it a direct filter on the
-    // partition column)
-    val mergedFine =
-      mergedFineState(spark, statePath, deltaTop, dirtyPts, Nil, Seq("total"))
-    // fine levels start at zc — or at minZoom when the request begins
-    // above the coarse cut (then the coarse table never enters)
-    val recomputedFine = tileStats(mergedFine, maxZoom, math.max(zc, minZoom), maxZoom)
-
+    // partition column). They start at zc — or at minZoom when the
+    // request begins above the coarse cut (then the coarse table never
+    // enters). The merges keep the stored string schema; the recompute
+    // encodes at entry.
+    val fine = levelStats(
+      encodeKeys(mergedFineState(spark, statePath, deltaTop, dirtyPts, Nil, Seq("total"))),
+      maxZoom, math.max(zc, minZoom), maxZoom, Some(dirty))
     // coarse levels (z < zc): from the small zc-grain side table
     val recomputed =
-      if (minZoom >= zc) recomputedFine
-      else {
-        val mergedCoarse = mergedCoarseState(
-          spark, statePath, deltaTop, maxZoom, zc, Nil, Seq("total"))
-        recomputedFine.unionByName(tileStats(mergedCoarse, zc, minZoom, zc - 1))
-      }
-    val dirtyStr = dirty.select(decodeMapKey(col("map_key")).as("map_key"),
-      shiftright(col("ztxy"), 32).cast("int").as("z"),
-      shiftright(col("ztxy"), 16).bitwiseAND(lit(0xffffL)).as("tx"),
-      col("ztxy").bitwiseAND(lit(0xffffL)).as("ty"))
-    pyramid.join(broadcast(dirtyStr), Seq("map_key", "z", "tx", "ty"), "left_anti")
-      .select("map_key", "tx", "ty", "n_pixels", "total", "z")
-      .unionByName(recomputed)
+      if (minZoom >= zc) fine
+      else fine.unionByName(levelStats(
+        encodeKeys(mergedCoarseState(spark, statePath, deltaTop, maxZoom, zc, Nil, Seq("total"))),
+        zc, minZoom, zc - 1, Some(dirty)))
+    withCleanTiles(pyramid, dirty, recomputed)
   }
 }

@@ -140,7 +140,7 @@ object Workflow {
       projections: Seq[String] =
         Seq("EPSG:4326", "EPSG:3857", "EPSG:3575", "EPSG:3031"),
       maxZoom: Int = 6): Manifest = {
-    import graft.operators.{MapBuild, OccurrenceView, PointEncode, TileEncode}
+    import graft.operators.{MapBuild, OccurrenceView, PointEncode}
     val version = readManifest(workDir).map(_.version + 1).getOrElse(1L)
     val pointsPath = s"$workDir/v$version/points"
     val tilesPath = s"$workDir/v$version/tiles"
@@ -170,40 +170,75 @@ object Workflow {
     KeyedSink.writeSalted(
       PointEncode.pointBlobs(spark, MapBuild.pointAgg(small)),
       col("map_key"), PointSaltModulus, s"${pointsPath}_blobs")
-    // tiles store: MVT blobs for every zoom 0..6, keyed srs:mapKey:z:x:y
-    // (salt 100, MapBuilder.java:104) — one sub-store per (projection, zoom)
-    // like the reference's per-zoom HFile directories under four column
-    // families (PrepareBackfill.java:88-93, TileMapBuilder.java:87-93).
-    // Each zoom's pixels derive from the previous zoom's persisted level
-    // (O3 compute-once pyramid).
+    // tiles store: MVT blobs for every zoom, one sub-store per (projection,
+    // zoom) — see writeTileLevels
     projections.foreach { epsg =>
-      var level = MapBuild.pixelAggAt(occSnapshot, epsg, maxZoom)
+      val top = MapBuild.pixelAggAt(occSnapshot, epsg, maxZoom)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // the max-zoom pixel table IS the store's sum-mergeable state —
       // written alongside the blobs so incrementalUpdate() can absorb the
       // next ingest batch by keyed addition instead of a corpus rescan;
       // stored in the prunable fine/coarse layout so that merge reads
       // only the delta's coarse-cell footprint
-      writeState(level, s"$workDir/v$version/state/${srsDir(epsg)}", maxZoom)
-      var z = maxZoom
-      while (z >= 0) {
-        KeyedSink.writeSalted(
-          TileEncode.mvtTiles(spark, level, z),
-          concat_ws(":", lit(epsg), col("map_key"), col("z"), col("tx"), col("ty")),
-          TileSaltModulus, s"$tilesPath/srs=${epsg.replace(':', '_')}/zoom=$z")
-        if (z > 0) {
-          val next = MapBuild.rollupToZoom(level, z, z - 1)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          next.count()
-          level.unpersist()
-          level = next
-        } else level.unpersist()
-        z -= 1
-      }
+      writeState(top, s"$workDir/v$version/state/${srsDir(epsg)}", maxZoom)
+      writeTileLevels(spark, epsg, top, maxZoom, tilesPath, None, None)
     }
 
     occSnapshot.unpersist()
     writeManifest(workDir, Manifest(version, pointsPath, tilesPath))
+  }
+
+  /** The per-projection tile loop of [[buildFrom]] and
+    * [[incrementalUpdate]]: for each zoom from maxZoom down to 0, MVT-encode
+    * the level, write it salted (keyed srs:mapKey:z:x:y, salt 100,
+    * MapBuilder.java:104) as sub-store `srs=<srs>/zoom=<z>` — one per (projection,
+    * zoom), like the reference's per-zoom HFile directories
+    * (PrepareBackfill.java:88-93, TileMapBuilder.java:87-93) — then roll
+    * it up one zoom behind a persist + count() barrier (O3 compute-once
+    * pyramid: each zoom derives from the previous zoom's persisted level).
+    * The loop owns `top` (persisted by the caller) and every level after
+    * it, and frees each once its successor has materialized.
+    *
+    * `dirty` = (dirty tile keys (map_key, z, tx, ty), the previous
+    * version's tiles directory for `epsg`): only a level's rows under dirty
+    * tiles are re-encoded, every clean tile passes through from the
+    * previous version by broadcast anti-join. `coarse` re-seeds the rollup
+    * below [[StateCoarseZoom]] from the coarse state table.
+    */
+  private def writeTileLevels(spark: SparkSession, epsg: String, top: DataFrame,
+      maxZoom: Int, tilesPath: String, dirty: Option[(DataFrame, String)],
+      coarse: Option[DataFrame]): Unit = {
+    import graft.operators.{MapBuild, TileEncode}
+    val tshift = Integer.numberOfTrailingZeros(graft.operators.OccurrenceView.TileSize)
+    var level = top
+    for (z <- maxZoom to 0 by -1) {
+      val tiles = dirty match {
+        case None => TileEncode.mvtTiles(spark, level, z)
+        case Some((keys, prevTiles)) =>
+          val dirtyZ = keys.filter(col("z") === z).select("map_key", "tx", "ty")
+          val fresh = TileEncode.mvtTiles(spark, level
+            .withColumn("tx", expr(s"shiftright(px, $tshift)"))
+            .withColumn("ty", expr(s"shiftright(py, $tshift)"))
+            .join(broadcast(dirtyZ), Seq("map_key", "tx", "ty"), "left_semi")
+            .drop("tx", "ty"), z)
+          spark.read.parquet(s"$prevTiles/zoom=$z")
+            .select("map_key", "z", "tx", "ty", "mvt")
+            .join(broadcast(dirtyZ), Seq("map_key", "tx", "ty"), "left_anti")
+            .select("map_key", "z", "tx", "ty", "mvt")
+            .unionByName(fresh.select("map_key", "z", "tx", "ty", "mvt"))
+      }
+      KeyedSink.writeSalted(tiles,
+        concat_ws(":", lit(epsg), col("map_key"), col("z"), col("tx"), col("ty")),
+        TileSaltModulus, s"$tilesPath/${srsDir(epsg)}/zoom=$z")
+      if (z > 0) {
+        val from = if (z == StateCoarseZoom) coarse.getOrElse(level) else level
+        val next = MapBuild.rollupToZoom(from, z, z - 1)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        next.count()
+        level.unpersist()
+        level = next
+      } else level.unpersist()
+    }
   }
 
   /** Atomic manifest swap (S5's table-pointer flip): write-then-rename so a
@@ -251,7 +286,7 @@ object Workflow {
       projections: Seq[String] =
         Seq("EPSG:4326", "EPSG:3857", "EPSG:3575", "EPSG:3031"),
       maxZoom: Int = 6, streamBatch: Long = -1L): Manifest = {
-    import graft.operators.{MapBuild, OccurrenceView, PointEncode, TileEncode}
+    import graft.operators.{MapBuild, OccurrenceView, PointEncode}
     import org.apache.spark.storage.StorageLevel
     val prev = readManifest(workDir).getOrElse(
       throw new IllegalStateException(s"no manifest under $workDir — build() first"))
@@ -260,7 +295,6 @@ object Workflow {
     val pointsPath = s"$workDir/v$version/points"
     val tilesPath = s"$workDir/v$version/tiles"
     val statePath = s"$workDir/v$version/state"
-    val tshift = Integer.numberOfTrailingZeros(OccurrenceView.TileSize)
 
     val delta = deltaOcc.persist(StorageLevel.MEMORY_AND_DISK)
     delta.count() // snapshot barrier, as in build()
@@ -337,49 +371,14 @@ object Workflow {
         .persist(StorageLevel.MEMORY_AND_DISK)
       mergedCoarse.write.mode("overwrite")
         .parquet(s"$statePath/${srsDir(epsg)}/coarse")
-      val zs = array((0 to maxZoom).map(lit): _*)
-      val dirty = deltaTop
-        .withColumn("z", explode(zs))
-        .select(col("map_key"), col("z"),
-          expr(s"shiftright(px, $maxZoom - z + $tshift)").as("tx"),
-          expr(s"shiftright(py, $maxZoom - z + $tshift)").as("ty"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
       // rollup chain: z ≥ zc over the pruned merge (every dirty tile there
       // lives inside a dirty cell, so the restricted table is complete for
       // it); at z = zc−1 the chain re-seeds from the coarse table, whose
       // rollup equals the full-state rollup by sum associativity
-      var level = mergedDirty
-      var z = maxZoom
-      while (z >= 0) {
-        val dirtyZ = dirty.filter(col("z") === z).select("map_key", "tx", "ty")
-        val levelDirty = level
-          .withColumn("tx", expr(s"shiftright(px, $tshift)"))
-          .withColumn("ty", expr(s"shiftright(py, $tshift)"))
-          .join(broadcast(dirtyZ), Seq("map_key", "tx", "ty"), "left_semi")
-          .drop("tx", "ty")
-        val fresh = TileEncode.mvtTiles(spark, levelDirty, z)
-        val kept = spark.read
-          .parquet(s"${prev.tiles}/${srsDir(epsg)}/zoom=$z")
-          .select("map_key", "z", "tx", "ty", "mvt")
-          .join(broadcast(dirtyZ), Seq("map_key", "tx", "ty"), "left_anti")
-          .select("map_key", "z", "tx", "ty", "mvt")
-        KeyedSink.writeSalted(
-          kept.unionByName(fresh.select("map_key", "z", "tx", "ty", "mvt")),
-          concat_ws(":", lit(epsg), col("map_key"), col("z"), col("tx"), col("ty")),
-          TileSaltModulus, s"$tilesPath/${srsDir(epsg)}/zoom=$z")
-        if (z > 0) {
-          val next = (if (z == zc) MapBuild.rollupToZoom(mergedCoarse, zc, z - 1)
-                      else MapBuild.rollupToZoom(level, z, z - 1))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          next.count()
-          if (!(level eq mergedDirty)) level.unpersist()
-          level = next
-        } else if (!(level eq mergedDirty)) level.unpersist()
-        z -= 1
-      }
-      mergedDirty.unpersist(); mergedCoarse.unpersist()
-      dirty.unpersist(); deltaTop.unpersist()
+      val dirty = MapBuild.dirtyTileKeys(MapBuild.dirtyTiles(deltaTop, 0, maxZoom))
+      writeTileLevels(spark, epsg, mergedDirty, maxZoom, tilesPath,
+        Some((dirty, s"${prev.tiles}/${srsDir(epsg)}")), Some(mergedCoarse))
+      mergedCoarse.unpersist(); deltaTop.unpersist()
     }
     mergedPoints.unpersist(); delta.unpersist()
     writeManifest(workDir,

@@ -99,8 +99,16 @@ class MvtSpec extends AnyFunSuite {
   // codec is wire-compatible, not merely self-consistent.
 
   private val FixtureDir = "/root/reference/common/src/test/resources/tiles"
-  private def fixture(name: String): Array[Byte] =
-    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(FixtureDir, name))
+  // a missing fixture fails the test with ONE line naming the directory,
+  // not a raw NoSuchFileException stack
+  private def fixture(name: String): Array[Byte] = {
+    val p = java.nio.file.Paths.get(FixtureDir, name)
+    if (!java.nio.file.Files.isRegularFile(p))
+      fail(s"golden MVT fixture $name missing: directory $FixtureDir " +
+        (if (java.nio.file.Files.isDirectory(p.getParent)) "lacks it"
+         else "does not exist (the reference's production tiles are not vendored)"))
+    java.nio.file.Files.readAllBytes(p)
+  }
   private val TileSize = 512 // GBIF tile size of the captured tiles
 
   test("golden: all six production fixtures decode; API tiles carry the " +

@@ -67,6 +67,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the two strategies must be interchangeable: [[MapBuild.pyramid]]
     // dispatches on depth, so a divergence would ship invisibly whenever
     // only one branch is exercised by the driver gates
+    spark.catalog.clearCache() // isolate the leak check below
     val occ = OccurrenceView.occ(spark, Dir)
     val one = MapBuild.pyramidOnePass(occ, "EPSG:4326", 0, 5)
     val iter = MapBuild.pyramidIterative(occ, "EPSG:4326", 0, 5)
@@ -78,7 +79,10 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val iter9 = MapBuild.pyramidIterative(occ, "EPSG:4326", 0, 9)
     assert(one9.exceptAll(iter9).count() === 0)
     assert(iter9.exceptAll(one9).count() === 0)
-    spark.catalog.clearCache() // drop the iterative chain's persisted levels
+    // the chunk tops are loop checkpoints, not SQL-cache entries: a library
+    // caller that never calls clearCache() leaks nothing
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "pyramidIterative left SQL-cache entries behind")
   }
 
   test("incrementalPyramid equals the full rebuild at every delta ratio tried") {
@@ -99,6 +103,30 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(full.exceptAll(inc).count() === 0, s"mod=$mod: missing rows")
       spark.catalog.clearCache()
     }
+  }
+
+  test("incrementalPyramid fails loudly on a malformed stored map_key " +
+    "instead of silently dropping the state row (ANSI on or off)") {
+    val o = OccurrenceView.occ(spark, Dir)
+    val base = o.filter(col("l_orderkey") % 10 =!= 0)
+    val delta = o.filter(col("l_orderkey") % 10 === 0)
+    val good = MapBuild.pyramidState(base, "EPSG:4326", 6)
+    val stored = MapBuild.pyramidFromState(good, 0, 6)
+    val bad = good.unionByName(
+      spark.range(1).select(lit("x:7").as("map_key"), lit(3L).as("px"),
+        lit(5L).as("py"), lit(2L).as("total")))
+    def causes(t: Throwable): Seq[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try for (mode <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.ansi.enabled", mode)
+      val err = intercept[Exception] {
+        MapBuild.incrementalPyramid(bad, stored, delta, "EPSG:4326", 0, 6).collect()
+      }
+      assert(causes(err).exists(e => Option(e.getMessage)
+          .exists(_.contains("malformed map_key: x:7"))),
+        s"ansi=$mode: the failure does not name the malformed key: $err")
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 
   test("pyramidDistinct: register rollup equals building registers directly " +

@@ -402,6 +402,7 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     import graft.operators.MapBuild
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    spark.catalog.clearCache() // isolate the leak check at the end
     val o = graft.operators.OccurrenceView.occ(spark, Dir)
     val base = o.filter(col("l_orderkey") % 10 =!= 0)
     // a spatially CONCENTRATED ingest batch — the case partition pruning
@@ -473,7 +474,29 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }.isEmpty, "fallback should be a joinless rebuild from state")
     assert(auto.collect().map(keyed).toMap === got,
       "fallback rebuild diverged from the incremental result")
+
+    // the same dispatch at the DEFAULT budget takes the incremental arm:
+    // equal to incrementalPyramid, and its plan keeps both broadcast
+    // dirty-set joins (semi-join prune, anti-join passthrough)
+    val autoInc = MapBuild.incrementalPyramidAuto(state, stored06, delta,
+      "EPSG:4326", 0, 6)
+    assert(autoInc.collect().map(keyed).toMap === want,
+      "incremental arm of incrementalPyramidAuto diverged from incrementalPyramid")
+    import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
+    val joinTypes = autoInc.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j.joinType
+    }
+    assert(joinTypes.contains(LeftSemi) && joinTypes.contains(LeftAnti),
+      s"incremental arm lost a dirty-set join: $joinTypes")
+    val phys = autoInc.queryExecution.executedPlan.toString
+    assert(phys.contains("BroadcastHashJoin") && !phys.contains("SortMergeJoin"),
+      s"incremental arm's dirty-set joins are not broadcast:\n$phys")
+
+    // no SQL-cache entry outlives the calls once the test's own state is
+    // unpersisted: the delta top and dirty set are checkpoints
     state.unpersist()
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the incremental pyramid paths left SQL-cache entries behind")
   }
 
   test("pruned-state fine write salts WITHIN each coarse cell: a hot cell's " +
