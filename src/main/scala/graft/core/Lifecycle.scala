@@ -104,8 +104,8 @@ object Lifecycle {
   }
 
   /** Round-table materialization for DRIVER LOOPS (CC / LPA / k-core,
-    * the pyramid's chunk tops) and the incremental pyramid's delta top and
-    * dirty-tile set: `localCheckpoint` by default — the fast block-manager arm — or, when
+    * the pyramid's chunk tops): `localCheckpoint` by default — the fast
+    * block-manager arm — or, when
     * [[CheckpointDirKey]] is set, a RELIABLE `checkpoint()` under
     * `<dir>/loop`. The reliable arm is the cluster-mode story the loops
     * need at 100 TB: localCheckpoint truncates lineage into EXECUTOR

@@ -361,35 +361,36 @@ object MapBuild {
   private def zoomArray(lo: Int, hi: Int): Column = array((lo to hi).map(lit): _*)
 
   // Round 12 (§2.3): (z, px, py) PACK into ONE long through the pyramid's
-  // keyed exchanges — z ≤ MaxZoom = 16 < 2⁶ and px, py < TileSize·2^z ≤
-  // 2²⁵ are PIXEL-ADDRESSING bounds (data-independent, so the packing is
-  // exact at any corpus scale; [[levelStats]] and [[dirtyTiles]] require
-  // the zoom bound). Key slots per row drop 4 → 2 in both exchanges;
-  // unpack is row-local after the last aggregation. Same-session A/B at
+  // keyed exchanges — z ≤ MaxZoom = 16 < 2⁵ and px, py < 2·TileSize·2^z ≤
+  // 2²⁶ are PIXEL-ADDRESSING bounds (EPSG:4326 is two tiles wide at z0;
+  // data-independent, so the packing is exact at any corpus scale;
+  // [[levelStats]] and [[dirtyTiles]] require the zoom bound). Key slots
+  // per row drop 4 → 2 in both exchanges; unpack is row-local after the
+  // last aggregation. Same-session A/B at
   // the q182 shape (OptLab pieces pyr_enc vs pyr_enc_nopack): numbers in
   // OPTIMIZATION_r12.md. The three helpers below are the only places the
   // packing is spelled out.
 
-  /** zxy = z·2⁵⁰ + x·2²⁵ + y of a `grainZoom` pixel (columns px, py) at
+  /** zxy = z·2⁵² + x·2²⁶ + y of a `grainZoom` pixel (columns px, py) at
     * the exploded zoom column z. */
   private def packZxy(grainZoom: Int): Column =
-    col("z").cast("long") * lit(1L << 50) +
-      expr(s"shiftright(px, $grainZoom - z)") * lit(1L << 25) +
+    col("z").cast("long") * lit(1L << 52) +
+      expr(s"shiftright(px, $grainZoom - z)") * lit(1L << 26) +
       expr(s"shiftright(py, $grainZoom - z)")
 
-  /** zxy → its tile key ztxy = z·2³² + tx·2¹⁶ + ty (tx, ty < 2¹⁶): the
+  /** zxy → its tile key ztxy = z·2³⁴ + tx·2¹⁷ + ty (tx, ty < 2¹⁷): the
     * same pack with the TileShift low bits of x and y dropped. */
   private def ztxyOf(zxy: Column): Column =
-    shiftright(zxy, 50) * lit(1L << 32) +
-      shiftright(zxy, 25 + TileShift)
-        .bitwiseAND(lit((1L << (25 - TileShift)) - 1)) * lit(1L << 16) +
-      shiftright(zxy.bitwiseAND(lit((1L << 25) - 1)), TileShift)
+    shiftright(zxy, 52) * lit(1L << 34) +
+      shiftright(zxy, 26 + TileShift)
+        .bitwiseAND(lit((1L << (26 - TileShift)) - 1)) * lit(1L << 17) +
+      shiftright(zxy.bitwiseAND(lit((1L << 26) - 1)), TileShift)
 
   /** ztxy → its (z, tx, ty) columns. */
   private def tileCols(ztxy: Column): (Column, Column, Column) = (
-    shiftright(ztxy, 32).cast("int").as("z"),
-    shiftright(ztxy, 16).bitwiseAND(lit(0xffffL)).as("tx"),
-    ztxy.bitwiseAND(lit(0xffffL)).as("ty"))
+    shiftright(ztxy, 34).cast("int").as("z"),
+    shiftright(ztxy, 17).bitwiseAND(lit((1L << 17) - 1)).as("tx"),
+    ztxy.bitwiseAND(lit((1L << 17) - 1)).as("ty"))
 
   /** Tile stats for every zoom in [lowZ, highZ] from a zoom-`grainZoom`
     * per-pixel table (map_key, px, py, total), in one explode + two keyed
@@ -602,26 +603,29 @@ object MapBuild {
   /** An ingest batch's top table in the [[pyramidState]] schema,
     * materialized once: the dirty set, the state merge and (pruned) the
     * coarse-cell footprint all read it. Delta-footprint-sized; an eager
-    * local checkpoint, so no SQL-cache entry outlives the call.
+    * local checkpoint, so no SQL-cache entry outlives the call and no
+    * reliable checkpoint is written per ingest batch.
     */
   private def deltaTopOf(deltaOcc: DataFrame, epsg: String, maxZoom: Int): DataFrame =
-    graft.core.Lifecycle.loopCheckpoint(pyramidState(deltaOcc, epsg, maxZoom))
+    pyramidState(deltaOcc, epsg, maxZoom).localCheckpoint()
 
   /** The dirty-tile set of an ingest: every zoom-[minZoom, maxZoom] tile
     * holding a pixel of `deltaTop` (a [[pyramidState]]-schema table at
     * maxZoom grain), as (long map_key, packed ztxy), distinct. Bounded by
     * |delta pixels| × nLevels, and materialized once: each broadcast build
     * that reads it (the recompute's semi-join prune, the clean anti-join,
-    * a sizing count, the store's per-zoom filters) is its own job.
+    * a sizing count, the store's per-zoom filters) is its own job. An
+    * eager local checkpoint, like [[deltaTopOf]]; a caller done with it
+    * frees it with `Lifecycle.freeCheckpoint`.
     */
   private[graft] def dirtyTiles(deltaTop: DataFrame, minZoom: Int, maxZoom: Int): DataFrame = {
     require(minZoom >= 0 && maxZoom <= MaxZoom, // the key pack's bound
       s"zooms must sit in [0, $MaxZoom], got [$minZoom, $maxZoom]")
-    graft.core.Lifecycle.loopCheckpoint(
-      encodeKeys(deltaTop.select("map_key", "px", "py"))
-        .withColumn("z", explode(zoomArray(minZoom, maxZoom)))
-        .select(col("map_key"), ztxyOf(packZxy(maxZoom)).as("ztxy"))
-        .distinct())
+    encodeKeys(deltaTop.select("map_key", "px", "py"))
+      .withColumn("z", explode(zoomArray(minZoom, maxZoom)))
+      .select(col("map_key"), ztxyOf(packZxy(maxZoom)).as("ztxy"))
+      .distinct()
+      .localCheckpoint()
   }
 
   /** A [[dirtyTiles]] set at the stored tile key (string map_key, z, tx, ty). */

@@ -181,7 +181,7 @@ object Workflow {
       // stored in the prunable fine/coarse layout so that merge reads
       // only the delta's coarse-cell footprint
       writeState(top, s"$workDir/v$version/state/${srsDir(epsg)}", maxZoom)
-      writeTileLevels(spark, epsg, top, maxZoom, tilesPath, None, None)
+      writeTileLevels(spark, epsg, top, maxZoom, tilesPath, None)
     }
 
     occSnapshot.unpersist()
@@ -199,22 +199,23 @@ object Workflow {
     * The loop owns `top` (persisted by the caller) and every level after
     * it, and frees each once its successor has materialized.
     *
-    * `dirty` = (dirty tile keys (map_key, z, tx, ty), the previous
-    * version's tiles directory for `epsg`): only a level's rows under dirty
-    * tiles are re-encoded, every clean tile passes through from the
-    * previous version by broadcast anti-join. `coarse` re-seeds the rollup
-    * below [[StateCoarseZoom]] from the coarse state table.
+    * `incremental` = (dirty tile keys (map_key, z, tx, ty), the previous
+    * version's tiles directory for `epsg`, the coarse state table): only a
+    * level's rows under dirty tiles are re-encoded, every clean tile passes
+    * through from the previous version by broadcast anti-join, and the
+    * rollup below [[StateCoarseZoom]] re-seeds from the coarse table.
+    * `None` is the full build.
     */
   private def writeTileLevels(spark: SparkSession, epsg: String, top: DataFrame,
-      maxZoom: Int, tilesPath: String, dirty: Option[(DataFrame, String)],
-      coarse: Option[DataFrame]): Unit = {
+      maxZoom: Int, tilesPath: String,
+      incremental: Option[(DataFrame, String, DataFrame)]): Unit = {
     import graft.operators.{MapBuild, TileEncode}
     val tshift = Integer.numberOfTrailingZeros(graft.operators.OccurrenceView.TileSize)
     var level = top
     for (z <- maxZoom to 0 by -1) {
-      val tiles = dirty match {
+      val tiles = incremental match {
         case None => TileEncode.mvtTiles(spark, level, z)
-        case Some((keys, prevTiles)) =>
+        case Some((keys, prevTiles, _)) =>
           val dirtyZ = keys.filter(col("z") === z).select("map_key", "tx", "ty")
           val fresh = TileEncode.mvtTiles(spark, level
             .withColumn("tx", expr(s"shiftright(px, $tshift)"))
@@ -231,7 +232,10 @@ object Workflow {
         concat_ws(":", lit(epsg), col("map_key"), col("z"), col("tx"), col("ty")),
         TileSaltModulus, s"$tilesPath/${srsDir(epsg)}/zoom=$z")
       if (z > 0) {
-        val from = if (z == StateCoarseZoom) coarse.getOrElse(level) else level
+        val from = incremental match {
+          case Some((_, _, coarse)) if z == StateCoarseZoom => coarse
+          case _ => level
+        }
         val next = MapBuild.rollupToZoom(from, z, z - 1)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         next.count()
@@ -375,9 +379,11 @@ object Workflow {
       // lives inside a dirty cell, so the restricted table is complete for
       // it); at z = zc−1 the chain re-seeds from the coarse table, whose
       // rollup equals the full-state rollup by sum associativity
-      val dirty = MapBuild.dirtyTileKeys(MapBuild.dirtyTiles(deltaTop, 0, maxZoom))
+      val dirty = MapBuild.dirtyTiles(deltaTop, 0, maxZoom)
       writeTileLevels(spark, epsg, mergedDirty, maxZoom, tilesPath,
-        Some((dirty, s"${prev.tiles}/${srsDir(epsg)}")), Some(mergedCoarse))
+        Some((MapBuild.dirtyTileKeys(dirty), s"${prev.tiles}/${srsDir(epsg)}",
+          mergedCoarse)))
+      graft.core.Lifecycle.freeCheckpoint(dirty)
       mergedCoarse.unpersist(); deltaTop.unpersist()
     }
     mergedPoints.unpersist(); delta.unpersist()

@@ -129,6 +129,24 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 
+  test("packed tile keys unpack exactly at the widest pixel EPSG:4326 " +
+    "reaches at z16 (two tiles wide at z0: px < 2^26, tx < 2^17)") {
+    val (px, py) = ((1L << 26) - 1, (1L << 25) - 1)
+    val top = spark.range(1).select(lit("1:5").as("map_key"), lit(px).as("px"),
+      lit(py).as("py"), lit(3L).as("total"))
+    val expected = (0 to 16).map(z => (z, px >> (16 - z + 9), py >> (16 - z + 9))).toSet
+    val dirty = MapBuild.dirtyTileKeys(MapBuild.dirtyTiles(top, 0, 16)).collect()
+    assert(dirty.map(_.getAs[String]("map_key")).toSet === Set("1:5"))
+    assert(dirty.map(r => (r.getAs[Int]("z"), r.getAs[Long]("tx"), r.getAs[Long]("ty")))
+      .toSet === expected)
+    assert(expected.contains((16, (1L << 17) - 1, (1L << 16) - 1)))
+    val stats = MapBuild.levelStats(
+      top.withColumn("map_key", lit((1L << 40) + 5)), 16, 0, 16, None).collect()
+    assert(stats.map(r => (r.getAs[Int]("z"), r.getAs[Long]("tx"), r.getAs[Long]("ty")))
+      .toSet === expected)
+    assert(stats.forall(r => r.getAs[Long]("n_pixels") == 1L && r.getAs[Long]("total") == 3L))
+  }
+
   test("pyramidDistinct: register rollup equals building registers directly " +
     "at the coarser zoom (parent sketch = merge of children)") {
     val o = OccurrenceView.occ(spark, Dir)
