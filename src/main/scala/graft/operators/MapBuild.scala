@@ -323,14 +323,18 @@ object MapBuild {
 
   /** Inverse of the algebraic encoding: long key → the exact view-key
     * string [[OccurrenceView.mapKeysArray]] builds. Row-local, applied
-    * once at the pyramid's OUTPUT (after the last keyed exchange).
+    * once at the pyramid's OUTPUT (after the last keyed exchange). A bor
+    * key (type 3) outside A/N/R fails the job naming the key, as
+    * [[encodeMapKey]] does, whatever the ANSI setting.
     */
   private[graft] def decodeMapKey(k: Column): Column = {
     val t = shiftright(k, 40)
     val v = k.bitwiseAND(lit(KeyShift - 1))
     concat(t.cast("string"), lit(":"),
       when(t === 3, when(v === 0, lit("A")).when(v === 1, lit("N"))
-        .otherwise(lit("R")))
+        .when(v === 2, lit("R"))
+        .otherwise(raise_error(concat(lit("malformed map_key: "), k.cast("string")))
+          .cast("string")))
         .otherwise(v.cast("string")))
   }
 

@@ -13,23 +13,30 @@ import org.apache.spark.sql.functions._
   * full salted key within each partition (HFiles require sorted keys; sorted
   * parquet gives row-group min/max skipping on point lookups). The salt is
   * `Java String.hashCode(key) & 0x0fffffff % modulus`, byte-compatible with
-  * the reference's rowkeys. At scale: modulus == number of output
-  * partitions == pre-split regions; lookups prune to 1 directory + the
-  * row groups covering the key.
+  * the reference's rowkeys. One file per salt directory (the region's HFile
+  * analog); write tasks = min(modulus, shuffle partitions). Lookups prune to
+  * 1 directory + the row groups covering the key.
   */
 object KeyedSink {
 
-  /** Write `df` keyed by `keyCol`, salted into `modulus` sorted partitions. */
+  /** Write `df` keyed by `keyCol`, salted into `modulus` sorted directories.
+    * Hash-partitioning on `salt` puts each salt in exactly one task, and the
+    * sort leads with `salt`, so the writer rolls to a new file at each salt
+    * boundary: one file per directory at any task count. The fan-out is
+    * capped by the session's shuffle width: on a narrow session one task
+    * per salt adds only per-task cost, which dominates small stores.
+    */
   def writeSalted(df: DataFrame, keyCol: Column, modulus: Int, path: String): Unit = {
     // the salt expression resolves on THIS frame's session, whatever thread
     // or session is active
     graft.functions.JavaHashExpr.register(df.sparkSession)
     val digits = Salt(modulus).digitCount
+    val width = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     df.withColumn("key", keyCol)
       .withColumn("salt", saltOf(col("key"), modulus))
       .withColumn("salted_key",
         concat_ws(":", lpad(col("salt"), digits, "0"), col("key")))
-      .repartition(modulus, col("salt"))
+      .repartition(math.min(modulus, width), col("salt"))
       // leading with `salt` satisfies the dynamic-partition writer's required
       // ordering, so it does NOT inject its own (unstable, salt-only) sort —
       // which would destroy the key order inside each file

@@ -129,6 +129,24 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 
+  test("decodeMapKey fails loudly on a bor key outside A/N/R instead of " +
+    "decoding it as R (ANSI on or off)") {
+    val bad = (3L << 40) + 7
+    val keys = spark.range(1).select((lit(3L << 40) + col("id") + 7).as("k"))
+    def causes(t: Throwable): Seq[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try for (mode <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.ansi.enabled", mode)
+      val err = intercept[Exception] {
+        keys.select(MapBuild.decodeMapKey(col("k"))).collect()
+      }
+      assert(causes(err).exists(e => Option(e.getMessage)
+          .exists(_.contains(s"malformed map_key: $bad"))),
+        s"ansi=$mode: the failure does not name the malformed key: $err")
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
   test("packed tile keys unpack exactly at the widest pixel EPSG:4326 " +
     "reaches at z16 (two tiles wide at z0: px < 2^26, tx < 2^17)") {
     val (px, py) = ((1L << 26) - 1, (1L << 25) - 1)

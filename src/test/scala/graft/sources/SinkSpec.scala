@@ -2,6 +2,8 @@ package graft.sources
 
 import graft.core.Salt
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -30,6 +32,17 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  /** Every node of an executed plan, through AQE's final stages and
+    * subqueries. */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = {
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
+    }
+    p +: (kids ++ p.subqueries).flatMap(planNodes)
+  }
 
   test("manifest roundtrips paths containing JSON delimiter characters") {
     val dir = java.nio.file.Files.createTempDirectory("man,if{est").toString
@@ -373,6 +386,64 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("writeSalted shuffles into min(modulus, shuffle partitions) tasks and " +
+    "still writes one sorted file per salt directory") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import scala.jdk.CollectionConverters._
+
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Int]]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(planNodes(qe.executedPlan)
+          .collect { case e: ShuffleExchangeLike => e.numPartitions })
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // the listener runs on the listener bus: wait for the write's event,
+    // the only execution in this test with a shuffle
+    def writeExchanges(df: org.apache.spark.sql.DataFrame, path: String): Seq[Int] = {
+      plans.clear()
+      KeyedSink.writeSalted(df, col("k"), 100, path)
+      eventually(timeout(30.seconds))(assert(plans.asScala.exists(_.nonEmpty)))
+      plans.asScala.filter(_.nonEmpty).toSeq.flatten
+    }
+    val keys = (0 until 150).map(i => s"k$i")
+    val df = spark.range(keys.size).select(concat(lit("k"), col("id")).as("k"),
+      (col("id") * 3).as("v"))
+    val dir = java.nio.file.Files.createTempDirectory("salted-width").toString
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.listenerManager.register(listener)
+    try {
+      assert(writeExchanges(df, s"$dir/w4") === Seq(4))
+      val saltDirs = java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/w4"))
+        .iterator().asScala.filter(_.getFileName.toString.startsWith("salt=")).toSeq
+      assert(saltDirs.size === keys.map(Salt(100).saltOf).distinct.size)
+      saltDirs.foreach { d =>
+        val files = java.nio.file.Files.list(d).iterator().asScala
+          .filter(_.toString.endsWith(".parquet")).toSeq
+        assert(files.size === 1, s"$d holds ${files.size} parquet files")
+        val sk = spark.read.parquet(files.head.toString)
+          .select("salted_key").collect().map(_.getString(0)).toSeq
+        assert(sk === sk.sorted, s"unsorted parquet in $d")
+      }
+      keys.foreach { k =>
+        val direct = KeyedSink.lookupDirect(s"$dir/w4", 100, k)
+        assert(direct.size === 1, s"$k: ${direct.size} rows")
+        assert(direct.map(_.toSeq) ===
+          KeyedSink.lookup(spark, s"$dir/w4", 100, k).collect().map(_.toSeq).toSeq)
+      }
+      // the modulus caps the fan-out: no empty tasks past one per salt
+      spark.conf.set("spark.sql.shuffle.partitions", "200")
+      assert(writeExchanges(df, s"$dir/w200") === Seq(100))
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", width)
+      spark.listenerManager.unregister(listener)
+    }
+  }
+
   test("schema evolution: a store appended across versions with an added " +
     "column reads whole under mergeSchema, old rows null-filled") {
     val ss = spark; import ss.implicits._
@@ -400,8 +471,7 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     "coarse-cell partitions (file-level pruning), output equals the " +
     "unpruned incremental path") {
     import graft.operators.MapBuild
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.FileSourceScanExec
     spark.catalog.clearCache() // isolate the leak check at the end
     val o = graft.operators.OccurrenceView.occ(spark, Dir)
     val base = o.filter(col("l_orderkey") % 10 =!= 0)
@@ -431,17 +501,9 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // pruning: walk the EXECUTED plan (post-collect, so scan metrics are
     // final) to the fine-state file scan and assert it opened strictly
     // fewer partitions/files than the store holds
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = {
-      val here = p match { case f: FileSourceScanExec => Seq(f); case _ => Nil }
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case other => other.children
-      }
-      here ++ kids.flatMap(scans) ++ p.subqueries.flatMap(scans)
-    }
-    val fineScans = scans(out.queryExecution.executedPlan).filter(
-      _.relation.location.rootPaths.exists(_.toString.contains("fine")))
+    val fineScans = planNodes(out.queryExecution.executedPlan)
+      .collect { case f: FileSourceScanExec => f }
+      .filter(_.relation.location.rootPaths.exists(_.toString.contains("fine")))
     assert(fineScans.nonEmpty, "no file scan over the fine state found")
     val ptDirs = new java.io.File(s"$store/fine").listFiles()
       .count(f => f.isDirectory && f.getName.startsWith("pt="))
