@@ -138,12 +138,12 @@ object BenchScale {
     // would mean the per-row codec path grew state it shouldn't have
     "q184_png_roundtrip")
 
-  /** The x10 DOCUMENTS replica recipe, factored so GramLab (and any future
-    * lab) runs on the SAME replica the probe does — per-replica alphabet
-    * rotation: corpus SHAPE replicates, replicas share no grams/shingles
-    * (see the main's honesty note). One implementation; drift impossible.
+  /** The x10 DOCUMENTS replica recipe — per-replica alphabet rotation:
+    * corpus SHAPE replicates, replicas share no grams/shingles (see the
+    * main's honesty note). `Lab time gram:0 gram:63` runs on the replica
+    * this writes (point SPARK_GRAFT_SF_DIR at the scale dir).
     */
-  private[graft] def replicateDocuments(spark: SparkSession, baseDir: String,
+  private def replicateDocuments(spark: SparkSession, baseDir: String,
       outPath: String, reps: Int): Unit = {
     val alpha = "abcdefghijklmnopqrstuvwxyz"
     val base = spark.read.parquet(s"$baseDir/documents.parquet")
@@ -219,84 +219,24 @@ object BenchScale {
       .write.mode("overwrite").parquet(outPath)
   }
 
-  /** Per-stage totals between two markers — shuffle volume and spill are
-    * the quantities that separate "the exchange really carries 7× the
-    * data" from "page-cache/GC noise" when a ratio comes back super-linear.
-    * Shared with GramLab (private[graft]).
-    */
-  private[graft] final class StageMetrics extends org.apache.spark.scheduler.SparkListener {
-    @volatile var shuffleWrite = 0L
-    @volatile var shuffleRead = 0L
-    @volatile var memSpill = 0L
-    @volatile var diskSpill = 0L
-    @volatile var stageTimeMs = 0L
-    @volatile var cpuNs = 0L
-    def reset(): Unit = { shuffleWrite = 0; shuffleRead = 0; memSpill = 0; diskSpill = 0; stageTimeMs = 0; cpuNs = 0 }
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        shuffleWrite += m.shuffleWriteMetrics.bytesWritten
-        shuffleRead += m.shuffleReadMetrics.totalBytesRead
-        memSpill += m.memoryBytesSpilled
-        diskSpill += m.diskBytesSpilled
-        stageTimeMs += m.executorRunTime
-        cpuNs += m.executorCpuTime
-      }
-    }
-    /** Listener events land async after a job returns; poll the completed-
-      * stage totals until three consecutive 25 ms samples agree (cap 2 s) so
-      * per-query CPU/shuffle attribution doesn't bleed into the next query.
-      */
-    def settle(): Unit = {
-      var last = (-1L, -1L, -1L)
-      var same = 0
-      var waited = 0
-      while (same < 2 && waited < 2000) {
-        val cur = (stageTimeMs, cpuNs, shuffleWrite + shuffleRead)
-        if (cur == last) same += 1 else same = 0
-        last = cur
-        if (same < 2) { Thread.sleep(25); waited += 25 }
-      }
-    }
-    def line: String = f"shufW=${shuffleWrite / 1e6}%.0fMB shufR=${shuffleRead / 1e6}%.0fMB " +
-      f"spillMem=${memSpill / 1e6}%.0fMB spillDisk=${diskSpill / 1e6}%.0fMB " +
-      f"execTime=${stageTimeMs / 1e3}%.1fs cpu=${cpuNs / 1e9}%.1fs"
-  }
-
   def main(args: Array[String]): Unit = {
     // dev loop: SPARK_GRAFT_SCALE_ONLY=q45_pyramid,q109_pyramid_deep
-    // restricts the probe; SPARK_GRAFT_SCALE_DEBUG=1 prints per-run stage
+    // restricts the probe; SPARK_GRAFT_OPT_STAGES=1 prints per-run stage
     // totals (shuffle/spill/exec-time) to stderr. The driver sets neither.
     // SPARK_GRAFT_SCALE_CORPUS=skew probes the OCCURRENCE family on the
     // Zipf-hot-spotted replica ([[skewedLineitem]]) instead of the
     // collapse-free lattice — documents/embeddings replicas are NOT built
     // there, so the query set is restricted to [[OccFamily]]
-    val skew = sys.env.get("SPARK_GRAFT_SCALE_CORPUS").contains("skew")
-    val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
-      .map(_.split(",").toSet)
-      .getOrElse(if (skew) OccFamily else Heavy.toSet)
+    val skew = Harness.scaleCorpus.contains("skew")
+    val only = Harness.scaleOnly.getOrElse(if (skew) OccFamily else Heavy.toSet)
     val heavy = Heavy.filter(n => only(n) && (!skew || OccFamily(n)))
-    val debug = sys.env.get("SPARK_GRAFT_SCALE_DEBUG").contains("1")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "10").toInt
-    val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val reps = Harness.scaleReps
+    val baseDir = Harness.sfDir
     val scaleDir = if (skew) s"/tmp/graft-scale-skew-x$reps"
       else s"/tmp/graft-scale-x$reps"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // zstd to MIRROR Bench's session (round 12 — the scale instrument
-      // must measure the config the engine benches under); lz4 re-runs
-      // the historical-PROFILE.md-comparable arm
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_CODEC", "zstd"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus()
+    val h = Harness(cpus)
+    val spark = h.spark
 
     // ---- materialize the replicated inputs (replica keys shifted so rows
     // stay distinct through every derivation)
@@ -339,20 +279,9 @@ object BenchScale {
             s"slice(embedding, 1, ${(i * 7) % 64}))")))
     }
 
-    val metrics = new StageMetrics
-    if (debug) spark.sparkContext.addSparkListener(metrics)
-
-    def time(dir: String, name: String): Double = {
-      metrics.reset()
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      if (debug) System.err.println(f"[scale-debug] $name $dir ${dt}%.1fs ${metrics.line}")
-      dt
-    }
-
-    heavy.foreach(time(baseDir, _)) // warmup + JIT on the unscaled data
+    def query(dir: String, name: String) = SparkEntry.queries(name)(spark, dir)
+    // warmup + JIT on the unscaled data
+    heavy.foreach(n => h.run(s"[scale] $n $baseDir", attribute = false)(query(baseDir, n)))
     // page the just-written replicas into the OS cache before ANY timed x10
     // run: the first query slot otherwise absorbs the cold read of the
     // whole scaled input and reports a fake super-linear ratio (measured:
@@ -361,13 +290,12 @@ object BenchScale {
       spark.read.parquet(s"$scaleDir/$t.parquet")
         .write.format("noop").mode("overwrite").save()
     }
-    // min of two timed runs with a GC between — single x10 runs swing >2×
-    // from GC debt and cold page cache on the just-written replicas
+    // min of two GC'd timed runs — single x10 runs swing >2× from GC debt
+    // and cold page cache on the just-written replicas
     def timed(dir: String, n: String): Double = {
-      System.gc()
-      val a = time(dir, n)
-      System.gc()
-      math.min(a, time(dir, n))
+      val r = h.best(s"[scale] $n $dir")(query(dir, n))
+      if (!r.ok) sys.error(s"$n failed on $dir")
+      r.wall
     }
     val baseTimes = heavy.map(n => n -> timed(baseDir, n)).toMap
     // hold per-partition data constant across the scale-up, as a real
@@ -375,7 +303,7 @@ object BenchScale {
     // with partitions pinned while input grows reps×, per-task aggregation
     // state grows reps× and the probe measures hash-spill onset, not the
     // operator's scaling
-    val scaleParts = math.min(cpus.toInt * reps, 512)
+    val scaleParts = math.min(cpus * reps, 512)
     spark.conf.set("spark.sql.shuffle.partitions", scaleParts)
     val scaleTimes = heavy.map(n => n -> timed(scaleDir, n)).toMap
     spark.conf.set("spark.sql.shuffle.partitions", cpus)
@@ -386,6 +314,6 @@ object BenchScale {
     }.mkString("{", ",", "}")
     val corpus = if (skew) "skew" else "lattice"
     println(s"""{"metric":"scale_probe","corpus":"$corpus","reps":$reps,"x_partitions":$scaleParts,"queries":$qs}""")
-    spark.stop()
+    h.spark.stop()
   }
 }

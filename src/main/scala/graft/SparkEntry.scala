@@ -970,9 +970,9 @@ object SparkEntry {
     // O3 at the reference's FULL production depth: z0–z16 Mercator — the
     // exact stage the only published perf table times (example.yaml:
     // 124-127 "Z16: 5, …" = the 14.9 k rows/core-sec baseline row); three
-    // iterative 7-level chunks, explode span never exceeds 7. ScaleLab's
-    // fullDepth/perZoom variants decompose this build per zoom on the
-    // x10 replica (PROFILE.md)
+    // iterative 7-level chunks, explode span never exceeds 7. `Lab time
+    // fullDepth perZoom` decomposes this build per zoom on the x10
+    // replica (PROFILE.md)
     "q182_pyramid_full" -> ((s, dir) => {
       val s2 = MapBuild.noCoalesceSession(s) // see q45 comment
       MapBuild.pyramid(occ(s2, dir), "EPSG:3857", 0, 16)

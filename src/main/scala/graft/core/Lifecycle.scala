@@ -33,14 +33,14 @@ import org.apache.spark.storage.StorageLevel
   */
 object Lifecycle {
 
-  /** PLAN-INSPECTION mode (PlanSpec's suite-wide guard ONLY): checkpointing
+  /** PLAN-INSPECTION mode (PlanSpec's guards and `Lab explain`): checkpointing
     * truncates lineage to a `LogicalRDD`, which would blind the
     * source-window / cartesian / BNLJ guards to everything INSIDE a
     * withPersisted operator — and make the guard pay each operator's full
     * job just to read a plan string. With this flag set the call returns
     * the lazy `body` un-persisted and un-checkpointed, so the guard walks
-    * the complete logical plan without executing it. Never set outside the
-    * test suite; production semantics are the checkpointed form.
+    * the complete logical plan without executing it. Never set on a
+    * production path; production semantics are the checkpointed form.
     */
   @volatile var planOnly: Boolean = false
 

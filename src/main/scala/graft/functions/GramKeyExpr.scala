@@ -15,8 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `String.hashCode` itself (JIT-intrinsic, vectorized). The gram
   * exchanges are the hot path of the whole ExactSubstr family
   * (q159/q161/q163–q165), so the key computation must cost like a hash,
-  * not like three string allocations — GramLab measured the composed form
-  * ADDING more CPU than its shuffle savings bought back; this form is the
+  * not like three string allocations — the composed form measured
+  * (PROFILE.md round-9 addendum A) ADDING more CPU than its shuffle savings bought back; this form is the
   * one that nets positive.
   *
   * Reversal is CODE-POINT-wise: the backward loop keeps surrogate pairs

@@ -371,8 +371,8 @@ object MapBuild {
   // [[levelStats]] and [[dirtyTiles]] require the zoom bound). Key slots
   // per row drop 4 → 2 in both exchanges; unpack is row-local after the
   // last aggregation. Same-session A/B at
-  // the q182 shape (OptLab pieces pyr_enc vs pyr_enc_nopack): numbers in
-  // OPTIMIZATION_r12.md. The three helpers below are the only places the
+  // the q182 shape (packed vs unpacked keys): numbers in
+  // OPTIMIZATION_r12.md:319-345. The three helpers below are the only places the
   // packing is spelled out.
 
   /** zxy = z·2⁵² + x·2²⁶ + y of a `grainZoom` pixel (columns px, py) at

@@ -65,7 +65,7 @@ object TileServe {
     // the GET targets the zoom=$z sub-store directly: the tile store is one
     // directory tree per (srs, zoom) (like the reference's per-zoom HFile
     // dirs), and z is in the request — listing the whole srs tree per GET
-    // paid a 7× file-listing tax (measured ~1.9 s vs ~0.15 s, ServeLab).
+    // paid a 7× file-listing tax (measured ~1.9 s vs ~0.15 s, BASELINE.md).
     // A zoom the store doesn't carry is an empty response, not a read
     // error (the old whole-tree scan's behavior for an unmatched key)
     val zoomDir = s"${m.tiles}/srs=${epsg.replace(':', '_')}/zoom=$z"
@@ -73,7 +73,7 @@ object TileServe {
       return Seq.empty
     // job-free GET: salt dir + footer-pruned row-group read, no Spark job
     // (the scheduled-scan arm KeyedSink.lookup stays as the SinkSpec
-    // equality oracle; ServeLab times both)
+    // equality oracle)
     val blobs = graft.sources.KeyedSink
       .lookupDirect(zoomDir, graft.sources.Workflow.TileSaltModulus, key)
       .map(_.getAs[Array[Byte]]("mvt"))
@@ -82,8 +82,9 @@ object TileServe {
 
   /** In-process half of [[serveTile]] AFTER the blob GET: MVT decode +
     * layer/year filters + per-pixel re-aggregation. Factored so the
-    * ServeLab latency microbench times EXACTLY the production serve
-    * kernel (BASELINE.md's published numbers stay honest by construction).
+    * perfbench `serve` workload's `mvt_decode`/`filter` layers time
+    * EXACTLY the production serve kernel (BASELINE.md's round-8 latency
+    * numbers were taken the same way).
     */
   def tileFilterAggregate(blobs: Seq[Array[Byte]], years: YearRange,
       borIds: Seq[Int]): Seq[(Int, Int, Long)] =
@@ -119,8 +120,8 @@ object TileServe {
   }
 
   /** In-process half of [[servePoints]] AFTER the blob GET: decode +
-    * year/bor filters. Shared with ServeLab (see [[tileFilterAggregate]]'s
-    * rationale).
+    * year/bor filters. Shared with the perfbench `serve` workload's
+    * `point_decode` layer (see [[tileFilterAggregate]]'s rationale).
     */
   def pointsFilterDecode(blobs: Seq[Array[Byte]], years: YearRange,
       borIds: Seq[Int]): Seq[(Long, Long, Long, Long)] =

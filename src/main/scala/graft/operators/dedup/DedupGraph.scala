@@ -124,8 +124,8 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
     // previous shape re-scanned the FULL symmetric edge list twice per
     // round against the shrinking survivor set. On peel-heavy (skewed)
     // graphs the live set collapses after the first wave: measured on a
-    // 2 M-edge Zipf star + ring (OptLab pieces kcore_cur/kcore_carry,
-    // same JVM, identical output): wall 12.7 → 5.4 s, cpu −50%, shuffle
+    // 2 M-edge Zipf star + ring (same JVM, identical output;
+    // OPTIMIZATION_r12.md:438-446): wall 12.7 → 5.4 s, cpu −50%, shuffle
     // 46.9 → 18.3 MB. On the near-uniform LSH graph (almost nothing
     // peels) the r11 probe measured it flat — the carried checkpoint is
     // edge-sized instead of node-sized per round, paid for by the smaller
@@ -401,8 +401,8 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
     *    at O(m^1.5). Wins exactly where "id" collapses: id-ordered wedge
     *    work at a node is (#smaller-id neighbors × #larger-id neighbors),
     *    so a mid-id hub of degree h costs ~(h/2)² wedges through one
-    *    node. MEASURED (plans.TriangleLab, star hub + 400 disjoint
-    *    5-cliques, local[32]): 6000 spokes → id 1.23 s vs degree 0.54 s;
+    *    node. MEASURED (`Lab time hub:id hub:degree`, star hub + 400
+    *    disjoint 5-cliques, local[32]): 6000 spokes → id 1.23 s vs degree 0.54 s;
     *    20000 spokes → id 9.72 s vs degree 0.79 s — the 12× gap is the
     *    (h/2)² hub-wedge count and keeps growing quadratically.
     *  - `"auto"` (default): degree-ordered iff max_deg > 4·√m. Rationale:
@@ -413,7 +413,9 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
     *    nothing, but the dispatch can't see id layout, so it buys the
     *    guaranteed O(m^1.5) bound); 4× keeps uniform-degree graphs
     *    (max ≈ mean) on the cheaper plan. One bounded driver collect (a
-    *    single 2-long row).
+    *    single 2-long row) — skipped under `Lifecycle.planOnly`, where
+    *    "auto" takes "degree" (the O(m^1.5) bound) so a plan-only build
+    *    runs no job.
     *
     * Each triangle appears exactly once under either orientation (both
     * are strict total orders on the vertices of the triangle).
@@ -434,8 +436,12 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
   }
 
   def triangles(e: DataFrame, orientation: String = "auto"): DataFrame = {
+    // plan-only builds run no job: "auto" takes the scale-safe arm (the
+    // O(m^1.5) degree order) instead of collecting the degree stats
     val mode =
-      if (orientation == "auto") triangleOrientation(e) else orientation
+      if (orientation != "auto") orientation
+      else if (graft.core.Lifecycle.planOnly) "degree"
+      else triangleOrientation(e)
     if (mode == "id") {
       e.as("e1")
         .join(e.as("e2"), col("e1.doc_b") === col("e2.doc_a"))
@@ -474,9 +480,11 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
         // count proves it under the broadcast budget, build the hash
         // relation from it and keep the wedge stream PIPELINED (never
         // exchanged). Past the budget the SMJ arm stands — the scale-safe
-        // default, same dispatch shape as the q117 orientation collect.
+        // default, same dispatch shape as the q117 orientation collect, and
+        // the arm a plan-only build takes without running the count.
         val cl0 = o.select(col("src"), col("dst"))
-        val cl = if (o.count() <= MaxBroadcastEdges) broadcast(cl0) else cl0
+        val cl = if (!graft.core.Lifecycle.planOnly && o.count() <= MaxBroadcastEdges)
+          broadcast(cl0) else cl0
         o.as("w1")
           .join(o.as("w2"),
             col("w1.src") === col("w2.src") && col("w1.dk") < col("w2.dk"))

@@ -392,7 +392,8 @@ private[graft] trait DedupMinHash extends Serializable { this: DedupJoins with D
       .select(col("doc_id"), col("s"))
     // round-12 measured NEGATIVE result: persisting sh across the two
     // verify-join sides was a WASH in a same-session interleaved A/B
-    // (cal_raw 19.3–31.3 cpu-s vs persisted 20.6–27.0; wall identical) —
+    // (unpersisted 19.3–31.3 cpu-s vs persisted 20.6–27.0; wall identical;
+    // OPTIMIZATION_r12.md:384) —
     // the broadcast candidate chain streams sh through chained BHJs, so
     // the UDF was never actually paid twice. Not shipped (guide §1.3).
     val inter = size(array_intersect(col("a.s"), col("b.s"))).cast("long")

@@ -123,8 +123,8 @@ private[graft] trait DedupSubstr extends Serializable {
       // one-pass codegen form of pmod(javaHash(gram), 2³²)·2³¹ +
       // pmod(javaHash(reverse(gram)), 2³¹) — FunctionsSpec asserts the
       // equivalence; the composed form costs 3 string allocations per
-      // window (GramLab measured it slower than the string arm it
-      // replaces)
+      // window (measured slower than the string arm it replaces:
+      // PROFILE.md round-9 addendum A)
       expr("graft_gram_key63(gram)")
     else
       expr(s"pmod(CAST(graft_java_hash(gram) AS BIGINT), ${1L << bits})")

@@ -57,8 +57,9 @@ object KeyedSink {
     * single HBase GET (HBaseMaps.java:149-186): salt → partition
     * directory → parquet footer stats prune the sorted row groups →
     * record-level key filter, all in-process through parquet-hadoop. No
-    * Spark job, no scheduler, no session required; ServeLab measures the
-    * latency beside the scheduled-job arm. Row values and schema equal
+    * Spark job, no scheduler, no session required; the perfbench `serve`
+    * workload measures it per request (`get.ms_p50`; BASELINE.md has the
+    * round-8 numbers beside the scheduled-job arm). Row values and schema equal
     * [[lookup]]'s (file columns in parquet order, then the
     * partition-inferred int `salt`) — SinkSpec-asserted.
     *
@@ -82,9 +83,9 @@ object KeyedSink {
   // simultaneously at the bound, a periodic latency cliff under churn
   // (round-9 ADVICE; SinkSpec pins hot-retention across overflow). The
   // synchronized map costs ~100 ns per GET against the ~1-2 ms read —
-  // invisible at ServeLab's 8-thread rate. Without the cache every GET
+  // invisible at an 8-thread GET rate. Without the cache every GET
   // re-reads + re-parses the footer (~7 ms of the measured 8 ms,
-  // ServeLab — the difference between ~8 ms and sub-5 ms).
+  // BASELINE.md — the difference between ~8 ms and sub-5 ms).
   private[sources] val FooterCacheMax = 8192
   private val footerCache = new java.util.LinkedHashMap[
       String, org.apache.parquet.hadoop.metadata.ParquetMetadata](

@@ -1036,7 +1036,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     // neighbors — an extreme-id hub costs nothing and would hide the
     // blowup) → 300×300 = 90,000 hub wedges for zero triangles; plus 40
     // disjoint 5-cliques (10 triangles each). A/B numbers:
-    // plans.TriangleLab, recorded in the Dedup.triangles Scaladoc.
+    // `Lab time hub:id hub:degree`, recorded in the Dedup.triangles Scaladoc.
     val hubId = 500L
     val star = (1L to 300L).map(i => (i, hubId)) ++
       (1L to 300L).map(i => (hubId, hubId + i))
@@ -1062,6 +1062,42 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(idT.size === 400, s"expected 40 cliques x 10 triangles, got ${idT.size}")
     assert(idT === degT, "orientations disagree on the triangle set")
     hub.unpersist()
+  }
+
+  test("triangles under Lifecycle.planOnly builds its plan without " +
+    "running a job (no orientation collect, no closure-probe count)") {
+    val ss = spark; import ss.implicits._
+    val hubId = 50L
+    val star = (1L to 30L).map(i => (i, hubId)) ++ (1L to 30L).map(i => (hubId, hubId + i))
+    val clique = for (i <- 0 until 5; j <- i + 1 until 5) yield (200L + i, 200L + j)
+    val e = (star ++ clique).toDF("doc_a", "doc_b")
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    // the listener bus delivers in order: once a tagged job's start
+    // arrives, every job started before it has arrived too
+    def drain(tag: String): Unit = {
+      spark.sparkContext.setJobDescription(tag)
+      spark.range(1).count()
+      spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.contains(tag) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(jobs.contains(tag), s"listener never saw the $tag job")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      drain("before")
+      jobs.clear()
+      graft.core.Lifecycle.planOnly = true
+      try Dedup.triangles(e).queryExecution.analyzed
+      finally graft.core.Lifecycle.planOnly = false
+      drain("after")
+      assert(jobs.toArray.count(_ != "after") === 0,
+        s"plan-only triangles ran jobs: ${jobs.toArray.mkString(", ")}")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("triangleCountsByIntersect equals both enumeration arms' per-node " +

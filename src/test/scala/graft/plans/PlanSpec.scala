@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression guards: the physical-plan properties the 100 TB
   * design depends on, asserted so a refactor can't silently lose them.
-  * (Complements plans.PlanAudit, which is the interactive dump tool.)
+  * (Complements `graft.Lab explain`, which is the interactive dump tool.)
   */
 class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val Dir = "/root/testdata/sf0.001"

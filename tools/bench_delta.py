@@ -23,6 +23,11 @@ Notes on the axes (calibrated on the r10->r11 diff, the first real pair):
 - wall_s rides along for context but NEVER flags.
 - Queries present in only one record are listed as added/removed, not
   flagged (new operators are expected every round).
+- Records from different hosts never compare: the tool refuses (exit 2,
+  one line naming both records' cpus/mem_gb) when either record lacks
+  `cpus`, when `cpus` differ, or when both carry `mem_gb` and it differs —
+  cpu and shuffle both move with the core count (an 8-core record once
+  silently replaced a 32-core one).
 """
 import json
 import sys
@@ -30,8 +35,14 @@ import sys
 
 def load(path):
     with open(path) as f:
-        d = json.load(f)
-    return d.get("queries", {})
+        return json.load(f)
+
+
+def same_host(prev, cur):
+    pc, cc = prev.get("cpus"), cur.get("cpus")
+    pm, cm = prev.get("mem_gb"), cur.get("mem_gb")
+    return pc is not None and cc is not None and pc == cc and (
+        pm is None or cm is None or round(pm, 1) == round(cm, 1))
 
 
 def main():
@@ -61,7 +72,14 @@ def main():
         sys.exit(__doc__)
     prev_path, cur_path = args[0], args[1]
     out_path = args[2] if len(args) > 2 else "BENCH_DELTA.json"
-    prev, cur = load(prev_path), load(cur_path)
+    prev_rec, cur_rec = load(prev_path), load(cur_path)
+    if not same_host(prev_rec, cur_rec):
+        print(f"[bench_delta] refusing to compare records from different hosts: "
+              f"{prev_path} cpus={prev_rec.get('cpus')} mem_gb={prev_rec.get('mem_gb')}, "
+              f"{cur_path} cpus={cur_rec.get('cpus')} mem_gb={cur_rec.get('mem_gb')}",
+              file=sys.stderr)
+        sys.exit(2)
+    prev, cur = prev_rec.get("queries", {}), cur_rec.get("queries", {})
 
     axes = (("cpu_s", 30.0, max(0.30, thresh)), ("shuffle_mb", 5.0, thresh))
     flagged, rows = [], {}
