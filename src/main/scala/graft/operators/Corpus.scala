@@ -1203,13 +1203,12 @@ object Corpus {
     * the sorted k-array.
     */
   def invertedIndex(docs: DataFrame, minLen: Int = 4, minDf: Long = 2, k: Int = 16): DataFrame = {
-    val kmv = udaf(new Sketch.KmvAgg(k), org.apache.spark.sql.Encoders.scalaLong)
     docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
       .filter(length(col("w")) >= minLen)
       .distinct()
       .groupBy("w")
-      .agg(count(lit(1)).as("df"), kmv(col("doc_id")).as("ids"))
+      .agg(count(lit(1)).as("df"), Sketch.kmv(k)(col("doc_id")).as("ids"))
       .filter(col("df") >= minDf)
       .select(col("w"),
         col("df").cast("long").as("df"),

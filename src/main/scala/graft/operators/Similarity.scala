@@ -531,12 +531,41 @@ object Similarity {
     textSide.join(embSide, Seq("doc_id"))
   }
 
+  // --------------------------------------------------------- packed keys
+
+  /** Packed keys: score·2^bits + id, so ascending key order is (score asc,
+    * id asc) and a min / KMV bottom-k over the key IS the argmax / top-k
+    * with lowest-id tiebreak — exact integer state, no rank window.
+    *  - cosine: (10⁶ − sim_micro)·2⁴⁰ + id; sim ∈ [−1, 1] keeps the high
+    *    field ≤ 2·10⁶ ≪ 2²³, so pk < 2⁶².
+    *  - reconstruction L2: dm·2²¹ + id, dm = round(L2², 6) in micro-units;
+    *    quantized L2² can exceed the cosine range, so ids get 21 bits
+    *    ([[requirePackableIds]] asserts the bound).
+    */
+  private val CosShift = 1L << 40
+  private val L2Shift = 1L << 21
+
+  private def cosineKey(simMicro: Column, id: Column): Column =
+    (lit(1000000L) - simMicro) * lit(CosShift) + id
+
+  private def l2Key(dist: Column, id: Column): Column =
+    round(round(dist, 6) * 1e6, 0).cast("long") * lit(L2Shift) + id
+
+  /** sim_micro unpacked from a cosine key column named `pk`. */
+  private def keySimMicro: Column = expr(s"1000000 - pk div $CosShift")
+
+  /** Squared L2 between two array columns: the canonical ascending fold
+    * the oracle's list_reduce mirrors bit-for-bit. */
+  private def l2(a: String, b: String): Column = expr(s"aggregate(zip_with($a, $b, " +
+    "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), " +
+    "CAST(0.0 AS DOUBLE), (a, b) -> a + b)")
+
   /** SEMANTIC decontamination — the embedding-space complement of the
     * verbatim q178 report: rephrased/translated benchmark leakage shares
     * no 40-char window but sits next to the eval point in embedding
     * space. Per train vector, the maximum cosine to ANY eval-source
     * vector and the eval id attaining it ((sim desc, eval_id asc) via the
-    * q134 packed key — exact integer argmax, no rank window); consumers
+    * cosine packed key — exact integer argmax, no rank window); consumers
     * threshold `max_sim_micro` to drop, or route hits through q178/q179
     * for span-level evidence. Eval membership = the documents table's
     * source label through the shared vec_id ↔ doc_id pairing (q134's
@@ -552,25 +581,17 @@ object Similarity {
   def semanticDecontam(docs: DataFrame, emb: DataFrame,
       evalSource: String): DataFrame = {
     val (ev, train) = decontamSides(docs, emb, evalSource)
-    bruteDecontamFrom(ev, train)
+    nearestEval(train.crossJoin(broadcast(ev))
+      .withColumn("dot", dotCols(col("embedding"), col("ev_emb")))
+      .select(col("vec_id"), cosineKey(decontamSimMicro, col("eval_id")).as("pk")))
   }
 
-  /** The brute arm over pre-built sides — shared with the q183 recall
-    * sweep so sides (and their eager id-bound check job) build ONCE per
-    * invocation. */
-  private def bruteDecontamFrom(ev: DataFrame, train: DataFrame): DataFrame =
-    train.crossJoin(broadcast(ev))
-      .withColumn("dot", dotCols(col("embedding"), col("ev_emb")))
-      // pk = (10⁶ − sim_micro)·2⁴⁰ + eval_id: ascending = (sim desc,
-      // eval_id asc); sim ∈ [−1, 1] keeps the high field ≤ 2·10⁶ ≪ 2²³
-      .select(col("vec_id"),
-        ((lit(1000000L) - decontamSimMicro) * lit(1099511627776L)
-          + col("eval_id")).as("pk"))
-      .groupBy("vec_id").agg(min("pk").as("pk"))
-      .select(col("vec_id"),
-        expr("CAST(pk % 1099511627776 AS BIGINT)").as("nearest_eval_id"),
-        expr("CAST(1000000 - pk div 1099511627776 AS BIGINT)")
-          .as("max_sim_micro"))
+  /** Per train vector, the argmax eval vector over scored (vec_id, pk)
+    * decontam pairs: one keyed min of the cosine key, unpacked. */
+  private def nearestEval(pairs: DataFrame): DataFrame =
+    pairs.groupBy("vec_id").agg(min("pk").as("pk"))
+      .select(col("vec_id"), (col("pk") % lit(CosShift)).as("nearest_eval_id"),
+        keySimMicro.as("max_sim_micro"))
 
   /** Shared eval/train sides of the semantic-decontam family: the eval
     * source's vectors (docs pairing) and the train remainder. Cosine is
@@ -640,8 +661,7 @@ object Similarity {
       .join(broadcast(evc), Seq("cell"))
       .withColumn("dot", dotCols(col("embedding"), col("ev_emb")))
       .select(col("vec_id"), col("rnk"),
-        ((lit(1000000L) - decontamSimMicro) * lit(1099511627776L)
-          + col("eval_id")).as("pk"))
+        cosineKey(decontamSimMicro, col("eval_id")).as("pk"))
   }
 
   /** IVF-blocked semantic decontamination — [[semanticDecontam]]'s scale
@@ -663,12 +683,7 @@ object Similarity {
     require(nprobe >= 1 && nprobe <= IvfK,
       s"nprobe must be in [1, $IvfK]; got $nprobe")
     val (ev, train) = decontamSides(docs, emb, evalSource)
-    ivfDecontamPairs(emb.sparkSession, ivfCentroids(emb), ev, train, nprobe)
-      .groupBy("vec_id").agg(min("pk").as("pk"))
-      .select(col("vec_id"),
-        expr("CAST(pk % 1099511627776 AS BIGINT)").as("nearest_eval_id"),
-        expr("CAST(1000000 - pk div 1099511627776 AS BIGINT)")
-          .as("max_sim_micro"))
+    nearestEval(ivfDecontamPairs(emb.sparkSession, ivfCentroids(emb), ev, train, nprobe))
   }
 
   /** Recall of the IVF-blocked decontam vs the brute ground truth, per
@@ -678,37 +693,31 @@ object Similarity {
     * at all, vectors whose (argmax eval id, sim) EXACTLY match brute's
     * packed key, and recall in ppm. All-integer output — hash-stable.
     *
-    * One pair scan serves every nprobe: a rank-`rnk` pair contributes to
-    * all swept nprobes > rnk (row-local array filter + explode — no
-    * non-equi join, so the suite-wide no-BNLJ plan guard holds), then one
-    * keyed min per (nprobe, vec_id). The 1-row train count rides the
-    * whitelisted scalar cross join.
+    * One pair scan serves the ground truth and every nprobe: the train
+    * probes rank ALL [[IvfK]] cells, so the cell-keyed join yields every
+    * (train, eval) pair exactly once with its probe rank; the brute argmax
+    * is a keyed min over all of them and a rank-`rnk` pair joins every
+    * swept nprobe > rnk ([[fanOut]]). The pair table is the one thing
+    * materialized. The 1-row train count rides the whitelisted scalar
+    * cross join.
     */
   def ivfSemanticDecontamRecall(docs: DataFrame, emb: DataFrame,
       evalSource: String, nprobes: Seq[Int]): DataFrame = {
     require(nprobes.nonEmpty && nprobes.forall(n => n >= 1 && n <= IvfK),
       s"nprobes must be in [1, $IvfK]; got $nprobes")
-    // sides (and their eager id-bound check job) build ONCE and feed both
-    // the IVF arm and the brute ground truth
     val (ev, train) = decontamSides(docs, emb, evalSource)
     val pairs = ivfDecontamPairs(emb.sparkSession, ivfCentroids(emb), ev,
-      train, nprobes.max)
-    val brute = bruteDecontamFrom(ev, train)
-      .select(col("vec_id"),
-        ((lit(1000000L) - col("max_sim_micro")) * lit(1099511627776L)
-          + col("nearest_eval_id")).as("bpk"))
-    val npArr = array(nprobes.sorted.map(lit): _*)
-    val ivf = pairs
-      .withColumn("nprobe", explode(filter(npArr, n => n > col("rnk"))))
-      .groupBy("nprobe", "vec_id").agg(min("pk").as("pk"))
-    graft.core.Lifecycle.withPersisted(brute) {
-      val matched = ivf.join(brute, Seq("vec_id"))
+      train, IvfK)
+    graft.core.Lifecycle.withPersisted(pairs) {
+      val brute = pairs.groupBy("vec_id").agg(min("pk").as("bpk"))
+      val matched = pairs.withColumn("nprobe", fanOut(col("rnk") + 1, nprobes))
+        .groupBy("nprobe", "vec_id").agg(min("pk").as("pk"))
+        .join(brute, Seq("vec_id"))
         .groupBy("nprobe").agg(
           count(lit(1)).as("n_found"),
           sum(when(col("pk") === col("bpk"), 1L).otherwise(0L))
             .as("n_argmax_match"))
-      val nTrain = brute.agg(count(lit(1)).as("n_train"))
-      matched.crossJoin(broadcast(nTrain))
+      matched.crossJoin(broadcast(brute.agg(count(lit(1)).as("n_train"))))
         .select(col("nprobe"), col("n_train"), col("n_found"),
           col("n_argmax_match"),
           expr("CAST(n_argmax_match * 1000000 div n_train AS BIGINT)")
@@ -747,45 +756,57 @@ object Similarity {
     (ev, allIds)
   }
 
-  /** Batch ANN serving: top-`k` cosine neighbours for EVERY query in a
-    * bounded query set (the vec_id % 100 == 0 vectors) in ONE corpus scan
-    * — the retrieval-curation shape where queries ≪ corpus. The query set
-    * rides an explicit broadcast cross join (BroadcastNestedLoopJoin with
+  // ------------------------------------ query-set ANN and recall audits
+
+  /** The query/corpus split of every query-set operator: vec_id % 100 = 0
+    * is a query, everything else is corpus. `base` carries vec_id,
+    * embedding and the per-vector columns the caller needs (norm,
+    * bucket); the query side renames them query_id, qv and q_<name>.
+    */
+  private def sides(base: DataFrame): (DataFrame, DataFrame) = {
+    val isQuery = col("vec_id") % 100 === 0
+    val extra = base.columns.toSeq.filterNot(Set("vec_id", "embedding"))
+    (base.filter(isQuery).select(col("vec_id").as("query_id") +:
+        col("embedding").as("qv") +: extra.map(c => col(c).as(s"q_$c")): _*),
+      base.filter(!isQuery))
+  }
+
+  private def norm: Column = sqrt(sqNorm(col("embedding"))).as("nrm")
+
+  /** Every (query, corpus) pair, projected to query_id + `cols`: the
+    * corpus × broadcast query set fan-out (BroadcastNestedLoopJoin with
     * the BOUNDED side as build — for an all-pairs fan-out against a tiny
-    * broadcast side this IS the optimal physical plan; a constant-key
-    * "hash join" disguise constant-folds back to exactly this), each
-    * (candidate, query) pair costs one codegen dot product, and the
-    * per-query top-k is the q127 packed-key KMV bottom-k
-    * — k longs of mergeable, map-side-combining state per query, never a
-    * per-query sort of the corpus (a rank window partitioned by query
-    * would pull the ENTIRE corpus through #queries tasks).
-    *
-    * Packing: pk = (10⁶ − sim_micro)·2⁴⁰ + vec_id, so ascending pk order
-    * is (sim desc, vec_id asc) and bottom-k IS the top-k with
-    * deterministic tiebreak; sim_micro ∈ [−10⁶, 10⁶] keeps pk < 2⁶².
+    * broadcast side this IS the optimal plan; a constant-key "hash join"
+    * disguise constant-folds back to exactly this). */
+  private def fanPairs(queries: DataFrame, corpus: DataFrame, cols: Column*): DataFrame =
+    corpus.crossJoin(broadcast(queries)).select(col("query_id") +: cols: _*)
+
+  /** The cosine key of a (corpus, query) pair: one codegen dot product
+    * over the precomputed norms, rounded to 6 places, in micro-units. */
+  private def queryCosineKey: Column = cosineKey(round(
+    round(dotCols(col("embedding"), col("qv")) / (col("nrm") * col("q_nrm")), 6)
+      * 1e6, 0).cast("long"), col("vec_id")).as("pk")
+
+  /** The packed-key KMV bottom-k of `pk` per `keys` group (the q127
+    * mechanism): k longs of mergeable, map-side-combining state per group,
+    * never a per-group sort of the corpus (a rank window partitioned by
+    * query would pull the ENTIRE corpus through #queries tasks). One row
+    * per kept key: its 0-based rank `pos`, `pk`, and the unpacked `vec_id`.
+    */
+  private def topK(pairs: DataFrame, keys: Seq[String], k: Int, shift: Long): DataFrame =
+    pairs.groupBy(keys.map(col): _*).agg(Sketch.kmv(k)(col("pk")).as("topk"))
+      .select(keys.map(col) :+ posexplode(col("topk")).as(Seq("pos", "pk")): _*)
+      .withColumn("vec_id", col("pk") % lit(shift))
+
+  /** Batch ANN serving (q134): top-`k` cosine neighbours for EVERY query
+    * of the query set in ONE corpus scan — the retrieval-curation shape
+    * where queries ≪ corpus: [[fanPairs]] + [[topK]], ranked 1..k.
     */
   def queryAnnJoin(emb: DataFrame, k: Int): DataFrame = {
-    val kmv = udaf(new Sketch.KmvAgg(k),
-      org.apache.spark.sql.Encoders.scalaLong)
-    val base = emb.select(col("vec_id"), col("embedding"),
-      sqrt(sqNorm(col("embedding"))).as("nrm"))
-    val queries = base.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("nrm").as("qn"))
-    val simMicro = round(
-      round(dotCols(col("embedding"), col("qv")) / (col("nrm") * col("qn")), 6)
-        * 1e6, 0).cast("long")
-    base.filter(col("vec_id") % 100 =!= 0)
-      .crossJoin(broadcast(queries))
-      .select(col("query_id"),
-        ((lit(1000000L) - simMicro) * lit(1099511627776L) + col("vec_id"))
-          .as("pk"))
-      .groupBy("query_id").agg(kmv(col("pk")).as("topk"))
-      .select(col("query_id"), posexplode(col("topk")).as(Seq("pos", "pk")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rn"),
-        expr("pk % 1099511627776").as("vec_id"),
-        round((lit(1000000L) - expr("pk div 1099511627776")).cast("double")
-          / 1e6, 6).as("sim"))
+    val (queries, corpus) = sides(emb.select(col("vec_id"), col("embedding"), norm))
+    topK(fanPairs(queries, corpus, queryCosineKey), Seq("query_id"), k, CosShift)
+      .select(col("query_id"), (col("pos") + 1).cast("int").as("rn"), col("vec_id"),
+        round(keySimMicro.cast("double") / 1e6, 6).as("sim"))
   }
 
   /** Per-query IVF cell ranking — the ONE probe-table implementation every
@@ -802,164 +823,101 @@ object Similarity {
     import ss.implicits._
     val centDf = cents.toIndexedSeq.zipWithIndex
       .map { case (c, i) => (i, c.toSeq) }.toDF("cell", "cemb")
-    val l2 = expr("aggregate(zip_with(qv, cemb, " +
-      "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), " +
-      "CAST(0.0 AS DOUBLE), (a, b) -> a + b)")
     queries.select("query_id", "qv")
       .crossJoin(broadcast(centDf))
-      .withColumn("dist", l2)
+      .withColumn("dist", l2("qv", "cemb"))
       .withColumn("crank", row_number().over(
         Window.partitionBy("query_id").orderBy(col("dist"), col("cell"))))
       .filter(col("crank") <= maxRank).select("query_id", "cell", "crank")
   }
 
-  /** The recall tail every audit shares: mark `left`'s ids that appear in
-    * `right` (both keyed (query_id, vec_id)), count hits per `groupCols`,
-    * derive integer micro-recall. Which side is `left` decides row
-    * presence for empty arms — [[ivfRecall]] groups from the brute side
-    * (every query emits a row even when its probed arm is empty), the
-    * sweeps group from the arm side (an empty arm emits no row) — so the
-    * direction stays at each call site.
-    */
-  private def hitCount(left: DataFrame, right: DataFrame, k: Int,
-      groupCols: Seq[String]): DataFrame =
-    // the marked side is a bounded top-k set (≤ queries × k × arms rows),
-    // so broadcast it: the hit join becomes a BroadcastHashJoin instead of
-    // a sort-merge with an exchange+sort pair on both post-KMV sides
-    left.join(broadcast(right.withColumn("hit", lit(1L))),
-        Seq("query_id", "vec_id"), "left")
-      .groupBy(groupCols.map(col): _*)
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .withColumn("recall_micro", expr(s"n_hits * 1000000 div $k"))
-
-  /** IVF RECALL AUDIT — the evaluation an ANN index ships with: for every
-    * query of the broadcast query set (the q134 convention,
-    * vec_id % 100 = 0), the brute-force cosine top-k is the ground truth
-    * and the IVF-probed top-k (nprobe cells of [[ivfCellCol]]'s codebook)
-    * is the candidate; output = per-query hit count and integer
-    * micro-recall. The ANN analog of q114's est-vs-exact and q139's LSH
-    * calibration: the recall/scan-fraction evidence you publish BEFORE
-    * trusting the index at corpus scale.
-    *
-    * Scale shape: both arms are the q134 mechanism (corpus × broadcast
-    * bounded query set, packed-key KMV top-k state — never a per-query
-    * sort); the IVF arm additionally semi-joins the broadcast
-    * (query, cell) probe table, so it scans the probed fraction only. The
-    * probe table derives from the 16-row codebook (bounded collect,
-    * watch-list class) crossed with the query set — both broadcast-bounded.
-    */
-  def ivfRecall(emb: DataFrame, k: Int, nprobe: Int = 2): DataFrame = {
-    val spark = emb.sparkSession
+  /** Pairs tagged with their corpus cell's probe rank `crank` for the
+    * pair's query (null beyond `maxRank`): the IVF arm level. The probe
+    * table derives from the 16-row codebook (bounded collect, watch-list
+    * class) crossed with the query set, and joins broadcast. */
+  private def cellRanked(emb: DataFrame, queries: DataFrame, corpus: DataFrame,
+      maxRank: Int, keys: Column*): DataFrame = {
     val cents = ivfCentroids(emb)
-    val base = emb.select(col("vec_id"), col("embedding"),
-      sqrt(sqNorm(col("embedding"))).as("nrm"))
-    val queries = base.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("nrm").as("qn"))
-    val corpus = base.filter(col("vec_id") % 100 =!= 0)
-      .withColumn("cell", ivfCellCol(spark, cents))
-    // nprobe nearest cells per query, from the 16-row codebook table
-    val probes = probeRanked(queries, cents, nprobe).select("query_id", "cell")
-    val kmv = udaf(new Sketch.KmvAgg(k),
-      org.apache.spark.sql.Encoders.scalaLong)
-    val simMicro = round(
-      round(dotCols(col("embedding"), col("qv")) / (col("nrm") * col("qn")), 6)
-        * 1e6, 0).cast("long")
-    def topIds(cand: DataFrame) = cand
-      .select(col("query_id"),
-        ((lit(1000000L) - simMicro) * lit(1099511627776L) + col("vec_id"))
-          .as("pk"))
-      .groupBy("query_id").agg(kmv(col("pk")).as("topk"))
-      .select(col("query_id"), explode(col("topk")).as("pk"))
-      .select(col("query_id"), expr("pk % 1099511627776").as("vec_id"))
-    val brute = topIds(corpus.crossJoin(broadcast(queries)))
-    val ivf = topIds(corpus.crossJoin(broadcast(queries))
-      .join(broadcast(probes), Seq("query_id", "cell"), "left_semi"))
-    // grouped from the BRUTE side: every query emits a row even when its
-    // probed arm found nothing (see hitCount)
-    hitCount(brute, ivf, k, Seq("query_id"))
-      .select(col("query_id"), col("n_hits"), col("recall_micro"))
+    fanPairs(queries, corpus.withColumn("cell", ivfCellCol(emb.sparkSession, cents)),
+        col("cell") +: keys: _*)
+      .join(broadcast(probeRanked(queries, cents, maxRank)), Seq("query_id", "cell"), "left")
   }
 
-  /** The nprobe TUNING SWEEP over [[ivfRecall]]'s audit: recall@k per
-    * (query, nprobe) for a whole nprobe grid in ONE pass — sims and the
-    * per-query cell ranking compute once; each candidate row fans out only
-    * to the grid entries whose probe radius includes its cell's rank, and
-    * the per-(query, nprobe) top-k is KMV state as everywhere else. This
-    * is the curve (recall vs scan fraction ∝ nprobe/K) an index operator
-    * actually reads to pick nprobe; a grid containing K itself yields a
-    * built-in sanity row (probing every cell ≡ brute force → recall 1.0,
-    * asserted by the oracle since both engines must agree on it).
+  /** The arm fan-out over a bounded grid: a pair at `level` (cell rank,
+    * bucket Hamming distance, probe rank) joins every arm g ≥ level — a
+    * row-local array filter + explode, no non-equi join (the suite-wide
+    * no-BNLJ plan guard holds). A null level joins no arm. */
+  private def fanOut(level: Column, grid: Seq[Int]): Column =
+    explode(filter(array(grid.map(lit): _*), g => g >= level))
+
+  /** THE RECALL-SWEEP KERNEL of the ANN recall audits (q149–q152, q155,
+    * q157): the evaluation an ANN index ships with — recall@k of the
+    * index's top-k against the brute-force ground truth, per query and
+    * per arm of a tuning grid, all-integer output (hash-stable). The ANN
+    * analog of q114's est-vs-exact and q139's LSH calibration: the
+    * recall-vs-scan-fraction curve an operator reads to tune the index
+    * BEFORE trusting it at corpus scale.
+    *
+    * `pairs` holds every scored (query, corpus) pair of the
+    * [[fanPairs]] fan-out ONCE — query_id, the candidate key `pk`, and
+    * whatever `arms` and `truth` read — and is the one table the kernel
+    * materializes: both the ground truth and every arm aggregate it, so
+    * the dot products / distance folds never run twice. `truth` is the
+    * ground-truth key (null outside the ground-truth rows); `arms` names
+    * each pair's arm(s) — usually [[fanOut]] over the grid. Per (query,
+    * arm) the top-k is [[topK]]; hits are the arm's ids found in the
+    * truth's (the truth side is a bounded top-k set, so it broadcasts:
+    * a BroadcastHashJoin, not a sort-merge pair), micro-recall = hits ·
+    * 10⁶ div k.
+    *
+    * Row presence: the sweeps group from the arm side (an arm with no
+    * candidate emits no row); `fromTruth` groups from the truth side
+    * instead, so every query emits a row even when its arm is empty.
+    * Grids containing the "probe everything" arm (nprobe = [[IvfK]],
+    * radius = [[NumPlanes]], m_sub = 0) yield a built-in sanity row:
+    * that arm IS brute force, so it must read exactly 10⁶ — asserted by
+    * the oracle, since both engines must agree on it. Scale shape: the
+    * brute arm is the audit's cost, run-once by design.
     */
-  def ivfRecallSweep(emb: DataFrame, k: Int, nprobes: Seq[Int]): DataFrame = {
-    val spark = emb.sparkSession
-    val cents = ivfCentroids(emb)
-    val base = emb.select(col("vec_id"), col("embedding"),
-      sqrt(sqNorm(col("embedding"))).as("nrm"))
-    val queries = base.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("nrm").as("qn"))
-    val corpus = base.filter(col("vec_id") % 100 =!= 0)
-      .withColumn("cell", ivfCellCol(spark, cents))
-    val ranked = probeRanked(queries, cents, nprobes.max)
-    val kmv = udaf(new Sketch.KmvAgg(k),
-      org.apache.spark.sql.Encoders.scalaLong)
-    val simMicro = round(
-      round(dotCols(col("embedding"), col("qv")) / (col("nrm") * col("qn")), 6)
-        * 1e6, 0).cast("long")
-    val pk = ((lit(1000000L) - simMicro) * lit(1099511627776L) + col("vec_id")).as("pk")
-    val sims = corpus.crossJoin(broadcast(queries))
-    val brute = sims.select(col("query_id"), pk)
-      .groupBy("query_id").agg(kmv(col("pk")).as("topk"))
-      .select(col("query_id"), explode(col("topk")).as("pk"))
-      .select(col("query_id"), expr("pk % 1099511627776").as("vec_id"))
-    val grid = array(nprobes.map(lit): _*)
-    val ivf = sims
-      .join(broadcast(ranked), Seq("query_id", "cell")) // cells beyond max(grid) drop here
-      .select(col("query_id"), col("crank"), pk)
-      .withColumn("nprobe", explode(grid))
-      .filter(col("crank") <= col("nprobe"))
-      .groupBy("query_id", "nprobe").agg(kmv(col("pk")).as("topk"))
-      .select(col("query_id"), col("nprobe"), explode(col("topk")).as("pk"))
-      .select(col("query_id"), col("nprobe"),
-        expr("pk % 1099511627776").as("vec_id"))
-    hitCount(ivf, brute, k, Seq("query_id", "nprobe"))
-      .select(col("query_id"), col("nprobe").cast("int").as("nprobe"),
-        col("n_hits"), col("recall_micro"))
+  private def recallSweep(pairs: DataFrame, k: Int, shift: Long, arm: String,
+      arms: Column, truth: Column, fromTruth: Boolean = false): DataFrame =
+    graft.core.Lifecycle.withPersisted(pairs) {
+      val gt = topK(pairs.select(col("query_id"), truth.as("pk"))
+        .filter(col("pk").isNotNull), Seq("query_id"), k, shift)
+      val got = topK(pairs.select(col("query_id"), arms.as(arm), col("pk")),
+        Seq("query_id", arm), k, shift)
+      val (marked, hits, keys) =
+        if (fromTruth) (gt, got, Seq(col("query_id")))
+        else (got, gt, Seq(col("query_id"), col(arm).cast("int").as(arm)))
+      marked.join(broadcast(hits.select(col("query_id"), col("vec_id"),
+          lit(1L).as("hit"))), Seq("query_id", "vec_id"), "left")
+        .groupBy(keys: _*)
+        .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
+        .withColumn("recall_micro", expr(s"n_hits * 1000000 div $k"))
+    }
+
+  /** IVF recall audit (q149): recall@k per query of the `nprobe`-cell
+    * probed top-k ([[ivfCellCol]]'s codebook) — the one-arm
+    * [[ivfRecallSweep]], grouped from the truth side.
+    */
+  def ivfRecall(emb: DataFrame, k: Int, nprobe: Int = 2): DataFrame =
+    ivfSweep(emb, k, Seq(nprobe), fromTruth = true)
+
+  /** The nprobe tuning sweep (q150): recall@k per (query, nprobe) for a
+    * whole grid in one pass; a corpus row joins every nprobe ≥ its cell's
+    * probe rank (scan fraction ∝ nprobe/[[IvfK]]).
+    */
+  def ivfRecallSweep(emb: DataFrame, k: Int, nprobes: Seq[Int]): DataFrame =
+    ivfSweep(emb, k, nprobes, fromTruth = false)
+
+  private def ivfSweep(emb: DataFrame, k: Int, nprobes: Seq[Int],
+      fromTruth: Boolean): DataFrame = {
+    val (queries, corpus) = sides(emb.select(col("vec_id"), col("embedding"), norm))
+    val pairs = cellRanked(emb, queries, corpus, nprobes.max, queryCosineKey)
+    recallSweep(pairs, k, CosShift, "nprobe", fanOut(col("crank"), nprobes),
+      col("pk"), fromTruth)
   }
 
-  /** PQ RECALL AUDIT + m-SWEEP — the q149/q150 evidence for the OTHER
-    * approximate index: per (query, m_sub) recall@k of ADC-quantized
-    * nearest neighbours against the exact ground truth, for a grid of
-    * subvector counts `ms` plus the IDENTITY arm (m_sub = 0, no
-    * quantization). PQ's error is structurally different from IVF's —
-    * quantization BIAS in every distance (Jégou et al., "Product
-    * Quantization for Nearest Neighbor Search", TPAMI 2011), not probe
-    * truncation — so recall here measures how much the m-way compression
-    * distorts the ranking, and the m grid is the compression-vs-recall
-    * curve an operator reads to size the codes.
-    *
-    * Mechanism notes:
-    *  - ADC distance over disjoint subspace slices telescopes:
-    *    Σ_j ||q_j − c_{j,code}||² = ||q − recon||² where `recon` is the
-    *    concatenation of the chosen centroids — so every arm (including
-    *    identity, recon = the vector itself) computes ONE canonical
-    *    64-dim ascending fold, bit-mirrorable in any engine. The
-    *    m_sub = 0 arm's top-k IS the brute-force ground truth, so its
-    *    recall row reads exactly 10⁶ — the built-in sanity the oracle
-    *    must agree on.
-    *  - codes per (row, arm) are row-local against the broadcast sampled
-    *    codebook (the q76 convention: subspace slices of the first
-    *    [[PqK]] embeddings; strict-< argmin ⇒ lowest-code tiebreak).
-    *  - distances pack to micro-units and the per-(query, arm) top-k is
-    *    the packed-key KMV bottom-k — never a per-query sort; multiplier
-    *    2²¹ (not 2⁴⁰) because quantized L2² can exceed the cosine range.
-    *
-    * Scale shape: corpus × (arms × broadcast query set), one keyed KMV
-    * aggregate; the codebook collect is bounded ([[PqK]] rows, watch-list
-    * class). The brute arm is the audit's cost, run-once by design (same
-    * verdict as q149).
-    */
   /** The ONE PQ-reconstruction kernel ([[pqRecallSweep]],
     * [[ivfPqRecallSweep]]): collects the sampled codebook vectors (the
     * q76 convention — vec_id 0..PqK-1) and returns (dim, reconUdf) where
@@ -1021,198 +979,92 @@ object Similarity {
         "— widen the packing or shard the audit")
   }
 
+  /** PQ recall audit + m-sweep (q152): recall@k per (query, m_sub) of the
+    * m-way quantized top-k for each m in `ms`, plus the identity arm
+    * m_sub = 0, which is the ground truth (its row reads exactly 10⁶).
+    * PQ's error is quantization BIAS in every distance (Jégou et al.,
+    * TPAMI 2011), not probe truncation, so the m grid is the
+    * compression-vs-recall curve an operator reads to size the codes.
+    * ADC distance over disjoint subspace slices telescopes,
+    * Σ_j ||q_j − c_{j,code}||² = ||q − recon||², so every arm runs ONE
+    * canonical 64-dim fold ([[l2]]) against its reconstruction
+    * ([[pqReconUdf]]), packed with the L2 key.
+    */
   def pqRecallSweep(emb: DataFrame, k: Int, ms: Seq[Int]): DataFrame = {
     val (dim, reconUdf) = pqReconUdf(emb)
     require(ms.forall(m => m > 0 && dim % m == 0),
       s"every m_sub must divide dim=$dim, got $ms")
     requirePackableIds(emb, "pqRecallSweep")
-    val base = emb.select(col("vec_id"), col("embedding"))
-    val queries = base.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val corpusArms = base.filter(col("vec_id") % 100 =!= 0)
-      .withColumn("m_sub", explode(array((0 +: ms.toList).map(lit): _*)))
-      .select(col("vec_id"), col("m_sub"),
-        reconUdf(col("embedding"), col("m_sub")).as("recon"))
-    // ONE canonical distance fold for every arm (see Scaladoc) — the same
-    // ascending aggregate(zip_with(...)) the oracle's list_reduce mirrors
-    val dist = expr("aggregate(zip_with(qv, recon, " +
-      "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), " +
-      "CAST(0.0 AS DOUBLE), (a, b) -> a + b)")
-    val dm = round(round(dist, 6) * 1e6, 0).cast("long")
-    val kmv = udaf(new Sketch.KmvAgg(k),
-      org.apache.spark.sql.Encoders.scalaLong)
-    val topk = corpusArms.crossJoin(broadcast(queries))
-      .select(col("query_id"), col("m_sub"),
-        (dm * lit(2097152L) + col("vec_id")).as("pk"))
-      .groupBy("query_id", "m_sub").agg(kmv(col("pk")).as("topk"))
-      .select(col("query_id"), col("m_sub"), explode(col("topk")).as("pk"))
-      .select(col("query_id"), col("m_sub"), expr("pk % 2097152").as("vec_id"))
-    // topk feeds BOTH hitCount sides (the arm rows and the m_sub=0 brute
-    // slice) — persisted (round 12, §2.4) so the corpus × query × arm
-    // distance fan-out and its KMV aggregation run ONCE, not once per
-    // side; topk is bounded at queries × (|ms|+1) × k rows
-    graft.core.Lifecycle.withPersisted(topk) {
-      val brute = topk.filter(col("m_sub") === 0).select("query_id", "vec_id")
-      hitCount(topk, brute, k, Seq("query_id", "m_sub"))
-        .select(col("query_id"), col("m_sub").cast("int").as("m_sub"),
-          col("n_hits"), col("recall_micro"))
-    }
+    val (queries, corpus) = sides(emb.select(col("vec_id"), col("embedding")))
+    val arms = corpus
+      .withColumn("m_sub", explode(array((0 +: ms).map(lit): _*)))
+      .withColumn("recon", reconUdf(col("embedding"), col("m_sub")))
+    val pairs = fanPairs(queries, arms, col("m_sub"),
+      l2Key(l2("qv", "recon"), col("vec_id")).as("pk"))
+    recallSweep(pairs, k, L2Shift, "m_sub", col("m_sub"),
+      when(col("m_sub") === 0, col("pk")))
   }
 
-  /** The production-geometry PQ recall audit: recall@k of the [[PqM]]-way
-    * ADC index against brute-force ground truth — the q149 analog for the
-    * PQ index (one arm of [[pqRecallSweep]], same output shape as
-    * [[ivfRecall]]).
+  /** The production-geometry PQ recall audit (q151): the [[PqM]]-way arm
+    * of [[pqRecallSweep]], same output shape as [[ivfRecall]].
     */
   def pqRecall(emb: DataFrame, k: Int): DataFrame =
     pqRecallSweep(emb, k, Seq(PqM))
       .filter(col("m_sub") === PqM)
       .select("query_id", "n_hits", "recall_micro")
 
-  /** IVF+PQ COMPOSED recall audit — the q149/q151 evidence for the index
-    * the two halves compose into (q153, [[ivfPqTopK]]): recall@k per
-    * (query, nprobe) of the ADC-quantized top-k scanned over the probed
-    * cells only, against the EXACT brute-force ground truth (identity
-    * distance, every cell). The composed index inherits BOTH error
-    * sources — probe truncation (q149's axis) and quantization bias
-    * (q151's axis) — and their interaction is not the product of the
-    * marginals: a true neighbour survives only if its cell is probed AND
-    * quantization keeps it inside the ADC top-k, while a quantization
-    * error can also mask a probe miss by promoting a probed impostor. So
-    * the composition needs its own published curve; the full-probe row
-    * (nprobe = [[IvfK]]) probes every cell and therefore isolates pure
-    * quantization error — it must equal [[pqRecall]] exactly (asserted in
-    * OperatorSpec).
-    *
-    * Mechanism: reconstruction distance — ADC over disjoint subspaces
-    * telescopes to ||q − recon||² (see [[pqRecallSweep]]) — so both arms
-    * run ONE canonical 64-dim ascending fold; candidates fan to the
-    * nprobe grid by cell rank exactly as in [[ivfRecallSweep]]; the
-    * per-(query, arm) top-k is packed-key KMV bottom-k state, never a
-    * per-query sort.
-    *
-    * Scale shape: corpus × broadcast query set once, recon computed
-    * per-row BEFORE the query fan-out; the probed arm joins the broadcast
-    * (query, cell, rank) table so each grid entry scans only its probe
-    * fraction; codebook collects are bounded ([[IvfK]] + [[PqK]] rows,
-    * watch-list class). The brute arm is the audit's cost, run-once by
-    * design (same verdict as q149/q151).
+  /** IVF+PQ composed recall audit (q155): recall@k per (query, nprobe) of
+    * the [[PqM]]-way reconstruction top-k over the probed cells, against
+    * the EXACT brute-force ground truth (identity distance, every cell).
+    * The composed index inherits both error sources and their
+    * interaction is not the product of the marginals — a quantization
+    * error can mask a probe miss by promoting a probed impostor — so it
+    * needs its own curve. The full-probe row isolates pure quantization
+    * error and must equal [[pqRecall]] exactly (asserted in OperatorSpec).
+    * Reconstructions compute per corpus row BEFORE the query fan-out.
     */
   def ivfPqRecallSweep(emb: DataFrame, k: Int, nprobes: Seq[Int]): DataFrame = {
     require(nprobes.nonEmpty && nprobes.forall(n => n >= 1 && n <= IvfK),
       s"nprobe grid must be within 1..$IvfK, got $nprobes")
-    val spark = emb.sparkSession
-    val cents = ivfCentroids(emb)
-    // the SAME reconstruction kernel as pqRecallSweep, applied at the
-    // production geometry (m = PqM) — the full-probe ≡ pqRecall equality
-    // is structural
     val (dim, reconUdf) = pqReconUdf(emb)
     require(dim % PqM == 0, s"PqM=$PqM must divide dim=$dim")
     requirePackableIds(emb, "ivfPqRecallSweep")
-    val base = emb.select(col("vec_id"), col("embedding"))
-    val queries = base.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val corpus = base.filter(col("vec_id") % 100 =!= 0)
-      .withColumn("cell", ivfCellCol(spark, cents))
-      .withColumn("recon", reconUdf(col("embedding"), lit(PqM)))
-      .withColumn("xd", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-    val ranked = probeRanked(queries, cents, nprobes.max)
-    // ONE canonical distance fold for both arms (`xd` = identity doubles,
-    // `recon` = quantized reconstruction) — the oracle's list_reduce mirror
-    def dm(rc: String) = round(round(expr(
-      s"aggregate(zip_with(qv, $rc, " +
-        "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), " +
-        "CAST(0.0 AS DOUBLE), (a, b) -> a + b)"), 6) * 1e6, 0).cast("long")
-    val kmv = udaf(new Sketch.KmvAgg(k),
-      org.apache.spark.sql.Encoders.scalaLong)
-    val sims = corpus.crossJoin(broadcast(queries))
-    val brute = sims
-      .select(col("query_id"), (dm("xd") * lit(2097152L) + col("vec_id")).as("pk"))
-      .groupBy("query_id").agg(kmv(col("pk")).as("topk"))
-      .select(col("query_id"), explode(col("topk")).as("pk"))
-      .select(col("query_id"), expr("pk % 2097152").as("vec_id"))
-    val grid = array(nprobes.map(lit): _*)
-    val composed = sims
-      .join(broadcast(ranked), Seq("query_id", "cell")) // cells beyond max(grid) drop here
-      .select(col("query_id"), col("crank"),
-        (dm("recon") * lit(2097152L) + col("vec_id")).as("pk"))
-      .withColumn("nprobe", explode(grid))
-      .filter(col("crank") <= col("nprobe"))
-      .groupBy("query_id", "nprobe").agg(kmv(col("pk")).as("topk"))
-      .select(col("query_id"), col("nprobe"), explode(col("topk")).as("pk"))
-      .select(col("query_id"), col("nprobe"), expr("pk % 2097152").as("vec_id"))
-    hitCount(composed, brute, k, Seq("query_id", "nprobe"))
-      .select(col("query_id"), col("nprobe").cast("int").as("nprobe"),
-        col("n_hits"), col("recall_micro"))
+    val (queries, corpus) = sides(emb.select(col("vec_id"), col("embedding")))
+    // `xd` = the identity doubles, cast once per corpus row, not per pair
+    val pairs = cellRanked(emb, queries, corpus
+        .withColumn("recon", reconUdf(col("embedding"), lit(PqM)))
+        .withColumn("xd", expr("transform(embedding, x -> CAST(x AS DOUBLE))")),
+      nprobes.max,
+      l2Key(l2("qv", "recon"), col("vec_id")).as("pk"),
+      l2Key(l2("qv", "xd"), col("vec_id")).as("tk"))
+    recallSweep(pairs, k, L2Shift, "nprobe", fanOut(col("crank"), nprobes),
+      col("tk"))
   }
 
-  /** Hyperplane-LSH ANN recall sweep — the q150 analog for the FOURTH
-    * index family (q33's multiprobe random-hyperplane LSH), completing
-    * the audit matrix: every ANN index this engine serves (IVF, PQ,
-    * IVF+PQ, hyperplane LSH) now ships recall evidence. Recall@k per
-    * (query, probe radius) of the exact-cosine top-k restricted to
-    * candidates whose sign-pattern bucket lies within Hamming distance
-    * `radius` of the query's bucket, against brute-force ground truth.
-    * Radius 1 IS q33's probe set (own bucket + the [[NumPlanes]]
-    * flip-one neighbours); radius [[NumPlanes]] admits every bucket ≡
-    * brute, so that row must read exactly 10⁶ — the built-in sanity both
-    * engines must agree on (asserted per query in OperatorSpec too).
-    * Scan fraction at radius r is Σ_{i≤r} C(P,i)/2^P in expectation —
-    * the recall-vs-scan curve an operator reads to size the probe set.
-    *
-    * Scale shape: the same corpus × broadcast-query fan-out + packed-key
-    * KMV top-k as q149/q150/q155; the bucket Hamming test is one codegen
-    * bit_count per pair (no probe table at all — the radius grid fans
-    * bounded arms exactly like q150's nprobe grid). At 100 TB the
-    * candidate arms would scan bucket-partitioned slices instead; the
-    * recall numbers this audit publishes are identical either way.
+  /** Hyperplane-LSH recall sweep (q157), the audit of the fourth index
+    * family (q33's multiprobe LSH): recall@k per (query, radius) of the
+    * exact-cosine top-k over candidates whose bucket lies within Hamming
+    * distance `radius` of the query's — one codegen bit_count per pair, no
+    * probe table. Radius 1 IS q33's probe set; radius [[NumPlanes]] admits
+    * every bucket ≡ brute, so that row reads exactly 10⁶ (asserted per
+    * query in OperatorSpec too). Scan fraction at radius r is
+    * Σ_{i≤r} C(P,i)/2^P in expectation; at 100 TB the arms would scan
+    * bucket-partitioned slices instead, with identical recall numbers.
     */
   def lshAnnRecallSweep(emb: DataFrame, k: Int, radii: Seq[Int]): DataFrame = {
     require(radii.nonEmpty && radii.forall(r => r >= 0 && r <= NumPlanes),
       s"radius grid must be within 0..$NumPlanes, got $radii")
     // bucketUdf yields null for null/short embeddings; an unfiltered null
-    // bucket would silently drop the row from every ARM (null hd fails
-    // every <=) while the brute arm still ranks it — breaking the
+    // bucket would silently drop the row from every ARM (null hd joins no
+    // arm) while the brute arm still ranks it — breaking the
     // radius = NumPlanes ≡ brute invariant. Drop malformed rows from BOTH
     // sides instead, so the audit population is consistent.
-    val base = emb.select(col("vec_id"), col("embedding"),
-      sqrt(sqNorm(col("embedding"))).as("nrm"),
-      bucketCol(col("embedding")).as("bucket"))
-      .filter(col("bucket").isNotNull)
-    val queries = base.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("nrm").as("qn"), col("bucket").as("qb"))
-    val corpus = base.filter(col("vec_id") % 100 =!= 0)
-    val kmv = udaf(new Sketch.KmvAgg(k),
-      org.apache.spark.sql.Encoders.scalaLong)
-    val simMicro = round(
-      round(dotCols(col("embedding"), col("qv")) / (col("nrm") * col("qn")), 6)
-        * 1e6, 0).cast("long")
-    val sims = corpus.crossJoin(broadcast(queries))
-      .select(col("query_id"),
-        bit_count(col("bucket").bitwiseXOR(col("qb"))).cast("int").as("hd"),
-        ((lit(1000000L) - simMicro) * lit(1099511627776L) + col("vec_id"))
-          .as("pk"))
-    // sims feeds the brute arm AND the radius grid — persisted (round 12,
-    // §2.4) so the corpus × query cosine fold runs ONCE, not once per
-    // consumer; sims is (query × corpus) rows of three scalars, the same
-    // bounded class as the audit's own output domain
-    graft.core.Lifecycle.withPersisted(sims) {
-      val brute = sims
-        .groupBy("query_id").agg(kmv(col("pk")).as("topk"))
-        .select(col("query_id"), explode(col("topk")).as("pk"))
-        .select(col("query_id"), expr("pk % 1099511627776").as("vec_id"))
-      val grid = array(radii.map(lit): _*)
-      val arms = sims.withColumn("radius", explode(grid))
-        .filter(col("hd") <= col("radius"))
-        .groupBy("query_id", "radius").agg(kmv(col("pk")).as("topk"))
-        .select(col("query_id"), col("radius"), explode(col("topk")).as("pk"))
-        .select(col("query_id"), col("radius"),
-          expr("pk % 1099511627776").as("vec_id"))
-      hitCount(arms, brute, k, Seq("query_id", "radius"))
-        .select(col("query_id"), col("radius").cast("int").as("radius"),
-          col("n_hits"), col("recall_micro"))
-    }
+    val (queries, corpus) = sides(emb.select(col("vec_id"), col("embedding"), norm,
+      bucketCol(col("embedding")).as("bucket")).filter(col("bucket").isNotNull))
+    val pairs = fanPairs(queries, corpus,
+      bit_count(col("bucket").bitwiseXOR(col("q_bucket"))).cast("int").as("hd"),
+      queryCosineKey)
+    recallSweep(pairs, k, CosShift, "radius", fanOut(col("hd"), radii), col("pk"))
   }
 
   /** Per-label embedding statistics — the class prototype (nearest-class-

@@ -343,6 +343,12 @@ object Sketch {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
   }
 
+  /** The [[KmvAgg]] bottom-`k` as an aggregate function over a long column —
+    * the one constructor every KMV sketch and packed-key top-k goes through.
+    */
+  private[graft] def kmv(k: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
+    udaf(new KmvAgg(k), org.apache.spark.sql.Encoders.scalaLong)
+
   /** Distinct estimate from a KMV sketch column: exact size when the sketch
     * isn't full (the group had < k distinct values), else the classic
     * (k−1)·M / h_k — all integer division, exact in any engine.
@@ -375,11 +381,10 @@ object Sketch {
     */
   def bottomKSample(docs: DataFrame, k: Int): DataFrame = {
     val spark = docs.sparkSession
-    val kmv = udaf(new KmvAgg(k), org.apache.spark.sql.Encoders.scalaLong)
     val a = Dedup.As(0); val b = Dedup.Bs(0)
     val h = (lit(a) * col("doc_id") + lit(b)) % Dedup.M
     val hashed = docs.select(col("source"), col("doc_id"), h.as("h"))
-    val selected = hashed.groupBy("source").agg(kmv(col("h")).as("kmv"))
+    val selected = hashed.groupBy("source").agg(kmv(k)(col("h")).as("kmv"))
       .select(col("source"), explode(col("kmv")).as("h"))
     hashed.join(broadcast(selected), Seq("source", "h"), "left_semi")
       .select("source", "doc_id")
@@ -429,8 +434,7 @@ object Sketch {
       .agg(coalesce(max("q"), lit(0L))).head.getLong(0).toInt
     val hashed = docs.select(col("source") +: h.as("h") +: carry.map(col): _*)
     if (kMax <= 0) return hashed.limit(0)
-    val kmv = udaf(new KmvAgg(kMax), org.apache.spark.sql.Encoders.scalaLong)
-    val sel = hashed.groupBy("source").agg(kmv(col("h")).as("kmv"))
+    val sel = hashed.groupBy("source").agg(kmv(kMax)(col("h")).as("kmv"))
       .join(broadcast(counts), Seq("source"))
       .select(col("source"), quota.as("n_keep"),
         posexplode(col("kmv")).as(Seq("pos", "h")))
@@ -453,10 +457,9 @@ object Sketch {
     * explode — no join, no sort, no window.
     */
   def groupedTopK(docs: DataFrame, k: Int): DataFrame = {
-    val kmv = udaf(new KmvAgg(k), org.apache.spark.sql.Encoders.scalaLong)
     val packed = docs.select(col("source"),
       (((lit(1048576L) - col("n_chars")) * lit(1099511627776L)) + col("doc_id")).as("pk"))
-    packed.groupBy("source").agg(kmv(col("pk")).as("topk"))
+    packed.groupBy("source").agg(kmv(k)(col("pk")).as("topk"))
       .select(col("source"), posexplode(col("topk")).as(Seq("pos", "pk")))
       .select(col("source"), (col("pos") + 1).cast("int").as("rn"),
         expr("pk % 1099511627776").as("doc_id"),
@@ -466,10 +469,9 @@ object Sketch {
   def kmvOverlap(docs: DataFrame, k: Int = KmvK): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val kmv = udaf(new KmvAgg(k), org.apache.spark.sql.Encoders.scalaLong)
     val sk = docs
       .select(col("source"), docFpUdf(col("text")).as("h"))
-      .groupBy("source").agg(kmv(col("h")).as("kmv"))
+      .groupBy("source").agg(kmv(k)(col("h")).as("kmv"))
       .persist() // tiny (#domains rows); feeds the pair collect AND both join sides
     val srcs = sk.select("source").collect().map(_.getString(0)).sorted.toSeq
     val pairs = (for { a <- srcs; b <- srcs if a < b } yield (a, b))
@@ -517,13 +519,12 @@ object Sketch {
     * packing stays under 2⁶³ with id < 2³².
     */
   def weightedSample(docs: DataFrame, k: Int): DataFrame = {
-    val kmv = udaf(new KmvAgg(k), org.apache.spark.sql.Encoders.scalaLong)
     val w = greatest(size(Corpus.tokens(col("text"))), lit(1)).cast("double")
     val u = (Corpus.lcg(col("doc_id")) + 1L).cast("double") / 2147483648.0
     val keyMicro = round(round(log(u), 6) / w * 1e6, 0).cast("long")
     docs.select(col("source"),
         ((lit(30000000L) - keyMicro) * lit(4294967296L) + col("doc_id")).as("pk"))
-      .groupBy("source").agg(kmv(col("pk")).as("topk"))
+      .groupBy("source").agg(kmv(k)(col("pk")).as("topk"))
       .select(col("source"), posexplode(col("topk")).as(Seq("pos", "pk")))
       .select(col("source"), (col("pos") + 1).cast("int").as("rn"),
         expr("pk % 4294967296").as("doc_id"),

@@ -12,6 +12,15 @@ import graft.operators.Corpus
   */
 private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
 
+  /** The symmetric arc list (src, dst) of an undirected (doc_a, doc_b)
+    * edge list: each edge in both directions. Callers decide whether it is
+    * checkpointed.
+    */
+  private def arcs(edges: DataFrame): DataFrame = {
+    val e = edges.select("doc_a", "doc_b")
+    e.union(e.select(col("doc_b"), col("doc_a"))).toDF("src", "dst")
+  }
+
   /** Connected components over near-dup edges → duplicate clusters, labeled
     * by the minimum doc_id reachable. Iterative min-label propagation with a
     * bounded driver loop and per-round persist — the standard large-scale
@@ -30,16 +39,13 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
     */
   def clustersFromEdges(ids: DataFrame, edgesIn: DataFrame): DataFrame = {
     import graft.core.Lifecycle.{loopCheckpoint, freeCheckpoint}
-    val edges = edgesIn.select("doc_a", "doc_b")
     // loopCheckpoint (eager) truncates the logical plan each round — the
     // propagation plan references `labels` twice, so without lineage cuts the
     // plan tree doubles per round and the driver dies on plan blow-up long
     // before the data is big. Default arm is localCheckpoint; with
     // Lifecycle.CheckpointDirKey set it becomes a RELIABLE checkpoint()
     // (cluster mode: survives executor loss mid-loop — guide §5).
-    val sym = loopCheckpoint(edges
-      .union(edges.select(col("doc_b"), col("doc_a")))
-      .toDF("src", "dst"))
+    val sym = loopCheckpoint(arcs(edgesIn))
     var labels = loopCheckpoint(
       ids.select(col("doc_id"), col("doc_id").as("cluster_id")))
     // labels only ever DECREASE (least of self and neighbours), so the
@@ -100,10 +106,16 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
     * remains at the fixpoint is the maximal subgraph where every member
     * keeps ≥ k neighbours inside it. The driver loop runs EXACTLY
     * `rounds` rounds — peeling is idempotent at the fixpoint, so extra
-    * rounds are no-ops and a fixed round count is engine-mirrorable —
-    * then asserts the fixpoint WAS reached (one more recount must drop
-    * nobody): a too-small `rounds` fails loudly instead of shipping a
-    * half-peeled core. Worst-case rounds-to-fixpoint is the peel depth (a
+    * rounds are no-ops and a fixed round count is engine-mirrorable.
+    * The output is the survivors of one more, implicit peel of the final
+    * live graph, and the `require` checks that this peel dropped nobody:
+    * the final live graph is a peel fixpoint, so the output is exactly
+    * the k-core, and a too-small `rounds` that leaves a node under `k`
+    * fails loudly instead of shipping a half-peeled core. It does NOT
+    * check that `rounds` sufficed without the implicit peel: a node that
+    * cleared the last round's filter but lost every live edge in it is
+    * absent from the live graph, so the check cannot see it (the answer is
+    * still the k-core). Worst-case rounds-to-fixpoint is the peel depth (a
     * k=2 path peels from the ends, O(n) rounds); real duplicate graphs
     * are shallow — monitor the per-round survivor delta and raise
     * `rounds` if the assert ever fires. Emits (doc_id, core_deg) for the
@@ -117,7 +129,6 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
   def kCoreFromEdges(edgesIn: DataFrame, k: Int, rounds: Int): DataFrame = {
     import graft.core.Lifecycle.{loopCheckpoint, freeCheckpoint}
     require(k >= 1 && rounds >= 1, s"need k >= 1 and rounds >= 1, got k=$k rounds=$rounds")
-    val edges = edgesIn.select("doc_a", "doc_b")
     // SURVIVOR-EDGE CARRYING (round 12, §2.5 — VERDICT r11 item 9): the
     // live edge list itself rolls forward, so each round aggregates and
     // semi-joins only the edges BOTH of whose endpoints survived — the
@@ -130,9 +141,7 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
     // peels) the r11 probe measured it flat — the carried checkpoint is
     // edge-sized instead of node-sized per round, paid for by the smaller
     // per-round scans either way.
-    var live = loopCheckpoint(edges
-      .union(edges.select(col("doc_b"), col("doc_a")))
-      .toDF("src", "dst"))
+    var live = loopCheckpoint(arcs(edgesIn))
     for (_ <- 1 to rounds) {
       val active = live.groupBy("src").agg(count(lit(1)).as("core_deg"))
         .filter(col("core_deg") >= k).select(col("src").as("doc_id"))
@@ -144,8 +153,8 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
     }
     val core = loopCheckpoint(live.groupBy(col("src").as("doc_id"))
       .agg(count(lit(1)).as("core_deg")).filter(col("core_deg") >= k))
-    // fixpoint assert, as before: one more peel must drop nobody — every
-    // surviving endpoint must still clear k among the surviving edges
+    // fixpoint check (see Scaladoc): the implicit final peel must drop
+    // nobody — every live endpoint must clear k among the live edges
     require(core.count() == live.select("src").distinct().count(),
       s"k-core peel did not reach its fixpoint within $rounds rounds — raise rounds")
     freeCheckpoint(live)
@@ -185,14 +194,11 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
     */
   def pagerankMicro(docs: DataFrame, minEst: Double, iters: Int): DataFrame = {
     import graft.core.Lifecycle.loopCheckpoint
-    val edges = lshCandidatePairs(docs, minEst).select("doc_a", "doc_b")
     // materialized once: three iterations would otherwise re-run the
     // candidate join per action (same rationale as duplicateClusters);
     // both live until the returned (lazy) rank plan is consumed, so no
     // freeCheckpoint here — the ContextCleaner releases them with the plan
-    val sym = loopCheckpoint(edges
-      .union(edges.select(col("doc_b"), col("doc_a")))
-      .toDF("src", "dst"))
+    val sym = loopCheckpoint(arcs(lshCandidatePairs(docs, minEst)))
     // node-bounded and referenced by EVERY iteration's contrib join — one
     // materialization instead of `iters` re-aggregations of the arc list
     // (round 11; same class as the CC loop's stepped checkpoint)
@@ -226,10 +232,9 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
     * iteration-to-convergence, no window, walks never collected.
     */
   def randomWalks(docs: DataFrame, minEst: Double, steps: Int): DataFrame = {
-    val e = lshCandidatePairs(docs, minEst).select("doc_a", "doc_b")
+    // the arc list feeds every hop's argmin
     val sym = graft.core.Lifecycle.loopCheckpoint(
-      e.union(e.select(col("doc_b"), col("doc_a")))
-        .toDF("src", "dst")) // the arc list feeds every hop's argmin
+      arcs(lshCandidatePairs(docs, minEst)))
     var walks = sym.select(col("src")).distinct()
       .select(col("src").as("start"), col("src").as("cur"),
         col("src").cast("string").as("seq"))
@@ -568,7 +573,7 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
     require(minSupport >= 1, s"need minSupport >= 1, got $minSupport")
     require(maxNeighbors >= 2, s"need maxNeighbors >= 2, got $maxNeighbors")
     val e = edgesIn.select("doc_a", "doc_b")
-    val sym = e.union(e.select(col("doc_b"), col("doc_a"))).toDF("src", "dst")
+    val sym = arcs(e)
     // per-middle sketch: collect_list state is bounded by the candidate
     // graph's constructive degree cap (≤ NumBands·DefaultBucketCap), the
     // same bound that makes the LSH join itself safe
@@ -760,9 +765,7 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
     require(maxVotes >= 1 && maxVotes + 2 < (1L << 20),
       s"need 1 <= maxVotes and maxVotes + 2 < 2^20, got $maxVotes")
     import graft.core.Lifecycle.{loopCheckpoint, freeCheckpoint}
-    val edges = edgesIn.select("doc_a", "doc_b")
-    val sym = loopCheckpoint(edges.union(edges.select(col("doc_b"), col("doc_a")))
-      .toDF("src", "dst"))
+    val sym = loopCheckpoint(arcs(edgesIn))
     // field-bound check up front (one bounded 1-row collect). Aggregates
     // over an empty edge list yield nulls — coalesce before comparing
     // (round-7 ADVICE).

@@ -435,11 +435,9 @@ object EventStream {
     * applies the same estimate/intersection algebra as the batch q112.
     */
   def kmvSketchStream(docStream: DataFrame, k: Int): DataFrame = {
-    val kmv = udaf(new graft.operators.Sketch.KmvAgg(k),
-      org.apache.spark.sql.Encoders.scalaLong)
     docStream
       .select(col("source"), graft.operators.Sketch.docContentHash(col("text")).as("h"))
-      .groupBy("source").agg(kmv(col("h")).as("kmv"))
+      .groupBy("source").agg(graft.operators.Sketch.kmv(k)(col("h")).as("kmv"))
   }
 
   /** Incremental inverted-index maintenance: per term, the running df and
@@ -450,13 +448,12 @@ object EventStream {
     * per-(doc, term) distinct — no cross-batch dedup state needed.
     */
   def invertedIndexStream(docStream: DataFrame, minLen: Int, k: Int): DataFrame = {
-    val kmv = udaf(new graft.operators.Sketch.KmvAgg(k),
-      org.apache.spark.sql.Encoders.scalaLong)
     docStream
       .select(col("doc_id"),
         explode(array_distinct(graft.operators.Corpus.tokens(col("text")))).as("w"))
       .filter(length(col("w")) >= minLen)
-      .groupBy("w").agg(count(lit(1)).as("df"), kmv(col("doc_id")).as("ids"))
+      .groupBy("w").agg(count(lit(1)).as("df"),
+        graft.operators.Sketch.kmv(k)(col("doc_id")).as("ids"))
   }
 
   final case class SessState(lastTsec: Long, nSessions: Long, nEvents: Long)

@@ -812,8 +812,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     finally q.stop()
     val streamed = spark.table("kmv_idx")
       .collect().map(r => (r.getString(0), r.getSeq[Long](1).toSeq)).toMap
-    val kmv = org.apache.spark.sql.functions.udaf(
-      new Sketch.KmvAgg(16), org.apache.spark.sql.Encoders.scalaLong)
+    val kmv = Sketch.kmv(16)
     val batch = docs
       .select(col("source"), Sketch.docContentHash(col("text")).as("h"))
       .groupBy("source").agg(kmv(col("h")).as("kmv"))
@@ -840,8 +839,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     finally q.stop()
     val streamed = spark.table("inv_idx")
       .collect().map(r => (r.getString(0), (r.getLong(1), r.getSeq[Long](2).toSeq))).toMap
-    val kmv = org.apache.spark.sql.functions.udaf(
-      new Sketch.KmvAgg(16), org.apache.spark.sql.Encoders.scalaLong)
+    val kmv = Sketch.kmv(16)
     val batch = docs
       .select(col("doc_id"), explode(Corpus.tokens(col("text"))).as("w"))
       .filter(length(col("w")) >= 4).distinct()
@@ -2135,6 +2133,54 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     // and never exceeds full recall
     assert(sweep.filter(col("radius") === 1).count() <= nq)
     sweep.unpersist()
+  }
+
+  test("ivfRecallSweep: the full-probe row reads recall 1.0 for every " +
+      "query, the probed arms match a per-query scan, ivfRecall equals the " +
+      "nprobe = 2 rows, and the rows do not change with partition count") {
+    val emb = OccurrenceView.embeddings(spark, Dir)
+    val grid = Seq(1, 2, Similarity.IvfK)
+    val sweep = Similarity.ivfRecallSweep(emb, 5, grid).cache()
+    val swept = sweep.collect()
+      .map(r => (r.getLong(0), r.getInt(1)) -> ((r.getLong(2), r.getLong(3)))).toMap
+    val qs = emb.filter(col("vec_id") % 100 === 0).select("vec_id", "embedding")
+      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1))
+    // reference: one literal-vector scan per query (cosineTopK / ivfTopK),
+    // the query vectors filtered out of the candidates afterwards
+    def top5(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("vec_id") % 100 =!= 0).collect().map(_.getLong(0)).take(5).toSet
+    for ((q, qv) <- qs) {
+      // probing every cell is brute force
+      assert(swept((q, Similarity.IvfK)) === ((5L, 1000000L)), s"query $q")
+      val truth = top5(Similarity.cosineTopK(emb, qv, 5 + qs.length))
+      for (np <- Seq(1, 2)) {
+        val hits = (top5(Similarity.ivfTopK(emb, qv, 5 + qs.length, np)) & truth).size
+        assert(swept.get((q, np)).fold(0L)(_._1) === hits.toLong, s"query $q nprobe $np")
+      }
+    }
+    // ivfRecall is the one-arm sweep grouped from the truth side: a row for
+    // every query, equal to the sweep's wherever the sweep emits one
+    val single = Similarity.ivfRecall(emb, 5, 2).collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    assert(single.keySet === qs.map(_._1).toSet)
+    single.foreach { case (q, got) =>
+      assert(got === swept.getOrElse((q, 2), (0L, 0L)), s"query $q")
+    }
+    val re = Similarity.ivfRecallSweep(emb.repartition(7), 5, grid)
+    assert(sweep.exceptAll(re).count() === 0 && re.exceptAll(sweep).count() === 0)
+    sweep.unpersist()
+  }
+
+  test("pqRecallSweep: the identity arm (m_sub = 0) reads recall 1.0 for " +
+      "every query") {
+    val emb = OccurrenceView.embeddings(spark, Dir)
+    val nq = emb.filter(col("vec_id") % 100 === 0).count()
+    val ident = Similarity.pqRecallSweep(emb, 5, Seq(2, Similarity.PqM))
+      .filter(col("m_sub") === 0).cache()
+    assert(ident.count() === nq)
+    assert(ident.filter(col("recall_micro") =!= 1000000L).count() === 0,
+      "the identity quantizer is the ground truth")
+    ident.unpersist()
   }
 
   test("funnel: stages must occur strictly after the previous stage") {

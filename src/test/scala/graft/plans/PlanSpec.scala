@@ -283,12 +283,12 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"q180 lost its bounded broadcast fan-out:\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
       s"q180 degraded:\n$p")
-    // q183's APPROXIMATE arm must pair train probes to eval vectors via a
-    // cell-keyed BroadcastHashJoin — a BNLJ here would mean the IVF
-    // blocking silently degenerated to the brute fan-out it exists to
-    // replace (the brute arm is present as ground truth and the 1-row
-    // scalar join rides the whitelist; both are expected)
-    // planOnly: q183 wraps its brute ground truth in withPersisted — the
+    // q183 must pair train probes to eval vectors via a cell-keyed
+    // BroadcastHashJoin — a BNLJ here would mean the IVF blocking silently
+    // degenerated to the brute fan-out it exists to replace (the brute
+    // ground truth is a keyed min over the same probe-ranked pairs; only
+    // the 1-row scalar join rides the whitelist)
+    // planOnly: q183 wraps its scored pair table in withPersisted — the
     // production localCheckpoint would truncate the plan to a scan (and
     // execute the query here)
     graft.core.Lifecycle.planOnly = true
@@ -299,13 +299,11 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // would stay green if the IVF pair join degenerated
     assert("Left keys \\[1\\]: \\[cell#".r.findFirstIn(p183).isDefined,
       s"q183's IVF arm lost its cell-keyed hash join:\n$p183")
-    // exactly 3 nested-loop joins: the brute ground-truth fan-out twice
-    // (planOnly keeps withPersisted lazy, so its subtree prints under both
-    // consumers) + the 1-row n_train scalar; a 4th means the IVF arm
-    // itself degenerated to the fan-out it exists to replace
+    // exactly 1 nested-loop join: the 1-row n_train scalar; a 2nd means
+    // the pair scan degenerated to the all-pairs fan-out
     val bnlj = "BroadcastNestedLoopJoin Cross".r.findAllIn(p183).length
-    assert(bnlj <= 3, s"q183 plans $bnlj nested-loop joins (expected <= 3 " +
-      s"— brute arm x2 under planOnly + the 1-row scalar):\n$p183")
+    assert(bnlj <= 1, s"q183 plans $bnlj nested-loop joins (expected <= 1 " +
+      s"— the 1-row scalar):\n$p183")
     assert(!p183.contains("CartesianProduct"), s"q183 degraded:\n$p183")
   }
 
