@@ -1,7 +1,9 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.storage.StorageLevel
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 
 /** Structural persist lifecycle — the replacement for the round-8
   * caller-owned convention ("sweep consumers clearCache per query").
@@ -103,8 +105,8 @@ object Lifecycle {
     }
   }
 
-  /** Round-table materialization for DRIVER LOOPS (CC / LPA / k-core,
-    * the pyramid's chunk tops): `localCheckpoint` by default — the fast
+  /** Round-table materialization for DRIVER LOOPS ([[roundLoop]], the
+    * pyramid's chunk tops): `localCheckpoint` by default — the fast
     * block-manager arm — or, when
     * [[CheckpointDirKey]] is set, a RELIABLE `checkpoint()` under
     * `<dir>/loop`. The reliable arm is the cluster-mode story the loops
@@ -139,4 +141,50 @@ object Lifecycle {
         lr.rdd.unpersist(blocking = false)
       case _ => ()
     } catch { case scala.util.control.NonFatal(_) => () }
+
+  /** The one round driver of the graph loops (CC, k-core, both LPA arms).
+    * `step` builds round n+1 from round n's table; `init` is round 0.
+    * Each round is materialized once through [[loopCheckpoint]], which cuts
+    * the lineage (a round plan reads the previous table, often twice, so
+    * the plan would otherwise double per round). Tables `step` passes to
+    * its `scratch` argument are materialized too. Once round n+1 exists,
+    * round n and its scratch are freed ([[freeCheckpoint]]), so loop
+    * storage stays at one round's tables.
+    *
+    * Without `progress` the loop runs exactly `cap` rounds. With it, the
+    * aggregate (strictly monotone until the fixpoint) is observed on each
+    * round's own materialization job, no extra job, and the loop stops at
+    * the first round whose value repeats; still moving at `cap`, it fails
+    * naming the cap. `finish` maps the last round to the result,
+    * materialized in its place.
+    */
+  private[graft] def roundLoop(init: DataFrame, cap: Int,
+      progress: Option[Column] = None, finish: Option[DataFrame => DataFrame] = None)(
+      step: (DataFrame, DataFrame => DataFrame) => DataFrame): DataFrame = {
+    val scratch = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def keep(df: DataFrame): DataFrame = { val m = loopCheckpoint(df); scratch += m; m }
+    // (table, observed progress); the listener bus delivers the metric
+    // milliseconds after the job, the wait bound only guards a lost event
+    def materialize(df: DataFrame): (DataFrame, Any) = progress match {
+      case None => (loopCheckpoint(df), None)
+      case Some(p) =>
+        val obs = Observation()
+        val m = loopCheckpoint(df.observe(obs, p.as("progress")))
+        (m, Await.result(obs.future, Duration(5, "min")).get(0))
+    }
+    @scala.annotation.tailrec
+    def loop(cur: DataFrame, value: Any, n: Int): DataFrame =
+      if (n < cap) {
+        val (next, v) = try materialize(step(cur, keep))
+          finally { (scratch += cur).foreach(freeCheckpoint); scratch.clear() }
+        if (progress.nonEmpty && v == value) next else loop(next, v, n + 1)
+      } else if (progress.isEmpty) cur
+      else {
+        freeCheckpoint(cur)
+        throw new IllegalStateException(s"fixpoint loop did not converge within its cap of $cap rounds")
+      }
+    val (first, v0) = materialize(init)
+    val last = loop(first, v0, 0)
+    finish.fold(last)(f => try loopCheckpoint(f(last)) finally freeCheckpoint(last))
+  }
 }

@@ -18,6 +18,7 @@ import org.apache.spark.sql.functions._
   * bit-reproducible across engines.
   */
 object Similarity {
+  import graft.core.PackedKey.{hiOf, idOf, idRange, pack, requireIdsFit, Shift}
 
   /** Vector kernels as JIT-compiled UDFs, NOT `aggregate`/`zip_with` HOFs:
     * Catalyst evaluates higher-order lambdas interpreted per element
@@ -542,17 +543,16 @@ object Similarity {
     *    quantized L2² can exceed the cosine range, so ids get 21 bits
     *    ([[requirePackableIds]] asserts the bound).
     */
-  private val CosShift = 1L << 40
   private val L2Shift = 1L << 21
 
   private def cosineKey(simMicro: Column, id: Column): Column =
-    (lit(1000000L) - simMicro) * lit(CosShift) + id
+    pack(lit(1000000L) - simMicro, id)
 
   private def l2Key(dist: Column, id: Column): Column =
     round(round(dist, 6) * 1e6, 0).cast("long") * lit(L2Shift) + id
 
   /** sim_micro unpacked from a cosine key column named `pk`. */
-  private def keySimMicro: Column = expr(s"1000000 - pk div $CosShift")
+  private[graft] def keySimMicro: Column = lit(1000000L) - hiOf(col("pk"))
 
   /** Squared L2 between two array columns: the canonical ascending fold
     * the oracle's list_reduce mirrors bit-for-bit. */
@@ -590,7 +590,7 @@ object Similarity {
     * decontam pairs: one keyed min of the cosine key, unpacked. */
   private def nearestEval(pairs: DataFrame): DataFrame =
     pairs.groupBy("vec_id").agg(min("pk").as("pk"))
-      .select(col("vec_id"), (col("pk") % lit(CosShift)).as("nearest_eval_id"),
+      .select(col("vec_id"), idOf(col("pk")).as("nearest_eval_id"),
         keySimMicro.as("max_sim_micro"))
 
   /** Shared eval/train sides of the semantic-decontam family: the eval
@@ -617,11 +617,8 @@ object Similarity {
       .select(col("vec_id"), col("embedding"),
         sqrt(sqNorm(col("embedding"))).as("nrm"))
       .filter(col("nrm") > 0)
-    val b = ev.agg(coalesce(max("eval_id"), lit(0L)).as("mx"),
-      coalesce(min("eval_id"), lit(0L)).as("mn")).collect()(0)
-    require(b.getLong(0) < (1L << 40) && b.getLong(1) >= 0L,
-      s"semanticDecontam packed key needs eval ids in [0, 2^40); got " +
-        s"[${b.getLong(1)}, ${b.getLong(0)}]")
+    val b = ev.select(idRange(col("eval_id")): _*).collect()(0)
+    requireIdsFit("semanticDecontam", b.getLong(0), b.getLong(1), Shift)
     (ev, train)
   }
 
@@ -750,9 +747,7 @@ object Similarity {
     require(ev.nonEmpty,
       s"evalVectorSet: no usable (non-zero-norm) '$evalSource' vectors — " +
         "an empty eval set would silently monitor nothing")
-    val mx = ev.map(_._1).max; val mn = ev.map(_._1).min
-    require(mx < (1L << 40) && mn >= 0L,
-      s"semantic packed key needs eval ids in [0, 2^40); got [$mn, $mx]")
+    requireIdsFit("evalVectorSet", ev.map(_._1).min, ev.map(_._1).max, Shift)
     (ev, allIds)
   }
 
@@ -804,7 +799,7 @@ object Similarity {
     */
   def queryAnnJoin(emb: DataFrame, k: Int): DataFrame = {
     val (queries, corpus) = sides(emb.select(col("vec_id"), col("embedding"), norm))
-    topK(fanPairs(queries, corpus, queryCosineKey), Seq("query_id"), k, CosShift)
+    topK(fanPairs(queries, corpus, queryCosineKey), Seq("query_id"), k, Shift)
       .select(col("query_id"), (col("pos") + 1).cast("int").as("rn"), col("vec_id"),
         round(keySimMicro.cast("double") / 1e6, 6).as("sim"))
   }
@@ -914,7 +909,7 @@ object Similarity {
       fromTruth: Boolean): DataFrame = {
     val (queries, corpus) = sides(emb.select(col("vec_id"), col("embedding"), norm))
     val pairs = cellRanked(emb, queries, corpus, nprobes.max, queryCosineKey)
-    recallSweep(pairs, k, CosShift, "nprobe", fanOut(col("crank"), nprobes),
+    recallSweep(pairs, k, Shift, "nprobe", fanOut(col("crank"), nprobes),
       col("pk"), fromTruth)
   }
 
@@ -973,10 +968,8 @@ object Similarity {
     * aggregate on run-once audits.
     */
   private def requirePackableIds(emb: DataFrame, who: String): Unit = {
-    val maxId = emb.agg(max("vec_id")).head.getLong(0)
-    require(maxId < 2097152L,
-      s"$who packs vec_id into 21 bits; max vec_id $maxId >= 2^21 " +
-        "— widen the packing or shard the audit")
+    val b = emb.select(idRange(col("vec_id")): _*).head
+    requireIdsFit(who, b.getLong(0), b.getLong(1), L2Shift)
   }
 
   /** PQ recall audit + m-sweep (q152): recall@k per (query, m_sub) of the
@@ -1064,7 +1057,7 @@ object Similarity {
     val pairs = fanPairs(queries, corpus,
       bit_count(col("bucket").bitwiseXOR(col("q_bucket"))).cast("int").as("hd"),
       queryCosineKey)
-    recallSweep(pairs, k, CosShift, "radius", fanOut(col("hd"), radii), col("pk"))
+    recallSweep(pairs, k, Shift, "radius", fanOut(col("hd"), radii), col("pk"))
   }
 
   /** Per-label embedding statistics — the class prototype (nearest-class-

@@ -457,13 +457,14 @@ object Sketch {
     * explode — no join, no sort, no window.
     */
   def groupedTopK(docs: DataFrame, k: Int): DataFrame = {
+    import graft.core.PackedKey.{hiOf, idOf, pack}
     val packed = docs.select(col("source"),
-      (((lit(1048576L) - col("n_chars")) * lit(1099511627776L)) + col("doc_id")).as("pk"))
+      pack(lit(1048576L) - col("n_chars"), col("doc_id")).as("pk"))
     packed.groupBy("source").agg(kmv(k)(col("pk")).as("topk"))
       .select(col("source"), posexplode(col("topk")).as(Seq("pos", "pk")))
       .select(col("source"), (col("pos") + 1).cast("int").as("rn"),
-        expr("pk % 1099511627776").as("doc_id"),
-        expr("1048576 - (pk div 1099511627776)").as("n_chars"))
+        idOf(col("pk")).as("doc_id"),
+        (lit(1048576L) - hiOf(col("pk"))).as("n_chars"))
   }
 
   def kmvOverlap(docs: DataFrame, k: Int = KmvK): DataFrame = {

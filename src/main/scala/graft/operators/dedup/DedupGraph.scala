@@ -21,11 +21,14 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
     e.union(e.select(col("doc_b"), col("doc_a"))).toDF("src", "dst")
   }
 
+  /** Per-node degree (doc_id, deg) of a symmetric arc list ([[arcs]]):
+    * the endpoint-degree table every degree-aware graph op reads. */
+  private def degrees(sym: DataFrame): DataFrame =
+    sym.groupBy(col("src").as("doc_id")).agg(count(lit(1)).as("deg"))
+
   /** Connected components over near-dup edges → duplicate clusters, labeled
-    * by the minimum doc_id reachable. Iterative min-label propagation with a
-    * bounded driver loop and per-round persist — the standard large-scale
-    * pattern (rounds ≤ graph diameter; at 100 TB each round is one shuffle
-    * over the edge list, with checkpoints to cut lineage).
+    * by the minimum doc_id reachable ([[clustersFromEdges]] over the LSH
+    * candidate pairs).
     */
   def duplicateClusters(docs: DataFrame, minEst: Double): DataFrame =
     clustersFromEdges(docs.select("doc_id"),
@@ -36,64 +39,40 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
     * other verified-pair generators compose with it (q148 runs it over the
     * dHash Hamming-ball image edges; any modality's near-dup pairs work).
     * `ids` is one row per node (doc_id); isolated nodes label themselves.
+    *
+    * Scale shape: a fixpoint loop on [[graft.core.Lifecycle.roundLoop]],
+    * capped at 20 rounds. A round is one shuffle over the edge list (the
+    * neighbour min) plus pointer jumping, label[x] ← label[label[x]], a
+    * node-keyed self-join: every label is a real doc_id, so convergence
+    * takes O(log diameter) rounds instead of O(diameter). Labels only
+    * DECREASE, so the label sum is the driver's progress aggregate.
     */
   def clustersFromEdges(ids: DataFrame, edgesIn: DataFrame): DataFrame = {
-    import graft.core.Lifecycle.{loopCheckpoint, freeCheckpoint}
-    // loopCheckpoint (eager) truncates the logical plan each round — the
-    // propagation plan references `labels` twice, so without lineage cuts the
-    // plan tree doubles per round and the driver dies on plan blow-up long
-    // before the data is big. Default arm is localCheckpoint; with
-    // Lifecycle.CheckpointDirKey set it becomes a RELIABLE checkpoint()
-    // (cluster mode: survives executor loss mid-loop — guide §5).
+    import graft.core.Lifecycle.{loopCheckpoint, freeCheckpoint, roundLoop}
     val sym = loopCheckpoint(arcs(edgesIn))
-    var labels = loopCheckpoint(
-      ids.select(col("doc_id"), col("doc_id").as("cluster_id")))
-    // labels only ever DECREASE (least of self and neighbours), so the
-    // label sum is strictly monotone until the fixpoint — an aggregate on
-    // the new labels detects convergence without the join-back-and-count
-    // the naive check needs (one shuffle per round saved)
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val s = df.agg(sum(col("cluster_id").cast("decimal(38,0)"))).head.getDecimal(0)
-      if (s == null) java.math.BigDecimal.ZERO else s // empty input: fixpoint
-    }
-    var prevSum = labelSum(labels)
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < 20) {
+    val labels = roundLoop(ids.select(col("doc_id"), col("doc_id").as("cluster_id")),
+        20, progress = Some(sum(col("cluster_id").cast("decimal(38,0)")))) {
+        (cur, scratch) =>
       // measured negative result: folding the self-carry into the edge join
       // via self-loops (sym ∪ (id,id), one join+min instead of join+min+left
       // join) ran ~12% SLOWER at bench scale — labels broadcast into the sym
       // join, so the "saved" left join was already shuffle-free, and the
       // self-loop rows only added aggregation work. Don't re-fuse.
       val nbMin = sym
-        .join(labels.withColumnRenamed("doc_id", "dst_id"), col("dst") === col("dst_id"))
+        .join(cur.withColumnRenamed("doc_id", "dst_id"), col("dst") === col("dst_id"))
         .groupBy(col("src").as("doc_id"))
         .agg(min("cluster_id").as("nb_min"))
-      // stepped is node-bounded (one row per doc) — checkpointed (round
-      // 11) so the pointer-jump self-join's two branches read the tiny
-      // materialized table instead of evaluating the sym-join subtree
-      // twice per round (measured ~15–20% of the loop's CPU)
-      val stepped = loopCheckpoint(labels.join(nbMin, Seq("doc_id"), "left")
+      // stepped is node-bounded scratch (round 11): materialized so the
+      // pointer-jump self-join's two branches read the tiny table instead
+      // of evaluating the sym-join subtree twice per round (measured
+      // ~15–20% of the loop's CPU)
+      val stepped = scratch(cur.join(nbMin, Seq("doc_id"), "left")
         .select(col("doc_id"),
           least(col("cluster_id"), coalesce(col("nb_min"), col("cluster_id"))).as("cluster_id")))
-      // pointer jumping: label[x] ← label[label[x]] — every label is a real
-      // doc_id, so the self-join composes the pointer chain and convergence
-      // needs O(log diameter) rounds instead of O(diameter)
-      val next = loopCheckpoint(stepped.as("a")
+      stepped.as("a")
         .join(stepped.select(col("doc_id").as("pj_id"), col("cluster_id").as("pj_cl")).as("b"),
           col("a.cluster_id") === col("pj_id"), "left")
-        .select(col("a.doc_id"), coalesce(col("pj_cl"), col("a.cluster_id")).as("cluster_id")))
-      val nextSum = labelSum(next)
-      // round-12 checkpoint hygiene: `stepped` and the PREVIOUS round's
-      // labels are dead once `next` is materialized — release their blocks
-      // now instead of waiting for the ContextCleaner, bounding loop
-      // storage at one round's table (round-11 VERDICT "what's wrong" #3)
-      freeCheckpoint(stepped)
-      freeCheckpoint(labels)
-      labels = next
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      rounds += 1
+        .select(col("a.doc_id"), coalesce(col("pj_cl"), col("a.cluster_id")).as("cluster_id"))
     }
     freeCheckpoint(sym) // the returned labels are materialized — sym is dead
     labels
@@ -104,60 +83,41 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
     * "Distributed k-Core Decomposition", 2011): each round recounts every
     * survivor's degree AMONG survivors and drops nodes under `k`; what
     * remains at the fixpoint is the maximal subgraph where every member
-    * keeps ≥ k neighbours inside it. The driver loop runs EXACTLY
-    * `rounds` rounds — peeling is idempotent at the fixpoint, so extra
-    * rounds are no-ops and a fixed round count is engine-mirrorable.
-    * The output is the survivors of one more, implicit peel of the final
-    * live graph, and the `require` checks that this peel dropped nobody:
-    * the final live graph is a peel fixpoint, so the output is exactly
-    * the k-core, and a too-small `rounds` that leaves a node under `k`
-    * fails loudly instead of shipping a half-peeled core. It does NOT
-    * check that `rounds` sufficed without the implicit peel: a node that
-    * cleared the last round's filter but lost every live edge in it is
-    * absent from the live graph, so the check cannot see it (the answer is
-    * still the k-core). Worst-case rounds-to-fixpoint is the peel depth (a
-    * k=2 path peels from the ends, O(n) rounds); real duplicate graphs
-    * are shallow — monitor the per-round survivor delta and raise
-    * `rounds` if the assert ever fires. Emits (doc_id, core_deg) for the
-    * survivors.
+    * keeps ≥ k neighbours inside it. EXACTLY `rounds` rounds run — peeling
+    * is idempotent at the fixpoint, so a fixed count is engine-mirrorable.
+    * Emits (doc_id, core_deg): the per-node degrees of the final live
+    * graph, and the `require` checks that every one clears `k`, so the
+    * final live graph is a peel fixpoint and the output is exactly the
+    * k-core; a too-small `rounds` fails loudly instead of shipping a
+    * half-peeled core. It does NOT check that `rounds` sufficed without
+    * that implicit last peel: a node that cleared the last round's filter
+    * but lost every live edge in it is absent from the live graph (the
+    * answer is still the k-core). The peel depth is O(n) worst case (a k=2
+    * path peels from the ends); real duplicate graphs are shallow.
     *
-    * Scale shape: the edge list is checkpointed once; each round is two
-    * semi-joins of it against the (only-shrinking) survivor set plus one
-    * keyed count — the CC round shape ([[clustersFromEdges]]) without the
-    * pointer jumping; the convergence check is one bounded count.
+    * Scale shape: a fixed-round loop on [[graft.core.Lifecycle.roundLoop]]
+    * whose round table is the LIVE EDGE LIST (survivor-edge carrying,
+    * round 12): a round is one keyed count plus two semi-joins of only
+    * the edges both of whose endpoints survived. On a 2 M-edge Zipf star
+    * + ring that measured wall 12.7 → 5.4 s, cpu −50%, shuffle 46.9 →
+    * 18.3 MB against re-scanning the full edge list per round (same JVM,
+    * identical output; OPTIMIZATION_r12.md:438-446); flat on the
+    * near-uniform LSH graph, where almost nothing peels.
     */
   def kCoreFromEdges(edgesIn: DataFrame, k: Int, rounds: Int): DataFrame = {
-    import graft.core.Lifecycle.{loopCheckpoint, freeCheckpoint}
     require(k >= 1 && rounds >= 1, s"need k >= 1 and rounds >= 1, got k=$k rounds=$rounds")
-    // SURVIVOR-EDGE CARRYING (round 12, §2.5 — VERDICT r11 item 9): the
-    // live edge list itself rolls forward, so each round aggregates and
-    // semi-joins only the edges BOTH of whose endpoints survived — the
-    // previous shape re-scanned the FULL symmetric edge list twice per
-    // round against the shrinking survivor set. On peel-heavy (skewed)
-    // graphs the live set collapses after the first wave: measured on a
-    // 2 M-edge Zipf star + ring (same JVM, identical output;
-    // OPTIMIZATION_r12.md:438-446): wall 12.7 → 5.4 s, cpu −50%, shuffle
-    // 46.9 → 18.3 MB. On the near-uniform LSH graph (almost nothing
-    // peels) the r11 probe measured it flat — the carried checkpoint is
-    // edge-sized instead of node-sized per round, paid for by the smaller
-    // per-round scans either way.
-    var live = loopCheckpoint(arcs(edgesIn))
-    for (_ <- 1 to rounds) {
-      val active = live.groupBy("src").agg(count(lit(1)).as("core_deg"))
-        .filter(col("core_deg") >= k).select(col("src").as("doc_id"))
-      val next = loopCheckpoint(live
+    val core = graft.core.Lifecycle.roundLoop(arcs(edgesIn), rounds,
+        finish = Some(live => degrees(live).select(col("doc_id"), col("deg").as("core_deg")))) {
+        (live, _) =>
+      val active = degrees(live).filter(col("deg") >= k).select("doc_id")
+      live
         .join(active.withColumnRenamed("doc_id", "src"), Seq("src"), "left_semi")
-        .join(active.withColumnRenamed("doc_id", "dst"), Seq("dst"), "left_semi"))
-      freeCheckpoint(live) // superseded round — see clustersFromEdges
-      live = next
+        .join(active.withColumnRenamed("doc_id", "dst"), Seq("dst"), "left_semi")
     }
-    val core = loopCheckpoint(live.groupBy(col("src").as("doc_id"))
-      .agg(count(lit(1)).as("core_deg")).filter(col("core_deg") >= k))
     // fixpoint check (see Scaladoc): the implicit final peel must drop
     // nobody — every live endpoint must clear k among the live edges
-    require(core.count() == live.select("src").distinct().count(),
+    require(core.filter(col("core_deg") < k).isEmpty,
       s"k-core peel did not reach its fixpoint within $rounds rounds — raise rounds")
-    freeCheckpoint(live)
     core
   }
 
@@ -194,27 +154,24 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
     */
   def pagerankMicro(docs: DataFrame, minEst: Double, iters: Int): DataFrame = {
     import graft.core.Lifecycle.loopCheckpoint
-    // materialized once: three iterations would otherwise re-run the
-    // candidate join per action (same rationale as duplicateClusters);
-    // both live until the returned (lazy) rank plan is consumed, so no
-    // freeCheckpoint here — the ContextCleaner releases them with the plan
+    // materialized once, or every iteration re-runs the candidate join;
+    // both live until the returned (lazy) rank plan is consumed, so the
+    // ContextCleaner, not freeCheckpoint, releases them with the plan
     val sym = loopCheckpoint(arcs(lshCandidatePairs(docs, minEst)))
     // node-bounded and referenced by EVERY iteration's contrib join — one
     // materialization instead of `iters` re-aggregations of the arc list
     // (round 11; same class as the CC loop's stepped checkpoint)
-    val deg = loopCheckpoint(sym.groupBy("src").agg(count(lit(1)).as("deg")))
+    val deg = loopCheckpoint(degrees(sym).withColumnRenamed("doc_id", "src"))
     val base = docs.select(col("doc_id"))
-    var r = base.withColumn("r", lit(1000000L))
-    for (_ <- 1 to iters) {
+    (1 to iters).foldLeft(base.withColumn("r", lit(1000000L))) { (r, _) =>
       val contrib = sym.join(deg, Seq("src"))
         .join(r.select(col("doc_id").as("src"), col("r")), Seq("src"))
         .select(col("dst").as("doc_id"), expr("r div deg").as("give"))
         .groupBy("doc_id").agg(sum("give").as("c"))
-      r = base.join(contrib, Seq("doc_id"), "left")
+      base.join(contrib, Seq("doc_id"), "left")
         .select(col("doc_id"),
           expr("150000 + (850 * coalesce(c, 0)) div 1000").as("r"))
-    }
-    r.select(col("doc_id"), col("r").as("rank_micro"))
+    }.select(col("doc_id"), col("r").as("rank_micro"))
   }
 
   /** Deterministic node2vec-style walks over the near-dup graph: one walk
@@ -235,22 +192,21 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
     // the arc list feeds every hop's argmin
     val sym = graft.core.Lifecycle.loopCheckpoint(
       arcs(lshCandidatePairs(docs, minEst)))
-    var walks = sym.select(col("src")).distinct()
+    val start = sym.select(col("src")).distinct()
       .select(col("src").as("start"), col("src").as("cur"),
         col("src").cast("string").as("seq"))
-    for (step <- 1 to steps) {
+    (1 to steps).foldLeft(start) { (walks, step) =>
       val nx = sym
         .groupBy("src")
         .agg(min(((col("dst") * 1299721L + lit(step) * 7L) % M)
           * 4294967296L + col("dst")).as("pk"))
         .select(col("src").as("nsrc"), (col("pk") % 4294967296L).as("nx"))
-      walks = walks.join(nx, walks("cur") === nx("nsrc"), "left")
+      walks.join(nx, walks("cur") === nx("nsrc"), "left")
         .select(col("start"),
           coalesce(col("nx"), col("cur")).as("cur"),
           concat(col("seq"), lit(","),
             coalesce(col("nx"), col("cur")).cast("string")).as("seq"))
-    }
-    walks.select(col("start"), col("cur").as("end"), col("seq"))
+    }.select(col("start"), col("cur").as("end"), col("seq"))
   }
 
   /** Cross-source duplicate-flow matrix: near-dup pair counts per
@@ -298,30 +254,17 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
     * output).
     */
   def triangleStats(docs: DataFrame, minEst: Double, orientation: String): DataFrame = {
-    // the verified edge list feeds five plan branches (3 triangle arms + 2
-    // degree arms) — persist it, unlike the signature table (see the
-    // lshCandidatePairs note), because edges are candidate-sized, not
-    // corpus-sized, and the 5× recompute would repeat the band join.
-    // Structural lifecycle (round 9): per-node stats are node-bounded, so
-    // withPersisted checkpoints them and drops the edge cache on exit.
+    // the candidate-sized edge list feeds five plan branches, and deg up
+    // to three broadcast builds (each its own job: unpersisted, every build
+    // re-ran the aggregation — five redundant deg stages per q117 action,
+    // round 11); withPersisted checkpoints the node-bounded stats and drops
+    // both caches on exit
     val e = lshCandidatePairs(docs, minEst).select("doc_a", "doc_b")
-    val deg = e.select(col("doc_a").as("doc_id"))
-      .unionByName(e.select(col("doc_b").as("doc_id")))
-      .groupBy("doc_id").agg(count(lit(1)).as("deg"))
-    // deg rides the persist list too (round 11): it feeds up to three
-    // BROADCAST builds (orientation da/db + the coefficient join), and
-    // each broadcast build is its own job — unpersisted, every build
-    // re-ran the aggregation over e (measured: five redundant deg stages
-    // per q117 action)
+    val deg = degrees(arcs(e))
     graft.core.Lifecycle.withPersisted(e, deg) {
-      // counting-only consumers never need the triangle LIST: the default
-      // arm counts by adjacency intersection (round-11 optimization — 4–5×
-      // the CPU of either enumeration on the bench graph, see
-      // [[triangleCountsByIntersect]]); a forced orientation still runs
-      // the oracle-gated enumeration plan (q146 pins the degree arm).
       val perNode =
         if (orientation == "auto") triangleCountsByIntersect(e, deg)
-        else triangles(e, orientation)
+        else triangles(e, deg, orientation)
           .select(explode(array(col("a"), col("b"), col("c"))).as("doc_id"))
           .groupBy("doc_id").agg(count(lit(1)).as("n_tri"))
       perNode.join(deg, Seq("doc_id"))
@@ -356,14 +299,7 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
     */
   private[operators] def triangleCountsByIntersect(e: DataFrame,
       deg: DataFrame): DataFrame = {
-    val ed = e
-      .join(deg.select(col("doc_id").as("doc_a"), col("deg").as("da")), "doc_a")
-      .join(deg.select(col("doc_id").as("doc_b"), col("deg").as("db")), "doc_b")
-    val ka = struct(col("da").as("d"), col("doc_a").as("v"))
-    val kb = struct(col("db").as("d"), col("doc_b").as("v"))
-    val o = ed.select(
-      when(ka < kb, col("doc_a")).otherwise(col("doc_b")).as("src"),
-      when(ka < kb, col("doc_b")).otherwise(col("doc_a")).as("dst"))
+    val o = orient(e, deg)
     val adj = o.groupBy(col("src")).agg(collect_list(col("dst")).as("ns"))
     // adj feeds TWO broadcast builds (nsa/nsb) — persisted (nested
     // lifecycle: the outer triangleStats scope unpersists it) so the
@@ -389,6 +325,41 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
         .groupBy(col("x.doc_id").as("doc_id")).agg(sum(col("x.n")).as("n_tri"))
         .filter(col("n_tri") > 0)
     }
+  }
+
+  /** The `"auto"` dispatch decision of [[triangles]], exposed so the
+    * fixture tests pin the rule itself. */
+  def triangleOrientation(e: DataFrame): String = dispatch(degrees(arcs(e)))
+
+  /** [[triangleOrientation]] over the caller's degree table (doc_id, deg). */
+  private def dispatch(deg: DataFrame): String = {
+    // coalesce: max/sum over ZERO rows are null — an empty edge list must
+    // dispatch (to "id", where the self-joins are trivially empty), not NPE
+    val r = deg
+      .agg(coalesce(max("deg"), lit(0L)).as("max_deg"),
+        coalesce((sum("deg") / 2).cast("long"), lit(0L)).as("m"))
+      .collect()(0)
+    val (maxDeg, m) = (r.getLong(0), r.getLong(1))
+    if (m > 0 && maxDeg > 4 * math.sqrt(m.toDouble)) "degree" else "id"
+  }
+
+  /** Each edge of `e` oriented lower→higher by (deg, id) over the degree
+    * table `deg` — the Chiba–Nishizeki order both the intersect counter
+    * and the degree enumeration arm use: (src, dst) plus `dk`, the head's
+    * (deg, id) key, so the wedge join can order its two legs without
+    * re-joining degrees (the counter never reads it; it is pruned there).
+    */
+  private def orient(e: DataFrame, deg: DataFrame): DataFrame = {
+    val ed = e
+      .join(deg.select(col("doc_id").as("doc_a"), col("deg").as("da")), "doc_a")
+      .join(deg.select(col("doc_id").as("doc_b"), col("deg").as("db")), "doc_b")
+    // uniform field names: the two CASE branches must be the same struct type
+    val ka = struct(col("da").as("d"), col("doc_a").as("v"))
+    val kb = struct(col("db").as("d"), col("doc_b").as("v"))
+    ed.select(
+      when(ka < kb, col("doc_a")).otherwise(col("doc_b")).as("src"),
+      when(ka < kb, col("doc_b")).otherwise(col("doc_a")).as("dst"),
+      when(ka < kb, kb).otherwise(ka).as("dk"))
   }
 
   /** Triangle list (one row per triangle, columns a/b/c) over a canonical
@@ -425,28 +396,18 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
     * Each triangle appears exactly once under either orientation (both
     * are strict total orders on the vertices of the triangle).
     */
-  /** The `"auto"` dispatch decision of [[triangles]], exposed so the
-    * fixture tests pin the rule itself. */
-  def triangleOrientation(e: DataFrame): String = {
-    // coalesce: max/sum over ZERO rows are null — an empty edge list must
-    // dispatch (to "id", where the self-joins are trivially empty), not NPE
-    val r = e.select(col("doc_a").as("doc_id"))
-      .unionByName(e.select(col("doc_b").as("doc_id")))
-      .groupBy("doc_id").agg(count(lit(1)).as("deg"))
-      .agg(coalesce(max("deg"), lit(0L)).as("max_deg"),
-        coalesce((sum("deg") / 2).cast("long"), lit(0L)).as("m"))
-      .collect()(0)
-    val (maxDeg, m) = (r.getLong(0), r.getLong(1))
-    if (m > 0 && maxDeg > 4 * math.sqrt(m.toDouble)) "degree" else "id"
-  }
+  def triangles(e: DataFrame, orientation: String = "auto"): DataFrame =
+    triangles(e, degrees(arcs(e)), orientation)
 
-  def triangles(e: DataFrame, orientation: String = "auto"): DataFrame = {
+  /** [[triangles]] over the caller's degree table of `e` (doc_id, deg). */
+  private def triangles(e: DataFrame, deg: DataFrame,
+      orientation: String): DataFrame = {
     // plan-only builds run no job: "auto" takes the scale-safe arm (the
     // O(m^1.5) degree order) instead of collecting the degree stats
     val mode =
       if (orientation != "auto") orientation
       else if (graft.core.Lifecycle.planOnly) "degree"
-      else triangleOrientation(e)
+      else dispatch(deg)
     if (mode == "id") {
       e.as("e1")
         .join(e.as("e2"), col("e1.doc_b") === col("e2.doc_a"))
@@ -455,21 +416,7 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
         .select(col("e1.doc_a").as("a"), col("e1.doc_b").as("b"),
           col("e2.doc_b").as("c"))
     } else {
-      // orient lower→higher (deg, id); `dk` (the head's key) rides along so
-      // the wedge join can order its two legs without re-joining degrees
-      val deg = e.select(col("doc_a").as("doc_id"))
-        .unionByName(e.select(col("doc_b").as("doc_id")))
-        .groupBy("doc_id").agg(count(lit(1)).as("deg"))
-      val ed = e
-        .join(deg.select(col("doc_id").as("doc_a"), col("deg").as("da")), "doc_a")
-        .join(deg.select(col("doc_id").as("doc_b"), col("deg").as("db")), "doc_b")
-      // uniform field names: the two CASE branches must be the same struct type
-      val ka = struct(col("da").as("d"), col("doc_a").as("v"))
-      val kb = struct(col("db").as("d"), col("doc_b").as("v"))
-      val o = ed.select(
-          when(ka < kb, col("doc_a")).otherwise(col("doc_b")).as("src"),
-          when(ka < kb, col("doc_b")).otherwise(col("doc_a")).as("dst"),
-          when(ka < kb, kb).otherwise(ka).as("dk"))
+      val o = orient(e, deg)
       // read 3× by the plan (two wedge legs + closure probe); structural
       // lifecycle (round 9): the triangle list is output-bounded, so
       // withPersisted checkpoints it and drops the oriented-edge cache
@@ -641,19 +588,16 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
     * below 4M chars upstream; anything else must fail loudly.
     */
   def keepLongestCanonical(docs: DataFrame, minEst: Double): DataFrame = {
-    val b = docs.agg(coalesce(max("n_chars"), lit(0L)).as("maxc"),
-      coalesce(max("doc_id"), lit(0L)).as("maxid"),
-      coalesce(min("doc_id"), lit(0L)).as("minid")).collect()(0)
-    require(b.getLong(0) < (1L << 22) &&
-        b.getLong(1) < (1L << 40) && b.getLong(2) >= 0L,
-      s"keepLongestCanonical packed key needs n_chars < 2^22 and ids in " +
-        s"[0, 2^40); got max n_chars ${b.getLong(0)}, id range " +
-        s"[${b.getLong(2)}, ${b.getLong(1)}]")
+    import graft.core.PackedKey.{idOf, idRange, pack, requireIdsFit, Shift}
+    val b = docs.agg(coalesce(max("n_chars"), lit(0L)),
+      idRange(col("doc_id")): _*).collect()(0)
+    require(b.getLong(0) < (1L << 22), "keepLongestCanonical packed key " +
+      s"needs n_chars < 2^22; got max n_chars ${b.getLong(0)}")
+    requireIdsFit("keepLongestCanonical", b.getLong(1), b.getLong(2), Shift)
     val keep = duplicateClusters(docs, minEst)
       .join(docs.select("doc_id", "n_chars"), Seq("doc_id"))
       .groupBy("cluster_id")
-      .agg(expr("""CAST(min((4194304 - n_chars) * 1099511627776 + doc_id)
-        % 1099511627776 AS BIGINT)""").as("keep_id"))
+      .agg(idOf(min(pack(lit(4194304L) - col("n_chars"), col("doc_id")))).as("keep_id"))
     docs.join(keep, docs("doc_id") === keep("keep_id"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"),
@@ -695,8 +639,9 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
     * to the SMALLEST label via one packed integer key
     * (maxc − c)·2⁴⁰ + label, so argmax-count/min-label is a plain `min`.
     *
-    * Scale shape: per round, one dst-keyed join of the (checkpointed) edge
-    * list against the label table, one (node, label) count (map-side
+    * Scale shape: a fixed-round loop on the
+    * [[graft.core.Lifecycle.roundLoop]] driver; per round, one dst-keyed
+    * join of the (checkpointed) edge list against the label table, one (node, label) count (map-side
     * combined), one node-keyed min — the CC round shape without pointer
     * jumping; labels are node-keyed rows, never collected.
     *
@@ -764,27 +709,18 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
     require(Set("auto", "exact", "bounded")(arm), s"unknown arm $arm")
     require(maxVotes >= 1 && maxVotes + 2 < (1L << 20),
       s"need 1 <= maxVotes and maxVotes + 2 < 2^20, got $maxVotes")
-    import graft.core.Lifecycle.{loopCheckpoint, freeCheckpoint}
+    import graft.core.Lifecycle.{loopCheckpoint, freeCheckpoint, roundLoop}
+    import graft.core.PackedKey.{idOf, idRange, pack, requireIdsFit, Shift}
     val sym = loopCheckpoint(arcs(edgesIn))
-    // field-bound check up front (one bounded 1-row collect). Aggregates
-    // over an empty edge list yield nulls — coalesce before comparing
-    // (round-7 ADVICE).
-    val b = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-      .agg(coalesce(max("deg"), lit(0L)).as("maxd"),
-        coalesce(max("src"), lit(0L)).as("maxid"),
-        coalesce(min("src"), lit(0L)).as("minid")).collect()(0)
-    require(b.getLong(1) < (1L << 40) && b.getLong(2) >= 0L,
-      s"lpaFromEdges packed key needs ids in [0, 2^40); got id range " +
-        s"[${b.getLong(2)}, ${b.getLong(1)}]")
+    // field-bound check and the exact arm's degree bound up front, in one
+    // bounded 1-row collect
+    val b = degrees(sym).agg(coalesce(max("deg"), lit(0L)),
+      idRange(col("doc_id")): _*).collect()(0)
+    requireIdsFit("lpaFromEdges", b.getLong(1), b.getLong(2), Shift)
     val exactSafe = b.getLong(0) + 1 < (1L << 20)
-    val useExact = arm match {
-      case "exact" =>
-        require(exactSafe, s"lpaFromEdges exact arm needs degree+1 < 2^20; " +
-          s"got max degree ${b.getLong(0)} — use the bounded arm")
-        true
-      case "bounded" => false
-      case _ => exactSafe
-    }
+    require(arm != "exact" || exactSafe, "lpaFromEdges exact arm needs degree+1 " +
+      s"< 2^20; got max degree ${b.getLong(0)} — use the bounded arm")
+    val useExact = arm == "exact" || (arm == "auto" && exactSafe)
     val adj =
       if (useExact) sym
       else {
@@ -805,8 +741,7 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
         // oracle-paired (q181) like every other arm in the house.
         graft.functions.JavaHashExpr.register(edgesIn.sparkSession)
         val h = voteSampleHash(col("src"), col("dst"))
-        val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-        val sampled = sym.join(deg, Seq("src"))
+        val sampled = sym.join(degrees(sym).withColumnRenamed("doc_id", "src"), Seq("src"))
           .filter(col("deg") <= 4L * maxVotes ||
             h < expr(s"${4L * maxVotes * 4294967296L} div deg"))
           .select(col("src"),
@@ -817,21 +752,17 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
           .select(col("src"), explode(col("ns")).as("dst"))
         loopCheckpoint(sampled)
       }
-    var labels = loopCheckpoint(sym.select(col("src").as("doc_id")).distinct()
-      .withColumn("community", col("doc_id")))
-    for (_ <- 1 to rounds) {
+    val labels = roundLoop(sym.select(col("src").as("doc_id")).distinct()
+        .withColumn("community", col("doc_id")), rounds) { (cur, _) =>
       val votes = adj
-        .join(labels.select(col("doc_id").as("dst"), col("community").as("nl")),
+        .join(cur.select(col("doc_id").as("dst"), col("community").as("nl")),
           Seq("dst"))
         .select(col("src"), col("nl"))
-        .unionByName(labels.select(col("doc_id").as("src"),
+        .unionByName(cur.select(col("doc_id").as("src"),
           col("community").as("nl")))
-      val next = loopCheckpoint(votes.groupBy("src", "nl").agg(count(lit(1)).as("c"))
+      votes.groupBy("src", "nl").agg(count(lit(1)).as("c"))
         .groupBy(col("src").as("doc_id"))
-        .agg(expr("""CAST(min((1048576 - c) * 1099511627776 + nl)
-          % 1099511627776 AS BIGINT)""").as("community")))
-      freeCheckpoint(labels) // superseded round — see clustersFromEdges
-      labels = next
+        .agg(idOf(min(pack(lit(1048576L) - col("c"), col("nl")))).as("community"))
     }
     if (!useExact) freeCheckpoint(adj)
     freeCheckpoint(sym)

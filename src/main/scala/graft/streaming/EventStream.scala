@@ -58,17 +58,8 @@ object EventStream {
     * leave max-zoom to the batch rebuild, or shard the query by view
     * ranges so each stream's state store holds its slice only.
     */
-  def incrementalPixelCounts(occStream: DataFrame, epsg: String, z: Int): DataFrame = {
-    val projected = graft.operators.MapBuild.withPixels(occStream, epsg)
-      .withColumn("map_key", explode(col("map_keys")))
-    projected
-      .groupBy(
-        col("map_key"),
-        shiftright(col("px"), graft.operators.OccurrenceView.MaxZoom - z).as("px"),
-        shiftright(col("py"), graft.operators.OccurrenceView.MaxZoom - z).as("py"),
-        col("bor_year"))
-      .agg(count(lit(1)).as("occ_count"))
-  }
+  def incrementalPixelCounts(occStream: DataFrame, epsg: String, z: Int): DataFrame =
+    graft.operators.MapBuild.pixelAggAt(occStream, epsg, z)
 
   /** Multi-zoom tile serving OFF the streaming pixel state — the streaming
     * analog of the q111/q145 incremental pyramid: the streaming aggregation
@@ -328,7 +319,7 @@ object EventStream {
                 .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
               val sm = java.math.BigDecimal.valueOf(s6 * 1000000.0)
                 .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-              val pk = (1000000L - sm) * 1099511627776L + id
+              val pk = graft.core.PackedKey.pack(1000000L - sm, id)
               if (pk < best) best = pk
             }
           }
@@ -340,8 +331,7 @@ object EventStream {
       .withColumn("pk", score(col("vec_id"), col("embedding")))
       .filter(col("pk").isNull || col("pk") =!= Excluded)
       .select(col("source"),
-        expr("CAST(1000000 - pk div 1099511627776 AS BIGINT)")
-          .as("max_sim_micro"))
+        graft.operators.Similarity.keySimMicro.as("max_sim_micro"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_vectors"),
         sum(when(col("max_sim_micro") >= minSimMicro, 1L).otherwise(0L))

@@ -1199,6 +1199,73 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("clustersFromEdges labels every component by its min id, equal to " +
+    "a union-find reference and invariant under repartitioning") {
+    val ss = spark; import ss.implicits._
+    // a 20-node path laid out in ascending id order (the slowest case for
+    // min-label propagation: the min sits at one end), so even with pointer
+    // jumping it takes 4 moving rounds plus the unchanged one; a triangle;
+    // and id 99, which has no edge at all
+    val path = (1L until 20L).map(i => (i, i + 1))
+    val triangle = Seq((50L, 51L), (51L, 52L), (50L, 52L))
+    val edges = (path ++ triangle).toDF("doc_a", "doc_b")
+    val ids = ((1L to 20L) ++ Seq(50L, 51L, 52L, 99L)).toDF("doc_id")
+    // union-find on the driver, each root the min id of its set
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    ids.as[Long].collect().foreach(find)
+    (path ++ triangle).foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val want = parent.keys.map(x => x -> find(x)).toMap
+    def labels(e: org.apache.spark.sql.DataFrame) = Dedup.clustersFromEdges(ids, e)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels(edges) === want)
+    assert(labels(edges.repartition(7)) === want)
+    assert(want(20L) === 1L && want(52L) === 50L && want(99L) === 99L)
+  }
+
+  test("roundLoop: a fixpoint loop still moving at its cap fails naming " +
+    "the cap; a fixed-round loop runs exactly its cap") {
+    import graft.core.Lifecycle.roundLoop
+    val init = spark.range(3).toDF("v")
+    // v + 1 every round: the observed sum never repeats
+    val err = intercept[IllegalStateException] {
+      roundLoop(init, 2, progress = Some(sum(col("v"))))((df, _) =>
+        df.select((col("v") + 1).as("v")))
+    }
+    assert(err.getMessage.contains("cap of 2"), err.getMessage)
+    // fixed rounds: three increments, with a scratch table read twice
+    val fixed = roundLoop(init, 3) { (df, scratch) =>
+      val s = scratch(df.select((col("v") + 1).as("v")))
+      s.join(s.select(col("v").as("w")), col("v") === col("w")).select("v")
+    }
+    assert(fixed.collect().map(_.getLong(0)).toSet === Set(3L, 4L, 5L))
+    // a fixpoint loop that converges stops early: v → min(v, 1) is
+    // unchanged after one round, so a cap of 2 is enough
+    val conv = roundLoop(init, 2, progress = Some(sum(col("v"))))((df, _) =>
+      df.select(least(col("v"), lit(1L)).as("v")))
+    assert(conv.collect().map(_.getLong(0)).sorted.toSeq === Seq(0L, 1L, 1L))
+  }
+
+  test("requireIdsFit: an empty input passes, an id at the bound fails " +
+    "naming the op") {
+    import graft.core.PackedKey.{idRange, requireIdsFit}
+    val empty = spark.range(0).toDF("id")
+    val r = empty.select(idRange(col("id")): _*).head
+    requireIdsFit("emptyOp", r.getLong(0), r.getLong(1), 1L << 40)
+    val err = intercept[IllegalArgumentException] {
+      requireIdsFit("boundOp", 0L, 1L << 40, 1L << 40)
+    }
+    assert(err.getMessage.contains("boundOp") && err.getMessage.contains("2^40"),
+      err.getMessage)
+    intercept[IllegalArgumentException](requireIdsFit("negOp", -1L, 5L, 1L << 21))
+  }
+
   test("exactSubstringSpans matches a brute-force reference on a hand " +
     "corpus: shifted shared span recovered exactly, intra-doc runs count") {
     val ss = spark; import ss.implicits._
