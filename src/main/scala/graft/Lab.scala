@@ -177,15 +177,13 @@ object Lab {
   private def perZoom(e: String): Arm = h => {
     val s2 = MapBuild.noCoalesceSession(h.spark)
     val chunks = Seq(16, 9, 2).map(hz => hz -> math.max(0, hz - 6)) // (highZ, lowZ)
-    def rollup(top: DataFrame, by: Int) = top
-      .select(col("map_key"), shiftright(col("px"), by).as("px"),
-        shiftright(col("py"), by).as("py"), col("total"))
-      .groupBy("map_key", "px", "py").agg(sum("total").as("total"))
+    def rollup(top: DataFrame, hz: Int, lz: Int) =
+      MapBuild.rollupPixels(top, hz, lz - 1, Nil, Seq("total"))
     val tops = memo { d =>
       var top = MapBuild.pyramidState(OccurrenceView.occ(s2, d), e, 16).localCheckpoint()
       chunks.map { case (hz, lz) =>
         val cur = top
-        if (lz > 0) top = rollup(cur, hz - lz + 1).localCheckpoint()
+        if (lz > 0) top = rollup(cur, hz, lz).localCheckpoint()
         hz -> cur
       }.toMap
     }
@@ -193,7 +191,7 @@ object Lab {
     for ((hz, lz) <- chunks) {
       (hz to lz by -1).foreach(z =>
         time(h, s"perZoom:$e z$z")(d => MapBuild.levelStats(tops(d)(hz), hz, z, z, None)))
-      if (lz > 0) time(h, s"perZoom:$e rollup->z${lz - 1}")(d => rollup(tops(d)(hz), hz - lz + 1))
+      if (lz > 0) time(h, s"perZoom:$e rollup->z${lz - 1}")(d => rollup(tops(d)(hz), hz, lz))
     }
   }
 

@@ -63,6 +63,22 @@ object SparkEntry {
   private def rawPointsAll(s: SparkSession, dir: String): DataFrame =
     occ(s, dir).withColumn("map_key", lit("0:0")).withColumn("occ_count", lit(1L))
 
+  /** The q111/q145 ingest split on a no-coalesce session (see the q45 and
+    * q111 comments): base = `l_orderkey % 10 != 0`, delta = the rest. The
+    * base's EPSG:4326 z6 state is persisted, so the stored pyramid and the
+    * merge share one base aggregation (caller-owned lifetime, as with the
+    * other barrier-persisting builders). Returns (session, state, stored
+    * z0–z6 pyramid, delta).
+    */
+  private def ingestSplit(s: SparkSession, dir: String)
+      : (SparkSession, DataFrame, DataFrame, DataFrame) = {
+    val s2 = MapBuild.noCoalesceSession(s)
+    val o = occ(s2, dir)
+    val state = MapBuild.pyramidState(o.filter(col("l_orderkey") % 10 =!= 0), "EPSG:4326", 6)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    (s2, state, MapBuild.pyramidFromState(state, 0, 6), o.filter(col("l_orderkey") % 10 === 0))
+  }
+
   private val Hex = HexGrid(TileSize, 8)
 
   // ------------------------------------------------------------ the queries
@@ -432,15 +448,7 @@ object SparkEntry {
     // q45's FULL-REBUILD SQL over base+delta — equality proves the
     // incremental path reproduces the rebuild without corpus-grain work.
     "q111_incremental_pyramid" -> ((s, dir) => {
-      val o = occ(MapBuild.noCoalesceSession(s), dir) // see q45 comment
-      val base = o.filter(col("l_orderkey") % 10 =!= 0)
-      val delta = o.filter(col("l_orderkey") % 10 === 0)
-      // barrier: the state feeds both the stored pyramid and the merge —
-      // persist so the base aggregation runs once (caller-owned lifetime,
-      // as with the other barrier-persisting builders)
-      val state = MapBuild.pyramidState(base, "EPSG:4326", 6)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val stored = MapBuild.pyramidFromState(state, 0, 6)
+      val (_, state, stored, delta) = ingestSplit(s, dir)
       MapBuild.incrementalPyramid(state, stored, delta, "EPSG:4326", 0, 6)
     }),
 
@@ -451,16 +459,10 @@ object SparkEntry {
     // full-rebuild oracle; SinkSpec additionally asserts the pruned read's
     // inputFiles stay inside the dirty coarse cells.
     "q145_pruned_pyramid" -> ((s, dir) => {
-      val s2 = MapBuild.noCoalesceSession(s)
-      val o = occ(s2, dir)
-      val base = o.filter(col("l_orderkey") % 10 =!= 0)
-      val delta = o.filter(col("l_orderkey") % 10 === 0)
-      val state = MapBuild.pyramidState(base, "EPSG:4326", 6)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val (s2, state, stored, delta) = ingestSplit(s, dir)
       val store = java.nio.file.Files
         .createTempDirectory("graft-prunedstate").toString
       MapBuild.writePrunedState(state, store, 6, 2)
-      val stored = MapBuild.pyramidFromState(state, 0, 6)
       MapBuild.incrementalPyramidPruned(s2, store, stored, delta,
         "EPSG:4326", 0, 6, 2)
     }),

@@ -302,15 +302,15 @@ object MapBuild {
     * value is already a bounded integer of the record (ALL = 0,
     * l_partkey%50, l_suppkey, bor_id, l_orderkey%7), so the dense key
     * derives row-locally as type·2⁴⁰ + value and decodes row-locally at
-    * the pyramid's edge ([[decodeMapKey]] ∘ encode ≡ the string key, so
-    * results are bit-identical — oracle-gated by the whole pyramid
-    * family). Through the pyramid's keyed exchanges the key is then ONE
-    * 8-byte long instead of a 16-byte UnsafeRow string slot, hashes and
-    * compares as a long, and — at the source — skips building 5 concat'd
-    * strings per record entirely. Value bound 2⁴⁰ (the house id bound):
-    * l_suppkey reaches 2⁴⁰ only past SF 10¹⁰ (~10 EB), far beyond any
-    * deployment; types are single digits 0–4 by [[OccurrenceView]]
-    * construction.
+    * the pyramid's output edge ([[decodeStats]]; [[decodeMapKey]] ∘
+    * encode ≡ the string key, so results are bit-identical — oracle-gated
+    * by the whole pyramid family). Through the pyramid's keyed exchanges
+    * the key is then ONE 8-byte long instead of a 16-byte UnsafeRow string
+    * slot, hashes and compares as a long, and — at the source — skips
+    * building 5 concat'd strings per record entirely. Value bound 2⁴⁰
+    * (the house id bound): l_suppkey reaches 2⁴⁰ only past SF 10¹⁰
+    * (~10 EB), far beyond any deployment; types are single digits 0–4 by
+    * [[OccurrenceView]] construction.
     */
   private val KeyShift = 1L << 40
 
@@ -323,7 +323,8 @@ object MapBuild {
 
   /** Inverse of the algebraic encoding: long key → the exact view-key
     * string [[OccurrenceView.mapKeysArray]] builds. Row-local, applied
-    * once at the pyramid's OUTPUT (after the last keyed exchange). A bor
+    * once at the pyramid's OUTPUT ([[decodeStats]]) and on the broadcast
+    * dirty set ([[dirtyTileKeys]]). A bor
     * key (type 3) outside A/N/R fails the job naming the key, as
     * [[encodeMapKey]] does, whatever the ANSI setting.
     */
@@ -338,14 +339,15 @@ object MapBuild {
         .otherwise(v.cast("string")))
   }
 
-  /** Encode an EXISTING string map_key (a stored state's) to the long
-    * form — one row-local parse, paid once per state row so the
-    * incremental recompute's keyed exchanges run long-keyed. Defined only
+  /** Encode an EXISTING string map_key to the long form — one row-local
+    * parse at the two edges whose input really is a string-keyed table:
+    * the streaming pixel state (`EventStream.pyramidServe`) and the store
+    * lifecycle's delta pixels (`Workflow.incrementalUpdate`). Defined only
     * on the house key strings ("t:v", t a single digit, v a non-negative
     * integer below 2⁴⁰ or, for t = 3, the bor letter A/N/R) — everything
-    * [[pyramidState]] / [[writePrunedState]] ever write. Any other key
-    * (or a NULL one) fails the job naming the key: a malformed stored row
-    * must not silently drop out of the merge and the dirty-tile joins.
+    * [[OccurrenceView.mapKeysArray]] builds. Any other key (or a NULL one)
+    * fails the job naming the key: a malformed row must not silently drop
+    * out of the pyramid or the dirty-tile joins.
     */
   private[graft] def encodeMapKey(k: Column): Column = {
     val t = substring(k, 1, 1).try_cast("long")
@@ -358,9 +360,6 @@ object MapBuild {
       raise_error(concat(lit("malformed map_key: "), coalesce(k, lit("NULL"))))
         .cast("long"))
   }
-
-  private def encodeKeys(df: DataFrame): DataFrame =
-    df.withColumn("map_key", encodeMapKey(col("map_key")))
 
   private def zoomArray(lo: Int, hi: Int): Column = array((lo to hi).map(lit): _*)
 
@@ -434,18 +433,19 @@ object MapBuild {
       .select(col("map_key"), tx, ty, col("n_pixels"), col("total"), z)
   }
 
-  /** Aggregate raw records ONCE, directly at (maxZoom, no-bor) granularity,
-    * with the map_key LONG-ENCODED at the source (round 12, guide §2.3):
-    * the pyramid's tile stats never use bor_year and the top level sits
-    * below MaxZoom, so the shift runs before the only shuffle and map-side
-    * combine collapses the explode output straight to ~4^maxZoom groups;
-    * the explode emits [[mapKeyIdsArray]] longs straight from the record's
-    * integer columns — no per-record string building, and every
-    * downstream keyed exchange carries an 8-byte long. The pyramid
-    * builders decode at the edge, [[pyramidState]] right after this
-    * aggregation.
+  /** Per-pixel top-level table (long map_key, px, py, total) for `epsg`
+    * at `maxZoom` — the SUM-MERGEABLE state of a pyramid: every level's
+    * tile stats are a function of it ([[pyramidFromState]]), and an ingest
+    * batch merges into it by keyed addition ([[incrementalPyramid]]); the
+    * reference rebuilds the full pyramid per snapshot
+    * (TileMapBuilder.java:52-70). Raw records aggregate ONCE, at (maxZoom,
+    * no-bor) grain — the shift runs before the only shuffle, so map-side
+    * combine collapses the explode straight to ~4^maxZoom groups — and the
+    * explode emits [[mapKeyIdsArray]] longs from the record's integer
+    * columns (round 12, guide §2.3). The key stays long through every
+    * level, merge and pruned state file; only [[decodeStats]] decodes it.
     */
-  private def topLevelEnc(occ: DataFrame, epsg: String, maxZoom: Int): DataFrame =
+  def pyramidState(occ: DataFrame, epsg: String, maxZoom: Int): DataFrame =
     sumAgg(
       withPixels(occ, epsg)
         .select(
@@ -480,7 +480,7 @@ object MapBuild {
     * only dispatch input.
     */
   def pyramidOnePass(occ: DataFrame, epsg: String, minZoom: Int, maxZoom: Int): DataFrame =
-    decodeStats(levelStats(topLevelEnc(occ, epsg, maxZoom), maxZoom, minZoom, maxZoom, None))
+    pyramidFromState(pyramidState(occ, epsg, maxZoom), minZoom, maxZoom)
 
   /** Pyramid strategy dispatch: one-pass for shallow pyramids, chunked
     * iterative halving (with per-chunk materialization barriers) for deep
@@ -512,7 +512,7 @@ object MapBuild {
     // would have to clear. Every chunk top stays live until the result is
     // consumed (the union output references all of them); sizes shrink
     // ~4^7/chunk
-    var top = graft.core.Lifecycle.loopCheckpoint(topLevelEnc(occ, epsg, maxZoom))
+    var top = graft.core.Lifecycle.loopCheckpoint(pyramidState(occ, epsg, maxZoom))
     var highZ = maxZoom
     var out: DataFrame = null
     while (highZ >= minZoom) {
@@ -532,28 +532,12 @@ object MapBuild {
   /** log2(TileSize): global pixel → tile index is a right shift. */
   private val TileShift = Integer.numberOfTrailingZeros(TileSize)
 
-  /** Per-pixel top-level table for `epsg` at `maxZoom` — the SUM-MERGEABLE
-    * state representation of a pyramid: every level's tile stats are a
-    * deterministic function of it ([[levelStats]] / [[pyramidFromState]]),
-    * and a new ingest batch merges into it by keyed addition (counts only
-    * grow). This is the handle a long-lived tile store keeps between
-    * ingests for [[incrementalPyramid]]; the reference instead rebuilds the
-    * full pyramid per snapshot (TileMapBuilder.java:52-70) — incremental
-    * maintenance is the beyond-reference scale path. Aggregated long-keyed
-    * ([[topLevelEnc]]) and decoded once after the aggregation: the rows
-    * equal a string-keyed aggregation's, because decode ∘ encode is the
-    * string key array (OperatorSpec-pinned).
-    */
-  def pyramidState(occ: DataFrame, epsg: String, maxZoom: Int): DataFrame =
-    topLevelEnc(occ, epsg, maxZoom)
-      .withColumn("map_key", decodeMapKey(col("map_key")))
-
   /** All-level tile stats from a [[pyramidState]] table (the second half of
     * [[pyramidOnePass]], exposed so a stored state can be re-served without
-    * re-aggregating raw records).
+    * re-aggregating raw records), exchanged long-keyed and decoded once.
     */
   def pyramidFromState(state: DataFrame, minZoom: Int, maxZoom: Int): DataFrame =
-    levelStats(state, maxZoom, minZoom, maxZoom, None)
+    decodeStats(levelStats(state, maxZoom, minZoom, maxZoom, None))
 
   /** Distinct-cardinality pyramid (ALL view): for every (z, tx, ty) tile,
     * the HLL estimate of DISTINCT part keys in it, with the exact count as
@@ -568,26 +552,11 @@ object MapBuild {
     * (tile, key) pairs per level — the sketch path ships 16 ints per tile.
     */
   def pyramidDistinct(occ: DataFrame, epsg: String, minZoom: Int, maxZoom: Int): DataFrame = {
-    val shiftTop = MaxZoom - maxZoom + TileShift
-    val base = withPixels(occ, epsg).select(
-      shiftright(col("px"), shiftTop).as("tx"),
-      shiftright(col("py"), shiftTop).as("ty"),
-      Sketch.tokenHash(col("l_partkey").cast("string")).as("h"),
-      col("l_partkey"))
-    val zs = array((minZoom to maxZoom).map(lit): _*)
-    val topRegs = Sketch.hllRegisterRows(base, Seq("tx", "ty"), col("h"))
-    val regsAll = topRegs
-      .withColumn("z", explode(zs))
-      .groupBy(col("z"),
-        expr(s"shiftright(tx, $maxZoom - z)").as("tx"),
-        expr(s"shiftright(ty, $maxZoom - z)").as("ty"),
-        col("reg"))
-      .agg(max("m_reg").as("m_reg"))
-    val est = Sketch.hllEstimateRows(regsAll, Seq("z", "tx", "ty"), "est")
+    val est = registerRollup(tileRegisters(occ, epsg, maxZoom), minZoom, maxZoom)
     // exact ground truth, collapse-before-amplify: distinct at top grain
     // first, then the ×levels explode over the collapsed set only
-    val tru = base.select("tx", "ty", "l_partkey").distinct()
-      .withColumn("z", explode(zs))
+    val tru = partkeyTiles(occ, epsg, maxZoom).select("tx", "ty", "l_partkey").distinct()
+      .withColumn("z", explode(zoomArray(minZoom, maxZoom)))
       .select(col("z"),
         expr(s"shiftright(tx, $maxZoom - z)").as("tx"),
         expr(s"shiftright(ty, $maxZoom - z)").as("ty"),
@@ -597,6 +566,36 @@ object MapBuild {
     tru.join(est, Seq("z", "tx", "ty"))
       .select("z", "tx", "ty", "true_distinct", "est")
   }
+
+  /** Each plottable record's zoom-`maxZoom` tile (tx, ty), part key and
+    * part-key hash `h`: the distinct pyramid's register and truth input. */
+  private def partkeyTiles(occ: DataFrame, epsg: String, maxZoom: Int): DataFrame = {
+    val shiftTop = MaxZoom - maxZoom + TileShift
+    withPixels(occ, epsg).select(
+      shiftright(col("px"), shiftTop).as("tx"),
+      shiftright(col("py"), shiftTop).as("ty"),
+      Sketch.tokenHash(col("l_partkey").cast("string")).as("h"),
+      col("l_partkey"))
+  }
+
+  /** The distinct pyramid's top (tx, ty, reg, m_reg): per-tile HLL
+    * registers at `maxZoom`. A MAX aggregation, so it runs as a batch fold
+    * or as streaming state (`EventStream.hllRegisterStream`) alike. */
+  private[graft] def tileRegisters(occ: DataFrame, epsg: String, maxZoom: Int): DataFrame =
+    Sketch.hllRegisterRows(partkeyTiles(occ, epsg, maxZoom), Seq("tx", "ty"), col("h"))
+
+  /** Estimates (z, tx, ty, est) at every zoom in [minZoom, maxZoom] from a
+    * [[tileRegisters]] table: register-wise MAX up the tile tree, then
+    * estimate. */
+  private[graft] def registerRollup(regs: DataFrame, minZoom: Int, maxZoom: Int): DataFrame =
+    Sketch.hllEstimateRows(
+      regs.withColumn("z", explode(zoomArray(minZoom, maxZoom)))
+        .groupBy(col("z"),
+          expr(s"shiftright(tx, $maxZoom - z)").as("tx"),
+          expr(s"shiftright(ty, $maxZoom - z)").as("ty"),
+          col("reg"))
+        .agg(max("m_reg").as("m_reg")),
+      Seq("z", "tx", "ty"), "est")
 
   // ---- incremental maintenance: one kernel (delta top → dirty-tile set →
   // dirty recompute → clean passthrough) behind three entries. Only the
@@ -614,8 +613,8 @@ object MapBuild {
     pyramidState(deltaOcc, epsg, maxZoom).localCheckpoint()
 
   /** The dirty-tile set of an ingest: every zoom-[minZoom, maxZoom] tile
-    * holding a pixel of `deltaTop` (a [[pyramidState]]-schema table at
-    * maxZoom grain), as (long map_key, packed ztxy), distinct. Bounded by
+    * holding a pixel of `deltaTop` (long map_key, px, py at maxZoom
+    * grain), as (long map_key, packed ztxy), distinct. Bounded by
     * |delta pixels| × nLevels, and materialized once: each broadcast build
     * that reads it (the recompute's semi-join prune, the clean anti-join,
     * a sizing count, the store's per-zoom filters) is its own job. An
@@ -625,7 +624,7 @@ object MapBuild {
   private[graft] def dirtyTiles(deltaTop: DataFrame, minZoom: Int, maxZoom: Int): DataFrame = {
     require(minZoom >= 0 && maxZoom <= MaxZoom, // the key pack's bound
       s"zooms must sit in [0, $MaxZoom], got [$minZoom, $maxZoom]")
-    encodeKeys(deltaTop.select("map_key", "px", "py"))
+    deltaTop.select("map_key", "px", "py")
       .withColumn("z", explode(zoomArray(minZoom, maxZoom)))
       .select(col("map_key"), ztxyOf(packZxy(maxZoom)).as("ztxy"))
       .distinct()
@@ -651,18 +650,18 @@ object MapBuild {
       .unionByName(decodeStats(recomputed))
 
   /** The kernel over a whole in-memory state: merge by keyed addition
-    * (long-keyed: the one encode at entry), recompute the dirty tiles from
-    * the merged pixels, pass the clean ones through.
+    * (long-keyed), recompute the dirty tiles from the merged pixels, pass
+    * the clean ones through.
     */
   private def incrementalMerged(state: DataFrame, pyramid: DataFrame,
       deltaTop: DataFrame, dirty: DataFrame, minZoom: Int, maxZoom: Int): DataFrame = {
-    val merged = sumAgg(encodeKeys(state.unionByName(deltaTop)),
+    val merged = sumAgg(state.unionByName(deltaTop),
       Seq("map_key", "px", "py"), Seq("total"))
     withCleanTiles(pyramid, dirty,
       levelStats(merged, maxZoom, minZoom, maxZoom, Some(dirty)))
   }
 
-  /** Incremental pyramid maintenance: given the stored `state`
+  /** Incremental pyramid maintenance: given the stored long-keyed `state`
     * ([[pyramidState]] over everything ingested so far), the `pyramid`
     * built from it, and a new `deltaOcc` batch, produce the updated
     * pyramid WITHOUT rebuilding clean tiles.
@@ -789,7 +788,7 @@ object MapBuild {
     * coarse side table's derivation and the chunked pyramid's inter-chunk
     * rollup.
     */
-  private def rollupPixels(pixels: DataFrame, fromZoom: Int, z: Int,
+  private[graft] def rollupPixels(pixels: DataFrame, fromZoom: Int, z: Int,
       extraKeys: Seq[String], valueCols: Seq[String]): DataFrame =
     sumAgg(
       pixels.select((Seq(col("map_key"),
@@ -840,7 +839,7 @@ object MapBuild {
     * state-proportional).
     *
     * Mechanics on top of [[incrementalPyramid]]'s:
-    *  - the full-resolution state (written by [[writePrunedState]],
+    *  - the full-resolution long-keyed state (written by [[writePrunedState]],
     *    partitioned by zoom-`zc` coarse cell) is read with
     *    `pt IN (delta's coarse footprint)` — a partition filter, so clean
     *    cells' files are never opened. Correct for every level z ≥ zc: a
@@ -874,16 +873,15 @@ object MapBuild {
     // the whole point ([[mergedFineState]] keeps it a direct filter on the
     // partition column). They start at zc — or at minZoom when the
     // request begins above the coarse cut (then the coarse table never
-    // enters). The merges keep the stored string schema; the recompute
-    // encodes at entry.
+    // enters). Stored files, delta and merges are all long-keyed.
     val fine = levelStats(
-      encodeKeys(mergedFineState(spark, statePath, deltaTop, dirtyPts, Nil, Seq("total"))),
+      mergedFineState(spark, statePath, deltaTop, dirtyPts, Nil, Seq("total")),
       maxZoom, math.max(zc, minZoom), maxZoom, Some(dirty))
     // coarse levels (z < zc): from the small zc-grain side table
     val recomputed =
       if (minZoom >= zc) fine
       else fine.unionByName(levelStats(
-        encodeKeys(mergedCoarseState(spark, statePath, deltaTop, maxZoom, zc, Nil, Seq("total"))),
+        mergedCoarseState(spark, statePath, deltaTop, maxZoom, zc, Nil, Seq("total")),
         zc, minZoom, zc - 1, Some(dirty)))
     withCleanTiles(pyramid, dirty, recomputed)
   }

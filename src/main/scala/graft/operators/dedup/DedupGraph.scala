@@ -476,27 +476,6 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
       .select(col("cluster_size"), col("n_clusters"),
         (col("cluster_size") * col("n_clusters")).as("n_docs"))
 
-  /** LSH false-negative recovery by common-neighbor triangulation — the
-    * EDGE-level recall audit completing the round-8 audit set (q139/q156
-    * audit the estimators, q149/q151/q155/q157 the ANN indexes; this
-    * audits the candidate GRAPH itself). LSH misses true near-dup pairs
-    * whose bands never collide (or that the hot-bucket cap dropped); but a
-    * missed pair inside a duplicate cluster usually shares surviving
-    * neighbors. Every non-edge (a, b) with ≥ `minSupport` common neighbors
-    * in the symmetrized candidate graph is predicted as a missed near-dup
-    * and VERIFIED with the exact distinct-shingle Jaccard (the q139
-    * estimand) — emitting (pair, support, exact micro-Jaccard): the
-    * measured false-negative evidence behind "one LSH pass + transitive
-    * closure is enough" (or not) for a given corpus.
-    *
-    * Scale shape: common neighbors are counted over a bounded per-node
-    * sketch (see [[missedPairsFromEdges]] — the naive Σ deg² wedge join is
-    * c³ on a near-clique cluster of size c; the sketch caps both the wedge
-    * fan-out and the predicted output at n·C(B,2), linear in the corpus).
-    * Prediction is one keyed count over row-local sketch pairs + an
-    * anti-join against the edge list; verification rides the same
-    * id-keyed set joins as [[lshCalibration]]. No window, no collect.
-    */
   /** [[lshMissAudit]]'s prediction core over an explicit (doc_a, doc_b)
     * edge list: non-edges whose common-neighbor support in the symmetrized
     * graph — counted over a BOUNDED per-node neighbor sketch — reaches
@@ -542,6 +521,27 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
       .join(e, Seq("doc_a", "doc_b"), "left_anti")
   }
 
+  /** LSH false-negative recovery by common-neighbor triangulation — the
+    * EDGE-level recall audit completing the round-8 audit set (q139/q156
+    * audit the estimators, q149/q151/q155/q157 the ANN indexes; this
+    * audits the candidate GRAPH itself). LSH misses true near-dup pairs
+    * whose bands never collide (or that the hot-bucket cap dropped); but a
+    * missed pair inside a duplicate cluster usually shares surviving
+    * neighbors. Every non-edge (a, b) with ≥ `minSupport` common neighbors
+    * in the symmetrized candidate graph is predicted as a missed near-dup
+    * and VERIFIED with the exact distinct-shingle Jaccard (the q139
+    * estimand) — emitting (pair, support, exact micro-Jaccard): the
+    * measured false-negative evidence behind "one LSH pass + transitive
+    * closure is enough" (or not) for a given corpus.
+    *
+    * Scale shape: common neighbors are counted over a bounded per-node
+    * sketch (see [[missedPairsFromEdges]] — the naive Σ deg² wedge join is
+    * c³ on a near-clique cluster of size c; the sketch caps both the wedge
+    * fan-out and the predicted output at n·C(B,2), linear in the corpus).
+    * Prediction is one keyed count over row-local sketch pairs + an
+    * anti-join against the edge list; verification rides the same
+    * id-keyed set joins as [[lshCalibration]]. No window, no collect.
+    */
   def lshMissAudit(docs: DataFrame, minEst: Double, minSupport: Int,
       maxNeighbors: Int = 8): DataFrame = {
     // read three times (sketch build via sym + the anti-join);

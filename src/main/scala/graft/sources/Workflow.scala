@@ -378,8 +378,10 @@ object Workflow {
       // rollup chain: z ≥ zc over the pruned merge (every dirty tile there
       // lives inside a dirty cell, so the restricted table is complete for
       // it); at z = zc−1 the chain re-seeds from the coarse table, whose
-      // rollup equals the full-state rollup by sum associativity
-      val dirty = MapBuild.dirtyTiles(deltaTop, 0, maxZoom)
+      // rollup equals the full-state rollup by sum associativity. The dirty
+      // set is long-keyed: the delta's string keys encode once, here
+      val dirty = MapBuild.dirtyTiles(
+        deltaTop.withColumn("map_key", MapBuild.encodeMapKey(col("map_key"))), 0, maxZoom)
       writeTileLevels(spark, epsg, mergedDirty, maxZoom, tilesPath,
         Some((MapBuild.dirtyTileKeys(dirty), s"${prev.tiles}/${srsDir(epsg)}",
           mergedCoarse)))

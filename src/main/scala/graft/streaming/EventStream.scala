@@ -77,11 +77,14 @@ object EventStream {
     * served snapshot, where Catalyst plans them exactly as the batch path
     * (a multi-level rollup inside one streaming query would need chained
     * streaming aggregations, which complete-mode serving neither allows
-    * nor needs).
+    * nor needs). The string-keyed state's map_key encodes to the long key
+    * once, before the first exchange; a malformed key fails the serve.
     */
   def pyramidServe(pixelState: DataFrame, minZoom: Int, maxZoom: Int): DataFrame =
     graft.operators.MapBuild.pyramidFromState(
-      pixelState.groupBy("map_key", "px", "py")
+      pixelState
+        .withColumn("map_key", graft.operators.MapBuild.encodeMapKey(col("map_key")))
+        .groupBy("map_key", "px", "py")
         .agg(sum("occ_count").as("total")),
       minZoom, maxZoom)
 
@@ -94,15 +97,8 @@ object EventStream {
     * fixed-size-state shape as [[cmsSketch]]/[[bloomBits]], here carrying
     * per-TILE sketches instead of one global one.
     */
-  def hllRegisterStream(occStream: DataFrame, epsg: String, maxZoom: Int): DataFrame = {
-    val tshift = Integer.numberOfTrailingZeros(graft.operators.OccurrenceView.TileSize)
-    val shiftTop = graft.operators.OccurrenceView.MaxZoom - maxZoom + tshift
-    val base = graft.operators.MapBuild.withPixels(occStream, epsg).select(
-      shiftright(col("px"), shiftTop).as("tx"),
-      shiftright(col("py"), shiftTop).as("ty"),
-      graft.operators.Sketch.tokenHash(col("l_partkey").cast("string")).as("h"))
-    graft.operators.Sketch.hllRegisterRows(base, Seq("tx", "ty"), col("h"))
-  }
+  def hllRegisterStream(occStream: DataFrame, epsg: String, maxZoom: Int): DataFrame =
+    graft.operators.MapBuild.tileRegisters(occStream, epsg, maxZoom)
 
   /** Distinct-cardinality tiles at every requested zoom OFF the streaming
     * register state ([[hllRegisterStream]]'s snapshot): registers roll up
@@ -112,17 +108,8 @@ object EventStream {
     * ×levels fan-out runs OUTSIDE the streaming query, on state that is
     * 4× smaller per level as it rolls.
     */
-  def distinctPyramidServe(regState: DataFrame, minZoom: Int, maxZoom: Int): DataFrame = {
-    val zs = array((minZoom to maxZoom).map(lit): _*)
-    val regsAll = regState
-      .withColumn("z", explode(zs))
-      .groupBy(col("z"),
-        expr(s"shiftright(tx, $maxZoom - z)").as("tx"),
-        expr(s"shiftright(ty, $maxZoom - z)").as("ty"),
-        col("reg"))
-      .agg(max("m_reg").as("m_reg"))
-    graft.operators.Sketch.hllEstimateRows(regsAll, Seq("z", "tx", "ty"), "est")
-  }
+  def distinctPyramidServe(regState: DataFrame, minZoom: Int, maxZoom: Int): DataFrame =
+    graft.operators.MapBuild.registerRollup(regState, minZoom, maxZoom)
 
   /** Incremental LSH band-bucket index: streaming aggregation over document
     * appends keeps per-(band, bh) bucket sizes and the bucket's minimum

@@ -54,7 +54,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
           k => MapBuild.decodeMapKey(k)).as("dec"))
       .filter(col("ks") =!= col("dec")).count()
     assert(mism === 0, "decode(encode) diverged from the string key array")
-    // string-parse arm (the stored-state entry path) inverts decode too
+    // string-parse arm (the string-keyed edges' entry path) inverts decode too
     val mism2 = occ
       .select(explode(MapBuild.mapKeyIdsArray).as("k"))
       .select(col("k"),
@@ -105,23 +105,19 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("incrementalPyramid fails loudly on a malformed stored map_key " +
-    "instead of silently dropping the state row (ANSI on or off)") {
-    val o = OccurrenceView.occ(spark, Dir)
-    val base = o.filter(col("l_orderkey") % 10 =!= 0)
-    val delta = o.filter(col("l_orderkey") % 10 === 0)
-    val good = MapBuild.pyramidState(base, "EPSG:4326", 6)
-    val stored = MapBuild.pyramidFromState(good, 0, 6)
-    val bad = good.unionByName(
-      spark.range(1).select(lit("x:7").as("map_key"), lit(3L).as("px"),
-        lit(5L).as("py"), lit(2L).as("total")))
+  test("pyramidServe fails loudly on a malformed map_key in the string-keyed " +
+    "pixel state instead of silently dropping the state row (ANSI on or off)") {
+    // the string → long parse happens only at the string edges; the
+    // streaming serve is one of them (its state is pixelAggAt's table)
+    val good = MapBuild.pixelAggAt(OccurrenceView.occ(spark, Dir), "EPSG:4326", 6)
+    val bad = good.unionByName(good.limit(1).withColumn("map_key", lit("x:7")))
     def causes(t: Throwable): Seq[Throwable] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
     val ansi = spark.conf.get("spark.sql.ansi.enabled")
     try for (mode <- Seq("true", "false")) {
       spark.conf.set("spark.sql.ansi.enabled", mode)
       val err = intercept[Exception] {
-        MapBuild.incrementalPyramid(bad, stored, delta, "EPSG:4326", 0, 6).collect()
+        graft.streaming.EventStream.pyramidServe(bad, 0, 6).collect()
       }
       assert(causes(err).exists(e => Option(e.getMessage)
           .exists(_.contains("malformed map_key: x:7"))),
@@ -150,7 +146,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("packed tile keys unpack exactly at the widest pixel EPSG:4326 " +
     "reaches at z16 (two tiles wide at z0: px < 2^26, tx < 2^17)") {
     val (px, py) = ((1L << 26) - 1, (1L << 25) - 1)
-    val top = spark.range(1).select(lit("1:5").as("map_key"), lit(px).as("px"),
+    val top = spark.range(1).select(lit((1L << 40) + 5).as("map_key"), lit(px).as("px"),
       lit(py).as("py"), lit(3L).as("total"))
     val expected = (0 to 16).map(z => (z, px >> (16 - z + 9), py >> (16 - z + 9))).toSet
     val dirty = MapBuild.dirtyTileKeys(MapBuild.dirtyTiles(top, 0, 16)).collect()
@@ -158,8 +154,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dirty.map(r => (r.getAs[Int]("z"), r.getAs[Long]("tx"), r.getAs[Long]("ty")))
       .toSet === expected)
     assert(expected.contains((16, (1L << 17) - 1, (1L << 16) - 1)))
-    val stats = MapBuild.levelStats(
-      top.withColumn("map_key", lit((1L << 40) + 5)), 16, 0, 16, None).collect()
+    val stats = MapBuild.levelStats(top, 16, 0, 16, None).collect()
     assert(stats.map(r => (r.getAs[Int]("z"), r.getAs[Long]("tx"), r.getAs[Long]("ty")))
       .toSet === expected)
     assert(stats.forall(r => r.getAs[Long]("n_pixels") == 1L && r.getAs[Long]("total") == 3L))

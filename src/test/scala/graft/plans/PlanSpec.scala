@@ -96,6 +96,41 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!p.contains("SortMergeJoin"), s"q111 fell back to SMJ:\n$p")
   }
 
+  test("pyramid family exchanges on the long map_key: no hash-partitioned " +
+    "exchange of q45/q109/q111/q145/q182 keys on a string map_key, and " +
+    "pyramidState is long-keyed") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.types.{LongType, StringType}
+    // the plan as planned, before any AQE stage runs; persisted inputs
+    // (q111/q145's state) are walked into through their cached plan
+    def nodes(p: SparkPlan): Seq[SparkPlan] = {
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.initialPlan)
+        case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+        case other => other.children
+      }
+      p +: (kids ++ p.subqueries).flatMap(nodes)
+    }
+    Seq("q45_pyramid", "q109_pyramid_deep", "q111_incremental_pyramid",
+        "q145_pruned_pyramid", "q182_pyramid_full").foreach { q =>
+      val exchanges = nodes(graft.SparkEntry.queries(q)(spark, Dir)
+          .queryExecution.executedPlan)
+        .collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+        .collect { case h: HashPartitioning => h }
+      assert(exchanges.nonEmpty, s"$q: no hash-partitioned exchange found")
+      val stringKeyed = exchanges.filter(_.expressions.exists(e =>
+        e.dataType == StringType && e.references.exists(_.name == "map_key")))
+      assert(stringKeyed.isEmpty, s"$q exchanges on a string map_key: $stringKeyed")
+    }
+    val state = graft.operators.MapBuild.pyramidState(
+      graft.operators.OccurrenceView.occ(spark, Dir), "EPSG:4326", 6)
+    assert(state.schema("map_key").dataType === LongType)
+  }
+
   test("knn top-k is TakeOrderedAndProject, not a global sort") {
     val p = planOf("q116_knn_geo")
     assert(p.contains("TakeOrderedAndProject"), s"q116 lost its top-k plan:\n$p")
