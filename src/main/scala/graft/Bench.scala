@@ -11,15 +11,15 @@ package graft
   * co-run noise. The stdout line keeps the compact per-query WALL map (the
   * downstream log capture truncates to a ~2 KiB tail) plus whole-run cpu_s /
   * shuffle_mb totals at the END of the line where the tail survives; the full
-  * per-query {wall_s, cpu_s, shuffle_mb} table goes to BENCH_DETAIL.json in
-  * the working directory (env SPARK_GRAFT_BENCH_DETAIL overrides the path).
+  * per-query {wall_s, cpu_s, shuffle_mb} table goes to BENCH_DETAIL_c<cpus>.json
+  * in the working directory (env SPARK_GRAFT_BENCH_DETAIL overrides the path).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = Harness.sfDir
     val warmDir = Harness.warmupDir
-    val detailPath = Harness.benchDetailPath
     val cpus = Harness.cpus()
+    val detailPath = Harness.benchDetailPath(cpus)
     val h = Harness(cpus)
     def query(name: String, dir: String) = SparkEntry.queries(name)(h.spark, dir)
 

@@ -74,7 +74,10 @@ object Harness {
 
   def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
   def warmupDir: String = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-  def benchDetailPath: String = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
+  /** Bench's per-query record, named by the host's core count so a run on
+    * one box never overwrites another box's record. */
+  def benchDetailPath(cpus: Int): String =
+    sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", s"BENCH_DETAIL_c$cpus.json")
   def stageDebug: Boolean = sys.env.get("SPARK_GRAFT_OPT_STAGES").contains("1")
   def scaleCorpus: Option[String] = sys.env.get("SPARK_GRAFT_SCALE_CORPUS")
   def scaleOnly: Option[Set[String]] = sys.env.get("SPARK_GRAFT_SCALE_ONLY").map(_.split(",").toSet)

@@ -457,11 +457,14 @@ object SparkEntry {
     // ingest reads it through a partition filter — clean cells' files are
     // never opened (round-6 audit's one scale caveat on q111). Same
     // full-rebuild oracle; SinkSpec additionally asserts the pruned read's
-    // inputFiles stay inside the dirty coarse cells.
+    // inputFiles stay inside the dirty coarse cells. The state directory
+    // sits under the driver's SparkFiles root, which Spark deletes when the
+    // context stops.
     "q145_pruned_pyramid" -> ((s, dir) => {
       val (s2, state, stored, delta) = ingestSplit(s, dir)
-      val store = java.nio.file.Files
-        .createTempDirectory("graft-prunedstate").toString
+      val store = java.nio.file.Files.createTempDirectory(
+        java.nio.file.Paths.get(org.apache.spark.SparkFiles.getRootDirectory()),
+        "graft-prunedstate").toString
       MapBuild.writePrunedState(state, store, 6, 2)
       MapBuild.incrementalPyramidPruned(s2, store, stored, delta,
         "EPSG:4326", 0, 6, 2)

@@ -340,9 +340,8 @@ object MapBuild {
   }
 
   /** Encode an EXISTING string map_key to the long form — one row-local
-    * parse at the two edges whose input really is a string-keyed table:
-    * the streaming pixel state (`EventStream.pyramidServe`) and the store
-    * lifecycle's delta pixels (`Workflow.incrementalUpdate`). Defined only
+    * parse at the edge whose input really is a string-keyed table: the
+    * streaming pixel state (`EventStream.pyramidServe`). Defined only
     * on the house key strings ("t:v", t a single digit, v a non-negative
     * integer below 2⁴⁰ or, for t = 3, the bor letter A/N/R) — everything
     * [[OccurrenceView.mapKeysArray]] builds. Any other key (or a NULL one)
@@ -367,70 +366,105 @@ object MapBuild {
   // keyed exchanges — z ≤ MaxZoom = 16 < 2⁵ and px, py < 2·TileSize·2^z ≤
   // 2²⁶ are PIXEL-ADDRESSING bounds (EPSG:4326 is two tiles wide at z0;
   // data-independent, so the packing is exact at any corpus scale;
-  // [[levelStats]] and [[dirtyTiles]] require the zoom bound). Key slots
+  // [[pixelLevels]] and [[dirtyTiles]] require the zoom bound). Key slots
   // per row drop 4 → 2 in both exchanges; unpack is row-local after the
   // last aggregation. Same-session A/B at
   // the q182 shape (packed vs unpacked keys): numbers in
-  // OPTIMIZATION_r12.md:319-345. The three helpers below are the only places the
+  // OPTIMIZATION_r12.md:319-345. The helpers below are the only places the
   // packing is spelled out.
 
   /** zxy = z·2⁵² + x·2²⁶ + y of a `grainZoom` pixel (columns px, py) at
     * the exploded zoom column z. */
-  private def packZxy(grainZoom: Int): Column =
+  private[graft] def packZxy(grainZoom: Int): Column =
     col("z").cast("long") * lit(1L << 52) +
       expr(s"shiftright(px, $grainZoom - z)") * lit(1L << 26) +
       expr(s"shiftright(py, $grainZoom - z)")
 
-  /** zxy → its tile key ztxy = z·2³⁴ + tx·2¹⁷ + ty (tx, ty < 2¹⁷): the
-    * same pack with the TileShift low bits of x and y dropped. */
-  private def ztxyOf(zxy: Column): Column =
-    shiftright(zxy, 52) * lit(1L << 34) +
-      shiftright(zxy, 26 + TileShift)
-        .bitwiseAND(lit((1L << (26 - TileShift)) - 1)) * lit(1L << 17) +
-      shiftright(zxy.bitwiseAND(lit((1L << 26) - 1)), TileShift)
+  /** The tile key ztxy = z·2³⁴ + tx·2¹⁷ + ty (tx, ty < 2¹⁷). */
+  private[graft] def packZtxy(z: Column, tx: Column, ty: Column): Column =
+    z.cast("long") * lit(1L << 34) + tx * lit(1L << 17) + ty
+
+  /** zxy → its tile key ztxy: the same pack with the TileShift low bits of
+    * x and y dropped. */
+  private[graft] def ztxyOf(zxy: Column): Column =
+    packZtxy(shiftright(zxy, 52),
+      shiftright(zxy, 26 + TileShift).bitwiseAND(lit((1L << (26 - TileShift)) - 1)),
+      shiftright(zxy.bitwiseAND(lit((1L << 26) - 1)), TileShift))
+
+  /** zxy → the pixel's (lpx, lpy) offset inside its tile: the TileShift low
+    * bits of x and y. */
+  private[graft] def tileOffset(zxy: Column): (Column, Column) = (
+    shiftright(zxy, 26).bitwiseAND(lit(TileSize - 1L)).cast("int"),
+    zxy.bitwiseAND(lit(TileSize - 1L)).cast("int"))
 
   /** ztxy → its (z, tx, ty) columns. */
-  private def tileCols(ztxy: Column): (Column, Column, Column) = (
+  private[graft] def tileCols(ztxy: Column): (Column, Column, Column) = (
     shiftright(ztxy, 34).cast("int").as("z"),
     shiftright(ztxy, 17).bitwiseAND(lit((1L << 17) - 1)).as("tx"),
     ztxy.bitwiseAND(lit((1L << 17) - 1)).as("ty"))
 
-  /** Tile stats for every zoom in [lowZ, highZ] from a zoom-`grainZoom`
-    * per-pixel table (map_key, px, py, total), in one explode + two keyed
-    * aggregations (per pixel, then per tile) — the one core shared by
-    * [[pyramidOnePass]], each chunk of [[pyramidIterative]],
-    * [[pyramidFromState]] and the incremental recompute, so they agree by
-    * construction. With `dirty` (a [[dirtyTiles]] set) only the pixels
-    * under dirty tiles survive — the incremental recompute: the broadcast
-    * semi-join sits BEFORE the first
-    * exchange, so the shuffled volume is the pixels inside dirty tiles
-    * (the delta's spatial footprint), not the corpus. A dirty z0 tile
-    * bounds the recompute at TileSize² pixels per (view, tile).
+  /** The per-pixel kernel of every pyramid and of the tile store: each row
+    * of a zoom-`grainZoom` pixel table (map_key, px, py, extraKeys..,
+    * valueCols..) explodes to every zoom in [lowZ, highZ], summed per
+    * (map_key, zxy, extraKeys..). [[levelStats]] sums it per tile; the store
+    * MVT-encodes it with `bor_year` kept. With `dirty` (a [[dirtyTiles]]
+    * set) only pixels under dirty tiles survive: the broadcast semi-join
+    * sits BEFORE the first exchange, so an incremental recompute shuffles
+    * the delta's spatial footprint, not the corpus.
     */
-  private[graft] def levelStats(pixels: DataFrame, grainZoom: Int, lowZ: Int,
-      highZ: Int, dirty: Option[DataFrame]): DataFrame = {
+  private[graft] def pixelLevels(pixels: DataFrame, grainZoom: Int, lowZ: Int,
+      highZ: Int, dirty: Option[DataFrame], extraKeys: Seq[String],
+      valueCols: Seq[String]): DataFrame = {
     require(lowZ >= 0 && grainZoom <= MaxZoom,
-      s"levelStats zooms must sit in [0, $MaxZoom], got [$lowZ, $grainZoom]")
-    // NOTE (measured): fusing the pair below into one distinct aggregate
-    // (countDistinct(px, py) + sum at the tile key) ran 1.6× SLOWER at
-    // sf0.1 — mixing distinct and plain aggregates plans an Expand that
-    // doubles every input row before the exchange. Two lean keyed
-    // aggregations beat one Expand-doubled one; the q08 tileAssembly case
-    // wins with countDistinct only because it starts from raw records and
-    // drops TWO exchanges, not one.
+      s"pyramid zooms must sit in [0, $MaxZoom], got [$lowZ, $grainZoom]")
     val exploded = pixels
       .withColumn("z", explode(zoomArray(lowZ, highZ)))
-      .select(col("map_key"), packZxy(grainZoom).as("zxy"), col("total"))
+      .select((Seq(col("map_key"), packZxy(grainZoom).as("zxy")) ++
+        (extraKeys ++ valueCols).map(col)): _*)
     val live = dirty.fold(exploded)(d => exploded
       .withColumn("ztxy", ztxyOf(col("zxy")))
       .join(broadcast(d), Seq("map_key", "ztxy"), "left_semi"))
-    val perPixel = sumAgg(live, Seq("map_key", "zxy"), Seq("total"))
+    sumAgg(live, Seq("map_key", "zxy") ++ extraKeys, valueCols)
+  }
+
+  /** Tile stats for every zoom in [lowZ, highZ] of a zoom-`grainZoom`
+    * table (map_key, px, py, total): [[pixelLevels]] + [[tileStats]]. */
+  private[graft] def levelStats(pixels: DataFrame, grainZoom: Int, lowZ: Int,
+      highZ: Int, dirty: Option[DataFrame]): DataFrame =
+    tileStats(pixelLevels(pixels, grainZoom, lowZ, highZ, dirty, Nil, Seq("total")))
+
+  /** Per-pixel (map_key, zxy, total) → (map_key, tx, ty, n_pixels, total, z).
+    * NOTE (measured): fusing the two aggregations (this and the per-pixel
+    * sum) into one distinct aggregate (countDistinct(px, py) + sum at the
+    * tile key) ran 1.6× SLOWER at sf0.1 — mixing distinct and plain
+    * aggregates plans an Expand that doubles every input row before the
+    * exchange. Two lean keyed aggregations beat one Expand-doubled one; the
+    * q08 tileAssembly case wins with countDistinct only because it starts
+    * from raw records and drops TWO exchanges, not one.
+    */
+  private def tileStats(perPixel: DataFrame): DataFrame = {
     val (z, tx, ty) = tileCols(col("ztxy"))
     sumAgg(
       perPixel.select(col("map_key"), ztxyOf(col("zxy")).as("ztxy"),
         lit(1L).as("n_pixels"), col("total")),
       Seq("map_key", "ztxy"), Seq("n_pixels", "total"))
       .select(col("map_key"), tx, ty, col("n_pixels"), col("total"), z)
+  }
+
+  /** [[pixelLevels]] for zooms [minZoom, maxZoom] of a zoom-`grainZoom`
+    * table in chunks of ≤ [[PyramidChunk]] levels; between chunks the top
+    * rolls up to the next chunk's top zoom through `Lifecycle.loopCheckpoint`
+    * (the chunk AND the next rollup read it). A chunk's shuffle stays ~1.33×
+    * its top at any depth: z0–z16 is three chunks and two checkpoints. */
+  private[graft] def chunkedLevels(top: DataFrame, grainZoom: Int, minZoom: Int,
+      maxZoom: Int, dirty: Option[DataFrame], extraKeys: Seq[String],
+      valueCols: Seq[String]): DataFrame = {
+    val lowZ = math.max(minZoom, maxZoom - PyramidChunk + 1)
+    val chunk = pixelLevels(top, grainZoom, lowZ, maxZoom, dirty, extraKeys, valueCols)
+    if (lowZ == minZoom) chunk
+    else chunk.unionByName(chunkedLevels(graft.core.Lifecycle.loopCheckpoint(
+        rollupPixels(top, grainZoom, lowZ - 1, extraKeys, valueCols)),
+      lowZ - 1, minZoom, lowZ - 1, dirty, extraKeys, valueCols))
   }
 
   /** Per-pixel top-level table (long map_key, px, py, total) for `epsg`
@@ -491,41 +525,17 @@ object MapBuild {
     else pyramidIterative(occ, epsg, minZoom, maxZoom)
 
   /** Deep-pyramid builder (the reference's z16 production shape,
-    * TileMapBuilder.java:52-70): processes the zoom range in CHUNKS of up
-    * to [[PyramidChunk]] levels. Each chunk is one [[levelStats]] pass over
-    * a materialized per-pixel top table; between chunks the top rolls up
-    * `chunk` levels in a single keyed aggregation. Compared to the previous
-    * one-barrier-per-level chain (z0–z10 = 11 sequential persist+count
-    * jobs; measured 13.2 s at sf0.1), this runs ⌈depth/7⌉ barriers (z0–z10
-    * = 2, z0–z16 = 3) while keeping the property that makes iterative win
-    * at depth: no explode span ever exceeds 7 levels, so per-chunk shuffle
-    * volume stays ~1.33× the chunk's top regardless of total depth. The
-    * checkpoint is the materialization barrier each chunk AND the next rollup
-    * both consume (the reference writes each level to a table for the same
-    * reason — O4, MapBuilder.java:179-199); at production scale it becomes
-    * a parquet write per chunk, and the top shrinks ~4^7 per chunk.
+    * TileMapBuilder.java:52-70): [[chunkedLevels]] over a checkpointed top,
+    * then one per-tile sum — ⌈depth/7⌉ materializations (z0–z16 = 3) where
+    * a one-barrier-per-level chain ran 17 (z0–z10: 11 jobs, 13.2 s at
+    * sf0.1). Checkpoints are block storage the ContextCleaner frees with the
+    * returned plan, never an SQL-cache entry (the reference writes each
+    * level to a table for the same reason — O4, MapBuilder.java:179-199).
     */
-  def pyramidIterative(occ: DataFrame, epsg: String, minZoom: Int, maxZoom: Int): DataFrame = {
-    // each chunk top is a materialization barrier through
-    // Lifecycle.loopCheckpoint — block storage the ContextCleaner frees
-    // with the returned plan, never an SQL-cache entry a library caller
-    // would have to clear. Every chunk top stays live until the result is
-    // consumed (the union output references all of them); sizes shrink
-    // ~4^7/chunk
-    var top = graft.core.Lifecycle.loopCheckpoint(pyramidState(occ, epsg, maxZoom))
-    var highZ = maxZoom
-    var out: DataFrame = null
-    while (highZ >= minZoom) {
-      val lowZ = math.max(minZoom, highZ - PyramidChunk + 1)
-      val chunk = levelStats(top, highZ, lowZ, highZ, None)
-      out = if (out == null) chunk else out.unionByName(chunk)
-      if (lowZ > minZoom)
-        top = graft.core.Lifecycle.loopCheckpoint(
-          rollupPixels(top, highZ, lowZ - 1, Nil, Seq("total")))
-      highZ = lowZ - 1
-    }
-    decodeStats(out)
-  }
+  def pyramidIterative(occ: DataFrame, epsg: String, minZoom: Int, maxZoom: Int): DataFrame =
+    decodeStats(tileStats(chunkedLevels(
+      graft.core.Lifecycle.loopCheckpoint(pyramidState(occ, epsg, maxZoom)),
+      maxZoom, minZoom, maxZoom, None, Nil, Seq("total"))))
 
   private val PyramidChunk = 7
 
@@ -613,11 +623,12 @@ object MapBuild {
     pyramidState(deltaOcc, epsg, maxZoom).localCheckpoint()
 
   /** The dirty-tile set of an ingest: every zoom-[minZoom, maxZoom] tile
-    * holding a pixel of `deltaTop` (long map_key, px, py at maxZoom
-    * grain), as (long map_key, packed ztxy), distinct. Bounded by
-    * |delta pixels| × nLevels, and materialized once: each broadcast build
-    * that reads it (the recompute's semi-join prune, the clean anti-join,
-    * a sizing count, the store's per-zoom filters) is its own job. An
+    * holding a pixel of `deltaTop` (map_key, px, py at maxZoom grain), as
+    * (map_key, packed ztxy), distinct, with `deltaTop`'s map_key type (long
+    * for the operators, string for the store). Bounded by |delta pixels| ×
+    * nLevels, and materialized once: each broadcast build that reads it
+    * (the recompute's semi-join prune, the clean anti-join, a sizing count)
+    * is its own job. An
     * eager local checkpoint, like [[deltaTopOf]]; a caller done with it
     * frees it with `Lifecycle.freeCheckpoint`.
     */
@@ -772,7 +783,7 @@ object MapBuild {
     * fine/coarse layout for every state schema: `extraKeys` are key columns
     * beyond (map_key, px, py) (the store lifecycle threads bor_year
     * through), `valueCols` the sum-mergeable values ("total" here,
-    * "occ_count" there). [[writePrunedState]] and Workflow.writeState both
+    * "occ_count" there). [[writePrunedState]] and Workflow.buildFrom both
     * delegate here, so a layout change happens in one place.
     */
   private[graft] def writePrunedStateAs(state: DataFrame, path: String,

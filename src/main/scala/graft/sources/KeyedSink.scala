@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   * parquet stand-in for the reference's HFile→HBase pipeline
   * (TileMapBuilder.java:236-252, SaltPrefixPartitioner.java:21-37).
   *
-  * Layout: one directory partition per salt (`salt=NN/`), rows sorted by the
-  * full salted key within each partition (HFiles require sorted keys; sorted
-  * parquet gives row-group min/max skipping on point lookups). The salt is
+  * Layout: one directory partition per salt (`salt=NN/`, under any leading
+  * partition directories), rows sorted by the full salted key within each
+  * partition (HFiles require sorted keys; sorted parquet gives row-group
+  * min/max skipping on point lookups). The salt is
   * `Java String.hashCode(key) & 0x0fffffff % modulus`, byte-compatible with
   * the reference's rowkeys. One file per salt directory (the region's HFile
   * analog); write tasks = min(modulus, shuffle partitions). Lookups prune to
@@ -19,29 +20,32 @@ import org.apache.spark.sql.functions._
   */
 object KeyedSink {
 
-  /** Write `df` keyed by `keyCol`, salted into `modulus` sorted directories.
-    * Hash-partitioning on `salt` puts each salt in exactly one task, and the
-    * sort leads with `salt`, so the writer rolls to a new file at each salt
-    * boundary: one file per directory at any task count. The fan-out is
-    * capped by the session's shuffle width: on a narrow session one task
-    * per salt adds only per-task cost, which dominates small stores.
+  /** Write `df` keyed by `keyCol`, salted into `modulus` sorted directories
+    * under each value of the leading `partitionCols`, in ONE job.
+    * Hash-partitioning on the directory columns puts each directory in
+    * exactly one task, and the sort leads with them, so the writer rolls to
+    * a new file at each directory boundary: one file per directory at any
+    * task count. The fan-out is capped by the session's shuffle width: on a
+    * narrow session one task per salt adds only per-task cost.
     */
-  def writeSalted(df: DataFrame, keyCol: Column, modulus: Int, path: String): Unit = {
+  def writeSalted(df: DataFrame, keyCol: Column, modulus: Int, path: String,
+      partitionCols: Seq[String] = Nil): Unit = {
     // the salt expression resolves on THIS frame's session, whatever thread
     // or session is active
     graft.functions.JavaHashExpr.register(df.sparkSession)
     val digits = Salt(modulus).digitCount
     val width = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val dirs = partitionCols :+ "salt"
     df.withColumn("key", keyCol)
       .withColumn("salt", saltOf(col("key"), modulus))
       .withColumn("salted_key",
         concat_ws(":", lpad(col("salt"), digits, "0"), col("key")))
-      .repartition(math.min(modulus, width), col("salt"))
-      // leading with `salt` satisfies the dynamic-partition writer's required
-      // ordering, so it does NOT inject its own (unstable, salt-only) sort —
+      .repartition(math.min(modulus, width), dirs.map(col): _*)
+      // leading with the directories satisfies the dynamic-partition writer's
+      // required ordering, so it does NOT inject its own (unstable) sort —
       // which would destroy the key order inside each file
-      .sortWithinPartitions("salt", "salted_key")
-      .write.mode("overwrite").partitionBy("salt").parquet(path)
+      .sortWithinPartitions((dirs :+ "salted_key").map(col): _*)
+      .write.mode("overwrite").partitionBy(dirs: _*).parquet(path)
   }
 
   /** Point lookup — the HBase-GET analog: salt-directory pruning + key

@@ -38,15 +38,6 @@ object Workflow {
   private val StateExtraKeys = Seq("bor_year")
   private val StateValueCols = Seq("occ_count")
 
-  /** Persist one projection's pixel state in the prunable layout — ONE
-    * delegation to the shared core (MapBuild.writePrunedStateAs) with the
-    * lifecycle's bor_year key threaded through; the fine/coarse layout
-    * logic itself exists once, in MapBuild.
-    */
-  private def writeState(state: DataFrame, path: String, maxZoom: Int): Unit =
-    graft.operators.MapBuild.writePrunedStateAs(state, path, maxZoom,
-      StateCoarseZoom, StateExtraKeys, StateValueCols)
-
   /** Recursive file copy — the parquet-store analog of referencing a clean
     * partition's files from the new version's manifest instead of
     * rewriting them (what a production store does with its region/SST
@@ -113,11 +104,9 @@ object Workflow {
     *
     * `maxZoom`/`projections` size the tile pyramid: the default (z6, all
     * four SRS) is the serving-store depth the sandbox data warrants; the
-    * reference's production build runs the same sequenced per-zoom job
-    * chain to z16 (TileMapBuilder.java:52-70 — 17 zooms × 4 projections),
-    * which callers get by passing maxZoom = 16. Each zoom still derives
-    * from the previous zoom's persisted level, so depth changes the job
-    * COUNT, not the per-job shape.
+    * reference's production build goes to z16 (TileMapBuilder.java:52-70 —
+    * 17 zooms × 4 projections), which callers get by passing maxZoom = 16.
+    * Every depth writes each projection's tiles once ([[writeTiles]]).
     */
   def build(spark: SparkSession, sfDir: String, workDir: String,
       projections: Seq[String] =
@@ -140,7 +129,7 @@ object Workflow {
       projections: Seq[String] =
         Seq("EPSG:4326", "EPSG:3857", "EPSG:3575", "EPSG:3031"),
       maxZoom: Int = 6): Manifest = {
-    import graft.operators.{MapBuild, OccurrenceView, PointEncode}
+    import graft.operators.{MapBuild, OccurrenceView, PointEncode, TileEncode}
     val version = readManifest(workDir).map(_.version + 1).getOrElse(1L)
     val pointsPath = s"$workDir/v$version/points"
     val tilesPath = s"$workDir/v$version/tiles"
@@ -170,8 +159,7 @@ object Workflow {
     KeyedSink.writeSalted(
       PointEncode.pointBlobs(spark, MapBuild.pointAgg(small)),
       col("map_key"), PointSaltModulus, s"${pointsPath}_blobs")
-    // tiles store: MVT blobs for every zoom, one sub-store per (projection,
-    // zoom) — see writeTileLevels
+    // tiles store: MVT blobs for every zoom, one write per projection
     projections.foreach { epsg =>
       val top = MapBuild.pixelAggAt(occSnapshot, epsg, maxZoom)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -180,70 +168,27 @@ object Workflow {
       // next ingest batch by keyed addition instead of a corpus rescan;
       // stored in the prunable fine/coarse layout so that merge reads
       // only the delta's coarse-cell footprint
-      writeState(top, s"$workDir/v$version/state/${srsDir(epsg)}", maxZoom)
-      writeTileLevels(spark, epsg, top, maxZoom, tilesPath, None)
+      MapBuild.writePrunedStateAs(top, s"$workDir/v$version/state/${srsDir(epsg)}",
+        maxZoom, StateCoarseZoom, StateExtraKeys, StateValueCols)
+      writeTiles(epsg, TileEncode.mvtLevels(spark, MapBuild.chunkedLevels(top, maxZoom,
+        0, maxZoom, None, StateExtraKeys, StateValueCols)), tilesPath)
+      top.unpersist()
     }
 
     occSnapshot.unpersist()
     writeManifest(workDir, Manifest(version, pointsPath, tilesPath))
   }
 
-  /** The per-projection tile loop of [[buildFrom]] and
-    * [[incrementalUpdate]]: for each zoom from maxZoom down to 0, MVT-encode
-    * the level, write it salted (keyed srs:mapKey:z:x:y, salt 100,
-    * MapBuilder.java:104) as sub-store `srs=<srs>/zoom=<z>` — one per (projection,
-    * zoom), like the reference's per-zoom HFile directories
-    * (PrepareBackfill.java:88-93, TileMapBuilder.java:87-93) — then roll
-    * it up one zoom behind a persist + count() barrier (O3 compute-once
-    * pyramid: each zoom derives from the previous zoom's persisted level).
-    * The loop owns `top` (persisted by the caller) and every level after
-    * it, and frees each once its successor has materialized.
-    *
-    * `incremental` = (dirty tile keys (map_key, z, tx, ty), the previous
-    * version's tiles directory for `epsg`, the coarse state table): only a
-    * level's rows under dirty tiles are re-encoded, every clean tile passes
-    * through from the previous version by broadcast anti-join, and the
-    * rollup below [[StateCoarseZoom]] re-seeds from the coarse table.
-    * `None` is the full build.
+  /** One salted write (keyed srs:mapKey:z:x:y, salt 100, MapBuilder.java:
+    * 104) of a projection's tiles (map_key, z, tx, ty, mvt) at every zoom:
+    * sub-store `srs=<srs>` with a `zoom=<z>` directory per zoom, the layout
+    * of the reference's per-zoom HFile directories (PrepareBackfill.java:
+    * 88-93, TileMapBuilder.java:87-93) that TileServe reads.
     */
-  private def writeTileLevels(spark: SparkSession, epsg: String, top: DataFrame,
-      maxZoom: Int, tilesPath: String,
-      incremental: Option[(DataFrame, String, DataFrame)]): Unit = {
-    import graft.operators.{MapBuild, TileEncode}
-    val tshift = Integer.numberOfTrailingZeros(graft.operators.OccurrenceView.TileSize)
-    var level = top
-    for (z <- maxZoom to 0 by -1) {
-      val tiles = incremental match {
-        case None => TileEncode.mvtTiles(spark, level, z)
-        case Some((keys, prevTiles, _)) =>
-          val dirtyZ = keys.filter(col("z") === z).select("map_key", "tx", "ty")
-          val fresh = TileEncode.mvtTiles(spark, level
-            .withColumn("tx", expr(s"shiftright(px, $tshift)"))
-            .withColumn("ty", expr(s"shiftright(py, $tshift)"))
-            .join(broadcast(dirtyZ), Seq("map_key", "tx", "ty"), "left_semi")
-            .drop("tx", "ty"), z)
-          spark.read.parquet(s"$prevTiles/zoom=$z")
-            .select("map_key", "z", "tx", "ty", "mvt")
-            .join(broadcast(dirtyZ), Seq("map_key", "tx", "ty"), "left_anti")
-            .select("map_key", "z", "tx", "ty", "mvt")
-            .unionByName(fresh.select("map_key", "z", "tx", "ty", "mvt"))
-      }
-      KeyedSink.writeSalted(tiles,
-        concat_ws(":", lit(epsg), col("map_key"), col("z"), col("tx"), col("ty")),
-        TileSaltModulus, s"$tilesPath/${srsDir(epsg)}/zoom=$z")
-      if (z > 0) {
-        val from = incremental match {
-          case Some((_, _, coarse)) if z == StateCoarseZoom => coarse
-          case _ => level
-        }
-        val next = MapBuild.rollupToZoom(from, z, z - 1)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        next.count()
-        level.unpersist()
-        level = next
-      } else level.unpersist()
-    }
-  }
+  private def writeTiles(epsg: String, tiles: DataFrame, tilesPath: String): Unit =
+    KeyedSink.writeSalted(tiles.withColumn("zoom", col("z")),
+      concat_ws(":", lit(epsg), col("map_key"), col("z"), col("tx"), col("ty")),
+      TileSaltModulus, s"$tilesPath/${srsDir(epsg)}", Seq("zoom"))
 
   /** Atomic manifest swap (S5's table-pointer flip): write-then-rename so a
     * concurrent reader sees either the old or the new version, never a
@@ -277,9 +222,10 @@ object Workflow {
     *    only tiles in the delta's per-zoom ancestor footprint are
     *    re-encoded (broadcast dirty-key semi-join BEFORE the expensive MVT
     *    mapGroups), clean blob rows stream through from the previous
-    *    version via anti-join. The per-zoom rollup chain runs over the
-    *    state (shrinking 4× per level, never corpus-grain); the MVT
-    *    encode — the dominant cost — is delta-proportional.
+    *    version via anti-join, and the projection is written once. The
+    *    zoom explode runs over the dirty cells of the state (never
+    *    corpus-grain); the MVT encode — the dominant cost — is
+    *    delta-proportional.
     *
     * At production scale the clean-row passthrough becomes a file-level
     * manifest reference (only dirty salt partitions rewritten); here the
@@ -290,7 +236,7 @@ object Workflow {
       projections: Seq[String] =
         Seq("EPSG:4326", "EPSG:3857", "EPSG:3575", "EPSG:3031"),
       maxZoom: Int = 6, streamBatch: Long = -1L): Manifest = {
-    import graft.operators.{MapBuild, OccurrenceView, PointEncode}
+    import graft.operators.{MapBuild, OccurrenceView, PointEncode, TileEncode}
     import org.apache.spark.storage.StorageLevel
     val prev = readManifest(workDir).getOrElse(
       throw new IllegalStateException(s"no manifest under $workDir — build() first"))
@@ -375,18 +321,25 @@ object Workflow {
         .persist(StorageLevel.MEMORY_AND_DISK)
       mergedCoarse.write.mode("overwrite")
         .parquet(s"$statePath/${srsDir(epsg)}/coarse")
-      // rollup chain: z ≥ zc over the pruned merge (every dirty tile there
-      // lives inside a dirty cell, so the restricted table is complete for
-      // it); at z = zc−1 the chain re-seeds from the coarse table, whose
-      // rollup equals the full-state rollup by sum associativity. The dirty
-      // set is long-keyed: the delta's string keys encode once, here
-      val dirty = MapBuild.dirtyTiles(
-        deltaTop.withColumn("map_key", MapBuild.encodeMapKey(col("map_key"))), 0, maxZoom)
-      writeTileLevels(spark, epsg, mergedDirty, maxZoom, tilesPath,
-        Some((MapBuild.dirtyTileKeys(dirty), s"${prev.tiles}/${srsDir(epsg)}",
-          mergedCoarse)))
+      // only pixels under dirty tiles re-encode: zooms ≥ zc from the pruned
+      // merge (every dirty tile there lives inside a dirty cell, so the
+      // restricted table is complete for it), zooms < zc from the coarse
+      // table, whose rollup equals the full-state rollup by sum
+      // associativity. Every clean tile passes through from the previous
+      // version by one broadcast anti-join; the projection is written once
+      val dirty = MapBuild.dirtyTiles(deltaTop, 0, maxZoom)
+      val fresh = TileEncode.mvtLevels(spark,
+        MapBuild.chunkedLevels(mergedDirty, maxZoom, zc, maxZoom, Some(dirty),
+          StateExtraKeys, StateValueCols).unionByName(MapBuild.chunkedLevels(
+          mergedCoarse, zc, 0, zc - 1, Some(dirty), StateExtraKeys, StateValueCols)))
+      val clean = spark.read.parquet(s"${prev.tiles}/${srsDir(epsg)}")
+        .select("map_key", "z", "tx", "ty", "mvt")
+        .withColumn("ztxy", MapBuild.packZtxy(col("z"), col("tx"), col("ty")))
+        .join(broadcast(dirty), Seq("map_key", "ztxy"), "left_anti")
+        .drop("ztxy")
+      writeTiles(epsg, clean.unionByName(fresh), tilesPath)
       graft.core.Lifecycle.freeCheckpoint(dirty)
-      mergedCoarse.unpersist(); deltaTop.unpersist()
+      mergedDirty.unpersist(); mergedCoarse.unpersist(); deltaTop.unpersist()
     }
     mergedPoints.unpersist(); delta.unpersist()
     writeManifest(workDir,

@@ -33,6 +33,13 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(scan.shuffleMb === 0.0, "the groupBy's shuffle bled into the next run")
   }
 
+  test("Bench's record is named by the host's core count by default") {
+    assume(sys.env.get("SPARK_GRAFT_BENCH_DETAIL").isEmpty,
+      "SPARK_GRAFT_BENCH_DETAIL overrides the default name")
+    assert(Harness.benchDetailPath(4) === "BENCH_DETAIL_c4.json")
+    assert(Harness.benchDetailPath(32) === "BENCH_DETAIL_c32.json")
+  }
+
   test("every documented Lab arm name resolves; deleted arms do not") {
     val arms = Seq("q45_pyramid", "q117_triangles", "sig", "bands", "lsh", "cc",
       "tri_id", "tri_deg", "current", "noCoalesce", "q:q45_pyramid:on",

@@ -386,6 +386,98 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("fused tile store: one tile write per projection, one sorted file per " +
+    "zoom and salt, rows equal to the per-zoom operators") {
+    import graft.operators.{MapBuild, OccurrenceView, TileEncode}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import scala.jdk.CollectionConverters._
+
+    val projections = Seq("EPSG:4326", "EPSG:3857", "EPSG:3575", "EPSG:3031")
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.analyzed.foreach {
+          case c: InsertIntoHadoopFsRelationCommand => writes.add(c.outputPath.toUri.getPath)
+          case _ => ()
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // buildFrom on THIS session (build forks one), so the session-scoped
+    // listener sees every write
+    val occ = OccurrenceView.occ(spark, Dir)
+    val dir = java.nio.file.Files.createTempDirectory("fused-store").toString
+    spark.listenerManager.register(listener)
+    val m = try {
+      val m = Workflow.buildFrom(spark, occ, dir, projections, 6)
+      // the listener bus delivers events after the call returns: 2 point
+      // writes, then per projection the fine and coarse state and the tiles
+      eventually(timeout(30.seconds))(assert(writes.size >= 2 + 3 * projections.size))
+      m
+    } finally spark.listenerManager.unregister(listener)
+    val tileWrites = writes.asScala.toSeq.filter(_.startsWith(m.tiles))
+    assert(tileWrites.sorted ===
+      projections.map(e => s"${m.tiles}/srs=${e.replace(':', '_')}").sorted,
+      s"tile writes: $tileWrites")
+
+    projections.foreach { epsg =>
+      val sub = s"${m.tiles}/srs=${epsg.replace(':', '_')}"
+      val top = MapBuild.pixelAggAt(occ, epsg, 6)
+      (0 to 6).foreach { z =>
+        val zoomDir = java.nio.file.Paths.get(s"$sub/zoom=$z")
+        val saltDirs = java.nio.file.Files.list(zoomDir).iterator().asScala
+          .filter(_.getFileName.toString.startsWith("salt=")).toSeq
+        assert(saltDirs.nonEmpty, s"$zoomDir holds no salt directory")
+        saltDirs.foreach { d =>
+          val files = java.nio.file.Files.list(d).iterator().asScala
+            .filter(_.toString.endsWith(".parquet")).toSeq
+          assert(files.size === 1, s"$d holds ${files.size} parquet files")
+        }
+        // one scan per zoom; collect keeps each file's row order
+        val stored = spark.read.parquet(zoomDir.toString)
+        stored.select(input_file_name(), col("salted_key")).collect()
+          .groupBy(_.getString(0)).foreach { case (f, rows) =>
+            val sk = rows.map(_.getString(1)).toSeq
+            assert(sk === sk.sorted, s"unsorted parquet $f")
+          }
+        // row for row: the kept per-zoom operators over the same pixels
+        val cols = Seq("map_key", "z", "tx", "ty", "mvt")
+        val want = TileEncode.mvtTiles(spark, MapBuild.rollupToZoom(top, 6, z), z)
+          .select(cols.map(col): _*)
+        val got = stored.select(cols.map(col): _*)
+        assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+          s"$epsg z$z: stored tiles differ from rollupToZoom + mvtTiles")
+        // job-free GETs equal the Spark arm on sampled keys of every zoom
+        // (blobs compared by content)
+        def values(r: org.apache.spark.sql.Row) =
+          r.toSeq.map { case b: Array[Byte] => b.toSeq; case v => v }
+        stored.select("key").orderBy("key").limit(3).collect().map(_.getString(0))
+          .foreach { k =>
+            val direct = KeyedSink.lookupDirect(zoomDir.toString, 100, k)
+            assert(direct.size === 1, s"$k: ${direct.size} rows")
+            assert(direct.map(values) === KeyedSink.lookup(spark, zoomDir.toString,
+              100, k).collect().map(values).toSeq)
+          }
+      }
+    }
+  }
+
+  test("q145's pruned state sits under the SparkFiles root, which Spark " +
+    "deletes when the context stops") {
+    val root = new java.io.File(org.apache.spark.SparkFiles.getRootDirectory())
+      .getCanonicalPath
+    val out = graft.SparkEntry.queries("q145_pruned_pyramid")(spark, Dir)
+    val source = new java.io.File(Dir).getCanonicalPath
+    val files = out.inputFiles.map(f => new java.io.File(new java.net.URI(f)).getCanonicalPath)
+    val state = files.filterNot(_.startsWith(source))
+    assert(state.nonEmpty, s"no pruned-state input among ${files.toSeq}")
+    state.foreach(f => assert(f.startsWith(root + java.io.File.separator),
+      s"$f lies outside the SparkFiles root $root"))
+  }
+
   test("writeSalted shuffles into min(modulus, shuffle partitions) tasks and " +
     "still writes one sorted file per salt directory") {
     import org.apache.spark.sql.execution.QueryExecution

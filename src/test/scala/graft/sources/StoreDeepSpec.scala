@@ -35,12 +35,12 @@ class StoreDeepSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  test("full-depth build: the z0–z16 sequenced per-zoom lifecycle (one " +
-    "projection) conserves the view total at EVERY zoom") {
-    // the reference's production shape — 17 zooms derived level-from-level
-    // (TileMapBuilder.java:52-70); each zoom's decoded MVT totals must
-    // re-count the same view total, so a per-level rollup bug at any depth
-    // shows here
+  test("full-depth build: the z0–z16 tile store (one projection, three " +
+    "7-level chunks, one tile write) conserves the view total at EVERY zoom") {
+    // the reference's production depth (TileMapBuilder.java:52-70): 17
+    // zooms from three chunks of the pixel kernel, the chunk tops rolled up
+    // between them; each zoom's decoded MVT totals must re-count the same
+    // view total, so a chunk-boundary or rollup bug at any depth shows here
     val deepWork = java.nio.file.Files.createTempDirectory("graft-deep")
     val t0 = System.nanoTime()
     val m = Workflow.build(spark, Dir, deepWork.toString,
