@@ -43,7 +43,7 @@ object BenchScale {
   // so THESE are the queries whose true scaling the probe must expose):
   // the original 9 plus the round-4 top-cost set — MVT roundtrip, cluster
   // canonicalization, polar pixel agg, Mercator replicas, PageRank, and
-  // the deep iterative pyramid
+  // the deep chunked pyramid
   private val Heavy = Seq("q45_pyramid", "q42_mvt_tiles", "q36_tile_replicas",
     "q17_salted_keys", "q47_dup_clusters", "q29_lsh_neardup",
     "q85_ingest_dedup", "q87_chunk_dedup", "q93_edit_verify",
@@ -117,7 +117,7 @@ object BenchScale {
     // top of the same exchanges and must track the report's ratio
     "q178_substring_decontam", "q179_decontam_cut",
     // round 10: the reference's FULL production depth (z0–z16 Mercator,
-    // 3 iterative chunks) — the stage the only published reference perf
+    // 3 chunks) — the stage the only published reference perf
     // table times; the probe pins its x10 ratio beside q109's z0–z10
     "q182_pyramid_full",
     // round 10 (VERDICT r9 #7): the ANN/decontam family gets REAL x10

@@ -169,10 +169,11 @@ object Lab {
   }
 
   /** Per-zoom decomposition of the z0–z16 build (PROFILE.md's table): the
-    * chunk tops are built as pyramidIterative builds them (7-level chunks,
-    * one keyed rollup between chunks) and pinned outside the timed runs;
-    * each zoom's levelStats and each rollup is then timed on its own.
-    * Measurement grain only — `fullDepth` times the production build.
+    * chunk tops are built as `MapBuild.chunkedLevels` builds them (7-level
+    * chunks, one keyed rollup between chunks) and pinned outside the timed
+    * runs; each zoom's levelStats (one single-level chunk) and each rollup
+    * is then timed on its own. Measurement grain only — `fullDepth` times
+    * the production build.
     */
   private def perZoom(e: String): Arm = h => {
     val s2 = MapBuild.noCoalesceSession(h.spark)

@@ -429,8 +429,8 @@ object SparkEntry {
         .toDF("map_key", "tx", "ty", "lpx", "lpy", "bor", "year", "n")
     }),
 
-    // O3 full chain: the z6→z0 tile pyramid in one lineage (each level
-    // consumes the previous level's output — input halves per level)
+    // O3 full chain: the z6→z0 tile pyramid, one 7-level chunk of the level
+    // kernel (every top pixel explodes to its 7 zooms, one keyed sum)
     "q45_pyramid" -> ((s, dir) => {
       // the pyramid family builds on a forked session with AQE partition
       // coalescing OFF (MapBuild.noCoalesceSession): the byte-sized
@@ -964,9 +964,10 @@ object SparkEntry {
     "q108_zorder_layout" -> ((s, dir) =>
       graft.operators.Spatial.zorderLayout(tilesZ6(s, dir), 7, 6)),
 
-    // O3 deep pyramid: >8 levels forces the ITERATIVE per-level halving
-    // chain (the reference's z16 production shape) — same rollup semantics
-    // as q45's one-pass, gated by the same grouped-rollup oracle family
+    // O3 deep pyramid: z0–z10 is two 7-level chunks (the reference's z16
+    // production shape: one checkpointed top, one rollup between chunks) —
+    // same rollup semantics as q45's single chunk, gated by the same
+    // grouped-rollup oracle family
     "q109_pyramid_deep" -> ((s, dir) => {
       val s2 = MapBuild.noCoalesceSession(s) // see q45 comment
       MapBuild.pyramid(occ(s2, dir), "EPSG:4326", 0, 10)
@@ -975,7 +976,7 @@ object SparkEntry {
     // O3 at the reference's FULL production depth: z0–z16 Mercator — the
     // exact stage the only published perf table times (example.yaml:
     // 124-127 "Z16: 5, …" = the 14.9 k rows/core-sec baseline row); three
-    // iterative 7-level chunks, explode span never exceeds 7. `Lab time
+    // 7-level chunks, explode span never exceeds 7. `Lab time
     // fullDepth perZoom` decomposes this build per zoom on the x10
     // replica (PROFILE.md)
     "q182_pyramid_full" -> ((s, dir) => {

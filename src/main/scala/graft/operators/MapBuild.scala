@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.GeoFunctions._
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The batch map-build dataflow, re-expressed as declarative DataFrame
@@ -16,10 +16,11 @@ import org.apache.spark.sql.functions._
   *    key. Aggregation keys always include pixel/borYear (millions of groups
   *    per view), so no single reducer sees a whole view; the final per-key
   *    rollups are tiny (one row per view).
-  *  - The pyramid derives each zoom from the previous zoom's output
-  *    (input halves each level) instead of re-reading the z-max table per
-  *    zoom as the reference does (TileMapBuilder.java:162-170) — strictly
-  *    less shuffle I/O at identical results.
+  *  - Every count pyramid runs one level kernel, [[chunkedLevels]]: each
+  *    top-zoom pixel explodes to up to 7 zooms and one keyed sum builds
+  *    them all, and a deeper range rolls the top up once per chunk —
+  *    instead of re-reading the z-max table per zoom as the reference does
+  *    (TileMapBuilder.java:162-170), at identical results.
   */
 object MapBuild {
   import OccurrenceView.{TileSize, MaxZoom}
@@ -56,7 +57,7 @@ object MapBuild {
     * rows to a single partition (Spark warns exactly that) and serializes
     * the build through one task at scale — never use it here.
     */
-  def dictionaryEncode(spark: org.apache.spark.sql.SparkSession, viewCounts: DataFrame): DataFrame = {
+  def dictionaryEncode(spark: SparkSession, viewCounts: DataFrame): DataFrame = {
     // persist before the driver collect: the key collect AND the returned
     // lineage both consume the counts, which would otherwise re-run the
     // full upstream aggregation twice. Structural lifecycle (round 9):
@@ -153,21 +154,15 @@ object MapBuild {
       .agg(count(lit(1)).as("occ_count"))
   }
 
-  /** A5 level 1: re-aggregate a finer-zoom pixel table to zoom `z`.
-    * `fromZoom` is the zoom of `pixels`' px/py addressing. Keeps the
-    * bor_year dimension iff the input carries it.
+  /** A5 level 1: re-aggregate a finer-zoom (map_key, px, py, occ_count)
+    * table to zoom `z` — [[rollupPixels]]. `fromZoom` is the zoom of
+    * `pixels`' px/py addressing. Keeps the bor_year dimension iff the input
+    * carries it.
     */
   def rollupToZoom(pixels: DataFrame, fromZoom: Int, z: Int): DataFrame = {
     require(z <= fromZoom)
-    val base = Seq(
-      col("map_key"),
-      shiftright(col("px"), fromZoom - z).as("px"),
-      shiftright(col("py"), fromZoom - z).as("py"))
-    val keys =
-      if (pixels.columns.contains("bor_year")) base :+ col("bor_year") else base
-    pixels
-      .groupBy(keys: _*)
-      .agg(sum("occ_count").as("occ_count"))
+    rollupPixels(pixels, fromZoom, z, Seq("bor_year").filter(pixels.columns.contains),
+      Seq("occ_count"))
   }
 
   /** A5 levels 2–3: group pixels of one zoom into tiles, one row per
@@ -279,8 +274,7 @@ object MapBuild {
     * query on the returned session so every exchange in the pyramid plan
     * keeps its full partition count.
     */
-  def noCoalesceSession(s: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.sql.SparkSession = {
+  def noCoalesceSession(s: SparkSession): SparkSession = {
     val s2 = s.newSession()
     // newSession() seeds its SQLConf from the BUILDER-time configs, not the
     // parent's runtime state — without this copy a harness that re-sizes
@@ -406,13 +400,13 @@ object MapBuild {
   /** The per-pixel kernel of every pyramid and of the tile store: each row
     * of a zoom-`grainZoom` pixel table (map_key, px, py, extraKeys..,
     * valueCols..) explodes to every zoom in [lowZ, highZ], summed per
-    * (map_key, zxy, extraKeys..). [[levelStats]] sums it per tile; the store
-    * MVT-encodes it with `bor_year` kept. With `dirty` (a [[dirtyTiles]]
-    * set) only pixels under dirty tiles survive: the broadcast semi-join
-    * sits BEFORE the first exchange, so an incremental recompute shuffles
-    * the delta's spatial footprint, not the corpus.
+    * (map_key, zxy, extraKeys..) — one chunk of [[chunkedLevels]], its
+    * only caller. With `dirty` (a [[dirtyTiles]] set) only pixels under
+    * dirty tiles survive: the broadcast semi-join sits BEFORE the first
+    * exchange, so an incremental recompute shuffles the delta's spatial
+    * footprint, not the corpus.
     */
-  private[graft] def pixelLevels(pixels: DataFrame, grainZoom: Int, lowZ: Int,
+  private def pixelLevels(pixels: DataFrame, grainZoom: Int, lowZ: Int,
       highZ: Int, dirty: Option[DataFrame], extraKeys: Seq[String],
       valueCols: Seq[String]): DataFrame = {
     require(lowZ >= 0 && grainZoom <= MaxZoom,
@@ -428,10 +422,10 @@ object MapBuild {
   }
 
   /** Tile stats for every zoom in [lowZ, highZ] of a zoom-`grainZoom`
-    * table (map_key, px, py, total): [[pixelLevels]] + [[tileStats]]. */
+    * table (map_key, px, py, total): [[chunkedLevels]] + [[tileStats]]. */
   private[graft] def levelStats(pixels: DataFrame, grainZoom: Int, lowZ: Int,
       highZ: Int, dirty: Option[DataFrame]): DataFrame =
-    tileStats(pixelLevels(pixels, grainZoom, lowZ, highZ, dirty, Nil, Seq("total")))
+    tileStats(chunkedLevels(pixels, grainZoom, lowZ, highZ, dirty, Nil, Seq("total")))
 
   /** Per-pixel (map_key, zxy, total) → (map_key, tx, ty, n_pixels, total, z).
     * NOTE (measured): fusing the two aggregations (this and the per-pixel
@@ -451,11 +445,13 @@ object MapBuild {
       .select(col("map_key"), tx, ty, col("n_pixels"), col("total"), z)
   }
 
-  /** [[pixelLevels]] for zooms [minZoom, maxZoom] of a zoom-`grainZoom`
-    * table in chunks of ≤ [[PyramidChunk]] levels; between chunks the top
-    * rolls up to the next chunk's top zoom through `Lifecycle.loopCheckpoint`
-    * (the chunk AND the next rollup read it). A chunk's shuffle stays ~1.33×
-    * its top at any depth: z0–z16 is three chunks and two checkpoints. */
+  /** The one zoom-explode path of every count pyramid: [[pixelLevels]]
+    * for zooms [minZoom, maxZoom] of a zoom-`grainZoom` table in chunks of
+    * ≤ [[PyramidChunk]] levels; between chunks the top rolls up to the next
+    * chunk's top zoom through `Lifecycle.loopCheckpoint` (the chunk AND the
+    * next rollup read it). A chunk's shuffle stays ~1.33× its top at any
+    * depth: z0–z16 is three chunks and two checkpoints. [[tileStats]]
+    * finishes it to tile stats, `TileEncode.mvtLevels` to MVT tiles. */
   private[graft] def chunkedLevels(top: DataFrame, grainZoom: Int, minZoom: Int,
       maxZoom: Int, dirty: Option[DataFrame], extraKeys: Seq[String],
       valueCols: Seq[String]): DataFrame = {
@@ -496,46 +492,34 @@ object MapBuild {
   private def decodeStats(stats: DataFrame): DataFrame =
     stats.withColumn("map_key", decodeMapKey(col("map_key")))
 
-  /** Full pyramid in ONE aggregation pass: each top-level pixel row is
-    * exploded to every requested zoom (z, px >> (maxZoom-z), py >> ...) and
-    * a single groupBy produces all levels at once. The ×nLevels row
-    * amplification happens AFTER the top-level aggregate (input is already
-    * ~4^maxZoom groups, not raw records) and collapses by map-side combine,
-    * so the cost is one shuffle of ~1.33× the top table vs the iterative
-    * chain's per-level shuffle + persist + materialization-barrier jobs.
-    * The crossover: amplification grows linearly with nLevels while the
-    * iterative chain's total shuffle volume is bounded by ~1.33× regardless
-    * of depth — one-pass wins for shallow pyramids (≤8 levels, the serving
-    * z0–z6 case), iterative for deep ones (z16 builds). [[pyramid]]
-    * dispatches on that. Levels are identical either way: sum grouped
-    * coarser ≡ summed fine sums. The crossover is SOFT in data volume:
-    * measured at 10× sf0.1 (z0–z6, warm cache, 320 partitions), one-pass
-    * 41.0 s vs iterative 37.7 s — within run noise, so depth stays the
-    * only dispatch input.
+  /** The count pyramid: tile stats at every zoom in [minZoom, maxZoom],
+    * [[pyramidFromState]] over [[pyramidState]] — the reference's z16
+    * production shape (TileMapBuilder.java:52-70) at any depth. A range of
+    * more than one [[PyramidChunk]] reads the state twice (the first chunk
+    * and the rollup to the next chunk's top), so only then is it
+    * materialized once through `Lifecycle.loopCheckpoint`: ⌈depth/7⌉
+    * materializations in all (z0–z16 = 3) where a one-barrier-per-level
+    * chain ran 17 (z0–z10: 11 jobs, 13.2 s at sf0.1). Checkpoints are block
+    * storage the ContextCleaner frees with the returned plan, never an
+    * SQL-cache entry (the reference writes each level to a table for the
+    * same reason — O4, MapBuilder.java:179-199).
+    *
+    * One chunk size, no depth dispatch: exploding every level in one pass
+    * grows the row amplification linearly with depth, while the chunk
+    * chain's shuffle stays ~1.33× the top; at the serving depth (z0–z6,
+    * one chunk, so one pass either way) the one-pass and per-level chains
+    * measured within noise of each other (10× sf0.1, warm cache, 320
+    * partitions: 41.0 s vs 37.7 s), so depth alone never picks a strategy.
+    * Levels are identical at any chunking: sum grouped coarser ≡ summed
+    * fine sums.
     */
-  def pyramidOnePass(occ: DataFrame, epsg: String, minZoom: Int, maxZoom: Int): DataFrame =
-    pyramidFromState(pyramidState(occ, epsg, maxZoom), minZoom, maxZoom)
-
-  /** Pyramid strategy dispatch: one-pass for shallow pyramids, chunked
-    * iterative halving (with per-chunk materialization barriers) for deep
-    * ones — see [[pyramidOnePass]] for the crossover argument.
-    */
-  def pyramid(occ: DataFrame, epsg: String, minZoom: Int, maxZoom: Int): DataFrame =
-    if (maxZoom - minZoom <= 8) pyramidOnePass(occ, epsg, minZoom, maxZoom)
-    else pyramidIterative(occ, epsg, minZoom, maxZoom)
-
-  /** Deep-pyramid builder (the reference's z16 production shape,
-    * TileMapBuilder.java:52-70): [[chunkedLevels]] over a checkpointed top,
-    * then one per-tile sum — ⌈depth/7⌉ materializations (z0–z16 = 3) where
-    * a one-barrier-per-level chain ran 17 (z0–z10: 11 jobs, 13.2 s at
-    * sf0.1). Checkpoints are block storage the ContextCleaner frees with the
-    * returned plan, never an SQL-cache entry (the reference writes each
-    * level to a table for the same reason — O4, MapBuilder.java:179-199).
-    */
-  def pyramidIterative(occ: DataFrame, epsg: String, minZoom: Int, maxZoom: Int): DataFrame =
-    decodeStats(tileStats(chunkedLevels(
-      graft.core.Lifecycle.loopCheckpoint(pyramidState(occ, epsg, maxZoom)),
-      maxZoom, minZoom, maxZoom, None, Nil, Seq("total"))))
+  def pyramid(occ: DataFrame, epsg: String, minZoom: Int, maxZoom: Int): DataFrame = {
+    val state = pyramidState(occ, epsg, maxZoom)
+    pyramidFromState(
+      if (maxZoom - minZoom < PyramidChunk) state
+      else graft.core.Lifecycle.loopCheckpoint(state),
+      minZoom, maxZoom)
+  }
 
   private val PyramidChunk = 7
 
@@ -543,7 +527,7 @@ object MapBuild {
   private val TileShift = Integer.numberOfTrailingZeros(TileSize)
 
   /** All-level tile stats from a [[pyramidState]] table (the second half of
-    * [[pyramidOnePass]], exposed so a stored state can be re-served without
+    * [[pyramid]], exposed so a stored state can be re-served without
     * re-aggregating raw records), exchanged long-keyed and decoded once.
     */
   def pyramidFromState(state: DataFrame, minZoom: Int, maxZoom: Int): DataFrame =
@@ -608,10 +592,11 @@ object MapBuild {
       Seq("z", "tx", "ty"), "est")
 
   // ---- incremental maintenance: one kernel (delta top → dirty-tile set →
-  // dirty recompute → clean passthrough) behind three entries. Only the
-  // delta-footprint-sized intermediates are materialized; the result
-  // stays lazy because it is pyramid-sized (checkpointing it would
-  // double-materialize the store write).
+  // dirty recompute → clean passthrough) behind two entries; the pruned one
+  // shares its merge and recompute ([[PrunedMerge]]) with the store's
+  // ingest. Only the delta-footprint-sized intermediates are materialized;
+  // the result stays lazy because it is pyramid-sized (checkpointing it
+  // would double-materialize the store write).
 
   /** An ingest batch's top table in the [[pyramidState]] schema,
     * materialized once: the dirty set, the state merge and (pruned) the
@@ -627,9 +612,8 @@ object MapBuild {
     * (map_key, packed ztxy), distinct, with `deltaTop`'s map_key type (long
     * for the operators, string for the store). Bounded by |delta pixels| ×
     * nLevels, and materialized once: each broadcast build that reads it
-    * (the recompute's semi-join prune, the clean anti-join, a sizing count)
-    * is its own job. An
-    * eager local checkpoint, like [[deltaTopOf]]; a caller done with it
+    * (the recompute's semi-join prune, the clean anti-join) is its own job.
+    * An eager local checkpoint, like [[deltaTopOf]]; a caller done with it
     * frees it with `Lifecycle.freeCheckpoint`.
     */
   private[graft] def dirtyTiles(deltaTop: DataFrame, minZoom: Int, maxZoom: Int): DataFrame = {
@@ -660,18 +644,6 @@ object MapBuild {
       .select("map_key", "tx", "ty", "n_pixels", "total", "z")
       .unionByName(decodeStats(recomputed))
 
-  /** The kernel over a whole in-memory state: merge by keyed addition
-    * (long-keyed), recompute the dirty tiles from the merged pixels, pass
-    * the clean ones through.
-    */
-  private def incrementalMerged(state: DataFrame, pyramid: DataFrame,
-      deltaTop: DataFrame, dirty: DataFrame, minZoom: Int, maxZoom: Int): DataFrame = {
-    val merged = sumAgg(state.unionByName(deltaTop),
-      Seq("map_key", "px", "py"), Seq("total"))
-    withCleanTiles(pyramid, dirty,
-      levelStats(merged, maxZoom, minZoom, maxZoom, Some(dirty)))
-  }
-
   /** Incremental pyramid maintenance: given the stored long-keyed `state`
     * ([[pyramidState]] over everything ingested so far), the `pyramid`
     * built from it, and a new `deltaOcc` batch, produce the updated
@@ -693,37 +665,15 @@ object MapBuild {
     * tile stats alone — a delta can light up a pixel that already existed —
     * which is exactly why the recompute works from the merged pixel-grain
     * state rather than patching tile rows.
-    *
-    * The dirty set must stay broadcastable: [[incrementalPyramidAuto]]
-    * falls back to a rebuild from the merged state past a budget.
     */
   def incrementalPyramid(state: DataFrame, pyramid: DataFrame, deltaOcc: DataFrame,
       epsg: String, minZoom: Int, maxZoom: Int): DataFrame = {
     val deltaTop = deltaTopOf(deltaOcc, epsg, maxZoom)
-    incrementalMerged(state, pyramid, deltaTop,
-      dirtyTiles(deltaTop, minZoom, maxZoom), minZoom, maxZoom)
-  }
-
-  /** [[incrementalPyramid]] with its broadcast-budget caveat
-    * OPERATIONALIZED: the dirty-tile set must stay broadcastable, and an
-    * ingest whose per-zoom ancestor footprint exceeds `maxDirtyKeys`
-    * dirties most of the pyramid anyway — so past the bound this falls
-    * back to a rebuild from the merged state ([[pyramidFromState]]): same
-    * result (the incremental path's oracle IS the rebuild), no oversized
-    * broadcast, and the rebuild is the cheaper plan exactly when the
-    * fallback fires. The sizing is a count() of the materialized dirty set
-    * the incremental arm then broadcasts.
-    */
-  def incrementalPyramidAuto(state: DataFrame, pyramid: DataFrame,
-      deltaOcc: DataFrame, epsg: String, minZoom: Int, maxZoom: Int,
-      maxDirtyKeys: Long = 8000000L): DataFrame = {
-    val deltaTop = deltaTopOf(deltaOcc, epsg, maxZoom)
     val dirty = dirtyTiles(deltaTop, minZoom, maxZoom)
-    if (dirty.count() > maxDirtyKeys)
-      pyramidFromState(
-        sumAgg(state.unionByName(deltaTop), Seq("map_key", "px", "py"), Seq("total")),
-        minZoom, maxZoom)
-    else incrementalMerged(state, pyramid, deltaTop, dirty, minZoom, maxZoom)
+    val merged = sumAgg(state.unionByName(deltaTop),
+      Seq("map_key", "px", "py"), Seq("total"))
+    withCleanTiles(pyramid, dirty,
+      levelStats(merged, maxZoom, minZoom, maxZoom, Some(dirty)))
   }
 
   /** Coarse-cell partition value of a maxZoom-grain pixel: the zoom-`zc`
@@ -796,8 +746,8 @@ object MapBuild {
 
   /** A pixel table (map_key, px, py, extraKeys.., valueCols..) re-addressed
     * from zoom `fromZoom` to zoom `z` and collapsed by keyed addition — the
-    * coarse side table's derivation and the chunked pyramid's inter-chunk
-    * rollup.
+    * coarse side table's derivation, the chunked pyramid's inter-chunk
+    * rollup and [[rollupToZoom]].
     */
   private[graft] def rollupPixels(pixels: DataFrame, fromZoom: Int, z: Int,
       extraKeys: Seq[String], valueCols: Seq[String]): DataFrame =
@@ -808,92 +758,94 @@ object MapBuild {
         (extraKeys ++ valueCols).map(col)): _*),
       Seq("map_key", "px", "py") ++ extraKeys, valueCols)
 
-  /** The delta's coarse-cell footprint — the value list for the partition
-    * filter. Bounded driver collect (≤ 4^zc values, the documented
-    * watch-list class).
+  /** An ingest batch merged into a pruned state, and the recompute of the
+    * tiles it dirties: the one pruned-ingest kernel of
+    * [[incrementalPyramidPruned]] (long keys, `total`, tile stats) and of
+    * the store's `Workflow.incrementalUpdate` (string keys, `bor_year` +
+    * `occ_count`, MVT tiles). `statePath` holds [[writePrunedStateAs]]'s
+    * layout; `deltaTop` is the batch at `maxZoom` grain in the same schema,
+    * (map_key, px, py, extraKeys.., valueCols..).
+    *
+    *  - `dirtyPts`: the delta's coarse-cell footprint, the value list of
+    *    the partition filter — a bounded driver collect (≤ 4^zc values, the
+    *    documented watch-list class).
+    *  - `fine`: the dirty cells' files (a direct filter on the partition
+    *    column, so clean cells' files never open) ∪ the delta, collapsed by
+    *    keyed addition.
+    *  - `coarse`: the delta at zc grain added into the stored side table by
+    *    keyed addition (full rewrite of the 4^(maxZoom−zc)×-smaller table).
+    *
+    * The cell collect runs at construction; both merges are lazy plans (the
+    * coarse one is not even built when no requested zoom is below zc), so
+    * a caller that also writes them as the next state persists them before
+    * calling [[levels]].
     */
-  private[graft] def dirtyCells(deltaTop: DataFrame, maxZoom: Int, zc: Int): Seq[Int] =
-    deltaTop.select(coarseCell(col("px"), col("py"), maxZoom, zc).as("pt"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+  private[graft] final class PrunedMerge(spark: SparkSession, statePath: String,
+      deltaTop: DataFrame, maxZoom: Int, zc: Int, extraKeys: Seq[String],
+      valueCols: Seq[String]) {
+    private val keys = Seq("map_key", "px", "py") ++ extraKeys
+    private val cols = (keys ++ valueCols).map(col)
 
-  /** Pruned fine-state merge: dirty cells' files (partition filter — clean
-    * cells' files never open) ∪ delta top, collapsed by keyed addition.
-    */
-  private[graft] def mergedFineState(spark: org.apache.spark.sql.SparkSession,
-      statePath: String, deltaTop: DataFrame, dirtyPts: Seq[Int],
-      extraKeys: Seq[String], valueCols: Seq[String]): DataFrame = {
-    val cols = Seq("map_key", "px", "py") ++ extraKeys ++ valueCols
-    val fine = spark.read.parquet(s"$statePath/fine")
-      .filter(col("pt").isin(dirtyPts: _*))
-      .select(cols.map(col): _*)
-    sumAgg(fine.unionByName(deltaTop.select(cols.map(col): _*)),
-      Seq("map_key", "px", "py") ++ extraKeys, valueCols)
-  }
+    val dirtyPts: Seq[Int] =
+      deltaTop.select(coarseCell(col("px"), col("py"), maxZoom, zc).as("pt"))
+        .distinct().collect().map(_.getInt(0)).toSeq
 
-  /** Coarse side-table merge: the delta collapsed to zc grain, added into
-    * the stored rollup by keyed addition (full rewrite of the
-    * 4^(maxZoom−zc)×-smaller table).
-    */
-  private[graft] def mergedCoarseState(spark: org.apache.spark.sql.SparkSession,
-      statePath: String, deltaTop: DataFrame, maxZoom: Int, zc: Int,
-      extraKeys: Seq[String], valueCols: Seq[String]): DataFrame = {
-    sumAgg(
+    val fine: DataFrame = sumAgg(
+      spark.read.parquet(s"$statePath/fine")
+        .filter(col("pt").isin(dirtyPts: _*))
+        .select(cols: _*)
+        .unionByName(deltaTop.select(cols: _*)),
+      keys, valueCols)
+
+    lazy val coarse: DataFrame = sumAgg(
       spark.read.parquet(s"$statePath/coarse")
         .unionByName(rollupPixels(deltaTop, maxZoom, zc, extraKeys, valueCols)),
-      Seq("map_key", "px", "py") ++ extraKeys, valueCols)
+      keys, valueCols)
+
+    /** The pixel levels under the `dirty` tiles ([[dirtyTiles]]) at every
+      * zoom in [minZoom, maxZoom], each side through [[chunkedLevels]] with
+      * the broadcast dirty semi-join and then `finish`:
+      *  - zooms ≥ zc (≥ minZoom when the request starts above the cut,
+      *    and then the coarse table never enters) from `fine`. A dirty
+      *    z-tile lies inside one zc-cell, and that cell holds the delta
+      *    pixel that dirtied it, so every pixel its recompute needs is in
+      *    a dirty cell.
+      *  - zooms < zc from `coarse`: dirty tiles there span clean cells too
+      *    (a dirty z0 tile is the world), and pixel occupancy is monotone
+      *    under coarsening, so n_pixels and totals at z < zc derive from zc
+      *    grain exactly.
+      */
+    def levels(dirty: DataFrame, minZoom: Int, finish: DataFrame => DataFrame): DataFrame = {
+      def side(pixels: DataFrame, grainZoom: Int, lowZ: Int, highZ: Int) =
+        finish(chunkedLevels(pixels, grainZoom, lowZ, highZ, Some(dirty), extraKeys, valueCols))
+      val fineLevels = side(fine, maxZoom, math.max(zc, minZoom), maxZoom)
+      if (minZoom >= zc) fineLevels
+      else fineLevels.unionByName(side(coarse, zc, minZoom, zc - 1))
+    }
   }
 
   /** [[incrementalPyramid]] with a DELTA-PROPORTIONAL STATE SCAN: the
-    * stored state is read through partition pruning instead of scanned
-    * whole per ingest (the round-6 audit's one scale caveat on q111 — the
-    * shuffle volume was already delta-proportional, the scan was
-    * state-proportional).
-    *
-    * Mechanics on top of [[incrementalPyramid]]'s:
-    *  - the full-resolution long-keyed state (written by [[writePrunedState]],
-    *    partitioned by zoom-`zc` coarse cell) is read with
-    *    `pt IN (delta's coarse footprint)` — a partition filter, so clean
-    *    cells' files are never opened. Correct for every level z ≥ zc: a
-    *    dirty z-tile lies inside one zc-cell, and that cell contains the
-    *    delta pixel that dirtied it, so all pixels a dirty-tile recompute
-    *    needs live in dirty cells.
-    *  - levels z < zc (dirty tiles there span clean cells too — a dirty
-    *    z0 tile is the world) recompute from the stored zc-grain rollup
-    *    instead: 4^(maxZoom−zc)× smaller than the state, maintained by the
-    *    same keyed addition, and pixel occupancy is monotone under
-    *    coarsening so n_pixels/total at z < zc derive from zc grain
-    *    exactly.
-    *  - the delta's coarse footprint is a bounded driver collect (≤ 4^zc
-    *    values — it parameterizes the partition filter, same watch-list
-    *    class as the dictionary/codebook collects).
+    * stored long-keyed state (written by [[writePrunedState]], partitioned
+    * by zoom-`zc` coarse cell) is read through partition pruning instead of
+    * scanned whole per ingest (the round-6 audit's one scale caveat on
+    * q111 — the shuffle volume was already delta-proportional, the scan was
+    * state-proportional). The merge and the dirty recompute are
+    * [[PrunedMerge]]'s, finished to tile stats per side.
     *
     * Total read per ingest: dirty-cell files + the coarse side table —
     * O(delta footprint + state/4^(maxZoom−zc)) instead of O(state). At
     * 100 TB you size zc so the coarse table is a rounding error (or chain
     * a second coarse level).
     */
-  def incrementalPyramidPruned(spark: org.apache.spark.sql.SparkSession,
-      statePath: String, pyramid: DataFrame, deltaOcc: DataFrame,
-      epsg: String, minZoom: Int, maxZoom: Int, zc: Int): DataFrame = {
+  def incrementalPyramidPruned(spark: SparkSession, statePath: String,
+      pyramid: DataFrame, deltaOcc: DataFrame, epsg: String, minZoom: Int,
+      maxZoom: Int, zc: Int): DataFrame = {
     require(zc <= maxZoom && minZoom <= maxZoom,
       s"need zc <= maxZoom and minZoom <= maxZoom, got $minZoom/$zc/$maxZoom")
     val deltaTop = deltaTopOf(deltaOcc, epsg, maxZoom)
     val dirty = dirtyTiles(deltaTop, minZoom, maxZoom)
-    val dirtyPts = dirtyCells(deltaTop, maxZoom, zc) // bounded: ≤ 4^zc values
-    // fine levels (z >= zc): pruned state read — the partition filter is
-    // the whole point ([[mergedFineState]] keeps it a direct filter on the
-    // partition column). They start at zc — or at minZoom when the
-    // request begins above the coarse cut (then the coarse table never
-    // enters). Stored files, delta and merges are all long-keyed.
-    val fine = levelStats(
-      mergedFineState(spark, statePath, deltaTop, dirtyPts, Nil, Seq("total")),
-      maxZoom, math.max(zc, minZoom), maxZoom, Some(dirty))
-    // coarse levels (z < zc): from the small zc-grain side table
-    val recomputed =
-      if (minZoom >= zc) fine
-      else fine.unionByName(levelStats(
-        mergedCoarseState(spark, statePath, deltaTop, maxZoom, zc, Nil, Seq("total")),
-        zc, minZoom, zc - 1, Some(dirty)))
-    withCleanTiles(pyramid, dirty, recomputed)
+    withCleanTiles(pyramid, dirty,
+      new PrunedMerge(spark, statePath, deltaTop, maxZoom, zc, Nil, Seq("total"))
+        .levels(dirty, minZoom, tileStats))
   }
 }

@@ -23,7 +23,7 @@ object TileEncode {
     mvtLevels(spark, pixelsAtZ.withColumn("z", lit(z)).select(col("map_key"),
       MapBuild.packZxy(z).as("zxy"), col("bor_year"), col("occ_count")))
 
-  /** `MapBuild.pixelLevels` rows of any zooms, (map_key, zxy, bor_year,
+  /** `MapBuild.chunkedLevels` rows of any zooms, (map_key, zxy, bor_year,
     * occ_count) → (map_key, z, tx, ty, mvt bytes). One shuffle on the packed
     * tile key, blob built inside a typed mapGroups with memory bounded by a
     * tile's feature count. (A collect_list(struct)+UDF variant was measured

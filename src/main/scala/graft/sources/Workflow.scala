@@ -115,7 +115,7 @@ object Workflow {
     // the store build runs on the pyramid family's no-coalesce fork: at
     // production depth the max-zoom pixel aggregation has the same
     // byte-underestimated agg state that AQE's coalescer spilled on the
-    // one-pass pyramid (see MapBuild.sumAgg) — the fork scopes the
+    // count pyramid (see MapBuild.sumAgg) — the fork scopes the
     // coalescer off for THIS build without touching the caller's session
     val s2 = graft.operators.MapBuild.noCoalesceSession(spark)
     buildFrom(s2, graft.operators.OccurrenceView.occ(s2, sfDir),
@@ -290,21 +290,20 @@ object Workflow {
     require(maxZoom >= StateCoarseZoom,
       s"state layout needs maxZoom >= $StateCoarseZoom")
     projections.foreach { epsg =>
-      val zc = StateCoarseZoom
       val deltaTop = MapBuild.pixelAggAt(delta, epsg, maxZoom)
         .persist(StorageLevel.MEMORY_AND_DISK)
-      // pruned merge + dirty-cell rewrite, all through the SHARED core in
-      // MapBuild (dirtyCells / mergedFineState / writeFineCells /
-      // mergedCoarseState) — the q145 operator and this lifecycle execute
-      // the same layout logic, parameterized by the bor_year state schema
-      val dirtyPts = MapBuild.dirtyCells(deltaTop, maxZoom, zc)
-      val mergedDirty = MapBuild.mergedFineState(spark,
-          s"$prevState/${srsDir(epsg)}", deltaTop, dirtyPts,
-          StateExtraKeys, StateValueCols)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      MapBuild.writeFineCells(mergedDirty,
-        s"$statePath/${srsDir(epsg)}/fine", maxZoom, zc)
-      val dirtyDirs = dirtyPts.map(p => s"pt=$p").toSet
+      // pruned merge + dirty recompute through the SHARED kernel
+      // (MapBuild.PrunedMerge) — the q145 operator runs the same one on its
+      // long-keyed `total` state; here the state schema carries bor_year.
+      // Both merges are persisted: each is written as the new state AND
+      // read by the recompute
+      val merge = new MapBuild.PrunedMerge(spark, s"$prevState/${srsDir(epsg)}",
+        deltaTop, maxZoom, StateCoarseZoom, StateExtraKeys, StateValueCols)
+      merge.fine.persist(StorageLevel.MEMORY_AND_DISK)
+      merge.coarse.persist(StorageLevel.MEMORY_AND_DISK)
+      MapBuild.writeFineCells(merge.fine,
+        s"$statePath/${srsDir(epsg)}/fine", maxZoom, StateCoarseZoom)
+      val dirtyDirs = merge.dirtyPts.map(p => s"pt=$p").toSet
       scala.util.Using.resource(
           Files.list(Paths.get(s"$prevState/${srsDir(epsg)}/fine"))) { st =>
         st.forEach { p =>
@@ -313,25 +312,13 @@ object Workflow {
             copyTree(p, Paths.get(s"$statePath/${srsDir(epsg)}/fine/$n"))
         }
       }
-      // coarse side table: keyed addition at zc grain, full rewrite of the
-      // 4^(maxZoom−zc)×-smaller table
-      val mergedCoarse = MapBuild.mergedCoarseState(spark,
-          s"$prevState/${srsDir(epsg)}", deltaTop, maxZoom, zc,
-          StateExtraKeys, StateValueCols)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      mergedCoarse.write.mode("overwrite")
+      merge.coarse.write.mode("overwrite")
         .parquet(s"$statePath/${srsDir(epsg)}/coarse")
-      // only pixels under dirty tiles re-encode: zooms ≥ zc from the pruned
-      // merge (every dirty tile there lives inside a dirty cell, so the
-      // restricted table is complete for it), zooms < zc from the coarse
-      // table, whose rollup equals the full-state rollup by sum
-      // associativity. Every clean tile passes through from the previous
-      // version by one broadcast anti-join; the projection is written once
+      // only pixels under dirty tiles re-encode; every clean tile passes
+      // through from the previous version by one broadcast anti-join, and
+      // the projection is written once
       val dirty = MapBuild.dirtyTiles(deltaTop, 0, maxZoom)
-      val fresh = TileEncode.mvtLevels(spark,
-        MapBuild.chunkedLevels(mergedDirty, maxZoom, zc, maxZoom, Some(dirty),
-          StateExtraKeys, StateValueCols).unionByName(MapBuild.chunkedLevels(
-          mergedCoarse, zc, 0, zc - 1, Some(dirty), StateExtraKeys, StateValueCols)))
+      val fresh = TileEncode.mvtLevels(spark, merge.levels(dirty, 0, identity))
       val clean = spark.read.parquet(s"${prev.tiles}/${srsDir(epsg)}")
         .select("map_key", "z", "tx", "ty", "mvt")
         .withColumn("ztxy", MapBuild.packZtxy(col("z"), col("tx"), col("ty")))
@@ -339,7 +326,7 @@ object Workflow {
         .drop("ztxy")
       writeTiles(epsg, clean.unionByName(fresh), tilesPath)
       graft.core.Lifecycle.freeCheckpoint(dirty)
-      mergedDirty.unpersist(); mergedCoarse.unpersist(); deltaTop.unpersist()
+      merge.fine.unpersist(); merge.coarse.unpersist(); deltaTop.unpersist()
     }
     mergedPoints.unpersist(); delta.unpersist()
     writeManifest(workDir,

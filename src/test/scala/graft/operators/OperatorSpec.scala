@@ -63,26 +63,21 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(mism2 === 0, "encode(decode) is not the identity on long keys")
   }
 
-  test("pyramidIterative equals pyramidOnePass on a shared zoom range") {
-    // the two strategies must be interchangeable: [[MapBuild.pyramid]]
-    // dispatches on depth, so a divergence would ship invisibly whenever
-    // only one branch is exercised by the driver gates
+  test("pyramid z0-z9 (two chunks) equals its single-level pyramids") {
+    // z0–z9 spans two chunks, so the inter-chunk rollup (checkpointed
+    // state → next chunk's top) runs; each pyramid(z, z) is one zoom read
+    // straight off its own z-grain state, with no rollup at all
     spark.catalog.clearCache() // isolate the leak check below
     val occ = OccurrenceView.occ(spark, Dir)
-    val one = MapBuild.pyramidOnePass(occ, "EPSG:4326", 0, 5)
-    val iter = MapBuild.pyramidIterative(occ, "EPSG:4326", 0, 5)
-    assert(one.exceptAll(iter).count() === 0)
-    assert(iter.exceptAll(one).count() === 0)
-    // z0–z9 spans two 7-level chunks — exercises the inter-chunk rollup
-    // (a single-chunk range would leave the rollup branch untested)
-    val one9 = MapBuild.pyramidOnePass(occ, "EPSG:4326", 0, 9)
-    val iter9 = MapBuild.pyramidIterative(occ, "EPSG:4326", 0, 9)
-    assert(one9.exceptAll(iter9).count() === 0)
-    assert(iter9.exceptAll(one9).count() === 0)
+    val deep = MapBuild.pyramid(occ, "EPSG:4326", 0, 9)
+    val levels = (0 to 9).map(z => MapBuild.pyramid(occ, "EPSG:4326", z, z))
+      .reduce(_ unionByName _)
+    assert(deep.exceptAll(levels).count() === 0)
+    assert(levels.exceptAll(deep).count() === 0)
     // the chunk tops are loop checkpoints, not SQL-cache entries: a library
     // caller that never calls clearCache() leaks nothing
     assert(spark.sharedState.cacheManager.isEmpty,
-      "pyramidIterative left SQL-cache entries behind")
+      "pyramid left SQL-cache entries behind")
   }
 
   test("incrementalPyramid equals the full rebuild at every delta ratio tried") {
@@ -92,7 +87,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     // and both paths (anti-join passthrough, semi-join recompute) must
     // compose to the rebuild regardless
     val o = OccurrenceView.occ(spark, Dir)
-    val full = MapBuild.pyramidOnePass(o, "EPSG:4326", 0, 6)
+    val full = MapBuild.pyramid(o, "EPSG:4326", 0, 6)
     for (mod <- Seq(3, 50)) {
       val base = o.filter(col("l_orderkey") % mod =!= 0)
       val delta = o.filter(col("l_orderkey") % mod === 0)

@@ -617,34 +617,20 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(keyed).toMap
     assert(outFineOnly === wantFineOnly, "fine-only branch diverged")
 
-    // the broadcast-budget dispatch: forced into fallback (threshold 1)
-    // it must produce the identical pyramid via rebuild-from-state — and
-    // its plan must carry NO broadcast dirty-set joins
-    val stored06 = MapBuild.pyramidFromState(state, 0, 6)
-    val auto = MapBuild.incrementalPyramidAuto(state, stored06, delta,
-      "EPSG:4326", 0, 6, maxDirtyKeys = 1L)
-    assert(auto.queryExecution.optimizedPlan.collect {
-      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
-    }.isEmpty, "fallback should be a joinless rebuild from state")
-    assert(auto.collect().map(keyed).toMap === got,
-      "fallback rebuild diverged from the incremental result")
-
-    // the same dispatch at the DEFAULT budget takes the incremental arm:
-    // equal to incrementalPyramid, and its plan keeps both broadcast
-    // dirty-set joins (semi-join prune, anti-join passthrough)
-    val autoInc = MapBuild.incrementalPyramidAuto(state, stored06, delta,
-      "EPSG:4326", 0, 6)
-    assert(autoInc.collect().map(keyed).toMap === want,
-      "incremental arm of incrementalPyramidAuto diverged from incrementalPyramid")
-    import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
-    val joinTypes = autoInc.queryExecution.optimizedPlan.collect {
-      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j.joinType
-    }
-    assert(joinTypes.contains(LeftSemi) && joinTypes.contains(LeftAnti),
-      s"incremental arm lost a dirty-set join: $joinTypes")
-    val phys = autoInc.queryExecution.executedPlan.toString
-    assert(phys.contains("BroadcastHashJoin") && !phys.contains("SortMergeJoin"),
-      s"incremental arm's dirty-set joins are not broadcast:\n$phys")
+    // a z9 state: the fine side spans z2–z9, two 7-level chunks, so the
+    // shared pruned recompute also runs its inter-chunk rollup
+    val store9 = java.nio.file.Files.createTempDirectory("pruned-state9").toString
+    val state9 = MapBuild.pyramidState(base, "EPSG:4326", 9)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    MapBuild.writePrunedState(state9, store9, 9, 2)
+    val stored9 = MapBuild.pyramidFromState(state9, 0, 9)
+    val out9 = MapBuild.incrementalPyramidPruned(spark, store9, stored9, delta,
+      "EPSG:4326", 0, 9, 2).collect().map(keyed).toMap
+    val want9 = MapBuild.incrementalPyramid(state9, stored9, delta, "EPSG:4326", 0, 9)
+      .collect().map(keyed).toMap
+    assert(out9.keys.exists(_._2 == 9L), "the z9 recompute produced no z9 tile")
+    assert(out9 === want9, "two-chunk pruned path diverged from the unpruned path")
+    state9.unpersist()
 
     // no SQL-cache entry outlives the calls once the test's own state is
     // unpersisted: the delta top and dirty set are checkpoints
