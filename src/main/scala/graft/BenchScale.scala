@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.NioLocalFileSystem
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -147,12 +148,12 @@ object BenchScale {
       outPath: String, reps: Int): Unit = {
     val alpha = "abcdefghijklmnopqrstuvwxyz"
     val base = spark.read.parquet(s"$baseDir/documents.parquet")
-    (0 until reps).map(i => base
+    val docs = (0 until reps).map(i => base
         .withColumn("doc_id", col("doc_id") + lit(i.toLong * 100000000L))
         .withColumn("text",
           translate(col("text"), alpha, alpha.drop(i % 26) + alpha.take(i % 26))))
       .reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(outPath)
+    NioLocalFileSystem.writer(docs).mode("overwrite").parquet(outPath)
   }
 
   /** The pyramid/tile family — the queries a SKEWED occurrence corpus
@@ -192,7 +193,7 @@ object BenchScale {
         .withColumn("l_suppkey", col("l_suppkey") + lit(i.toLong * 100000007L)))
       .reduce(_ unionByName _)
     val hotGate = (hotFrac * 1000000).toLong
-    rep
+    val skewed = rep
       // two deterministic per-row uniforms from the replica-shifted keys
       .withColumn("u_gate",
         expr("pmod(l_orderkey * 2654435761 + l_linenumber * 40503, 1000000)"))
@@ -216,7 +217,7 @@ object BenchScale {
             "+ 3600 * (l_partkey + 4000000000)"))
         .otherwise(col("l_partkey")))
       .drop("u_gate", "u_site", "site", "lat_site", "lng_site")
-      .write.mode("overwrite").parquet(outPath)
+    NioLocalFileSystem.writer(skewed).mode("overwrite").parquet(outPath)
   }
 
   def main(args: Array[String]): Unit = {
@@ -242,8 +243,8 @@ object BenchScale {
     // stay distinct through every derivation)
     def replicated(table: String, perturb: (DataFrame, Int) => DataFrame): Unit = {
       val base = spark.read.parquet(s"$baseDir/$table.parquet")
-      (0 until reps).map(i => perturb(base, i)).reduce(_ unionByName _)
-        .write.mode("overwrite").parquet(s"$scaleDir/$table.parquet")
+      val rows = (0 until reps).map(i => perturb(base, i)).reduce(_ unionByName _)
+      NioLocalFileSystem.writer(rows).mode("overwrite").parquet(s"$scaleDir/$table.parquet")
     }
     // every key feeding a derivation shifts by a stride that is NOT a
     // multiple of the derivation moduli (50/7/3600/1700), so view keys,

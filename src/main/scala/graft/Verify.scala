@@ -1,4 +1,5 @@
 package graft
+import graft.core.NioLocalFileSystem
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,7 +14,7 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+      try NioLocalFileSystem.writer(fn(spark, sfDir).coalesce(1)).mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -23,9 +24,9 @@ object Verify {
         // present as all-green-but-smaller (the round-5 failure mode).
         try {
           import spark.implicits._
-          Seq(Option(e.getMessage).getOrElse(e.getClass.getName))
-            .toDF("__error").coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
+          val marker = Seq(Option(e.getMessage).getOrElse(e.getClass.getName))
+            .toDF("__error").coalesce(1)
+          NioLocalFileSystem.writer(marker).mode("overwrite").parquet(s"$outDir/$name")
         } catch { case _: Throwable => () }
       }
       // builders may persist intermediates (pyramid levels, cluster rounds);

@@ -77,7 +77,7 @@ object Lifecycle {
     df.sparkSession.conf.getOption(CheckpointDirKey) match {
       case Some(dir) =>
         val path = s"$dir/wp-${java.util.UUID.randomUUID()}"
-        df.write.mode("error").parquet(path)
+        NioLocalFileSystem.writer(df).mode("error").parquet(path)
         df.sparkSession.read.parquet(path)
       case None => df.localCheckpoint(eager = true)
     }

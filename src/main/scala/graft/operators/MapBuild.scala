@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.NioLocalFileSystem
 import graft.functions.GeoFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -722,12 +723,18 @@ object MapBuild {
       maxZoom: Int, zc: Int): Unit = {
     require(zc <= maxZoom && zc >= 0,
       s"need 0 <= zc <= maxZoom, got zc=$zc maxZoom=$maxZoom")
-    cells
+    val salted = cells
       .withColumn("pt", coarseCell(col("px"), col("py"), maxZoom, zc))
       .repartition(col("pt"),
         pmod(hash(col("px"), col("py")), lit(StateSaltBuckets)))
-      .write.mode("overwrite").partitionBy("pt").parquet(finePath)
+    NioLocalFileSystem.writer(salted).mode("overwrite").partitionBy("pt").parquet(finePath)
   }
+
+  /** Write the coarse side table (the zc-grain rollup) of the prunable
+    * layout — the other half beside [[writeFineCells]], shared by the same
+    * two callers. */
+  private[graft] def writeCoarseCells(coarse: DataFrame, coarsePath: String): Unit =
+    NioLocalFileSystem.writer(coarse).mode("overwrite").parquet(coarsePath)
 
   /** Parameterized pruned-state writer — ONE implementation of the
     * fine/coarse layout for every state schema: `extraKeys` are key columns
@@ -740,8 +747,8 @@ object MapBuild {
       maxZoom: Int, zc: Int, extraKeys: Seq[String],
       valueCols: Seq[String]): Unit = {
     writeFineCells(state, s"$path/fine", maxZoom, zc)
-    rollupPixels(state, maxZoom, zc, extraKeys, valueCols)
-      .write.mode("overwrite").parquet(s"$path/coarse")
+    writeCoarseCells(rollupPixels(state, maxZoom, zc, extraKeys, valueCols),
+      s"$path/coarse")
   }
 
   /** A pixel table (map_key, px, py, extraKeys.., valueCols..) re-addressed

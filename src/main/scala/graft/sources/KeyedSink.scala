@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.core.Salt
+import graft.core.{NioLocalFileSystem, Salt}
 import graft.functions.GeoFunctions.saltOf
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -36,7 +36,7 @@ object KeyedSink {
     val digits = Salt(modulus).digitCount
     val width = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val dirs = partitionCols :+ "salt"
-    df.withColumn("key", keyCol)
+    val sorted = df.withColumn("key", keyCol)
       .withColumn("salt", saltOf(col("key"), modulus))
       .withColumn("salted_key",
         concat_ws(":", lpad(col("salt"), digits, "0"), col("key")))
@@ -45,7 +45,8 @@ object KeyedSink {
       // required ordering, so it does NOT inject its own (unstable) sort —
       // which would destroy the key order inside each file
       .sortWithinPartitions((dirs :+ "salted_key").map(col): _*)
-      .write.mode("overwrite").partitionBy(dirs: _*).parquet(path)
+    NioLocalFileSystem.writer(sorted)
+      .mode("overwrite").partitionBy(dirs: _*).parquet(path)
   }
 
   /** Point lookup — the HBase-GET analog: salt-directory pruning + key

@@ -312,8 +312,7 @@ object Workflow {
             copyTree(p, Paths.get(s"$statePath/${srsDir(epsg)}/fine/$n"))
         }
       }
-      merge.coarse.write.mode("overwrite")
-        .parquet(s"$statePath/${srsDir(epsg)}/coarse")
+      MapBuild.writeCoarseCells(merge.coarse, s"$statePath/${srsDir(epsg)}/coarse")
       // only pixels under dirty tiles re-encode; every clean tile passes
       // through from the previous version by one broadcast anti-join, and
       // the projection is written once

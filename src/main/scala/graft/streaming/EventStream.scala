@@ -540,7 +540,8 @@ object EventStream {
       .option("maxFilesPerTrigger", 1).parquet(inDir)
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        batch.write.mode("append").parquet(s"$accumDir/lineitem.parquet")
+        graft.core.NioLocalFileSystem.writer(batch).mode("append")
+          .parquet(s"$accumDir/lineitem.parquet")
         graft.sources.Workflow.build(batch.sparkSession, accumDir, workDir)
         ()
       }

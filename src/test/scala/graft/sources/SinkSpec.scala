@@ -687,4 +687,78 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
       MapBuild.writePrunedState(state, store + "-bad", 6, 7)
     }
   }
+
+  test("every store and state write of build and incrementalUpdate carries the " +
+    "nio local filesystem as a writer option; the caller's session, its Hadoop " +
+    "conf and the FileSystem cache are untouched, and modes match a plain write") {
+    import graft.core.NioLocalFileSystem
+    import graft.operators.OccurrenceView
+    import java.nio.file.{Files, Path}
+    import org.apache.hadoop.fs.FileSystem
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import scala.jdk.CollectionConverters._
+
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[(String, Map[String, String])]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.analyzed.foreach {
+          case c: InsertIntoHadoopFsRelationCommand =>
+            writes.add(c.outputPath.toUri.getPath -> c.options)
+          case _ => ()
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val occ = OccurrenceView.occ(spark, Dir)
+    val inBox = col("lng") >= 0 && col("lng") < 40 && col("lat") >= 0 && col("lat") < 40
+    val dir = Files.createTempDirectory("nio-store").toString
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val fileUri = new java.net.URI("file:///")
+    // the scheme's cached filesystem (Hadoop's LocalFileSystem, or a
+    // service-loaded subclass such as Hive's ProxyLocalFileSystem)
+    val cached = FileSystem.get(fileUri, hconf)
+    spark.listenerManager.register(listener)
+    try {
+      Workflow.buildFrom(spark, occ.filter(!inBox), dir, Seq("EPSG:4326"), 6)
+      Workflow.incrementalUpdate(spark, occ.filter(inBox), dir, Seq("EPSG:4326"), 6)
+      // per version: points, blobs, fine state, coarse state, tiles
+      eventually(timeout(30.seconds))(assert(writes.size >= 10))
+    } finally spark.listenerManager.unregister(listener)
+    val ws = writes.asScala.toSeq
+    Seq("v1", "v2").foreach { v =>
+      Seq("points", "points_blobs", "state/srs=EPSG_4326/fine",
+          "state/srs=EPSG_4326/coarse", "tiles/srs=EPSG_4326").foreach { sub =>
+        assert(ws.exists(_._1 == s"$dir/$v/$sub"), s"no write of $v/$sub in ${ws.map(_._1)}")
+      }
+    }
+    ws.foreach { case (path, opts) =>
+      assert(opts.get("fs.file.impl").contains(classOf[NioLocalFileSystem].getName) &&
+        opts.get("fs.file.impl.disable.cache").contains("true"),
+        s"$path written without the nio filesystem: $opts")
+    }
+
+    // nothing leaked into the caller's session or the JVM-wide cache
+    assert(FileSystem.get(fileUri, hconf) eq cached)
+    assert(!cached.isInstanceOf[NioLocalFileSystem])
+    assert(hconf.get("fs.file.impl") === null)
+    assert(!spark.conf.getAll.keys.exists(_.contains("fs.file.impl")))
+
+    // every directory and file of the store has the mode a plain write gives
+    def mode(p: Path): Int = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+    def tree(root: String): Seq[Path] =
+      scala.util.Using.resource(Files.walk(java.nio.file.Paths.get(root)))(_.iterator.asScala.toList)
+    val plain = Files.createTempDirectory("plain-write").resolve("t").toString
+    spark.range(3).write.parquet(plain)
+    val (plainDirs, plainFiles) = tree(plain).partition(Files.isDirectory(_))
+    val dirMode = plainDirs.map(mode).distinct
+    val fileMode = plainFiles.map(mode).distinct
+    assert(dirMode.size === 1 && fileMode.size === 1, s"plain modes $dirMode $fileMode")
+    val (storeDirs, storeFiles) = (tree(s"$dir/v1") ++ tree(s"$dir/v2")).partition(Files.isDirectory(_))
+    assert(storeFiles.exists(_.getFileName.toString.endsWith(".crc")))
+    storeDirs.foreach(d => assert(mode(d) === dirMode.head, s"$d"))
+    storeFiles.foreach(f => assert(mode(f) === fileMode.head, s"$f"))
+  }
 }
