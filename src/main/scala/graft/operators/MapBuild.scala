@@ -694,8 +694,10 @@ object MapBuild {
     * maxZoom=6 that is a 256× reduction) from which the few coarse levels
     * (z < zc) recompute without touching the full state.
     */
-  def writePrunedState(state: DataFrame, path: String, maxZoom: Int, zc: Int): Unit =
-    writePrunedStateAs(state, path, maxZoom, zc, Nil, Seq("total"))
+  def writePrunedState(state: DataFrame, path: String, maxZoom: Int, zc: Int): Unit = {
+    writeFineCells(state, s"$path/fine", maxZoom, zc)
+    writeCoarseCells(rollupPixels(state, maxZoom, zc, Nil, Seq("total")), s"$path/coarse")
+  }
 
   /** Within-cell salt buckets for pruned-state fine writes. The write
     * repartitions on (pt, salt) instead of pt alone: `partitionBy("pt")`
@@ -708,9 +710,9 @@ object MapBuild {
   val StateSaltBuckets = 8
 
   /** Write one fine-state table in the prunable layout (partitioned by
-    * coarse cell, salted within cell). Shared by [[writePrunedStateAs]]
-    * and the store lifecycle's dirty-cell rewrite
-    * (Workflow.incrementalUpdate), so the layout exists once.
+    * coarse cell, salted within cell). Shared by [[writePrunedState]]
+    * and the store lifecycle (Workflow.buildFrom, and the dirty-cell
+    * rewrite of Workflow.incrementalUpdate), so the layout exists once.
     *
     * AQE interplay (intended): the salt bounds the MAXIMUM tasks per cell;
     * partition coalescing may still merge below-advisory-size (pt, salt)
@@ -732,24 +734,9 @@ object MapBuild {
 
   /** Write the coarse side table (the zc-grain rollup) of the prunable
     * layout — the other half beside [[writeFineCells]], shared by the same
-    * two callers. */
+    * callers. */
   private[graft] def writeCoarseCells(coarse: DataFrame, coarsePath: String): Unit =
     NioLocalFileSystem.writer(coarse).mode("overwrite").parquet(coarsePath)
-
-  /** Parameterized pruned-state writer — ONE implementation of the
-    * fine/coarse layout for every state schema: `extraKeys` are key columns
-    * beyond (map_key, px, py) (the store lifecycle threads bor_year
-    * through), `valueCols` the sum-mergeable values ("total" here,
-    * "occ_count" there). [[writePrunedState]] and Workflow.buildFrom both
-    * delegate here, so a layout change happens in one place.
-    */
-  private[graft] def writePrunedStateAs(state: DataFrame, path: String,
-      maxZoom: Int, zc: Int, extraKeys: Seq[String],
-      valueCols: Seq[String]): Unit = {
-    writeFineCells(state, s"$path/fine", maxZoom, zc)
-    writeCoarseCells(rollupPixels(state, maxZoom, zc, extraKeys, valueCols),
-      s"$path/coarse")
-  }
 
   /** A pixel table (map_key, px, py, extraKeys.., valueCols..) re-addressed
     * from zoom `fromZoom` to zoom `z` and collapsed by keyed addition — the
@@ -769,7 +756,7 @@ object MapBuild {
     * tiles it dirties: the one pruned-ingest kernel of
     * [[incrementalPyramidPruned]] (long keys, `total`, tile stats) and of
     * the store's `Workflow.incrementalUpdate` (string keys, `bor_year` +
-    * `occ_count`, MVT tiles). `statePath` holds [[writePrunedStateAs]]'s
+    * `occ_count`, MVT tiles). `statePath` holds [[writePrunedState]]'s
     * layout; `deltaTop` is the batch at `maxZoom` grain in the same schema,
     * (map_key, px, py, extraKeys.., valueCols..).
     *

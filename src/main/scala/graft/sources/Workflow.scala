@@ -2,8 +2,12 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.{Executors, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** S11 + §7.2 step 8: the prepare/build/finalise lifecycle with a manifest
   * pointer replacing the reference's ZK metastore (ZKMapMetastore.java:38-60,
@@ -99,6 +103,10 @@ object Workflow {
     }
   }
 
+  /** The four projections the store builds (TileMapBuilder.java:52-70):
+    * the default of every entry, and the only ones an entry accepts. */
+  val AllProjections = Seq("EPSG:4326", "EPSG:3857", "EPSG:3575", "EPSG:3031")
+
   /** Build both index tables for one scale-factor dir, then swap the
     * manifest. Returns the new manifest.
     *
@@ -106,12 +114,13 @@ object Workflow {
     * four SRS) is the serving-store depth the sandbox data warrants; the
     * reference's production build goes to z16 (TileMapBuilder.java:52-70 —
     * 17 zooms × 4 projections), which callers get by passing maxZoom = 16.
-    * Every depth writes each projection's tiles once ([[writeTiles]]).
+    * `maxZoom` must sit in [`StateCoarseZoom`, 16] and every projection in
+    * [[AllProjections]]; both are checked before any job runs. Every depth
+    * writes each projection's tiles once ([[writeTiles]]), and the writes
+    * run as concurrent Spark jobs ([[buildFrom]]).
     */
   def build(spark: SparkSession, sfDir: String, workDir: String,
-      projections: Seq[String] =
-        Seq("EPSG:4326", "EPSG:3857", "EPSG:3575", "EPSG:3031"),
-      maxZoom: Int = 6): Manifest = {
+      projections: Seq[String] = AllProjections, maxZoom: Int = 6): Manifest = {
     // the store build runs on the pyramid family's no-coalesce fork: at
     // production depth the max-zoom pixel aggregation has the same
     // byte-underestimated agg state that AQE's coalescer spilled on the
@@ -124,12 +133,22 @@ object Workflow {
 
   /** [[build]] over a caller-prepared occurrence frame — the incremental
     * lifecycle's fresh-rebuild comparator builds from a filtered base.
+    *
+    * After the snapshot barrier every write reads only persisted inputs, so
+    * the points store, the blob store and each projection's tile store,
+    * fine state and coarse state run as concurrent Spark jobs
+    * ([[writeConcurrently]]) instead of the reference's one-after-another
+    * driver loop (TileMapBuilder.java:270-272). A projection's max-zoom
+    * pixel table is persisted from the start of its first write to the end
+    * of its last ([[Shared]]). Every persisted frame is freed in a
+    * `finally`, and the manifest swaps only after every write succeeded; a
+    * failed write's exception propagates as itself and leaves the manifest
+    * as it was. Plans and store bytes are those of sequential writes.
     */
   def buildFrom(spark: SparkSession, occ: DataFrame, workDir: String,
-      projections: Seq[String] =
-        Seq("EPSG:4326", "EPSG:3857", "EPSG:3575", "EPSG:3031"),
-      maxZoom: Int = 6): Manifest = {
+      projections: Seq[String] = AllProjections, maxZoom: Int = 6): Manifest = {
     import graft.operators.{MapBuild, OccurrenceView, PointEncode, TileEncode}
+    checkArgs(projections, maxZoom)
     val version = readManifest(workDir).map(_.version + 1).getOrElse(1L)
     val pointsPath = s"$workDir/v$version/points"
     val tilesPath = s"$workDir/v$version/tiles"
@@ -141,43 +160,133 @@ object Workflow {
     // the input avro files to be read multiple times",
     // MapBuilder.java:184-199). At production scale this persist becomes a
     // parquet write of the snapshot.
-    val occSnapshot = occ
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    occSnapshot.count() // materialization barrier: one source scan, here
-
-    val exploded = MapBuild.explodeMapKeys(occSnapshot)
-    // points store: per-view feature rows keyed by map_key (salt 10,
-    // MapBuilder.java:92)
-    KeyedSink.writeSalted(MapBuild.pointAgg(exploded), col("map_key"),
-      PointSaltModulus, pointsPath)
-    // binary point-blob store for SMALL views — one deterministic
-    // PointFeatures blob per view, the reference's large/small bifurcation
-    // (MapBuilder.java:92-104): big views are served from the tile pyramid,
-    // small views from a single blob GET
-    val small = MapBuild.filterToViews(exploded,
-      MapBuild.largeViews(occSnapshot, OccurrenceView.Threshold), keep = false)
-    KeyedSink.writeSalted(
-      PointEncode.pointBlobs(spark, MapBuild.pointAgg(small)),
-      col("map_key"), PointSaltModulus, s"${pointsPath}_blobs")
-    // tiles store: MVT blobs for every zoom, one write per projection
-    projections.foreach { epsg =>
-      val top = MapBuild.pixelAggAt(occSnapshot, epsg, maxZoom)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // the max-zoom pixel table IS the store's sum-mergeable state —
-      // written alongside the blobs so incrementalUpdate() can absorb the
-      // next ingest batch by keyed addition instead of a corpus rescan;
-      // stored in the prunable fine/coarse layout so that merge reads
-      // only the delta's coarse-cell footprint
-      MapBuild.writePrunedStateAs(top, s"$workDir/v$version/state/${srsDir(epsg)}",
-        maxZoom, StateCoarseZoom, StateExtraKeys, StateValueCols)
-      writeTiles(epsg, TileEncode.mvtLevels(spark, MapBuild.chunkedLevels(top, maxZoom,
-        0, maxZoom, None, StateExtraKeys, StateValueCols)), tilesPath)
-      top.unpersist()
+    val occSnapshot = occ.persist(StorageLevel.MEMORY_AND_DISK)
+    // the max-zoom pixel table IS the store's sum-mergeable state — written
+    // alongside the blobs so incrementalUpdate() can absorb the next ingest
+    // batch by keyed addition instead of a corpus rescan; stored in the
+    // prunable fine/coarse layout so that merge reads only the delta's
+    // coarse-cell footprint. Its tile write and both state writes read it.
+    val tops = projections.map(epsg =>
+      epsg -> new Shared(3, keep => keep(MapBuild.pixelAggAt(occSnapshot, epsg, maxZoom))))
+    try {
+      occSnapshot.count() // materialization barrier: one source scan, here
+      val exploded = MapBuild.explodeMapKeys(occSnapshot)
+      // points store: per-view feature rows keyed by map_key (salt 10,
+      // MapBuilder.java:92)
+      val points = () => KeyedSink.writeSalted(MapBuild.pointAgg(exploded),
+        col("map_key"), PointSaltModulus, pointsPath)
+      // binary point-blob store for SMALL views — one deterministic
+      // PointFeatures blob per view, the reference's large/small bifurcation
+      // (MapBuilder.java:92-104): big views are served from the tile pyramid,
+      // small views from a single blob GET
+      val blobs = () => KeyedSink.writeSalted(
+        PointEncode.pointBlobs(spark, MapBuild.pointAgg(MapBuild.filterToViews(exploded,
+          MapBuild.largeViews(occSnapshot, OccurrenceView.Threshold), keep = false))),
+        col("map_key"), PointSaltModulus, s"${pointsPath}_blobs")
+      // per projection: MVT blobs for every zoom in one tile write, then the
+      // fine and coarse state
+      val srsWrites = tops.map { case (epsg, top) =>
+        val state = s"$workDir/v$version/state/${srsDir(epsg)}"
+        Seq[DataFrame => Unit](
+          t => writeTiles(epsg, TileEncode.mvtLevels(spark, MapBuild.chunkedLevels(t, maxZoom,
+            0, maxZoom, None, StateExtraKeys, StateValueCols)), tilesPath),
+          t => MapBuild.writeFineCells(t, s"$state/fine", maxZoom, StateCoarseZoom),
+          t => MapBuild.writeCoarseCells(MapBuild.rollupPixels(t, maxZoom, StateCoarseZoom,
+            StateExtraKeys, StateValueCols), s"$state/coarse")
+        ).map(w => () => top.use(w))
+      }
+      writeConcurrently(spark, longestFirst(srsWrites, blobs, points))
+    } finally {
+      tops.foreach(_._2.free())
+      occSnapshot.unpersist()
     }
-
-    occSnapshot.unpersist()
     writeManifest(workDir, Manifest(version, pointsPath, tilesPath))
   }
+
+  /** The arguments of [[buildFrom]] and [[incrementalUpdate]], checked
+    * before any job runs or any directory is written: the state layout
+    * needs maxZoom ≥ [[StateCoarseZoom]], the pixel address stops at
+    * OccurrenceView.MaxZoom (16), a projection outside [[AllProjections]]
+    * has no pixel math, and a repeated one would write its stores twice at
+    * once.
+    */
+  private def checkArgs(projections: Seq[String], maxZoom: Int): Unit = {
+    val deepest = graft.operators.OccurrenceView.MaxZoom
+    require(maxZoom >= StateCoarseZoom && maxZoom <= deepest,
+      s"maxZoom must sit in [$StateCoarseZoom, $deepest], got $maxZoom")
+    val unknown = projections.filterNot(AllProjections.contains)
+    require(unknown.isEmpty, s"unsupported projections ${unknown.mkString(", ")}; " +
+      s"the store builds ${AllProjections.mkString(", ")}")
+    require(projections.distinct.size == projections.size,
+      s"repeated projections in ${projections.mkString(", ")}")
+  }
+
+  /** Frames that `users` writes of one store call read, persisted through
+    * the `keep` function `make` is given: made when the first of those
+    * writes starts, freed when the last one ends, so a projection holds
+    * its pixel table only while its writes run. [[free]], which the caller
+    * also calls in a `finally`, releases even what a `make` that failed
+    * halfway persisted.
+    */
+  private final class Shared[T](users: Int, make: (DataFrame => DataFrame) => T) {
+    private val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    private var left = users
+    // a lazy val initializes under this object's lock, once; a `make` that
+    // threw is retried by the next write
+    private lazy val made = make { df => held += df; df.persist(StorageLevel.MEMORY_AND_DISK) }
+
+    def use(write: T => Unit): Unit =
+      try write(made) finally synchronized { left -= 1; if (left == 0) free() }
+
+    def free(): Unit = synchronized { held.foreach(_.unpersist()); held.clear() }
+  }
+
+  /** The submission order of a store call's writes, longest first as
+    * traced on a sequential perfbench `build` on 4 cores (tiles 1.28 s,
+    * blobs 0.97, fine state 0.68, points 0.61, coarse state 0.33): every
+    * projection's tile write, the blob store, every fine state, the points
+    * store, every coarse state. `srs` holds each projection's (tiles,
+    * fine, coarse) writes.
+    */
+  private def longestFirst(srs: Seq[Seq[() => Unit]], blobs: () => Unit,
+      points: () => Unit): Seq[() => Unit] =
+    srs.map(_(0)) ++ Seq(blobs) ++ srs.map(_(1)) ++ Seq(points) ++ srs.map(_(2))
+
+  /** Runs `writes` as concurrent Spark jobs and returns when all have
+    * ended. They take a pool of min(#writes, defaultParallelism) threads,
+    * made per call and shut down before this returns, in the order given.
+    * Each runs under `SQLExecution.withThreadLocalCaptured`, so the
+    * caller's active session and SparkContext local properties carry over
+    * (EventStream calls both store entries inside `foreachBatch`, whose
+    * execution id is one of them). Once a write fails, writes not yet
+    * started are skipped; every started one is waited for, then the first
+    * failure is rethrown as itself.
+    */
+  private def writeConcurrently(spark: SparkSession, writes: Seq[() => Unit]): Unit = {
+    val threads = new AtomicInteger()
+    val pool = Executors.newFixedThreadPool(
+      math.min(writes.size, spark.sparkContext.defaultParallelism),
+      (r: Runnable) => {
+        val t = new Thread(r, s"$WriteThreadPrefix${threads.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    val failure = new AtomicReference[Throwable]()
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    try {
+      writes.map(w => SQLExecution.withThreadLocalCaptured(session, pool) {
+        if (failure.get == null)
+          try w() catch { case t: Throwable => failure.compareAndSet(null, t) }
+      }).foreach(_.get())
+    } finally {
+      pool.shutdownNow()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
+    Option(failure.get).foreach(t => throw t)
+  }
+
+  /** Name prefix of [[writeConcurrently]]'s pool threads. */
+  private[sources] val WriteThreadPrefix = "store-write-"
 
   /** One salted write (keyed srs:mapKey:z:x:y, salt 100, MapBuilder.java:
     * 104) of a projection's tiles (map_key, z, tx, ty, mvt) at every zoom:
@@ -227,17 +336,24 @@ object Workflow {
     *    corpus-grain); the MVT encode — the dominant cost — is
     *    delta-proportional.
     *
+    * The arguments are checked as [[build]]'s are, before any job runs.
+    * As in [[buildFrom]], the points store, the blob store and each
+    * projection's tile store, fine state and coarse state run as concurrent
+    * Spark jobs ([[writeConcurrently]]); the merged points and each
+    * projection's merge are persisted from the start of their first write
+    * to the end of their last, everything persisted is freed in a
+    * `finally`, and the manifest swaps only after every write succeeded.
+    *
     * At production scale the clean-row passthrough becomes a file-level
     * manifest reference (only dirty salt partitions rewritten); here the
     * copy is the parquet-store analog. Falls back to [[build]] semantics
     * only in that a huge delta simply dirties most tiles.
     */
   def incrementalUpdate(spark: SparkSession, deltaOcc: DataFrame, workDir: String,
-      projections: Seq[String] =
-        Seq("EPSG:4326", "EPSG:3857", "EPSG:3575", "EPSG:3031"),
+      projections: Seq[String] = AllProjections,
       maxZoom: Int = 6, streamBatch: Long = -1L): Manifest = {
     import graft.operators.{MapBuild, OccurrenceView, PointEncode, TileEncode}
-    import org.apache.spark.storage.StorageLevel
+    checkArgs(projections, maxZoom)
     val prev = readManifest(workDir).getOrElse(
       throw new IllegalStateException(s"no manifest under $workDir — build() first"))
     val version = prev.version + 1
@@ -247,39 +363,12 @@ object Workflow {
     val statePath = s"$workDir/v$version/state"
 
     val delta = deltaOcc.persist(StorageLevel.MEMORY_AND_DISK)
-    delta.count() // snapshot barrier, as in build()
-
-    // ---- points store: state-merge, then re-derive the blob bifurcation
-    val oldPoints = spark.read.parquet(prev.points)
+    // ---- points store: state-merge, read by the points and blob writes
+    val merged = new Shared(2, keep => keep(spark.read.parquet(prev.points)
       .select("map_key", "lat10", "lng10", "bor_year", "occ_count")
-    val mergedPoints = oldPoints
       .unionByName(MapBuild.pointAgg(MapBuild.explodeMapKeys(delta)))
       .groupBy("map_key", "lat10", "lng10", "bor_year")
-      .agg(sum("occ_count").as("occ_count"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    KeyedSink.writeSalted(mergedPoints, col("map_key"),
-      PointSaltModulus, pointsPath)
-    // blob store, delta-proportional: a view's blob can only change if the
-    // delta touched the view, and a view can only ENTER the small side if
-    // the delta touched it (counts grow monotonically) — so re-encode
-    // exactly smallKeys ∩ dirtyViews and pass every other small blob
-    // through from the previous version (views that LEFT the small side
-    // are in dirtyViews, so the passthrough can't resurrect them)
-    val smallKeys = mergedPoints.groupBy("map_key")
-      .agg(sum("occ_count").as("n"))
-      .filter(col("n") < OccurrenceView.Threshold).select("map_key")
-    val dirtyViews = MapBuild.explodeMapKeys(delta).select("map_key").distinct()
-    val reEncode = PointEncode.pointBlobs(spark,
-      mergedPoints
-        .join(broadcast(smallKeys), Seq("map_key"), "left_semi")
-        .join(broadcast(dirtyViews), Seq("map_key"), "left_semi"))
-    val keptBlobs = spark.read.parquet(s"${prev.points}_blobs")
-      .select("map_key", "blob")
-      .join(broadcast(dirtyViews), Seq("map_key"), "left_anti")
-    KeyedSink.writeSalted(
-      keptBlobs.unionByName(reEncode.select("map_key", "blob")),
-      col("map_key"), PointSaltModulus, s"${pointsPath}_blobs")
-
+      .agg(sum("occ_count").as("occ_count"))))
     // ---- tiles store: per projection, merge state + dirty-only re-encode.
     // The state READ is delta-proportional too (the round-6 audit's one
     // scale caveat): the fine state is read through a coarse-cell partition
@@ -287,47 +376,84 @@ object Workflow {
     // new version by FILE COPY (the manifest-reference analog), and zooms
     // below StateCoarseZoom — whose dirty tiles span clean cells — derive
     // from the zc-grain coarse side table instead of the full state.
-    require(maxZoom >= StateCoarseZoom,
-      s"state layout needs maxZoom >= $StateCoarseZoom")
-    projections.foreach { epsg =>
-      val deltaTop = MapBuild.pixelAggAt(delta, epsg, maxZoom)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // pruned merge + dirty recompute through the SHARED kernel
-      // (MapBuild.PrunedMerge) — the q145 operator runs the same one on its
-      // long-keyed `total` state; here the state schema carries bor_year.
-      // Both merges are persisted: each is written as the new state AND
-      // read by the recompute
+    // Pruned merge + dirty recompute through the SHARED kernel
+    // (MapBuild.PrunedMerge) — the q145 operator runs the same one on its
+    // long-keyed `total` state; here the state schema carries bor_year.
+    // Both merges are persisted: each is written as the new state AND read
+    // by the recompute
+    val merges = projections.map(epsg => epsg -> new Shared(3, keep => {
+      val deltaTop = keep(MapBuild.pixelAggAt(delta, epsg, maxZoom))
       val merge = new MapBuild.PrunedMerge(spark, s"$prevState/${srsDir(epsg)}",
         deltaTop, maxZoom, StateCoarseZoom, StateExtraKeys, StateValueCols)
-      merge.fine.persist(StorageLevel.MEMORY_AND_DISK)
-      merge.coarse.persist(StorageLevel.MEMORY_AND_DISK)
-      MapBuild.writeFineCells(merge.fine,
-        s"$statePath/${srsDir(epsg)}/fine", maxZoom, StateCoarseZoom)
-      val dirtyDirs = merge.dirtyPts.map(p => s"pt=$p").toSet
-      scala.util.Using.resource(
-          Files.list(Paths.get(s"$prevState/${srsDir(epsg)}/fine"))) { st =>
-        st.forEach { p =>
-          val n = p.getFileName.toString
-          if (Files.isDirectory(p) && n.startsWith("pt=") && !dirtyDirs(n))
-            copyTree(p, Paths.get(s"$statePath/${srsDir(epsg)}/fine/$n"))
-        }
+      keep(merge.fine)
+      keep(merge.coarse)
+      (deltaTop, merge)
+    }))
+    try {
+      delta.count() // snapshot barrier, as in build()
+      val points = () => merged.use(KeyedSink.writeSalted(_, col("map_key"),
+        PointSaltModulus, pointsPath))
+      // blob store, delta-proportional: a view's blob can only change if the
+      // delta touched the view, and a view can only ENTER the small side if
+      // the delta touched it (counts grow monotonically) — so re-encode
+      // exactly smallKeys ∩ dirtyViews and pass every other small blob
+      // through from the previous version (views that LEFT the small side
+      // are in dirtyViews, so the passthrough can't resurrect them)
+      val blobs = () => merged.use { mergedPoints =>
+        val smallKeys = mergedPoints.groupBy("map_key")
+          .agg(sum("occ_count").as("n"))
+          .filter(col("n") < OccurrenceView.Threshold).select("map_key")
+        val dirtyViews = MapBuild.explodeMapKeys(delta).select("map_key").distinct()
+        val reEncode = PointEncode.pointBlobs(spark,
+          mergedPoints
+            .join(broadcast(smallKeys), Seq("map_key"), "left_semi")
+            .join(broadcast(dirtyViews), Seq("map_key"), "left_semi"))
+        val keptBlobs = spark.read.parquet(s"${prev.points}_blobs")
+          .select("map_key", "blob")
+          .join(broadcast(dirtyViews), Seq("map_key"), "left_anti")
+        KeyedSink.writeSalted(
+          keptBlobs.unionByName(reEncode.select("map_key", "blob")),
+          col("map_key"), PointSaltModulus, s"${pointsPath}_blobs")
       }
-      MapBuild.writeCoarseCells(merge.coarse, s"$statePath/${srsDir(epsg)}/coarse")
-      // only pixels under dirty tiles re-encode; every clean tile passes
-      // through from the previous version by one broadcast anti-join, and
-      // the projection is written once
-      val dirty = MapBuild.dirtyTiles(deltaTop, 0, maxZoom)
-      val fresh = TileEncode.mvtLevels(spark, merge.levels(dirty, 0, identity))
-      val clean = spark.read.parquet(s"${prev.tiles}/${srsDir(epsg)}")
-        .select("map_key", "z", "tx", "ty", "mvt")
-        .withColumn("ztxy", MapBuild.packZtxy(col("z"), col("tx"), col("ty")))
-        .join(broadcast(dirty), Seq("map_key", "ztxy"), "left_anti")
-        .drop("ztxy")
-      writeTiles(epsg, clean.unionByName(fresh), tilesPath)
-      graft.core.Lifecycle.freeCheckpoint(dirty)
-      merge.fine.unpersist(); merge.coarse.unpersist(); deltaTop.unpersist()
+      val srsWrites = merges.map { case (epsg, shared) =>
+        val state = s"$statePath/${srsDir(epsg)}"
+        Seq[((DataFrame, MapBuild.PrunedMerge)) => Unit](
+          { case (deltaTop, merge) =>
+            // only pixels under dirty tiles re-encode; every clean tile
+            // passes through from the previous version by one broadcast
+            // anti-join, and the projection is written once
+            val dirty = MapBuild.dirtyTiles(deltaTop, 0, maxZoom)
+            try {
+              val fresh = TileEncode.mvtLevels(spark, merge.levels(dirty, 0, identity))
+              val clean = spark.read.parquet(s"${prev.tiles}/${srsDir(epsg)}")
+                .select("map_key", "z", "tx", "ty", "mvt")
+                .withColumn("ztxy", MapBuild.packZtxy(col("z"), col("tx"), col("ty")))
+                .join(broadcast(dirty), Seq("map_key", "ztxy"), "left_anti")
+                .drop("ztxy")
+              writeTiles(epsg, clean.unionByName(fresh), tilesPath)
+            } finally graft.core.Lifecycle.freeCheckpoint(dirty)
+          },
+          { case (_, merge) =>
+            MapBuild.writeFineCells(merge.fine, s"$state/fine", maxZoom, StateCoarseZoom)
+            val dirtyDirs = merge.dirtyPts.map(p => s"pt=$p").toSet
+            scala.util.Using.resource(
+                Files.list(Paths.get(s"$prevState/${srsDir(epsg)}/fine"))) { st =>
+              st.forEach { p =>
+                val n = p.getFileName.toString
+                if (Files.isDirectory(p) && n.startsWith("pt=") && !dirtyDirs(n))
+                  copyTree(p, Paths.get(s"$state/fine/$n"))
+              }
+            }
+          },
+          { case (_, merge) => MapBuild.writeCoarseCells(merge.coarse, s"$state/coarse") }
+        ).map(w => () => shared.use(w))
+      }
+      writeConcurrently(spark, longestFirst(srsWrites, blobs, points))
+    } finally {
+      merges.foreach(_._2.free())
+      merged.free()
+      delta.unpersist()
     }
-    mergedPoints.unpersist(); delta.unpersist()
     writeManifest(workDir,
       Manifest(version, pointsPath, tilesPath, streamBatch))
   }

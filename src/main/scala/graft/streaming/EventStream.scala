@@ -578,8 +578,7 @@ object EventStream {
     */
   def continuousIncrementalIngest(spark: SparkSession, inDir: String,
       schema: StructType, workDir: String,
-      projections: Seq[String] =
-        Seq("EPSG:4326", "EPSG:3857", "EPSG:3575", "EPSG:3031"),
+      projections: Seq[String] = graft.sources.Workflow.AllProjections,
       maxZoom: Int = 6, checkpointDir: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val w = spark.readStream.schema(schema)

@@ -761,4 +761,120 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     storeDirs.foreach(d => assert(mode(d) === dirMode.head, s"$d"))
     storeFiles.foreach(f => assert(mode(f) === fileMode.head, s"$f"))
   }
+
+  // one 4326 z2 store the bad-argument ingests below are pointed at
+  private lazy val smallStore = {
+    val dir = java.nio.file.Files.createTempDirectory("small-store").toString
+    Workflow.buildFrom(spark, graft.operators.OccurrenceView.occ(spark, Dir), dir,
+      Seq("EPSG:4326"), 2)
+    dir
+  }
+
+  Seq(
+    "maxZoom below the state layout's coarse zoom" ->
+      (Seq("EPSG:4326"), Workflow.StateCoarseZoom - 1),
+    "maxZoom past the z16 pixel address" -> (Seq("EPSG:4326"), 17),
+    "an unsupported projection" -> (Seq("EPSG:4326", "EPSG:9999"), 2),
+    // two concurrent writes of one projection would race on its directories
+    "a repeated projection" -> (Seq("EPSG:4326", "EPSG:4326"), 2)
+  ).foreach { case (what, (projections, maxZoom)) =>
+    test(s"buildFrom and incrementalUpdate reject $what before any directory " +
+      "is written or any frame cached") {
+      import java.nio.file.{Files, Paths}
+      val occ = graft.operators.OccurrenceView.occ(spark, Dir)
+      val store = smallStore
+      assert(spark.sharedState.cacheManager.isEmpty, "cache not empty before the call")
+      val fresh = Files.createTempDirectory("bad-args").toString
+      intercept[IllegalArgumentException] {
+        Workflow.buildFrom(spark, occ, fresh, projections, maxZoom)
+      }
+      assert(!Files.exists(Paths.get(fresh, "v1")), s"buildFrom wrote $fresh/v1")
+      assert(spark.sharedState.cacheManager.isEmpty, "buildFrom left cached frames")
+      intercept[IllegalArgumentException] {
+        Workflow.incrementalUpdate(spark, occ.limit(10), store, projections, maxZoom)
+      }
+      assert(!Files.exists(Paths.get(store, "v2")), s"incrementalUpdate wrote $store/v2")
+      assert(spark.sharedState.cacheManager.isEmpty, "incrementalUpdate left cached frames")
+      assert(Workflow.readManifest(store).map(_.version) === Some(1L))
+    }
+  }
+
+  test("a failed store write propagates its own exception type and leaves no " +
+    "manifest, cached frame or write thread; a rerun into the same directory succeeds") {
+    import graft.core.NioLocalFileSystem
+    import java.nio.file.{Files, Paths}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import scala.jdk.CollectionConverters._
+    val occ = graft.operators.OccurrenceView.occ(spark, Dir)
+    val dir = Files.createTempDirectory("failed-write")
+    // a plain file where the tile store's parent directory goes: the tile
+    // write cannot make its directory (an overwrite would delete a file AT
+    // the store path), while the points, blob and state writes can
+    val blocker = dir.resolve("v1/tiles")
+    Files.createDirectories(blocker.getParent)
+    Files.write(blocker, Array[Byte](1))
+    // what the same write throws on its own, outside the pool
+    val alone = intercept[Exception] {
+      NioLocalFileSystem.writer(spark.range(1).toDF()).parquet(blocker.resolve("probe").toString)
+    }
+    val thrown = intercept[Exception] {
+      Workflow.buildFrom(spark, occ, dir.toString, Seq("EPSG:4326"), 2)
+    }
+    assert(thrown.getClass === alone.getClass, s"thrown $thrown, alone $alone")
+    assert(!thrown.isInstanceOf[java.util.concurrent.ExecutionException])
+    assert(!Files.exists(dir.resolve("manifest.json")), "manifest swapped after a failed write")
+    assert(spark.sharedState.cacheManager.isEmpty, "failed build left cached frames")
+    eventually(timeout(10.seconds)) {
+      val alive = Thread.getAllStackTraces.keySet.asScala
+        .filter(t => t.isAlive && t.getName.startsWith(Workflow.WriteThreadPrefix))
+      assert(alive.isEmpty, s"write threads still alive: ${alive.map(_.getName)}")
+    }
+    Files.delete(blocker)
+    val m = Workflow.buildFrom(spark, occ, dir.toString, Seq("EPSG:4326"), 2)
+    assert(m.version === 1L)
+    assert(Workflow.readManifest(dir.toString) === Some(m))
+    assert(spark.read.parquet(s"${m.tiles}/srs=EPSG_4326").count() > 0)
+    assert(spark.sharedState.cacheManager.isEmpty, "rerun left cached frames")
+  }
+
+  test("buildFrom runs its independent writes as concurrent Spark jobs: at " +
+    "least two write executions overlap") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import scala.jdk.CollectionConverters._
+
+    // the SQL execution events carry start and end times (a
+    // QueryExecutionListener sees only a duration, under another id)
+    val starts = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+    val ends = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart
+            if x.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") =>
+          starts.put(x.executionId, x.time)
+        case x: SparkListenerSQLExecutionEnd => ends.put(x.executionId, x.time)
+        case _ => ()
+      }
+    }
+    val occ = graft.operators.OccurrenceView.occ(spark, Dir)
+    val dir = java.nio.file.Files.createTempDirectory("concurrent-store").toString
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Workflow.buildFrom(spark, occ, dir, Seq("EPSG:4326", "EPSG:3857"), 2)
+      // points, blobs, then per projection tiles, fine and coarse state
+      eventually(timeout(30.seconds)) {
+        assert(starts.size === 8)
+        assert(starts.keySet.asScala.forall(ends.containsKey))
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val spans = starts.asScala.toSeq.map { case (id, t0) => (t0: Long, ends.get(id): Long) }
+      .sortBy(_._1)
+    // sorted by start, some write overlaps another iff one starts before
+    // its predecessor ends
+    assert(spans.zip(spans.tail).exists { case ((_, e1), (s2, _)) => s2 < e1 },
+      s"no two write executions overlap: $spans")
+  }
 }
