@@ -122,7 +122,6 @@ object Lab {
     // pure partitioning. The pixel table is pinned outside the timed runs.
     "saltAB" -> { h =>
       val s2 = MapBuild.noCoalesceSession(h.spark)
-      graft.functions.JavaHashExpr.register(s2)
       val px = memo(d => MapBuild.explodeMapKeys(
           MapBuild.withPixels(OccurrenceView.occ(s2, d), "EPSG:3857"))
         .groupBy("map_key", "px", "py").agg(count(lit(1)).as("total"))

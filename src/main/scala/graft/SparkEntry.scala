@@ -271,10 +271,8 @@ object SparkEntry {
           / length(col("text")), 6).as("punct_ratio"))),
 
     // Text: document fingerprint (31-polynomial rolling hash mod 2^32)
-    "q23_doc_fingerprint" -> ((s, dir) => {
-      val fp = udf { (t: String) => Dedup.cpFold(t, 4294967296L) }
-      documents(s, dir).select(col("doc_id"), fp(col("text")).as("fp"))
-    }),
+    "q23_doc_fingerprint" -> ((s, dir) =>
+      documents(s, dir).select(col("doc_id"), Dedup.cpFold32(col("text")).as("fp"))),
 
     // J1: country-mask semi-join of density pixels against a mask view's pixels
     "q34_country_mask" -> ((s, dir) => {

@@ -1,11 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.ExprColumn
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Dot product of two `array<float>` columns as a native Catalyst
@@ -96,19 +97,6 @@ case class DotProductExpr(left: Expression, right: Expression)
 }
 
 object DotProductExpr {
-  val name = "graft_dot"
-
-  /** Registry builder with arity validation (the analyzer surfaces the
-    * message).
-    */
-  val builder: Seq[Expression] => Expression = {
-    case Seq(l, r) => DotProductExpr(l, r)
-    case other => throw new IllegalArgumentException(
-      s"$name expects exactly 2 arguments, got ${other.size}")
-  }
-
-  /** Idempotent per-session registration (same route as [[JavaHashExpr]]). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, builder, "internal")
+  def of(a: Column, b: Column): Column =
+    ExprColumn(DotProductExpr(ExprColumn.expr(a), ExprColumn.expr(b)))
 }

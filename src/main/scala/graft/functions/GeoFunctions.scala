@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * Everything that is pure arithmetic is expressed as native Column math so it
   * stays inside WholeStageCodegen (the reference used Java UDFs for all of
   * these: GlobalPixelUDF.java:31-58, EncodeBorYearUDF.java:49-62,
-  * HBaseKeyUDF.java:42-63). Only the polar projections and the tile-replica
-  * generator need Scala UDFs.
+  * HBaseKeyUDF.java:42-63). The Java-hashCode salt is a native Catalyst
+  * expression ([[JavaHashExpr]]); nothing here is a UDF.
   */
 object GeoFunctions {
 
@@ -131,30 +131,11 @@ object GeoFunctions {
   /** `hash & 0x0fffffff % modulus` salt from Java String.hashCode parity
     * (ModulusSalt.java:61-65). Spark's `hash()` is Murmur3, so this needs
     * custom code: a native Catalyst expression with codegen
-    * ([[JavaHashExpr]]) registered on the active session, so the salted-key
-    * path stays inside WholeStageCodegen; a JIT'd UDF is the fallback when
-    * no session is active at plan-build time.
+    * ([[JavaHashExpr]]), so the salted-key path stays inside
+    * WholeStageCodegen.
     */
-  private val javaHashUdf = udf { (s: String) =>
-    if (s == null) null else Integer.valueOf(s.hashCode)
-  }
-
-  /** Registration is per-session: the Column must be ANALYZED by a session
-    * that has the function (register on the active + default sessions here;
-    * `GraftExtensions` installs it at session build; sinks register on
-    * their DataFrame's own session). Cross-session plan reuse without any
-    * of those falls back to the UDF only when no session is active.
-    */
-  def javaHash(key: Column): Column = {
-    val ss = org.apache.spark.sql.SparkSession
-    (ss.getActiveSession.toSeq ++ ss.getDefaultSession.toSeq)
-      .distinct.foreach(JavaHashExpr.register)
-    if (ss.getActiveSession.isEmpty && ss.getDefaultSession.isEmpty) javaHashUdf(key)
-    else call_function(JavaHashExpr.name, key)
-  }
-
   def saltOf(key: Column, modulus: Int): Column =
-    pmod(javaHash(key).bitwiseAND(lit(0xfffffff)), lit(modulus))
+    pmod(JavaHashExpr.of(key).bitwiseAND(lit(0xfffffff)), lit(modulus))
 
   /** Full salted sort key "NNN:mapKey:z:x:y" (HBaseKeyUDF.java:42-52). */
   def saltedTileKey(mapKey: Column, z: Column, x: Column, y: Column, modulus: Int): Column = {

@@ -1,14 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.ExprColumn
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The ExactSubstr 63-bit gram key as ONE codegen pass:
   * `unsigned32(hashCode(s)) << 31 | (hashCode(reverse(s)) & 0x7FFFFFFF)` —
-  * semantically identical to composing `graft_java_hash` with `reverse`
+  * semantically identical to composing [[JavaHashExpr]] with `reverse`
   * (FunctionsSpec asserts the equivalence), but computed with a single
   * forward + backward fold over one decoded string: no reversed-string
   * allocation, no second toString, and the forward fold is
@@ -63,7 +64,7 @@ case class GramKeyExpr(child: Expression) extends UnaryExpression {
 }
 
 object GramKeyExpr {
-  val name = "graft_gram_key63"
+  def of(gram: Column): Column = ExprColumn(GramKeyExpr(ExprColumn.expr(gram)))
 
   /** Shared by the interpreted and codegen paths. The backward fold walks
     * code points: a (high, low) surrogate pair is folded high-then-low —
@@ -86,14 +87,4 @@ object GramKeyExpr {
     }
     ((h1.toLong & 0xFFFFFFFFL) << 31) | (h2.toLong & 0x7FFFFFFFL)
   }
-
-  val builder: Seq[Expression] => Expression = {
-    case Seq(child) => GramKeyExpr(child)
-    case other => throw new IllegalArgumentException(
-      s"$name expects exactly 1 argument, got ${other.size}")
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, builder, "internal")
 }

@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.ExprColumn
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -16,6 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * semantic Spark genuinely lacks, expressed as an `Expression` with
   * `doGenCode` instead of a UDF. The UTF-16 hash is computed by iterating
   * the decoded string; both eval paths share `String.hashCode` itself.
+  * Callers take it as a Column through [[JavaHashExpr.of]].
   */
 case class JavaHashExpr(child: Expression) extends UnaryExpression {
 
@@ -40,23 +42,5 @@ case class JavaHashExpr(child: Expression) extends UnaryExpression {
 }
 
 object JavaHashExpr {
-  val name = "graft_java_hash"
-
-  /** Registry builder with arity validation (the analyzer surfaces the
-    * message) — `children.head` alone would silently drop extra arguments.
-    */
-  val builder: Seq[Expression] => Expression = {
-    case Seq(child) => JavaHashExpr(child)
-    case other => throw new IllegalArgumentException(
-      s"$name expects exactly 1 argument, got ${other.size}")
-  }
-
-  /** Idempotent per-session registration — the public route to a custom
-    * Expression is the function registry (the SparkSessionExtensions
-    * `injectFunction` hook does exactly this at session build; registering
-    * lazily keeps the library working with caller-provided sessions too).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, builder, "internal")
+  def of(key: Column): Column = ExprColumn(JavaHashExpr(ExprColumn.expr(key)))
 }

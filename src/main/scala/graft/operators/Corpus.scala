@@ -656,7 +656,7 @@ object Corpus {
       .filter(size(col("toks")) >= 2)
       .select(col("doc_id"), col("lang"), explode(allNgrams("toks", 2)).as("bg"))
       .select(col("doc_id"), col("lang"),
-        graft.functions.GeoFunctions.javaHash(col("bg"))
+        graft.functions.JavaHashExpr.of(col("bg"))
           .bitwiseAND(lit(buckets - 1)).cast("int").as("f"))
   }
 
@@ -774,7 +774,7 @@ object Corpus {
       exactLm, bcastLm = false).select(col("doc_id"), col("w").as("wx"))
     arms.map { b =>
       val base = bgs.select(col("doc_id"), col("lang"),
-        graft.functions.GeoFunctions.javaHash(col("bg"))
+        graft.functions.JavaHashExpr.of(col("bg"))
           .bitwiseAND(lit(b - 1)).cast("int").as("f"))
       val lm = base
         .select(col("f"),
@@ -1350,13 +1350,11 @@ object Corpus {
       .select(col("doc_id"), col("source"), col("pos").cast("long").as("pos"))
 
   def exportShards(docs: DataFrame, nShards: Int): DataFrame = {
-    // null text fingerprints as 0 instead of NPEing, matching the other
-    // text-hash paths (minhashSigUdf / tokens are null-safe)
-    val fp = udf { (t: String) => if (t == null) 0L else Dedup.cpFold(t, 4294967296L) }
     docs
       .withColumn("shard", (lcg(col("doc_id")) % nShards).cast("int"))
       .withColumn("n_tokens", size(tokens(col("text"))).cast("long"))
-      .withColumn("fp", fp(col("text")))
+      // null text fingerprints as 0, not null: the checksum counts it
+      .withColumn("fp", coalesce(Dedup.cpFold32(col("text")), lit(0L)))
       .groupBy("shard")
       .agg(count(lit(1)).as("n_docs"),
         sum("n_tokens").as("sum_tokens"),

@@ -83,10 +83,6 @@ object MapBuild {
       .groupBy("map_key", "lat10", "lng10", "bor_year")
       .agg(count(lit(1)).as("occ_count"))
 
-  // JIT while-loop fold over CODE POINTS (Dedup.cpFold — the repo's text
-  // hash convention; matches the oracle's per-character UTF-8 fold)
-  private val hash32 = udf { (s: String) => Dedup.cpFold(s, 4294967296L) }
-
   /** A3: per-view feature rollup with an order-insensitive content
     * fingerprint (sum of per-feature 32-bit hashes). The reference collects
     * structs then proto-encodes (PointMapBuilder.java:73-92); a commutative
@@ -100,7 +96,7 @@ object MapBuild {
       .agg(
         count(lit(1)).as("n_features"),
         sum("occ_count").as("total"),
-        (sum(hash32(
+        (sum(Dedup.cpFold32(
           concat_ws(",", col("lat10"), col("lng10"), col("bor_year"), col("occ_count"))
         )) % 4294967296L).as("blob_fp")
       )

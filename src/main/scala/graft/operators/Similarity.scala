@@ -41,27 +41,12 @@ object Similarity {
     }.apply(emb)
   }
 
-  private val dotUdf = udf { (a: Seq[Float], b: Seq[Float]) =>
-    if (a == null || b == null || a.length != b.length) null
-    else {
-      var d = 0.0; var i = 0
-      while (i < a.length) { d += a(i).toDouble * b(i).toDouble; i += 1 }
-      d
-    }: java.lang.Double
-  }
-
   /** Pairwise dot product — the native codegen Expression
-    * ([[graft.functions.DotProductExpr]]) when a session is active (stays
-    * inside WholeStageCodegen, no per-row Seq[Float] boxing), the JIT UDF
-    * as the sessionless fallback; both accumulate ascending, bit-identical.
+    * ([[graft.functions.DotProductExpr]]): stays inside WholeStageCodegen,
+    * no per-row Seq[Float] boxing, ascending accumulation.
     */
-  def dotCols(a: Column, b: Column): Column = {
-    val ss = org.apache.spark.sql.SparkSession
-    (ss.getActiveSession.toSeq ++ ss.getDefaultSession.toSeq)
-      .distinct.foreach(graft.functions.DotProductExpr.register)
-    if (ss.getActiveSession.isEmpty && ss.getDefaultSession.isEmpty) dotUdf(a, b)
-    else call_function(graft.functions.DotProductExpr.name, a, b)
-  }
+  def dotCols(a: Column, b: Column): Column =
+    graft.functions.DotProductExpr.of(a, b)
 
   private val sqNormUdf = udf { (a: Seq[Float]) =>
     if (a == null) null

@@ -183,13 +183,6 @@ object Sketch {
   val BloomM = 65536
   val BloomK = 3
 
-  /** q23's document fingerprint (31-polynomial code-point fold mod 2^32) —
-    * the content key the Bloom filter summarizes.
-    */
-  private val docFpUdf = udf { (t: String) =>
-    if (t == null) null else java.lang.Long.valueOf(Dedup.cpFold(t, 4294967296L))
-  }
-
   /** The k probe positions of a fingerprint: ((a_i·fp + b_i) mod M) mod m,
     * the repo-wide affine family. fp < 2^32 and a_i < 2^26 keep every
     * product below 2^63 — exact in any engine.
@@ -205,7 +198,7 @@ object Sketch {
     * between them.
     */
   def bloomPositionRows(docs: DataFrame): DataFrame =
-    docs.select(explode(bloomPositions(docFpUdf(col("text")))).as("pos"))
+    docs.select(explode(bloomPositions(Dedup.cpFold32(col("text")))).as("pos"))
 
   /** Bloom-filter ingest pre-filter: summarize the EXISTING corpus's
     * document fingerprints into an m-bit Bloom filter, then test every
@@ -224,11 +217,11 @@ object Sketch {
     */
   def bloomIngest(corpus: DataFrame, newDocs: DataFrame): DataFrame = {
     val bits = bloomPositionRows(corpus).distinct()
-    val nb = newDocs.select(col("doc_id"), docFpUdf(col("text")).as("fp"))
+    val nb = newDocs.select(col("doc_id"), Dedup.cpFold32(col("text")).as("fp"))
     val hits = nb.select(col("doc_id"), explode(bloomPositions(col("fp"))).as("pos"))
       .join(broadcast(bits), Seq("pos"), "left_semi")
       .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
-    val oldFp = corpus.select(docFpUdf(col("text")).as("fp")).distinct()
+    val oldFp = corpus.select(Dedup.cpFold32(col("text")).as("fp")).distinct()
       .withColumn("seen", lit(1))
     nb.join(hits, Seq("doc_id"), "left")
       .join(oldFp, Seq("fp"), "left")
@@ -285,12 +278,6 @@ object Sketch {
 
   /** The repo-convention 31-polynomial mod 2^31−1 hash as a Column. */
   def tokenHash(c: Column): Column = tokenHashUdf(c)
-
-  /** q23's whole-document content fingerprint as a Column — shared by the
-    * batch KMV (q112) and the streaming sketch maintainer so hash semantics
-    * can never drift between them.
-    */
-  def docContentHash(c: Column): Column = docFpUdf(c)
 
   // ---------------------------------------------------------------- KMV
 
@@ -427,7 +414,9 @@ object Sketch {
     val quota = least(col("c"),
       ceil(sqrt(col("c").cast("double")) * boost).cast("long"))
     val counts = docs.groupBy("source").agg(count(lit(1)).as("c"))
-      .persist() // tiny (#sources); feeds the k computation AND the quotas
+      // tiny (#sources); feeds the k computation AND the quotas. A
+      // checkpoint, not a cache entry: freed with the plan that reads it
+      .localCheckpoint()
     // coalesce: max over ZERO sources is null — an empty corpus must yield
     // an empty pick, not an NPE (the triangleOrientation bug class)
     val kMax = counts.select(quota.as("q"))
@@ -471,9 +460,10 @@ object Sketch {
     val spark = docs.sparkSession
     import spark.implicits._
     val sk = docs
-      .select(col("source"), docFpUdf(col("text")).as("h"))
+      .select(col("source"), Dedup.cpFold32(col("text")).as("h"))
       .groupBy("source").agg(kmv(k)(col("h")).as("kmv"))
-      .persist() // tiny (#domains rows); feeds the pair collect AND both join sides
+      // tiny (#domains rows); feeds the pair collect AND both join sides
+      .localCheckpoint()
     val srcs = sk.select("source").collect().map(_.getString(0)).sorted.toSeq
     val pairs = (for { a <- srcs; b <- srcs if a < b } yield (a, b))
       .toDF("source_a", "source_b")

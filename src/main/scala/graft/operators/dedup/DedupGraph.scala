@@ -676,7 +676,7 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
       val m = pmod(v * lit(mult), lit(4294967296L))
       m.bitwiseXOR(shiftright(m, 16))
     }
-    val u = pmod(graft.functions.GeoFunctions.javaHash(
+    val u = pmod(graft.functions.JavaHashExpr.of(
       concat_ws(":", src.cast("string"), dst.cast("string"))).cast("long"),
       lit(4294967296L))
     mix(mix(u, 1000003L), 999983L)
@@ -739,7 +739,6 @@ private[graft] trait DedupGraph extends Serializable { this: DedupMinHash =>
         // round-9 ADVICE). Keying on the pair decorrelates per node and
         // stays SQL-expressible, so the bounded arm is DuckDB
         // oracle-paired (q181) like every other arm in the house.
-        graft.functions.JavaHashExpr.register(edgesIn.sparkSession)
         val h = voteSampleHash(col("src"), col("dst"))
         val sampled = sym.join(degrees(sym).withColumnRenamed("doc_id", "src"), Seq("src"))
           .filter(col("deg") <= 4L * maxVotes ||

@@ -50,6 +50,16 @@ private[graft] trait DedupMinHash extends Serializable { this: DedupJoins with D
     a
   }
 
+  private val cpFold32Udf = udf { (s: String) =>
+    if (s == null) null else java.lang.Long.valueOf(cpFold(s, 4294967296L))
+  }
+
+  /** [[cpFold]] mod 2³² of a string column, null for null: the repo's one
+    * 32-bit text fingerprint (q23's document fingerprint, q112's KMV and
+    * its streaming maintainer, the point-blob checksum, export shards).
+    */
+  def cpFold32(text: Column): Column = cpFold32Udf(text)
+
   /** Full MinHash signature in one JIT-compiled pass over the text (the
     * HOF-expression formulation evaluates interpreted per element — ~10×
     * slower; the arithmetic here is identical and engine-portable).

@@ -1,5 +1,6 @@
 package graft.operators.dedup
 
+import graft.functions.{GramKeyExpr, JavaHashExpr}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -87,11 +88,7 @@ private[graft] trait DedupSubstr extends Serializable {
         explode(expr(s"sequence(1, length(text) - ${L - 1})")).as("pos"))
       .select(col(key), col("pos"), expr(s"substring(text, pos, $L)").as("gram"))
     if (hashBits == 0) base
-    else {
-      graft.functions.JavaHashExpr.register(docs.sparkSession)
-      graft.functions.GramKeyExpr.register(docs.sparkSession)
-      base.select(col(key), col("pos"), gramKeyExpr(hashBits).as("gram"))
-    }
+    else base.select(col(key), col("pos"), gramKeyExpr(hashBits).as("gram"))
   }
 
   /** Production gram-key width: 63 bits (two independent base-31 folds).
@@ -111,7 +108,7 @@ private[graft] trait DedupSubstr extends Serializable {
     * ("Aa"/"BB" collide in one fold, never in both). Narrow widths
     * truncate the first fold: `2^bits | 2^32` keeps them a quotient of
     * the same hash, so narrowing is provably collision-monotone. Both
-    * folds are `graft_java_hash` (codegen Expression, q17/q112's proven
+    * folds are [[JavaHashExpr]] (codegen Expression, q17/q112's proven
     * mechanism) — DuckDB-expressible via the same `javaHashSql` fold, so
     * every hashed-arm query stays byte-exact oracle-paired even if a
     * collision ever fires (the oracle merges the identical classes).
@@ -125,9 +122,9 @@ private[graft] trait DedupSubstr extends Serializable {
       // equivalence; the composed form costs 3 string allocations per
       // window (measured slower than the string arm it replaces:
       // PROFILE.md round-9 addendum A)
-      expr("graft_gram_key63(gram)")
+      GramKeyExpr.of(col("gram"))
     else
-      expr(s"pmod(CAST(graft_java_hash(gram) AS BIGINT), ${1L << bits})")
+      pmod(JavaHashExpr.of(col("gram")).cast("long"), lit(1L << bits))
   }
 
   private[dedup] def dupGramPositions(docs: DataFrame, L: Int,
@@ -364,10 +361,6 @@ private[graft] trait DedupSubstr extends Serializable {
   def substringHashAudit(docs: DataFrame, L: Int,
       bitsList: Seq[Int]): DataFrame = {
     require(bitsList.nonEmpty, "need at least one hash width to audit")
-    // the arms hash the string grams themselves, so register here — the
-    // string-arm windowGrams call (hashBits = 0) doesn't
-    graft.functions.JavaHashExpr.register(docs.sparkSession)
-    graft.functions.GramKeyExpr.register(docs.sparkSession)
     // the two hash folds ride IN the persisted table (round 11): every
     // narrow arm derives its key from h32 by a row-local pmod and the
     // 63-bit arm reads k63 directly, so the |bitsList| hashed arms scan
@@ -376,8 +369,8 @@ private[graft] trait DedupSubstr extends Serializable {
     // string column stays for the exact arm, the audit's ground truth)
     val g = windowGrams(docs, L, "doc_id", 0)
       .withColumn("h32",
-        pmod(expr("CAST(graft_java_hash(gram) AS BIGINT)"), lit(4294967296L)))
-      .withColumn("k63", expr("graft_gram_key63(gram)"))
+        pmod(JavaHashExpr.of(col("gram")).cast("long"), lit(4294967296L)))
+      .withColumn("k63", GramKeyExpr.of(col("gram")))
     // per-doc duplicated-position count under whatever `gram` keying the
     // input carries — the q159 core, reused identically for every arm
     def perDoc(keyed: DataFrame, outName: String): DataFrame = {

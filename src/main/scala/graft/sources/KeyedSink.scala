@@ -30,9 +30,6 @@ object KeyedSink {
     */
   def writeSalted(df: DataFrame, keyCol: Column, modulus: Int, path: String,
       partitionCols: Seq[String] = Nil): Unit = {
-    // the salt expression resolves on THIS frame's session, whatever thread
-    // or session is active
-    graft.functions.JavaHashExpr.register(df.sparkSession)
     val digits = Salt(modulus).digitCount
     val width = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val dirs = partitionCols :+ "salt"

@@ -413,7 +413,7 @@ object EventStream {
     */
   def kmvSketchStream(docStream: DataFrame, k: Int): DataFrame = {
     docStream
-      .select(col("source"), graft.operators.Sketch.docContentHash(col("text")).as("h"))
+      .select(col("source"), graft.operators.Dedup.cpFold32(col("text")).as("h"))
       .groupBy("source").agg(graft.operators.Sketch.kmv(k)(col("h")).as("kmv"))
   }
 

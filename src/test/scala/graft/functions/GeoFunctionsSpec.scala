@@ -31,11 +31,11 @@ class GeoFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq.fill(500)(rnd.alphanumeric.take(1 + rnd.nextInt(30)).mkString) ++
       Seq.fill(100)(s"${rnd.nextInt(100)}:${rnd.nextInt(7)}:${rnd.nextInt(64)}")
     val got = keys.toDF("k")
-      .select(col("k"), GeoFunctions.javaHash(col("k")).as("h"))
+      .select(col("k"), JavaHashExpr.of(col("k")).as("h"))
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     keys.foreach(k => assert(got(k) === k.hashCode, s"key '$k'"))
     // and the plan stays codegen (native expression, not a UDF)
-    val plan = keys.toDF("k").select(GeoFunctions.javaHash(col("k")))
+    val plan = keys.toDF("k").select(JavaHashExpr.of(col("k")))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("ScalaUDF"), plan)
   }
@@ -44,12 +44,11 @@ class GeoFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     "javaHash(gram)/javaHash(reverse(gram)) form, codegen, no UDF") {
     val ss = spark
     import ss.implicits._
-    graft.functions.GramKeyExpr.register(ss)
     val rnd = new scala.util.Random(9)
     val keys = Seq("", "Aa", "BB", "the quick brown fox jumps over a lazy") ++
       Seq.fill(500)(rnd.alphanumeric.take(1 + rnd.nextInt(40)).mkString)
     val got = keys.toDF("gram")
-      .selectExpr("gram", "graft_gram_key63(gram) AS k")
+      .select(col("gram"), GramKeyExpr.of(col("gram")).as("k"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     keys.foreach { k =>
       val h1u = k.hashCode.toLong & 0xFFFFFFFFL
@@ -59,7 +58,7 @@ class GeoFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // the classic one-fold collision stays separated by the pair
     assert(got("Aa") !== got("BB"))
-    val plan = keys.toDF("gram").selectExpr("graft_gram_key63(gram)")
+    val plan = keys.toDF("gram").select(GramKeyExpr.of(col("gram")))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("ScalaUDF"), plan)
   }
@@ -68,7 +67,6 @@ class GeoFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     "astral keeps the surrogate-aware composed-form identity") {
     val ss = spark
     import ss.implicits._
-    graft.functions.GramKeyExpr.register(ss)
     // the DuckDB mirror (SparkEntry.gramHash63Sql): base-31 fold of
     // unicode(c) per grapheme, forward and over reverse(s) — for
     // single-code-point BMP graphemes that is a code-point fold both ways
@@ -83,7 +81,7 @@ class GeoFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val astral = Seq("emoji 😀 payload", "𝔸math𝔹",
       "pair😀😁pair")
     val got = (bmp ++ astral).toDF("gram")
-      .selectExpr("gram", "graft_gram_key63(gram) AS k")
+      .select(col("gram"), GramKeyExpr.of(col("gram")).as("k"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // BMP (no combining marks, no surrogates): engine key == oracle fold,
     // so an oracle-paired hashed-arm query would stay byte-exact on such
@@ -136,25 +134,18 @@ class GeoFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(corner.getLong(0) === 2 * gpx - 1 && corner.getLong(1) === gpx - 1)
   }
 
-  test("graft_java_hash resolves in SQL text and constant-folds literals") {
-    // the injection hook wires without error (a config-installed session
-    // cannot be created here — the test JVM shares one SparkContext, and
-    // extensions only apply at context creation)
-    new graft.GraftExtensions()(new org.apache.spark.sql.SparkSessionExtensions)
-    // lazily-registered path: resolvable from SQL text
-    GeoFunctions.javaHash(org.apache.spark.sql.functions.lit("x")) // registers
-    val r = spark.sql("SELECT graft_java_hash('0:0') AS h").head.getInt(0)
-    assert(r === "0:0".hashCode)
+  test("JavaHashExpr.of constant-folds a literal key, no UDF") {
+    val df = spark.range(1).select(JavaHashExpr.of(lit("0:0")).as("h"))
+    assert(df.head.getInt(0) === "0:0".hashCode)
     // native + deterministic ⇒ Catalyst folds literal inputs at plan time
     // (a UDF never would)
-    val opt = spark.sql("SELECT graft_java_hash('0:0') AS h")
-      .queryExecution.optimizedPlan.toString
+    val opt = df.queryExecution.optimizedPlan.toString
     assert(opt.contains("0:0".hashCode.toString), opt)
-    assert(!opt.contains("graft_java_hash"), opt)
+    assert(!opt.toLowerCase.contains("javahashexpr"), opt)
+    assert(!opt.contains("ScalaUDF"), opt)
   }
 
-  test("graft_dot codegen expression is bit-identical to the driver fold " +
-    "and null-safe") {
+  test("DotProductExpr.of is bit-identical to the driver fold, null-safe") {
     val ss = spark
     import ss.implicits._
     val rnd = new scala.util.Random(11)
@@ -177,10 +168,9 @@ class GeoFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val plan = df.select(graft.operators.Similarity.dotCols(col("a"), col("b")))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("ScalaUDF"), plan)
-    // and it resolves from SQL text via the registry
-    val r = spark.sql(
-      "SELECT graft_dot(array(CAST(1.5 AS FLOAT), CAST(2.0 AS FLOAT)), " +
-        "array(CAST(3.0 AS FLOAT), CAST(0.5 AS FLOAT))) AS d").head.getDouble(0)
+    // and over literal arrays
+    val r = spark.range(1).select(DotProductExpr.of(
+      array(lit(1.5f), lit(2.0f)), array(lit(3.0f), lit(0.5f)))).head.getDouble(0)
     assert(r === 5.5)
   }
 

@@ -63,6 +63,46 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(mism2 === 0, "encode(decode) is not the identity on long keys")
   }
 
+  test("q69, q112 and q119 leave no SQL-cache entry behind") {
+    // each picks from a tiny per-source table that feeds two branches;
+    // the caller here never calls clearCache()
+    spark.catalog.clearCache()
+    Seq("q69_domain_mix", "q112_kmv_overlap", "q119_quota_sample").foreach { q =>
+      graft.SparkEntry.queries(q)(spark, Dir).collect()
+      assert(spark.sharedState.cacheManager.isEmpty, s"$q left a cache entry")
+    }
+  }
+
+  test("a saltOf Column runs on a no-coalesce fork with nothing registered") {
+    // the Column is built while `spark` is active; the fork's function
+    // registry is fresh, so only an expression that enters the plan as
+    // itself (not by name) resolves there
+    SparkSession.setActiveSession(spark)
+    val salt = graft.functions.GeoFunctions.saltOf(col("k"), 100)
+    val fork = MapBuild.noCoalesceSession(spark)
+    val keys = Seq("0:0", "4326:0:0:6:12:34", "abc", "ünïcode-ключ")
+    val got = fork.createDataFrame(keys.map(Tuple1(_))).toDF("k")
+      .select(col("k"), salt.as("s"))
+      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    keys.foreach(k => assert(got(k) === graft.core.Salt(100).saltOf(k), k))
+  }
+
+  test("gramKeyExpr(63) and dotCols run on a no-coalesce fork with nothing " +
+    "registered") {
+    SparkSession.setActiveSession(spark)
+    val key = Dedup.gramKeyExpr(63)
+    val dot = Similarity.dotCols(col("a"), col("b"))
+    val fork = MapBuild.noCoalesceSession(spark)
+    val grams = Seq("Aa", "BB", "the quick brown fox")
+    val keys = fork.createDataFrame(grams.map(Tuple1(_))).toDF("gram")
+      .select(col("gram"), key.as("k"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    grams.foreach(g => assert(keys(g) === graft.functions.GramKeyExpr.key63(g), g))
+    val d = fork.createDataFrame(Seq((Seq(1.5f, 2.0f), Seq(3.0f, 0.5f))))
+      .toDF("a", "b").select(dot).head.getDouble(0)
+    assert(d === 5.5)
+  }
+
   test("pyramid z0-z9 (two chunks) equals its single-level pyramids") {
     // z0–z9 spans two chunks, so the inter-chunk rollup (checkpointed
     // state → next chunk's top) runs; each pyramid(z, z) is one zoom read
@@ -804,7 +844,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getString(0), r.getSeq[Long](1).toSeq)).toMap
     val kmv = Sketch.kmv(16)
     val batch = docs
-      .select(col("source"), Sketch.docContentHash(col("text")).as("h"))
+      .select(col("source"), Dedup.cpFold32(col("text")).as("h"))
       .groupBy("source").agg(kmv(col("h")).as("kmv"))
       .collect().map(r => (r.getString(0), r.getSeq[Long](1).toSeq)).toMap
     assert(streamed === batch)
